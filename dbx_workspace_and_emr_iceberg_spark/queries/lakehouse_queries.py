@@ -399,8 +399,6 @@ ORDER BY snapshot, n_nationkey
 
 @register("m8c_wap_final_state", oracle=_M8C_ORACLE, tags=("M8", "S8"))
 def m8c_wap_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.lakehouse import BranchedLakehouse
-
     wh = tempfile.mkdtemp(prefix="lakehouse_m8c_")
     try:
         nat = load_table(spark, sf_dir, "nation").select(
@@ -408,9 +406,8 @@ def m8c_wap_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).coalesce(1)
         t = LakehouseTable(spark, wh, "nation_m8c")
         t.create(nat)  # v1
-        b = BranchedLakehouse(t)
-        b.create_branch("stage")
-        b.write_to_branch(
+        t.create_branch("stage")
+        t.write_to_branch(
             "stage",
             nat.filter(F.col("n_nationkey") < 3).select(
                 (F.col("n_nationkey") + 500).alias("n_nationkey"),
@@ -418,7 +415,7 @@ def m8c_wap_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_regionkey",
             ),
         )  # v2 staged — main must NOT see it until publish
-        b.fast_forward_main("stage")  # v3 rollforward
+        t.fast_forward("main", "stage")  # v3 rollforward
         cast_cols = [
             F.col("n_nationkey").cast("long").alias("n_nationkey"),
             "n_name",
@@ -818,8 +815,6 @@ def m7_partition_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert (ADVICE r11) — a violation flips the flag and hash-reds,
     instead of raising before the oracle can see it. m7b remains the
     content twin pinning the row VALUES through the same lifecycle."""
-    from ..sources.lakehouse import PartitionedLakehouseTable
-
     wh = tempfile.mkdtemp(prefix="lakehouse_")
     try:
         # ten days of events: days(ts) x bucket(4) = ~40 partition dirs —
@@ -833,10 +828,8 @@ def m7_partition_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("ts") >= F.lit("2024-01-10 00:00:00").cast("timestamp"))
             & (F.col("ts") < F.lit("2024-01-20 00:00:00").cast("timestamp"))
         )
-        t = PartitionedLakehouseTable(
-            spark, wh, "events_p", ["days(ts)", "bucket(4, user_id)"]
-        )
-        t.create(ev)
+        t = LakehouseTable(spark, wh, "events_p")
+        t.create(ev, partition_by=["days(ts)", "bucket(4, user_id)"])
         n = t.read().count()
 
         # hidden partition pruning: range-filter on ts (the SOURCE
@@ -976,8 +969,6 @@ def m7b_partition_evolution_values(
     from the fixture; the pruning effect itself is asserted in-query
     on read_pruned's (files_scanned, files_total) both before and
     after the spec change."""
-    from ..sources.lakehouse import PartitionedLakehouseTable
-
     wh = tempfile.mkdtemp(prefix="lakehouse_m7b_")
     try:
         ev = (
@@ -990,10 +981,8 @@ def m7b_partition_evolution_values(
         )
         base = ev.filter(F.col("event_id") % 5 == 0)
         appended = ev.filter(F.col("event_id") % 5 == 1)
-        t = PartitionedLakehouseTable(
-            spark, wh, "events_m7b", ["days(ts)", "bucket(4, user_id)"]
-        )
-        t.create(base)
+        t = LakehouseTable(spark, wh, "events_m7b")
+        t.create(base, partition_by=["days(ts)", "bucket(4, user_id)"])
 
         day_lo, day_hi = "2024-01-15 00:00:00", "2024-01-16 00:00:00"
         day_df, kept_f, all_f = t.read_pruned(
@@ -1091,8 +1080,6 @@ def s6_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
       3. the old snapshot still reads the pre-overwrite day (time
          travel unaffected — overwrite is a new snapshot, not a
          mutation)."""
-    from ..sources.lakehouse import PartitionedLakehouseTable
-
     wh = tempfile.mkdtemp(prefix="lakehouse_")
     try:
         steps: list[tuple[str, int, int]] = []
@@ -1105,8 +1092,8 @@ def s6_dynamic_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFram
                 & (F.col("ts") < F.lit("2024-01-14 00:00:00").cast("timestamp"))
             )
         )
-        t = PartitionedLakehouseTable(spark, wh, "events_dpo", ["days(ts)"])
-        v0 = t.create(ev)
+        t = LakehouseTable(spark, wh, "events_dpo")
+        v0 = t.create(ev, partition_by=["days(ts)"])
         n0 = t.read().count()
         steps.append(("create_partitioned", v0, n0))
 
@@ -1198,8 +1185,6 @@ def s6b_dynamic_overwrite_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     time travel (phase='old_day'). A static overwrite (whole-table
     replace), a leak into untouched days, or broken time travel all
     change the returned values and hash-red."""
-    from ..sources.lakehouse import PartitionedLakehouseTable
-
     wh = tempfile.mkdtemp(prefix="lakehouse_s6b_")
     try:
         ev = (
@@ -1211,8 +1196,8 @@ def s6b_dynamic_overwrite_values(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (F.col("ts") < F.lit("2024-01-14 00:00:00").cast("timestamp"))
             )
         )
-        t = PartitionedLakehouseTable(spark, wh, "events_s6b", ["days(ts)"])
-        v0 = t.create(ev)
+        t = LakehouseTable(spark, wh, "events_s6b")
+        v0 = t.create(ev, partition_by=["days(ts)"])
         in_day = (
             F.col("ts") >= F.lit("2024-01-12 00:00:00").cast("timestamp")
         ) & (F.col("ts") < F.lit("2024-01-13 00:00:00").cast("timestamp"))
@@ -1268,8 +1253,6 @@ ORDER BY step
 def m8_branches_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Branches, tags and write-audit-publish (M8): stage an append on a
     branch, audit it, publish by fast-forwarding main; tags stay pinned."""
-    from ..sources.lakehouse import BranchedLakehouse, LakehouseTable
-
     wh = tempfile.mkdtemp(prefix="lakehouse_")
     try:
         steps: list[tuple[str, int, int]] = []
@@ -1277,29 +1260,28 @@ def m8_branches_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
         t = LakehouseTable(spark, wh, "nation_b")
         t.create(nat)
         n0 = t.read().count()
-        b = BranchedLakehouse(t)
 
-        b.create_tag("v1-audited")
-        b.create_branch("staging")
+        t.create_tag("v1-audited")
+        t.create_branch("staging")
         steps.append(("tag_and_branch", t.current_version(), n0))
 
         # W: write to staging — main must not see it
         extra = nat.limit(3).select(
             (F.col("n_nationkey") + 500).alias("n_nationkey"), "n_name", "n_regionkey"
         )
-        b.write_to_branch("staging", extra)
+        t.write_to_branch("staging", extra)
         assert t.read(version=1).count() == n0, "main (v1) unchanged by branch write"
-        assert b.read_ref("staging").count() == n0 + 3, "staging sees the write"
-        steps.append(("write_branch", t.current_version(), b.read_ref("staging").count()))
+        assert t.read_ref("staging").count() == n0 + 3, "staging sees the write"
+        steps.append(("write_branch", t.current_version(), t.read_ref("staging").count()))
 
         # A: audit the staged snapshot
-        staged = b.read_ref("staging")
+        staged = t.read_ref("staging")
         assert staged.filter(F.col("n_nationkey") >= 500).count() == 3, "audit check"
 
         # P: publish
-        v = b.fast_forward_main("staging")
+        v = t.fast_forward("main", "staging")
         assert t.read().count() == n0 + 3, "main advanced to audited snapshot"
-        assert b.read_ref("v1-audited").count() == n0, "tag still pinned at v1"
+        assert t.read_ref("v1-audited").count() == n0, "tag still pinned at v1"
         steps.append(("publish", v, t.read().count()))
 
         # repeated WAP cycle on the SAME branch (ADVICE r9, reproduced
@@ -1312,15 +1294,15 @@ def m8_branches_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_name",
             "n_regionkey",
         )
-        b.write_to_branch("staging", extra2)
-        v2 = b.fast_forward_main("staging")
+        t.write_to_branch("staging", extra2)
+        v2 = t.fast_forward("main", "staging")
         assert t.read().count() == n0 + 5, "second publish landed"
         steps.append(("publish_again", v2, t.read().count()))
 
         # divergent publish REFUSED: a branch based at v1 lacks the two
         # published commits — blind fast-forward would discard them
-        b.create_branch("divergent", at_version=1)
-        div_v = b.write_to_branch(
+        t.create_branch("divergent", at_version=1)
+        div_v = t.write_to_branch(
             "divergent",
             nat.limit(3).select(
                 (F.col("n_nationkey") + 700).alias("n_nationkey"),
@@ -1329,7 +1311,7 @@ def m8_branches_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         try:
-            b.fast_forward_main("divergent")
+            t.fast_forward("main", "divergent")
             raise AssertionError("divergent publish was not refused")
         except ValueError:
             pass
@@ -1345,13 +1327,13 @@ def m8_branches_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
         # stale-branch CATCH-UP is a genuine fast-forward (ADVICE r9:
         # the walk used to refuse it): a branch pinned at v1 moves to a
         # ref at the newer main head
-        b.create_branch("stale", at_version=1)
-        b.create_tag("head-now")
-        b.fast_forward("stale", "head-now")
+        t.create_branch("stale", at_version=1)
+        t.create_tag("head-now")
+        t.fast_forward("stale", "head-now")
         assert (
-            b.read_ref("stale").count() == t.read().count()
+            t.read_ref("stale").count() == t.read().count()
         ), "caught-up branch sees main's head"
-        steps.append(("catch_up", t.current_version(), b.read_ref("stale").count()))
+        steps.append(("catch_up", t.current_version(), t.read_ref("stale").count()))
         return _log(spark, steps)
     finally:
         shutil.rmtree(wh, ignore_errors=True)
@@ -1546,18 +1528,14 @@ def m9_stats_file_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture-derivable. Flags are computed from the measurements with
     NO preceding assert (ADVICE r11) — a violation flips the flag and
     hash-reds. s7b remains the metadata-relation value twin."""
-    from ..sources.lakehouse import (
-        StatsLakehouseTable,
-        cherrypick_snapshot,
-        history,
-    )
+    from ..sources.lakehouse import cherrypick_snapshot, history
 
     wh = tempfile.mkdtemp(prefix="lakehouse_")
     try:
         o = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderdate", "o_totalprice"
         ).filter(F.col("o_orderkey") % 2 == 0)  # stats pruning is volume-free
-        t = StatsLakehouseTable(spark, wh, "orders_s")
+        t = LakehouseTable(spark, wh, "orders_s")
         # write ordered by date so files get disjoint o_orderdate ranges
         t.create(o.repartitionByRange(6, "o_orderdate"))
         n_files = len(t._files())
@@ -1660,14 +1638,14 @@ FROM nation
     "s7b_metadata_tables_values", oracle=_S7B_ORACLE, tags=("S7", "M5")
 )
 def s7b_metadata_tables_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources.lakehouse import StatsLakehouseTable, history
+    from ..sources.lakehouse import history
 
     wh = tempfile.mkdtemp(prefix="lakehouse_s7b_")
     try:
         nat = load_table(spark, sf_dir, "nation").select(
             "n_nationkey", "n_name", "n_regionkey"
         )
-        t = StatsLakehouseTable(spark, wh, "nation_s7b")
+        t = LakehouseTable(spark, wh, "nation_s7b")
         t.create(nat.repartition(2))  # exactly 2 data files
         t.append(
             nat.filter(F.col("n_nationkey") < 5)
@@ -1955,15 +1933,13 @@ def m11_sorted_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     layout-only), (d) the range row count matches the fixture. Flags
     computed with NO preceding assert (ADVICE r11) — a violation flips
     a flag and hash-reds."""
-    from ..sources.lakehouse import StatsLakehouseTable
-
     wh = tempfile.mkdtemp(prefix="lakehouse_sort_")
     try:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_quantity", "l_extendedprice"
         )
         # hash layout: every file spans the whole key range
-        t = StatsLakehouseTable(spark, wh, "lineitem_cluster")
+        t = LakehouseTable(spark, wh, "lineitem_cluster")
         t.create(li.repartition(8, "l_partkey"))
 
         lo, hi = 100, 500
@@ -2040,14 +2016,12 @@ def m13_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     over-pruned; the parity flags catch silent row loss), (d) row
     count and both probe-range counts match the fixture. Flags
     computed with NO preceding assert (ADVICE r11)."""
-    from ..sources.lakehouse import StatsLakehouseTable
-
     wh = tempfile.mkdtemp(prefix="lakehouse_zorder_")
     try:
         li = load_table(spark, sf_dir, "lineitem").select(
             "l_orderkey", "l_partkey", "l_quantity"
         )
-        t = StatsLakehouseTable(spark, wh, "lineitem_z")
+        t = LakehouseTable(spark, wh, "lineitem_z")
         t.create(li.repartition(16, "l_quantity"))
 
         keys = li.agg(
@@ -2159,8 +2133,6 @@ def p3_hidden_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     in SparkScanBuilder (reference main.tf:792-806, README.md:36)."""
     import os
 
-    from ..sources.lakehouse import PartitionedLakehouseTable
-
     shutil.rmtree(os.path.join(_P3_WH, "events_p3"), ignore_errors=True)
     ev = (
         load_table(spark, sf_dir, "events")
@@ -2171,8 +2143,8 @@ def p3_hidden_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("ts") < F.lit("2024-01-20 00:00:00").cast("timestamp"))
         )
     )
-    t = PartitionedLakehouseTable(spark, _P3_WH, "events_p3", ["days(ts)"])
-    t.create(ev)
+    t = LakehouseTable(spark, _P3_WH, "events_p3")
+    t.create(ev, partition_by=["days(ts)"])
 
     lo = "2024-01-15 00:00:00"
     hi = "2024-01-16 00:00:00"

@@ -11,8 +11,10 @@ re-implements the *table-format contract* in pure PySpark:
 
   warehouse/<table>/
     data/<uuid>.parquet      immutable data files
-    _snapshots/v{N}.json     manifest: file list + schema + op summary
+    _snapshots/v{N}.json     manifest: file list + per-file column
+                             min/max + schema + partition spec + op
     _current                 current version (atomic rename commit)
+    _refs.json               branch and tag pointers
 
 Semantics mirrored from Iceberg v2 (copy-on-write flavor):
   * every write = new immutable data files + a new manifest; readers of
@@ -28,7 +30,7 @@ Semantics mirrored from Iceberg v2 (copy-on-write flavor):
     CALL system.* procedures (SURVEY.md §2.11 M5).
 
 At 100 TB: data files are the unit of parallelism and pruning; the
-manifest holds per-file row counts (stats extension point); rewrites
+manifest holds per-file column min/max for data skipping; rewrites
 touch only affected files; nothing here funnels data through the
 driver — the driver only moves file *names*.
 """
@@ -110,12 +112,19 @@ def iceberg_rest_catalog_conf(
 
 
 def main_head_json(root: str) -> int:
-    """Newest MAIN (non-staged) snapshot version, pure json-over-fs —
-    the driver-side twin of LakehouseTable.main_head() for consumers
+    """Main's logical head: the newest snapshot NOT tagged
+    ``staged_ref`` by a branch write, pure json-over-fs so consumers
     with no table object (the Python stream source's schema()/offset
-    resolution; review-pass r15: reading `_current` raw let a staged
-    branch write hand the stream the BRANCH-BASE schema, silently
-    dropping later-added columns from every micro-batch)."""
+    resolution) share it with :meth:`LakehouseTable.main_head`.
+
+    The emulation keeps ONE snapshot log (Iceberg's snapshot list is
+    likewise shared across refs) with `_current` as the log head;
+    branch commits advance the log but not main, so every MAIN-side
+    content resolution (reads, DML base file lists, schema, a stream's
+    schema) goes through this walk — the raw log head may be another
+    branch's STAGED snapshot. Equal to the log head whenever no staged
+    snapshot sits on top. Raises ValueError if the walk falls off
+    expired history (publish or drop staged refs before expiring)."""
     try:
         with open(os.path.join(root, "_current")) as f:
             v = int(f.read().strip())
@@ -129,10 +138,6 @@ def main_head_json(root: str) -> int:
                 if not json.load(f).get("staged_ref"):
                     return v
         except FileNotFoundError:
-            # same contract as LakehouseTable.main_head(): crossing an
-            # expired snapshot surfaces the actionable message, not a
-            # raw path error in the stream source's schema()/offset
-            # resolution (ADVICE r15, reproduced)
             raise ValueError(
                 f"{root}: main head expired below staged snapshots — "
                 "publish or drop staged refs before expire_snapshots"
@@ -223,13 +228,194 @@ def commit_with_retries(op, retries: int = 3, backoff_s: float = 0.05):
             time.sleep(backoff_s * attempt)
 
 
+# ---------------------------------------------------------------------------
+# Partition transforms (M7), temporal range-bound normalization and
+# per-file column statistics (min/max data skipping, Iceberg manifest
+# pruning parity)
+# ---------------------------------------------------------------------------
+
+#: ISO date / datetime shapes (either separator convention) — the gate
+#: for every temporal-bound normalization below: NON-temporal string
+#: bounds (string-column range bounds like 'NEW YORK') pass through
+#: verbatim
+_ISO_TEMPORAL_RE = re.compile(
+    r"\d{4}-\d{2}-\d{2}([T ]\d{2}:\d{2}(:\d{2}(\.\d+)?)?)?$"
+)
+
+
+def temporal_bound_iso(v, sep: str = " ") -> str | None:
+    """Canonical civil ISO string for a temporal range bound — THE one
+    bound normalizer, so every pruning path shares one separator
+    convention.  Accepts datetime/date objects and ISO strings in
+    either separator convention; date-only inputs gain midnight,
+    minute-precision inputs gain ':00' — every temporal return value is
+    the FULL 'YYYY-MM-DD HH:MM:SS[.fff]' form, because read_pruned's
+    trunc slices are positional and pruned_files' compare is
+    lexicographic (an un-padded '...T08:30' sorts before the stat
+    '...T08:30:00' and would over-prune).  Returns None
+    when the value is a string that does not look temporal — the caller
+    must pass those through VERBATIM (string-column bounds)."""
+    import datetime
+
+    if isinstance(v, datetime.datetime):
+        if v.tzinfo is not None:
+            # zoned instants canonicalize to UTC-NAIVE: an
+            # offset-suffixed '…15+00:00' would compare
+            # lexicographically against naive stats and over-prune;
+            # UTC civil order equals instant order, and the session
+            # pins UTC so civil values are what the engine compares
+            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+        s = v.isoformat(sep=" ")
+    elif isinstance(v, datetime.date):
+        s = f"{v.isoformat()} 00:00:00"
+    else:
+        s = str(v)
+        if not _ISO_TEMPORAL_RE.match(s):
+            return None
+        s = s.replace("T", " ")
+        if len(s) == 10:
+            s += " 00:00:00"
+        elif len(s) == 16:
+            s += ":00"
+        if "." in s:
+            # canonicalize the FRACTION to the stats encoder's
+            # convention (datetime.isoformat: absent when zero, else
+            # exactly 6 digits), so a short-fraction bound '…15.5'
+            # compares correctly against the 6-digit stat '…15.500000'.
+            # Digits past microseconds TRUNCATE — the same thing
+            # Spark's cast does in the residual/filter, so pruning and
+            # filtering always agree; note a truncated lo bound is up
+            # to 1 µs more inclusive than the sub-µs literal asked for
+            # (a row at exactly …15.000000 passes lo '…15.0000001') —
+            # timestamp[us] engines cannot honor sub-µs bounds exactly.
+            head, frac = s.split(".", 1)
+            frac = (frac + "000000")[:6]
+            s = head if int(frac) == 0 else f"{head}.{frac}"
+    return s.replace(" ", sep, 1) if sep != " " else s
+
+
+def is_temporal_dtype(dt) -> bool:
+    """THE one definition of 'temporal column' for bound normalization
+    — pruned_files, read_range and read_pruned's residual all gate on
+    this, so the temporal-type set can never diverge between the
+    pruning paths."""
+    from pyspark.sql.types import (
+        DateType,
+        TimestampNTZType,
+        TimestampType,
+    )
+
+    return isinstance(dt, (DateType, TimestampNTZType, TimestampType))
+
+
+def partition_segments(path: str) -> list[tuple[str, str]]:
+    """(key, unquoted value) pairs from a file path's hive-style
+    partition directory segments — THE one decoder for the engine's
+    ``k=v`` encoding.  read_pruned, overwrite_partitions and the
+    queries-side pruning contracts all parse this convention; a single
+    shared decoder keeps them bit-identical if the escaping ever
+    changes."""
+    import urllib.parse
+
+    out = []
+    for seg in path.split(os.sep):
+        if "=" in seg:
+            k, v = seg.split("=", 1)
+            out.append((k, urllib.parse.unquote(v)))
+    return out
+
+
+def partition_transform(spec: str) -> tuple[str, F.Column]:
+    """Parse an Iceberg-style partition transform into (name, column):
+    identity(c) | years(c) | months(c) | days(c) | hours(c) |
+    bucket(n, c) | truncate(w, c)  (SURVEY.md §2.11 M7).
+
+    The transform column is *derived* — hidden partitioning means users
+    filter on the source column and the engine prunes via the transform.
+    """
+    spec = spec.strip()
+    name, inner = spec.split("(", 1)
+    args = [a.strip() for a in inner.rstrip(")").split(",")]
+    name = name.strip()
+    if name == "identity":
+        return f"p_{args[0]}", F.col(args[0])
+    if name in ("years", "months", "days", "hours"):
+        unit = {"years": "year", "months": "month", "days": "day", "hours": "hour"}[name]
+        return f"p_{name}_{args[0]}", F.date_trunc(unit, F.col(args[0])).cast("string")
+    if name == "bucket":
+        n, c = int(args[0]), args[1]
+        return f"p_bucket_{c}", F.pmod(F.xxhash64(F.col(c)), F.lit(n))
+    if name == "truncate":
+        w, c = int(args[0]), args[1]
+        return f"p_trunc_{c}", F.substring(F.col(c), 1, w)
+    raise ValueError(f"unknown partition transform {spec!r}")
+
+
+def _file_column_stats(path: str) -> dict[str, list]:
+    """Per-file min/max per column from the parquet footer (pyarrow) —
+    only footers are read, never data pages. Values are
+    stored JSON-safe (ISO strings for timestamps)."""
+    import datetime
+
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    mins: dict[str, object] = {}
+    maxs: dict[str, object] = {}
+    for rg in range(md.num_row_groups):
+        g = md.row_group(rg)
+        for ci in range(g.num_columns):
+            col = g.column(ci)
+            st = col.statistics
+            if st is None or not st.has_min_max:
+                continue
+            name = col.path_in_schema
+            lo, hi = st.min, st.max
+            if isinstance(lo, bytes):
+                continue  # binary stats aren't comparable cross-engine
+            if name not in mins or lo < mins[name]:
+                mins[name] = lo
+            if name not in maxs or hi > maxs[name]:
+                maxs[name] = hi
+
+    def enc(v):
+        # datetime first (it subclasses date): 'T'-separated with
+        # seconds, zoned instants stored UTC-NAIVE (a pyarrow stat from
+        # a Spark-written zoned column is tz-aware; its '+00:00' suffix
+        # would defeat every lexicographic compare).
+        # Bare dates gain an explicit midnight so DATE-column
+        # stats share the timestamp convention — pruned_files compares
+        # bounds lexicographically after normalizing them to the SAME
+        # 'YYYY-MM-DDTHH:MM:SS' shape, and a date-only stat would sort
+        # BEFORE its own day's midnight ('2024-01-02' <
+        # '2024-01-02T00:00:00'), wrongly pruning the file whose max is
+        # exactly the bound's day.
+        if isinstance(v, datetime.datetime):
+            if v.tzinfo is not None:
+                v = v.astimezone(datetime.timezone.utc).replace(
+                    tzinfo=None
+                )
+            return v.isoformat()
+        if isinstance(v, datetime.date):
+            return v.isoformat() + "T00:00:00"
+        return v
+
+    return {
+        "min": {k: enc(v) for k, v in mins.items()},
+        "max": {k: enc(v) for k, v in maxs.items()},
+    }
+
+
 class LakehouseTable:
-    """One snapshot-versioned table under a warehouse directory."""
+    """One snapshot-versioned table under a warehouse directory — the
+    Iceberg Table analog: however it is opened (constructor, Engine,
+    LakehouseCatalog, RestLakehouseCatalog), its behaviour comes from
+    the manifest, which carries the per-file column stats (always on)
+    and the partition spec; branch and tag refs live beside the log."""
 
     def __init__(self, spark: SparkSession, warehouse: str, name: str):
-        # the name is a PATH COMPONENT (review-pass r18): '..' or a
-        # separator escapes the warehouse — create_table('../prod/t')
-        # wrote a table outside the warehouse entirely.  Same charset
+        # the name is a PATH COMPONENT: '..' or a separator would
+        # escape the warehouse (create_table('../prod/t')).  Same charset
         # the SQL-door grammar enforces, plus '.'/'-' for the catalog
         # layer's schema-qualified dirs and branch refs — but never a
         # traversal.
@@ -245,6 +431,7 @@ class LakehouseTable:
         self.root = os.path.join(warehouse, name)
         self.data_dir = os.path.join(self.root, "data")
         self.snap_dir = os.path.join(self.root, "_snapshots")
+        self.refs_path = os.path.join(self.root, "_refs.json")
         self.name = name
 
     # ---------- manifest / commit machinery ----------
@@ -260,30 +447,8 @@ class LakehouseTable:
             return 0
 
     def main_head(self) -> int:
-        """Main's logical head: the newest snapshot NOT tagged
-        ``staged_ref`` by a branch write. The emulation keeps ONE
-        snapshot log (Iceberg's snapshot list is likewise shared
-        across refs) with `_current` as the log head; branch commits
-        advance the log but not main, so every MAIN-side content
-        resolution (reads, DML base file lists, schema) goes through
-        this walk — basing main DML on the raw log head would fold
-        another branch's STAGED files into main (review-pass finding,
-        reproduced). Equal to current_version() whenever no staged
-        snapshot sits on top. Raises if the walk falls off expired
-        history (publish or drop staged refs before expiring)."""
-        v = self.current_version()
-        while v > 0:
-            try:
-                if not self._read_manifest(v).get("staged_ref"):
-                    return v
-            except FileNotFoundError:
-                raise ValueError(
-                    f"{self.name}: main head expired below staged "
-                    "snapshots — publish or drop staged refs before "
-                    "expire_snapshots"
-                ) from None
-            v -= 1
-        return 0
+        """Main's logical head — see :func:`main_head_json`."""
+        return main_head_json(self.root)
 
     def _manifest_path(self, version: int) -> str:
         return os.path.join(self.snap_dir, f"v{version:05d}.json")
@@ -334,7 +499,7 @@ class LakehouseTable:
         """Atomic optimistic commit: write manifest vN+1, then swing the
         _current pointer via os.replace (atomic on POSIX).
 
-        Concurrency protocol (r18 exclusive create + r19 lock):
+        Concurrency protocol (exclusive create + commit lock):
         the whole claim→swing section runs under a per-table flock, so
         two in-protocol writers can never interleave between manifest
         create and pointer swing; the O_EXCL create + >60s staleness
@@ -345,44 +510,54 @@ class LakehouseTable:
         into a loud ConflictError instead of a silent lost update.
         Cross-host object stores would need a real catalog CAS
         (Iceberg's actual design); this layer is local-FS scoped.
+
+        File stats (parquet footer reads) are computed BEFORE the lock:
+        they depend only on the immutable files and manifests, and the
+        version check under the lock still refuses a moved parent.
         """
+        try:
+            pm = self._read_manifest(expected_parent) if expected_parent else {}
+        except FileNotFoundError:
+            pm = None  # parent expired: the version check below refuses
+        if pm is not None:
+            manifest["stats"] = self._file_stats(manifest, pm)
         lock_fd = self._acquire_commit_lock()
         try:
-            return self._commit_locked(manifest, expected_parent)
+            return self._commit_locked(manifest, expected_parent, pm)
         finally:
             fcntl.flock(lock_fd, fcntl.LOCK_UN)
             os.close(lock_fd)
 
-    def _commit_locked(self, manifest: dict, expected_parent: int) -> int:
-        if self.current_version() != expected_parent:
+    def _commit_locked(
+        self, manifest: dict, expected_parent: int, pm: dict | None
+    ) -> int:
+        if pm is None or self.current_version() != expected_parent:
             raise ConflictError(
                 f"{self.name}: version moved to {self.current_version()}, "
                 f"expected {expected_parent}"
             )
         version = expected_parent + 1
         os.makedirs(self.snap_dir, exist_ok=True)
-        # column initial-defaults (add_column(default=...)) and rename
-        # mappings (rename_column) ride every subsequent commit
-        # unchanged unless the committer set its own — a commit that
-        # dropped them would silently break old-file reads
-        for key in ("defaults", "renames"):
-            if key not in manifest and expected_parent:
-                inherited = self._read_manifest(expected_parent).get(key)
-                if inherited:
-                    manifest[key] = inherited
+        # column initial-defaults (add_column(default=...)), rename
+        # mappings (rename_column) and the partition spec ride every
+        # subsequent commit unchanged unless the committer set its own —
+        # a commit that dropped them would silently break old-file reads
+        # or the next write's layout
+        for key in ("defaults", "renames", "partition_spec"):
+            if key not in manifest and pm.get(key):
+                manifest[key] = pm[key]
         manifest["version"] = version
         manifest["parent"] = expected_parent
         manifest["timestamp_ms"] = int(time.time() * 1000)
         # per-writer claim token, re-verified before the pointer swing
         writer_id = uuid.uuid4().hex
         manifest["writer"] = writer_id
-        # EXCLUSIVE create (review-pass r18, reproduced): mode 'w' let
-        # two writers that both passed the version check above each
-        # "win" — the second silently overwrote the first's
-        # same-numbered manifest and the os.replace of _current cannot
-        # fail, so one commit was LOST with no error.  'x' makes the
-        # version number itself the lock: exactly one writer creates
-        # v(N+1).json, the loser gets the contracted ConflictError.
+        # EXCLUSIVE create: two writers that both passed the version
+        # check above must not both "win" (the os.replace of _current
+        # cannot fail, so an overwrite would lose one commit silently).
+        # 'x' makes the version number itself the lock: exactly one
+        # writer creates v(N+1).json, the loser gets the contracted
+        # ConflictError.
         try:
             with open(self._manifest_path(version), "x") as f:
                 json.dump(manifest, f, indent=1)
@@ -415,31 +590,72 @@ class LakehouseTable:
         # verify the claim immediately before the swing: if anything
         # out-of-protocol replaced our manifest, fail loudly instead
         # of pointing _current at someone else's content while
-        # reporting OUR commit as the success (review-pass r19)
+        # reporting OUR commit as the success
         if self._read_manifest(version).get("writer") != writer_id:
             raise ConflictError(
                 f"{self.name}: manifest v{version} was replaced by a "
                 "foreign writer between claim and publish"
             )
-        # unique tmp name: two swingers sharing '_current.tmp' raced —
-        # the second os.replace hit FileNotFoundError mid-commit
-        # (reproduced in the r19 stalled-writer script)
+        # unique tmp name: two swingers sharing one tmp file would race
+        # (the second os.replace hits FileNotFoundError mid-commit)
         tmp = self._current_path() + f".{writer_id}.tmp"
         with open(tmp, "w") as f:
             f.write(str(version))
         os.replace(tmp, self._current_path())
         return version
 
-    def _write_files(self, df: DataFrame) -> list[str]:
+    def _file_stats(self, manifest: dict, parent: dict) -> dict:
+        """Per-file column min/max for every file ``manifest`` lists —
+        Iceberg's always-on column metrics. Stats are a function of the
+        immutable file, so they are copied from any manifest that
+        already holds them (the log parent; the main head when the log
+        parent is a branch's staged snapshot; the content source of a
+        rollforward or a branch write) and read from the parquet footer
+        only for files none of those has. A listed path that is not a
+        file gets no stats; the pruner keeps files without stats."""
+        known = dict(parent.get("stats", {}))
+        if any(f not in known for f in manifest["files"]):
+            sources = {manifest.get("rollforward_of"), manifest.get("ref_base")}
+            if parent.get("staged_ref"):
+                sources.add(self.main_head())
+            for v in sources - {None, 0}:
+                try:
+                    known.update(self._read_manifest(v).get("stats", {}))
+                except FileNotFoundError:
+                    continue  # expired source: footers below
+        return {
+            f: known[f] if f in known else _file_column_stats(f)
+            for f in manifest["files"]
+            if f in known or os.path.isfile(f)
+        }
+
+    def _partition_spec(self) -> list[str]:
+        """The partition transforms of main's head (empty = unpartitioned)."""
+        v = self.main_head()
+        return self._read_manifest(v).get("partition_spec", []) if v else []
+
+    def _write_files(
+        self, df: DataFrame, partition_by: list[str] | None = None
+    ) -> list[str]:
         """Materialize df as new immutable parquet files; returns paths.
         Files are written to a unique subdir then registered by name —
-        the manifest, not the directory listing, defines the table."""
-        batch = uuid.uuid4().hex[:12]
-        out = os.path.join(self.data_dir, batch)
-        df.write.mode("overwrite").parquet(out)
+        the manifest, not the directory listing, defines the table.
+
+        Partitioned tables (``partition_by``, default: the table's
+        spec) lay files out in hive-style dirs of *derived* transform
+        columns, which the files themselves do not store — the 'hidden'
+        in hidden partitioning."""
+        spec = self._partition_spec() if partition_by is None else partition_by
+        out = os.path.join(self.data_dir, uuid.uuid4().hex[:12])
+        writer = df.write
+        if spec:
+            cols = dict(partition_transform(s) for s in spec)
+            writer = df.withColumns(cols).write.partitionBy(*cols)
+        writer.mode("overwrite").parquet(out)
         return sorted(
-            os.path.join(out, f)
-            for f in os.listdir(out)
+            os.path.join(d, f)
+            for d, _dirs, names in os.walk(out)
+            for f in names
             if f.endswith(".parquet")
         )
 
@@ -452,14 +668,22 @@ class LakehouseTable:
 
     # ---------- S4/S5/S6: create / append / overwrite ----------
 
-    def create(self, df: DataFrame) -> int:
-        """CREATE TABLE AS SELECT (S5)."""
+    def create(self, df: DataFrame, partition_by: list[str] | None = None) -> int:
+        """CREATE TABLE AS SELECT (S5). ``partition_by`` is the partition
+        spec — Iceberg transforms such as ``["days(ts)", "bucket(4, id)"]``
+        (see :func:`partition_transform`); it is recorded in the manifest
+        and every later commit inherits it until evolve_partitioning."""
         if self.current_version() != 0:
             raise ValueError(f"table {self.name} already exists")
-        files = self._write_files(df)
-        return self._commit(
-            {"files": files, "schema": df.schema.jsonValue(), "op": "create"}, 0
-        )
+        spec = list(partition_by or [])
+        manifest = {
+            "files": self._write_files(df, spec),
+            "schema": df.schema.jsonValue(),
+            "op": "create",
+        }
+        if spec:
+            manifest["partition_spec"] = spec
+        return self._commit(manifest, 0)
 
     def append(self, df: DataFrame) -> int:
         """INSERT INTO (S4): old files + new files, nothing rewritten.
@@ -492,10 +716,14 @@ class LakehouseTable:
         table column at its ordinal (ANSI cast errors surface)."""
         return self.append(self._bind_positional(df))
 
-    def _bind_positional(self, df: DataFrame) -> DataFrame:
+    def _bind_positional(
+        self, df: DataFrame, schema: dict | None = None
+    ) -> DataFrame:
+        """Rename and cast ``df``'s columns by ordinal onto ``schema``
+        (default: main's schema; a branch write passes its base's)."""
         from pyspark.sql.types import StructType
 
-        st = StructType.fromJson(self.schema_json())
+        st = StructType.fromJson(schema or self.schema_json())
         if len(df.columns) != len(st.fields):
             raise ValueError(
                 f"INSERT into {self.name}: {len(df.columns)} values for "
@@ -966,22 +1194,19 @@ class LakehouseTable:
         list is the old snapshot's — history is preserved, not erased.
 
         The commit is stamped ``rollforward_of`` so ancestry proofs
-        treat it as the SAME content point as its source: without the
-        stamp, a WAP publish (fast_forward_main → rollback_to) gives
-        the published content a new version identity and the NEXT
-        publish from the same branch can never prove ancestry — a
-        long-lived staging branch dead-ended after one publish
-        (ADVICE r9, reproduced).
+        treat it as the SAME content point as its source: a WAP publish
+        (``fast_forward("main", b)`` → rollback_to) keeps the published
+        content's version identity, so the next publish from the same
+        long-lived branch can still prove ancestry.
 
         Refuses a STAGED (unaudited branch-write) snapshot unless
-        ``_allow_staged`` — review-pass r18, reproduced: the direct
-        ``CALL system.rollback_to_snapshot`` door otherwise published
-        unaudited rows to main AND stamped them rollforward_of,
-        bypassing the WAP audit gate fast_forward_main enforces (which
-        is the one caller allowed to pass the flag, after its own
-        _assert_fast_forward).  Iceberg's procedure likewise refuses
-        non-ancestors.  A missing/expired version raises the
-        contracted ValueError, not a raw FileNotFoundError."""
+        ``_allow_staged``: the direct ``CALL system.rollback_to_snapshot``
+        door must not publish unaudited rows to main, bypassing the WAP
+        audit gate of ``fast_forward("main", b)`` — the one caller
+        allowed to pass the flag, after its own _assert_fast_forward.
+        Iceberg's procedure likewise refuses non-ancestors.  A
+        missing/expired version raises the contracted ValueError, not a
+        raw FileNotFoundError."""
         parent = self.current_version()
         try:
             m = self._read_manifest(version)
@@ -1030,9 +1255,8 @@ class LakehouseTable:
         Idempotent: snapshots already expired by a previous call are
         skipped, not crashed on."""
         if keep_last < 1:
-            # [:-0] == [:0] silently inverted "retain none" into
-            # "retain everything" (review-pass r18); Iceberg validates
-            # retain_last >= 1 the same way
+            # [:-0] == [:0] would invert "retain none" into "retain
+            # everything"; Iceberg validates retain_last >= 1 the same way
             raise ValueError(f"keep_last must be >= 1, got {keep_last}")
         cur = self.current_version()
         candidates = [v for v in range(1, cur + 1)][:-keep_last]
@@ -1048,30 +1272,20 @@ class LakehouseTable:
                 continue  # expired by an earlier call (any keep_last)
         # Ref retention (Iceberg semantics): a snapshot a branch or tag
         # still points to — and any staged snapshot whose branch still
-        # exists — is non-expirable regardless of keep_last/age, else
-        # read_ref dies on FileNotFoundError after routine maintenance
-        # (review-pass finding). Refs live in BranchedLakehouse's
-        # _refs.json beside the snapshot log.
-        protected: set[int] = set()
-        try:
-            with open(os.path.join(self.root, "_refs.json")) as f:
-                refs = json.load(f)
-        except FileNotFoundError:
-            refs = None
-        if refs:
-            protected.update(int(v) for v in refs.get("branches", {}).values())
-            protected.update(int(v) for v in refs.get("tags", {}).values())
-            live_branches = set(refs.get("branches", {}))
-            protected.update(
-                v
-                for v, m in manifests.items()
-                if m.get("staged_ref") in live_branches
-            )
-        # MAIN-head retention (review-pass r18, reproduced): when staged
-        # branch snapshots occupy the trailing keep_last slots, the
-        # current main head fell into the candidate range — expiring it
-        # wedged every main-side read with "main head expired below
-        # staged snapshots", unrecoverable by dropping the branch.
+        # exists — is non-expirable regardless of keep_last/age, so
+        # read_ref keeps working after routine maintenance.
+        refs = self._refs()
+        protected = {int(v) for v in refs["branches"].values()}
+        protected.update(int(v) for v in refs["tags"].values())
+        protected.update(
+            v
+            for v, m in manifests.items()
+            if m.get("staged_ref") in refs["branches"]
+        )
+        # MAIN-head retention: when staged branch snapshots occupy the
+        # trailing keep_last slots, the current main head falls into the
+        # candidate range, and expiring it would wedge every main-side
+        # read with "main head expired below staged snapshots".
         # Protect the whole main_head() walk path [mh .. cur]: every
         # snapshot the staged-skipping walk may touch must stay
         # readable (a dropped branch's staged snapshot between cur and
@@ -1262,7 +1476,7 @@ class LakehouseTable:
         """Evolving a column a partition transform reads would break
         every subsequent write's layout — refuse loudly (Iceberg makes
         you evolve the partition spec first)."""
-        for spec in getattr(self, "specs", []) or []:
+        for spec in self._partition_spec():
             if re.search(rf"\b{re.escape(col)}\b", spec):
                 raise ValueError(
                     f"{op}: column {col!r} is a partition source "
@@ -1511,243 +1725,6 @@ class LakehouseTable:
             out = out.unionByName(p)
         return out
 
-
-# ---------------------------------------------------------------------------
-# M7: hidden partitioning / partition transforms + evolution
-# M8: branches / tags / write-audit-publish
-# ---------------------------------------------------------------------------
-
-
-#: ISO date / datetime shapes (either separator convention) — the gate
-#: for every temporal-bound normalization below: NON-temporal string
-#: bounds must pass through verbatim (review-pass r14: a blanket
-#: separator replace corrupted string-column range bounds like
-#: 'NEW YORK')
-_ISO_TEMPORAL_RE = None
-
-
-def _looks_temporal(s: str) -> bool:
-    global _ISO_TEMPORAL_RE
-    if _ISO_TEMPORAL_RE is None:
-        import re
-
-        _ISO_TEMPORAL_RE = re.compile(
-            r"\d{4}-\d{2}-\d{2}([T ]\d{2}:\d{2}(:\d{2}(\.\d+)?)?)?$"
-        )
-    return bool(_ISO_TEMPORAL_RE.match(s))
-
-
-def temporal_bound_iso(v, sep: str = " ") -> str | None:
-    """Canonical civil ISO string for a temporal range bound — THE one
-    bound normalizer (review-pass r14: three inline variants in this
-    file each encoded their own separator convention, the exact drift
-    class the host-TZ sweep caught in the stats pruner).  Accepts
-    datetime/date objects and ISO strings in either separator
-    convention; date-only inputs gain midnight, minute-precision inputs
-    gain ':00' — every temporal return value is the FULL
-    'YYYY-MM-DD HH:MM:SS[.fff]' form (ADVICE r14: read_pruned's trunc
-    slices are positional and pruned_files' compare is lexicographic,
-    so an un-padded 'HH:MM' hi bound over-pruned a file whose min is
-    exactly that minute: '...T08:30' < '...T08:30:00').  Returns None
-    when the value is a string that does not look temporal — the caller
-    must pass those through VERBATIM (string-column bounds)."""
-    import datetime
-
-    if isinstance(v, datetime.datetime):
-        if v.tzinfo is not None:
-            # zoned instants canonicalize to UTC-NAIVE (review-pass
-            # r15): an offset-suffixed '…15+00:00' compares
-            # lexicographically against naive stats and over-prunes;
-            # UTC civil order equals instant order, and the session
-            # pins UTC so civil values are what the engine compares
-            v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-        s = v.isoformat(sep=" ")
-    elif isinstance(v, datetime.date):
-        s = f"{v.isoformat()} 00:00:00"
-    else:
-        s = str(v)
-        if not _looks_temporal(s):
-            return None
-        s = s.replace("T", " ")
-        if len(s) == 10:
-            s += " 00:00:00"
-        elif len(s) == 16:
-            s += ":00"
-        if "." in s:
-            # canonicalize the FRACTION to the stats encoder's
-            # convention (datetime.isoformat: absent when zero, else
-            # exactly 6 digits) — review-pass r15: a short-fraction
-            # bound '…15.5' compared lexicographically against the
-            # 6-digit stat '…15.500000' and over-pruned the boundary
-            # file. Digits past microseconds TRUNCATE — the same thing
-            # Spark's cast does in the residual/filter, so pruning and
-            # filtering always agree; note a truncated lo bound is up
-            # to 1 µs more inclusive than the sub-µs literal asked for
-            # (a row at exactly …15.000000 passes lo '…15.0000001') —
-            # timestamp[us] engines cannot honor sub-µs bounds exactly.
-            head, frac = s.split(".", 1)
-            frac = (frac + "000000")[:6]
-            s = head if int(frac) == 0 else f"{head}.{frac}"
-    return s.replace(" ", sep, 1) if sep != " " else s
-
-
-def is_temporal_dtype(dt) -> bool:
-    """THE one definition of 'temporal column' for bound normalization
-    — pruned_files, read_range and read_pruned's residual all gate on
-    this, so the temporal-type set can never diverge between the
-    pruning paths (review-pass r15: the gate was spelled twice)."""
-    from pyspark.sql.types import (
-        DateType,
-        TimestampNTZType,
-        TimestampType,
-    )
-
-    return isinstance(dt, (DateType, TimestampNTZType, TimestampType))
-
-
-def partition_segments(path: str) -> list[tuple[str, str]]:
-    """(key, unquoted value) pairs from a file path's hive-style
-    partition directory segments — THE one decoder for the engine's
-    ``k=v`` encoding.  read_pruned, overwrite_partitions and the
-    queries-side pruning contracts all parse this convention; a single
-    shared decoder keeps them bit-identical if the escaping ever
-    changes (review-pass r14)."""
-    import urllib.parse
-
-    out = []
-    for seg in path.split(os.sep):
-        if "=" in seg:
-            k, v = seg.split("=", 1)
-            out.append((k, urllib.parse.unquote(v)))
-    return out
-
-
-def partition_transform(spec: str) -> tuple[str, F.Column]:
-    """Parse an Iceberg-style partition transform into (name, column):
-    identity(c) | years(c) | months(c) | days(c) | hours(c) |
-    bucket(n, c) | truncate(w, c)  (SURVEY.md §2.11 M7).
-
-    The transform column is *derived* — hidden partitioning means users
-    filter on the source column and the engine prunes via the transform.
-    """
-    spec = spec.strip()
-    name, inner = spec.split("(", 1)
-    args = [a.strip() for a in inner.rstrip(")").split(",")]
-    name = name.strip()
-    if name == "identity":
-        return f"p_{args[0]}", F.col(args[0])
-    if name in ("years", "months", "days", "hours"):
-        unit = {"years": "year", "months": "month", "days": "day", "hours": "hour"}[name]
-        return f"p_{name}_{args[0]}", F.date_trunc(unit, F.col(args[0])).cast("string")
-    if name == "bucket":
-        n, c = int(args[0]), args[1]
-        return f"p_bucket_{c}", F.pmod(F.xxhash64(F.col(c)), F.lit(n))
-    if name == "truncate":
-        w, c = int(args[0]), args[1]
-        return f"p_trunc_{c}", F.substring(F.col(c), 1, w)
-    raise ValueError(f"unknown partition transform {spec!r}")
-
-
-class PartitionedLakehouseTable(LakehouseTable):
-    """LakehouseTable whose data files are laid out by partition
-    transforms (hive-style dirs of *derived* columns → Spark's scan
-    prunes directories when filters imply transform predicates)."""
-
-    def __init__(self, spark, warehouse, name, partition_specs: list[str]):
-        super().__init__(spark, warehouse, name)
-        self.specs = partition_specs
-
-    def _write_files(self, df: DataFrame) -> list[str]:
-        import uuid as _uuid
-
-        cols = [partition_transform(s) for s in self.specs]
-        out = os.path.join(self.data_dir, _uuid.uuid4().hex[:12])
-        (
-            df.withColumns({n: c for n, c in cols})
-            .write.mode("overwrite")
-            .partitionBy(*[n for n, _ in cols])
-            .parquet(out)
-        )
-        files = []
-        for root, _dirs, names in os.walk(out):
-            files.extend(
-                os.path.join(root, f) for f in names if f.endswith(".parquet")
-            )
-        return sorted(files)
-
-    def read(self, version: int | None = None) -> DataFrame:
-        """basePath option keeps partition-dir columns visible so Spark
-        prunes directories on transform predicates, then we drop the
-        derived columns — the 'hidden' in hidden partitioning.
-
-        Only the manifest's explicit file list is read, never the whole
-        batch directory: after inherited copy-on-write DML the directory
-        may still hold files the manifest no longer references (they are
-        reclaimed by expire_snapshots), and reading by directory would
-        resurrect their rows.
-        """
-        from pyspark.sql.types import StructType
-
-        v = version if version is not None else self.main_head()
-        if v == 0:
-            # clean contracted error, matching schema_json/read_pruned —
-            # falling through used to leak a raw FileNotFoundError for
-            # v00000.json (review-pass r15)
-            raise ValueError(f"table {self.name} does not exist")
-        try:
-            m = self._read_manifest(v)
-        except FileNotFoundError:
-            raise ValueError(
-                f"table {self.name}: snapshot v{v} expired or never "
-                "existed"
-            ) from None
-        schema_names = {f_json["name"] for f_json in m["schema"]["fields"]}
-        files = self._files(v)
-        if not files:
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(m["schema"])
-            )
-        # One batch root per write (and per partition-spec era): each
-        # root is its own partitioned dataset with its own basePath —
-        # read each root's manifest files, strip derived p_* columns,
-        # union by name. The batch root is the first path component
-        # under data_dir (a uuid hex dir) — splitting the full path on
-        # '/p_' would truncate wrongly when the WAREHOUSE path itself
-        # contains that substring (review-pass r15).
-        by_root: dict[str, list[str]] = {}
-        for f in files:
-            rel = os.path.relpath(f, self.data_dir)
-            root = os.path.join(self.data_dir, rel.split(os.sep, 1)[0])
-            by_root.setdefault(root, []).append(f)
-        out = None
-        for root in sorted(by_root):
-            df = self.spark.read.option("basePath", root).parquet(
-                *sorted(by_root[root])
-            )
-            # drop only DERIVED partition columns: a p_-prefixed name
-            # that belongs to the manifest schema is a real user column
-            # (it used to be dropped and re-added as all-NULL —
-            # review-pass r15)
-            df = df.drop(
-                *[
-                    c
-                    for c in df.columns
-                    if c.startswith("p_") and c not in schema_names
-                ]
-            )
-            out = df if out is None else out.unionByName(
-                df, allowMissingColumns=True
-            )
-        # evolved columns absent from every physical file still need to
-        # exist before the defaults pass can fill them
-        for f_json in m["schema"]["fields"]:
-            if f_json["name"] not in out.columns:
-                out = out.withColumn(
-                    f_json["name"],
-                    F.lit(None).cast(f_json["type"]),
-                )
-        return self._apply_defaults(out, m, set(files))
-
     def read_pruned(self, col: str, lo, hi, with_files: bool = False):
         """Hidden-partition predicate rewrite (SURVEY §2.2 P3) — the
         engine-side half of hidden partitioning: a range predicate on
@@ -1761,11 +1738,9 @@ class PartitionedLakehouseTable(LakehouseTable):
         assert the pruning effect (files_scanned < files_total), not
         just result correctness.  ``with_files=True`` returns the file
         LISTS instead of counts — ``(df, kept_files, all_files)`` — so
-        callers can state partition-LEVEL contracts (the r14
-        multi-file fixture sweep showed file-count ratios are layout
-        noise: per-partition file counts scale with the writer's input
-        task count, so a ratio threshold tuned on single-file fixtures
-        broke on a 4-file input while the pruning itself was correct). Files whose path carries no time
+        callers can state partition-LEVEL contracts (file-count ratios
+        are layout noise: per-partition file counts scale with the
+        writer's input task count). Files whose path carries no time
         transform of ``col`` (bucket/truncate transforms, or spec eras
         from before partition evolution) are KEPT — safe over-read,
         exactly how Iceberg handles partition-spec evolution. The
@@ -1800,7 +1775,7 @@ class PartitionedLakehouseTable(LakehouseTable):
         def residual(frame: DataFrame) -> DataFrame:
             # TEMPORAL columns compare the normalized ISO bounds CAST
             # to the column's own dtype — the same treatment
-            # read_range.bound() applies (ADVICE r14): a naive Python
+            # read_range.bound() applies: a naive Python
             # datetime handed to Spark raw becomes a ZONED literal
             # converted through the driver process's LOCAL timezone, so
             # comparing it against an NTZ column would shift the range
@@ -1808,7 +1783,7 @@ class PartitionedLakehouseTable(LakehouseTable):
             # (e.g. a truncate()-partitioned ISO-day column) compares
             # the RAW bounds verbatim — padding them to '... 00:00:00'
             # would over-filter its boundary rows lexicographically
-            # (review-pass r15, the same dtype gate as pruned_files).
+            # (the same dtype gate as pruned_files).
             dt = frame.schema[col].dataType
             if is_temporal_dtype(dt):
                 lo_l, hi_l = F.lit(lo_iso).cast(dt), F.lit(hi_iso).cast(dt)
@@ -1817,7 +1792,7 @@ class PartitionedLakehouseTable(LakehouseTable):
             return frame.filter((F.col(col) >= lo_l) & (F.col(col) < hi_l))
 
         # ONE snapshot-log walk + manifest read serves file list,
-        # schema and the scan (review-pass r15)
+        # schema and the scan
         head = self.main_head()
         if head == 0:
             raise ValueError(f"table {self.name} does not exist")
@@ -1869,12 +1844,14 @@ class PartitionedLakehouseTable(LakehouseTable):
         derived columns are conservatively KEPT — after partition
         evolution, run a full overwrite or compaction to rewrite old
         eras (same caveat Iceberg documents for dynamic overwrite
-        across spec changes).
+        across spec changes). On a missing table it is an unpartitioned
+        create; ``create(df, partition_by=...)`` makes a partitioned one.
         """
         parent = self.current_version()
         if parent == 0:
             return self.create(df)
-        cols = [partition_transform(s) for s in self.specs]
+        spec = self._partition_spec()
+        cols = [partition_transform(s) for s in spec]
         names = [n for n, _ in cols]
         touched = {
             tuple(
@@ -1894,7 +1871,7 @@ class PartitionedLakehouseTable(LakehouseTable):
             return tuple(vals.get(n) for n in names)
 
         keep = [f for f in self._files() if file_partition(f) not in touched]
-        new_files = self._write_files(df)
+        new_files = self._write_files(df, spec)
         return self._commit(
             {
                 "files": keep + new_files,
@@ -1910,29 +1887,22 @@ class PartitionedLakehouseTable(LakehouseTable):
         files keep their layout — exactly Iceberg's spec-versioning.
         Manifest-only commit, no rewrite."""
         parent = self.current_version()
-        self.specs = new_specs
         return self._commit(
             {
                 "files": self._files(),
                 "schema": self.schema_json(),
                 "op": f"evolve_partitioning:{','.join(new_specs)}",
+                "partition_spec": list(new_specs),
             },
             parent,
         )
 
-
-class BranchedLakehouse:
-    """Branches / tags / WAP over LakehouseTable (M8).
-
-    A branch is a named pointer to a snapshot version advancing
-    independently of `main`; a tag is an immutable pointer. WAP =
-    write to a staging branch, audit it, then fast-forward main —
-    the same flow Iceberg's spark.wap.id enables.
-    """
-
-    def __init__(self, table: LakehouseTable):
-        self.table = table
-        self.refs_path = os.path.join(table.root, "_refs.json")
+    # ---------- M8: branches / tags / write-audit-publish ----------
+    # A branch is a named pointer to a snapshot version advancing
+    # independently of main; a tag is an immutable pointer. WAP =
+    # write to a staging branch, audit it, then fast-forward main —
+    # the same flow Iceberg's spark.wap.id enables. Refs live in
+    # ``_refs.json`` beside the snapshot log; main is the log itself.
 
     def _refs(self) -> dict:
         try:
@@ -1941,16 +1911,11 @@ class BranchedLakehouse:
         except FileNotFoundError:
             return {"branches": {}, "tags": {}}
 
-    def _save(self, refs: dict) -> None:
+    def _save_refs(self, refs: dict) -> None:
         tmp = self.refs_path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(refs, f, indent=1)
         os.replace(tmp, self.refs_path)
-
-    def main_head(self) -> int:
-        """Delegates to the table's main_head() — the newest snapshot
-        not staged by a branch write (see LakehouseTable.main_head)."""
-        return self.table.main_head()
 
     def create_branch(
         self,
@@ -1972,7 +1937,7 @@ class BranchedLakehouse:
             )
         v = at_version if at_version is not None else self.main_head()
         refs["branches"][name] = v
-        self._save(refs)
+        self._save_refs(refs)
         return v
 
     def create_tag(
@@ -1988,7 +1953,7 @@ class BranchedLakehouse:
             raise ValueError(f"tag {name} exists (tags are immutable)")
         v = at_version if at_version is not None else self.main_head()
         refs["tags"][name] = v
-        self._save(refs)
+        self._save_refs(refs)
         return v
 
     def drop_branch(self, name: str) -> int:
@@ -1996,7 +1961,7 @@ class BranchedLakehouse:
         if name not in refs["branches"]:
             raise KeyError(f"unknown branch {name}")
         v = refs["branches"].pop(name)
-        self._save(refs)
+        self._save_refs(refs)
         return v
 
     def drop_tag(self, name: str) -> int:
@@ -2004,7 +1969,7 @@ class BranchedLakehouse:
         if name not in refs["tags"]:
             raise KeyError(f"unknown tag {name}")
         v = refs["tags"].pop(name)
-        self._save(refs)
+        self._save_refs(refs)
         return v
 
     def replace_branch(self, name: str, at_version: int) -> int:
@@ -2015,12 +1980,12 @@ class BranchedLakehouse:
         if name not in refs["branches"]:
             raise KeyError(f"unknown branch {name}")
         refs["branches"][name] = at_version
-        self._save(refs)
+        self._save_refs(refs)
         return at_version
 
     def _manifest_or_none(self, v: int) -> dict | None:
         try:
-            return self.table._read_manifest(v)
+            return self._read_manifest(v)
         except FileNotFoundError:
             return None  # expired — callers treat as unprovable
 
@@ -2028,9 +1993,8 @@ class BranchedLakehouse:
         """``v`` plus every version it is a rollforward of,
         transitively: a rollback_to / publish commit carries its
         source's CONTENT under a new version number, so ancestry
-        proofs must treat the whole chain as one point in history
-        (ADVICE r9: without this, the second publish from a
-        long-lived staging branch always failed)."""
+        proofs must treat the whole chain as one point in history (a
+        long-lived staging branch can then publish more than once)."""
         ids, cur = {v}, v
         while cur > 0:
             m = self._manifest_or_none(cur)
@@ -2049,8 +2013,8 @@ class BranchedLakehouse:
         descendant; a blind re-point would silently discard every
         commit the moved ref gained after the branch was based (e.g. a
         concurrent main append between the branch write and the
-        publish) — a data-loss hazard, not a merge (review-pass
-        finding). Divergent publishes go through cherrypick_snapshot.
+        publish) — a data-loss hazard, not a merge. Divergent
+        publishes go through cherrypick_snapshot.
 
         The content chain walked from ``to`` downward:
           * staged snapshot → its ``ref_base`` (the branch head the
@@ -2060,19 +2024,17 @@ class BranchedLakehouse:
           * plain main commit → the newest non-staged version below it
             (main commits base on main_head(), which is exactly that
             walk) — so a stale branch catching up to a NEWER main head
-            is recognized as the genuine fast-forward it is (ADVICE
-            r9: the old walk broke at the first main-side snapshot and
-            refused Iceberg's standard branch catch-up).
+            is recognized as the genuine fast-forward it is (Iceberg's
+            standard branch catch-up).
         ``frm`` matches through its own rollforward identity, so a
         published (rolled-forward) main head equals the branch content
         it was published from.
         """
         frm_ids = self._rollforward_identity(frm)
         # per-call manifest memo: the main-side predecessor scan below
-        # re-reads one version at a time, which on a long history with
-        # many staged snapshots was O(versions^2) manifest JSON reads
-        # (ADVICE r10); with each version's manifest read at most once
-        # per call the walk is linear in the version count.
+        # re-reads one version at a time; with each version's manifest
+        # read at most once per call the walk stays linear in the
+        # version count on a long history with many staged snapshots.
         memo: dict[int, dict | None] = {}
 
         def mf(v: int):
@@ -2127,12 +2089,12 @@ class BranchedLakehouse:
             raise KeyError(f"unknown ref {to}")
         if branch == "main":
             self._assert_fast_forward(self.main_head(), v, "main")
-            return self.table.rollback_to(v, _allow_staged=True)
+            return self.rollback_to(v, _allow_staged=True)
         if branch not in refs["branches"]:
             raise KeyError(f"unknown branch {branch}")
         self._assert_fast_forward(refs["branches"][branch], v, branch)
         refs["branches"][branch] = v
-        self._save(refs)
+        self._save_refs(refs)
         return v
 
     def read_ref(self, name: str) -> DataFrame:
@@ -2140,15 +2102,14 @@ class BranchedLakehouse:
         v = refs["branches"].get(name, refs["tags"].get(name))
         if v is None:
             raise KeyError(f"unknown ref {name}")
-        return self.table.read(version=v)
+        return self.read(version=v)
 
     def write_to_branch(
         self, name: str, df: DataFrame, positional: bool = False
     ) -> int:
         """Append lands as a new snapshot BASED ON THE BRANCH'S OWN
         HEAD (not `_current` — basing on the shared log head would
-        silently fold another branch's staged files into this one,
-        the multi-branch bug the review pass surfaced), tagged
+        silently fold another branch's staged files into this one), tagged
         ``staged_ref`` so main_head() skips it; only the branch
         pointer moves — the W of WAP. The shared snapshot log's
         `_current` does advance (exactly as Iceberg's snapshot list
@@ -2157,37 +2118,22 @@ class BranchedLakehouse:
         the API-level spelling. ``positional`` binds columns by
         position (the SQL-door INSERT contract — a VALUES frame
         arrives named col1/col2)."""
-        from pyspark.sql.types import StructType
-
         refs = self._refs()
         if name not in refs["branches"]:
             raise KeyError(f"unknown branch {name}")
         base = refs["branches"][name]
-        schema = self.table._read_manifest(base)["schema"]
-        st = StructType.fromJson(schema)
+        schema = self._read_manifest(base)["schema"]
         if positional:
-            if len(df.columns) != len(st.fields):
-                raise ValueError(
-                    f"INSERT into branch {name}: {len(df.columns)} values "
-                    f"for {len(st.fields)} columns"
-                )
-            df = df.select(
-                *[
-                    F.col(src).cast(fld.dataType).alias(fld.name)
-                    for src, fld in zip(df.columns, st.fields)
-                ]
-            )
-        cols = [f.name for f in st.fields]
+            df = self._bind_positional(df, schema)
+        cols = [f["name"] for f in schema["fields"]]
         missing = [c for c in cols if c not in df.columns]
         if missing:
             raise ValueError(
                 f"append to branch {name}: frame lacks column(s) {missing}"
             )
-        parent = self.table.current_version()
-        files = self.table._files(base) + self.table._write_files(
-            df.select(cols)
-        )
-        v = self.table._commit(
+        parent = self.current_version()
+        files = self._files(base) + self._write_files(df.select(cols))
+        v = self._commit(
             {
                 "files": files,
                 "schema": schema,
@@ -2202,124 +2148,14 @@ class BranchedLakehouse:
         )
         refs = self._refs()
         refs["branches"][name] = v
-        self._save(refs)
+        self._save_refs(refs)
         return v
-
-    def fast_forward_main(self, branch: str) -> int:
-        """The P of WAP: after auditing the branch snapshot, make it the
-        table's current version via a rollforward commit. Same
-        ancestry guard as fast_forward — a publish must never discard
-        main commits that landed after the branch was based."""
-        refs = self._refs()
-        v = refs["branches"][branch]
-        self._assert_fast_forward(self.main_head(), v, "main")
-        return self.table.rollback_to(v, _allow_staged=True)
-
-
-# ---------------------------------------------------------------------------
-# File-level column statistics → min/max data skipping (Iceberg manifest
-# pruning parity; SURVEY.md §4 "min/max file skipping") + remaining S7/M5
-# metadata relations and procedures.
-# ---------------------------------------------------------------------------
-
-
-def _file_column_stats(path: str) -> dict[str, list]:
-    """Per-file min/max per column from the parquet footer (pyarrow) —
-    the driver only ever touches footers, never data pages. Values are
-    stored JSON-safe (ISO strings for timestamps)."""
-    import datetime
-
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    mins: dict[str, object] = {}
-    maxs: dict[str, object] = {}
-    for rg in range(md.num_row_groups):
-        g = md.row_group(rg)
-        for ci in range(g.num_columns):
-            col = g.column(ci)
-            st = col.statistics
-            if st is None or not st.has_min_max:
-                continue
-            name = col.path_in_schema
-            lo, hi = st.min, st.max
-            if isinstance(lo, bytes):
-                continue  # binary stats aren't comparable cross-engine
-            if name not in mins or lo < mins[name]:
-                mins[name] = lo
-            if name not in maxs or hi > maxs[name]:
-                maxs[name] = hi
-
-    def enc(v):
-        # datetime first (it subclasses date): 'T'-separated with
-        # seconds, zoned instants stored UTC-NAIVE (a pyarrow stat from
-        # a Spark-written zoned column is tz-aware; its '+00:00' suffix
-        # would defeat every lexicographic compare — review-pass r15).
-        # Bare dates gain an explicit midnight so DATE-column
-        # stats share the timestamp convention — pruned_files compares
-        # bounds lexicographically after normalizing them to the SAME
-        # 'YYYY-MM-DDTHH:MM:SS' shape, and a date-only stat would sort
-        # BEFORE its own day's midnight ('2024-01-02' <
-        # '2024-01-02T00:00:00'), wrongly pruning the file whose max is
-        # exactly the bound's day (VERDICT r14 #2).
-        if isinstance(v, datetime.datetime):
-            if v.tzinfo is not None:
-                v = v.astimezone(datetime.timezone.utc).replace(
-                    tzinfo=None
-                )
-            return v.isoformat()
-        if isinstance(v, datetime.date):
-            return v.isoformat() + "T00:00:00"
-        return v
-
-    return {
-        "min": {k: enc(v) for k, v in mins.items()},
-        "max": {k: enc(v) for k, v in maxs.items()},
-    }
-
-
-class StatsLakehouseTable(LakehouseTable):
-    """LakehouseTable whose manifests carry per-file column min/max, so
-    range scans skip files whose stats exclude the predicate — Iceberg's
-    manifest filtering, minus the cluster."""
-
-    def _write_files(self, df: DataFrame) -> list[str]:
-        files = super()._write_files(df)
-        stats = {f: _file_column_stats(f) for f in files}
-        self._pending_stats = getattr(self, "_pending_stats", {})
-        self._pending_stats.update(stats)
-        return files
-
-    def _commit(self, manifest: dict, expected_parent: int) -> int:
-        # attach collected stats, carrying forward stats of kept files.
-        # Carry-forward reads the LOG parent AND the main head
-        # (review-pass r18): after a staged branch write, the log
-        # parent is the branch's manifest — main files absent from the
-        # branch's file list would lose their stats in every later
-        # main commit, silently disabling file skipping for them
-        # (safe but unprunable forever).
-        prev: dict = {}
-        if expected_parent:
-            mh = self.main_head()
-            if mh and mh != expected_parent:
-                prev.update(self._read_manifest(mh).get("stats", {}))
-            prev.update(self._read_manifest(expected_parent).get("stats", {}))
-        pending = getattr(self, "_pending_stats", {})
-        manifest["stats"] = {
-            f: (pending.get(f) or prev.get(f))
-            for f in manifest["files"]
-            if (pending.get(f) or prev.get(f)) is not None
-        }
-        self._pending_stats = {}
-        return super()._commit(manifest, expected_parent)
 
     def files(self) -> DataFrame:
         """The `t.files` metadata relation: path + per-column min/max."""
-        import json as _json
-
         m = self._read_manifest(self.main_head())
         rows = [
-            (f, _json.dumps(m.get("stats", {}).get(f, {})))
+            (f, json.dumps(m.get("stats", {}).get(f, {})))
             for f in m["files"]
         ]
         return self.spark.createDataFrame(rows, "file_path string, stats_json string")
@@ -2335,21 +2171,19 @@ class StatsLakehouseTable(LakehouseTable):
     def _pruned_files_in(self, m: dict, col: str, lo, hi) -> list[str]:
         """pruned_files against an ALREADY-READ head manifest — range
         scans read the snapshot log once and share the manifest between
-        pruning, schema and the file scan (review-pass r15: the scan
-        path walked the log three times per call)."""
+        pruning, schema and the file scan."""
         # stats store timestamps as ISO strings; normalize TEMPORAL
         # bounds to the stats' 'T'-separated convention (ISO-8601
         # orders lexicographically only within one separator
         # convention).  The normalization is gated on the COLUMN's own
-        # dtype, exactly like read_range's bound() below (VERDICT r14
-        # #2): a date-SHAPED bound on a STRING column must compare raw
+        # dtype, exactly like read_range's bound() below: a date-SHAPED
+        # bound on a STRING column must compare raw
         # against the raw string stats — normalizing it to
         # '...T00:00:00' would over-prune a file whose string max is
         # the bare 'YYYY-MM-DD'.  DATE-column stats carry an explicit
         # midnight (see _file_column_stats.enc), so DATE bounds share
         # the timestamp convention after normalization.  The gate
-        # travels with this API — callers can't forget it (VERDICT r14
-        # #7).
+        # travels with this API — callers can't forget it.
         from pyspark.sql.types import StructType
 
         schema = StructType.fromJson(m["schema"])
@@ -2364,8 +2198,8 @@ class StatsLakehouseTable(LakehouseTable):
                 # LOUDLY on a temporal column — the raw space-separated
                 # string would compare lexicographically against
                 # 'T'-separated stats and silently drop files
-                # (review-pass r15; fractional-minute ISO shapes like
-                # '08:30.5' are rejected: pass full seconds)
+                # (fractional-minute ISO shapes like '08:30.5' are
+                # rejected: pass full seconds)
                 raise ValueError(
                     f"unsupported temporal bound for {col!r}: "
                     f"{lo!r}..{hi!r} — pass "
@@ -2382,7 +2216,7 @@ class StatsLakehouseTable(LakehouseTable):
             fmin, fmax = s["min"][col], s["max"][col]
             if temporal_col:
                 # self-healing for stats written before the midnight
-                # canonicalization (review-pass r15): manifests carry
+                # canonicalization: manifests carry
                 # file stats FORWARD across commits, so a legacy
                 # date-only 'YYYY-MM-DD' stat on a DATE column would
                 # still sort before its own day's normalized bound —
@@ -2505,17 +2339,17 @@ class StatsLakehouseTable(LakehouseTable):
         """Range scan using min/max skipping + the residual filter.
 
         Datetime bounds are normalized to ISO strings cast to the
-        COLUMN's own type (r14 host-TZ sweep): a naive Python datetime
-        passed to Spark becomes a ZONED literal converted through the
-        driver process's LOCAL timezone, so comparing it against an
-        NTZ column shifted the range by the host's UTC offset."""
+        COLUMN's own type: a naive Python datetime passed to Spark
+        becomes a ZONED literal converted through the Python process's
+        LOCAL timezone, so comparing it against an NTZ column would
+        shift the range by the host's UTC offset."""
         from pyspark.sql.types import StructType
 
         head = self.main_head()
         if head == 0:
             raise ValueError(f"table {self.name} does not exist")
         # ONE snapshot-log walk + manifest read serves pruning, schema
-        # and the file scan (review-pass r15)
+        # and the file scan
         m = self._read_manifest(head)
         files = self._pruned_files_in(m, col, lo, hi)
         if not files:
@@ -2527,9 +2361,7 @@ class StatsLakehouseTable(LakehouseTable):
 
         def bound(v):
             # only TEMPORAL columns get the ISO normalization + cast;
-            # string/numeric bounds pass through verbatim (review-pass
-            # r14: a blanket separator replace corrupted string-column
-            # bounds)
+            # string/numeric bounds pass through verbatim
             if temporal_col:
                 iso_v = temporal_bound_iso(v)
                 if iso_v is not None:

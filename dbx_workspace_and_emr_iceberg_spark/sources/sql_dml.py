@@ -441,29 +441,28 @@ def execute_insert(engine, sql: str) -> DataFrame:
         t = engine.managed(table)
     except (KeyError, ValueError):
         return engine.spark.sql(sql)
-    from .lakehouse import BranchedLakehouse, commit_with_retries
+    from .lakehouse import commit_with_retries
 
     df = _run_body(engine, body)
     if branch is not None:
         if mode != "INTO":
             raise ValueError("INSERT OVERWRITE into a branch is not supported")
-        b = BranchedLakehouse(t)
-        if branch not in b._refs()["branches"]:
+        if branch not in t._refs()["branches"]:
             raise KeyError(f"unknown branch {branch!r} on table {table!r}")
         version = commit_with_retries(
-            lambda: b.write_to_branch(branch, df, positional=True)
+            lambda: t.write_to_branch(branch, df, positional=True)
         )
         # main's view is NOT refreshed: the branch pointer moved, main
         # didn't — that is the W of WAP. n_rows reports the INSERTED
         # batch (O(batch)): counting the whole branch would full-scan
-        # the table per INSERT statement (review-pass finding). NOTE
+        # the table per INSERT statement. NOTE
         # this differs from the insert/insert_overwrite arms below,
         # which report the post-statement TABLE total — a branch
         # INSERT's table total is ambiguous (which ref?), the batch is
         # not. Counted from the NEWLY WRITTEN files' parquet footers
         # (O(batch) metadata reads), never by re-running the source
         # SELECT — a non-deterministic source would otherwise report a
-        # count differing from the rows actually written (ADVICE r9).
+        # count differing from the rows actually written.
         import pyarrow.parquet as pq
 
         man = t._read_manifest(version)
@@ -593,30 +592,26 @@ def execute_alter(engine, sql: str) -> DataFrame:
         version = t.rename_column(args[0], args[1])
         detail = f"rename {args[0]} -> {args[1]}"
     else:  # branch/tag ref DDL — pointer moves, no data commit
-        from .lakehouse import BranchedLakehouse
-
-        b = BranchedLakehouse(t)
         name = args[0]
         if action == "create_branch":
-            version = b.create_branch(
+            version = t.create_branch(
                 name, at_version=args[1], if_not_exists=args[2]
             )
         elif action == "replace_branch":
             # default = main_head(), not the raw log head: after any
             # branch write the log head is a STAGED snapshot, and
             # re-pointing another branch there leaks unaudited data
-            # (review-pass finding, reproduced)
-            version = b.replace_branch(
-                name, args[1] if args[1] is not None else b.main_head()
+            version = t.replace_branch(
+                name, args[1] if args[1] is not None else t.main_head()
             )
         elif action == "create_tag":
-            version = b.create_tag(
+            version = t.create_tag(
                 name, at_version=args[1], if_not_exists=args[2]
             )
         elif action == "drop_branch":
-            version = b.drop_branch(name)
+            version = t.drop_branch(name)
         else:  # drop_tag
-            version = b.drop_tag(name)
+            version = t.drop_tag(name)
         return engine.spark.createDataFrame(
             [(table, "alter", version, f"{action} {name}")],
             "table string, operation string, version int, detail string",
@@ -755,9 +750,7 @@ def rewrite_time_travel(engine, sql: str) -> str:
         try:
             if kind == "VERSION" and not val.isdigit():
                 # Iceberg: VERSION AS OF accepts a branch/tag name too
-                from .lakehouse import BranchedLakehouse
-
-                df = BranchedLakehouse(t).read_ref(val)
+                df = t.read_ref(val)
             elif kind == "VERSION":
                 df = t.read(version=int(val))
             else:
@@ -855,8 +848,7 @@ _PROCEDURES = {
         {"older_than": "older_than_ms"},
     ),
     "rewrite_manifests": ("rewrite_manifests", [], {}),
-    # branch-layer procedure (M8): dispatched through BranchedLakehouse
-    # in execute_call, not a LakehouseTable method
+    # branch-layer procedure (M8)
     "fast_forward": ("fast_forward", [("branch", str), ("to", str)], {}),
 }
 
@@ -929,10 +921,7 @@ def execute_call(engine, sql: str) -> DataFrame:
     proc, table, kwargs = parse_call(sql)
     method, _spec, _aliases = _PROCEDURES[proc]
     t = engine.managed(table)
-    from .lakehouse import BranchedLakehouse, commit_with_retries
-
-    if proc == "fast_forward":
-        t = BranchedLakehouse(t)  # ref-layer procedure, same interface
+    from .lakehouse import commit_with_retries
 
     # procedures re-read current state on entry (restartable), so they
     # get the same commit.retry treatment as DML; expire/orphan sweeps

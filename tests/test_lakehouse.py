@@ -122,11 +122,7 @@ def test_changelog_overwrite_is_full_diff(spark, wh):
 
 
 def test_rewrite_sorted_preserves_rows(spark, wh):
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        StatsLakehouseTable,
-    )
-
-    t = StatsLakehouseTable(spark, wh, "t")
+    t = LakehouseTable(spark, wh, "t")
     nat = load_table(spark, SF_DIR, "nation")
     t.create(nat.repartition(4, "n_name"))
     t.rewrite_sorted("n_nationkey", target_files=4)
@@ -181,15 +177,11 @@ def test_partitioned_read_honors_manifest_after_dml(spark, wh):
     """Copy-on-write DML on a partitioned table leaves stale files on
     disk until expiry; read() must follow the manifest file list, not
     the directory listing, or deleted rows resurrect."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
     ev = load_table(spark, SF_DIR, "events").select(
         "event_id", "ts", "user_id"
     ).filter(F.col("event_id") % 7 == 0)
-    t = PartitionedLakehouseTable(spark, wh, "ev", ["bucket(2, user_id)"])
-    t.create(ev)
+    t = LakehouseTable(spark, wh, "ev")
+    t.create(ev, partition_by=["bucket(2, user_id)"])
     n0 = t.read().count()
     doomed = t.read().filter(F.col("event_id") % 14 == 0).count()
     assert doomed > 0
@@ -249,10 +241,6 @@ def test_read_pruned_across_partition_evolution(spark, wh):
     its own path carries (days-era files by day, months-era files by
     month), and files carrying no time transform of the filter column
     are kept — the safe over-read Iceberg applies under spec evolution."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
     ev = (
         load_table(spark, SF_DIR, "events")
         .select("event_id", "ts", "user_id")
@@ -264,8 +252,8 @@ def test_read_pruned_across_partition_evolution(spark, wh):
     half_a = ev.filter(F.col("event_id") % 2 == 0)
     half_b = ev.filter(F.col("event_id") % 2 == 1)
 
-    t = PartitionedLakehouseTable(spark, wh, "ev_evo", ["days(ts)"])
-    t.create(half_a)
+    t = LakehouseTable(spark, wh, "ev_evo")
+    t.create(half_a, partition_by=["days(ts)"])
     t.evolve_partitioning(["months(ts)"])
     t.append(half_b)  # same time range, coarser layout
 
@@ -294,13 +282,9 @@ def test_read_pruned_keeps_untransformed_columns_safe(spark, wh):
     """A range filter on a column with NO time transform in the spec
     (bucket-only layout) must degrade to a full scan + residual filter,
     never a wrong prune."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
     ev = load_table(spark, SF_DIR, "events").select("event_id", "ts", "user_id")
-    t = PartitionedLakehouseTable(spark, wh, "ev_bkt", ["bucket(4, user_id)"])
-    t.create(ev)
+    t = LakehouseTable(spark, wh, "ev_bkt")
+    t.create(ev, partition_by=["bucket(4, user_id)"])
     lo, hi = "2024-01-11 00:00:00", "2024-01-12 00:00:00"
     got, n_scan, n_total = t.read_pruned("ts", lo, hi)
     assert n_scan == n_total, "bucket layout cannot prune a ts range"
@@ -315,10 +299,6 @@ def test_overwrite_partitions_replaces_only_touched(spark, wh):
     """S6 dynamic overwrite: only partitions present in the incoming
     frame are replaced; other partitions' files are carried into the
     new snapshot UNMODIFIED (same physical files, not rewritten)."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
     ev = (
         load_table(spark, SF_DIR, "events")
         .select("event_id", "ts", "user_id", "event_type")
@@ -327,8 +307,8 @@ def test_overwrite_partitions_replaces_only_touched(spark, wh):
             & (F.col("ts") < F.lit("2024-01-13 00:00:00").cast("timestamp"))
         )
     )
-    t = PartitionedLakehouseTable(spark, wh, "ev_dpo", ["days(ts)"])
-    t.create(ev)
+    t = LakehouseTable(spark, wh, "ev_dpo")
+    t.create(ev, partition_by=["days(ts)"])
     in_day = (F.col("ts") >= F.lit("2024-01-11 00:00:00").cast("timestamp")) & (
         F.col("ts") < F.lit("2024-01-12 00:00:00").cast("timestamp")
     )
@@ -345,12 +325,8 @@ def test_overwrite_partitions_replaces_only_touched(spark, wh):
 
 
 def test_overwrite_partitions_on_missing_table_creates(spark, wh):
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
     ev = load_table(spark, SF_DIR, "events").select("event_id", "ts", "user_id").limit(10)
-    t = PartitionedLakehouseTable(spark, wh, "ev_new", ["days(ts)"])
+    t = LakehouseTable(spark, wh, "ev_new")
     v = t.overwrite_partitions(ev)
     assert v == 1 and t.read().count() == 10
 
@@ -572,17 +548,13 @@ def test_changelog_cancels_rewrites_across_default_evolution(spark, tmp_path):
 def test_partitioned_table_applies_initial_default(spark, tmp_path):
     from pyspark.sql import functions as F
 
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
     ev = (
         spark.read.parquet("/root/testdata/sf0.001/events.parquet")
         .select("event_id", F.col("ts").cast("timestamp").alias("ts"), "user_id")
         .filter("event_id < 200")
     )
-    t = PartitionedLakehouseTable(spark, str(tmp_path), "ev", ["days(ts)"])
-    t.create(ev.coalesce(1))
+    t = LakehouseTable(spark, str(tmp_path), "ev")
+    t.create(ev.coalesce(1), partition_by=["days(ts)"])
     t.add_column("source_tag", "string", default="legacy")
     t.append(
         ev.limit(5)
@@ -744,15 +716,11 @@ def test_rename_and_drop_column_manifest_only(spark, tmp_path):
 
 
 def test_rename_drop_partition_source_refused(spark, tmp_path):
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
     ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet").select(
         "event_id", "ts", "user_id"
     )
-    t = PartitionedLakehouseTable(spark, str(tmp_path), "ev", ["bucket(2, user_id)"])
-    t.create(ev)
+    t = LakehouseTable(spark, str(tmp_path), "ev")
+    t.create(ev, partition_by=["bucket(2, user_id)"])
     with pytest.raises(ValueError, match="partition source"):
         t.rename_column("user_id", "uid")
     with pytest.raises(ValueError, match="partition source"):
@@ -829,51 +797,37 @@ def test_timestamp_as_of_skips_staged_branch_snapshots(spark, tmp_path):
     snapshot by timestamp must skip staged branch snapshots — else an
     INSERT INTO t.branch_b leaks unaudited rows into main-side time
     travel (the WAP leak class; review-pass finding)."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        BranchedLakehouse,
-        LakehouseTable,
-    )
-
     t = LakehouseTable(spark, str(tmp_path), "tt")
     t.create(spark.createDataFrame([(1,), (2,)], "id long"))  # v1 main
-    b = BranchedLakehouse(t)
-    b.create_branch("b")
-    b.write_to_branch("b", spark.createDataFrame([(9,)], "id long"))  # v2 staged
+    t.create_branch("b")
+    t.write_to_branch("b", spark.createDataFrame([(9,)], "id long"))  # v2 staged
     ts_now = t._read_manifest(2)["timestamp_ms"] + 10_000
     got = t.read_as_of_timestamp(ts_now)
     assert got.count() == 2, "TIMESTAMP AS OF leaked staged branch rows"
     # the branch itself still sees its write
-    assert b.read_ref("b").count() == 3
+    assert t.read_ref("b").count() == 3
 
 
 def test_fast_forward_refuses_divergent_publish(spark, tmp_path):
     """fast_forward('main', b) when main advanced AFTER the branch was
     based must refuse (Iceberg: target must be a descendant) — a blind
     rollforward would silently discard the concurrent main commit's
-    rows (data-loss hazard; review-pass finding)."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        BranchedLakehouse,
-        LakehouseTable,
-    )
-
+    rows (data-loss hazard)."""
     t = LakehouseTable(spark, str(tmp_path), "ff")
     t.create(spark.createDataFrame([(1,)], "id long"))  # v1 main
-    b = BranchedLakehouse(t)
-    b.create_branch("b")  # based at v1
-    b.write_to_branch("b", spark.createDataFrame([(9,)], "id long"))  # v2 staged
+    t.create_branch("b")  # based at v1
+    t.write_to_branch("b", spark.createDataFrame([(9,)], "id long"))  # v2 staged
     t.append(spark.createDataFrame([(2,)], "id long"))  # v3: main ADVANCED
     with pytest.raises(ValueError, match="not an ancestor"):
-        b.fast_forward("main", "b")
-    with pytest.raises(ValueError, match="not an ancestor"):
-        b.fast_forward_main("b")
+        t.fast_forward("main", "b")
     # main's concurrent commit survives intact
     assert t.read().count() == 2
 
     # the happy path still publishes: rebase the branch on main's new
     # head, write, publish — a true fast-forward
-    b.replace_branch("b", t.main_head())
-    b.write_to_branch("b", spark.createDataFrame([(10,)], "id long"))
-    b.fast_forward("main", "b")
+    t.replace_branch("b", t.main_head())
+    t.write_to_branch("b", spark.createDataFrame([(10,)], "id long"))
+    t.fast_forward("main", "b")
     assert t.read().count() == 3
 
 
@@ -881,24 +835,18 @@ def test_fast_forward_branch_to_branch_guarded(spark, tmp_path):
     """The branch→branch arm carries the same ancestry guard: moving a
     branch onto a ref that does not descend from it is a refusal, while
     advancing a stale branch onto its own descendant succeeds."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        BranchedLakehouse,
-        LakehouseTable,
-    )
-
     t = LakehouseTable(spark, str(tmp_path), "fb")
     t.create(spark.createDataFrame([(1,)], "id long"))  # v1 main
-    b = BranchedLakehouse(t)
-    b.create_branch("dev")   # v1
-    b.create_branch("lag")   # v1
-    b.write_to_branch("dev", spark.createDataFrame([(9,)], "id long"))  # v2
+    t.create_branch("dev")   # v1
+    t.create_branch("lag")   # v1
+    t.write_to_branch("dev", spark.createDataFrame([(9,)], "id long"))  # v2
     # lag (v1) is an ancestor of dev's head (v2): fast-forward OK
-    assert b.fast_forward("lag", "dev") == 2
+    assert t.fast_forward("lag", "dev") == 2
     # now diverge: lag writes its own snapshot off v2, dev writes too
-    b.write_to_branch("lag", spark.createDataFrame([(8,)], "id long"))  # v3
-    b.write_to_branch("dev", spark.createDataFrame([(7,)], "id long"))  # v4
+    t.write_to_branch("lag", spark.createDataFrame([(8,)], "id long"))  # v3
+    t.write_to_branch("dev", spark.createDataFrame([(7,)], "id long"))  # v4
     with pytest.raises(ValueError, match="not an ancestor"):
-        b.fast_forward("lag", "dev")
+        t.fast_forward("lag", "dev")
 
 
 def test_expire_snapshots_protects_ref_targets(spark, tmp_path):
@@ -906,18 +854,12 @@ def test_expire_snapshots_protects_ref_targets(spark, tmp_path):
     snapshots of live branches — survive expire_snapshots regardless
     of keep_last, matching Iceberg ref retention; read_ref must keep
     working after routine maintenance (review-pass finding)."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        BranchedLakehouse,
-        LakehouseTable,
-    )
-
     t = LakehouseTable(spark, str(tmp_path), "er")
     t.create(spark.createDataFrame([(1,)], "id long"))   # v1
-    b = BranchedLakehouse(t)
-    b.create_tag("v1-tag")                               # -> v1
+    t.create_tag("v1-tag")                               # -> v1
     t.append(spark.createDataFrame([(2,)], "id long"))   # v2
-    b.create_branch("s")                                 # -> v2
-    b.write_to_branch("s", spark.createDataFrame([(9,)], "id long"))  # v3 staged
+    t.create_branch("s")                                 # -> v2
+    t.write_to_branch("s", spark.createDataFrame([(9,)], "id long"))  # v3 staged
     t.append(spark.createDataFrame([(3,)], "id long"))   # v4
     t.append(spark.createDataFrame([(4,)], "id long"))   # v5
 
@@ -926,11 +868,11 @@ def test_expire_snapshots_protects_ref_targets(spark, tmp_path):
     # (staged + branch head) are protected; only unreferenced old
     # main snapshots expire
     assert 1 not in removed and 3 not in removed
-    assert b.read_ref("v1-tag").count() == 1
-    assert b.read_ref("s").count() == 3
+    assert t.read_ref("v1-tag").count() == 1
+    assert t.read_ref("s").count() == 3
     # dropping the refs releases them for the next maintenance pass
-    b.drop_tag("v1-tag")
-    b.drop_branch("s")
+    t.drop_tag("v1-tag")
+    t.drop_branch("s")
     removed2 = t.expire_snapshots(keep_last=1)
     assert 1 in removed2 and 3 in removed2
 
@@ -968,18 +910,12 @@ def test_repeated_wap_publish_cycle(spark, tmp_path):
     (ADVICE r9, reproduced as a dead-end): the publish rollforward is
     stamped rollforward_of, so the NEXT publish proves ancestry through
     it instead of refusing."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        BranchedLakehouse,
-        LakehouseTable,
-    )
-
     t = LakehouseTable(spark, str(tmp_path), "wap")
     t.create(spark.createDataFrame([(1,)], "id long"))  # v1
-    b = BranchedLakehouse(t)
-    b.create_branch("stage")
+    t.create_branch("stage")
     for i, expect in ((9, 2), (10, 3), (11, 4)):
-        b.write_to_branch("stage", spark.createDataFrame([(i,)], "id long"))
-        b.fast_forward_main("stage")
+        t.write_to_branch("stage", spark.createDataFrame([(i,)], "id long"))
+        t.fast_forward("main", "stage")
         assert t.read().count() == expect, f"publish #{expect - 1} failed"
 
 
@@ -988,27 +924,21 @@ def test_fast_forward_stale_branch_catches_up_to_main(spark, tmp_path):
     branch onto a ref at a NEWER main snapshot succeeds — the branch
     head is a genuine ancestor along main history (ADVICE r9: the old
     walk broke at the first main-side snapshot and refused)."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        BranchedLakehouse,
-        LakehouseTable,
-    )
-
     t = LakehouseTable(spark, str(tmp_path), "cu")
     t.create(spark.createDataFrame([(1,)], "id long"))   # v1
-    b = BranchedLakehouse(t)
-    b.create_branch("stale")                             # -> v1
+    t.create_branch("stale")                             # -> v1
     # interleave a staged write from ANOTHER branch so the main walk
     # must skip staged entries on its way down
-    b.create_branch("other")
-    b.write_to_branch("other", spark.createDataFrame([(9,)], "id long"))
+    t.create_branch("other")
+    t.write_to_branch("other", spark.createDataFrame([(9,)], "id long"))
     t.append(spark.createDataFrame([(2,)], "id long"))   # main advances
     t.append(spark.createDataFrame([(3,)], "id long"))   # and again
-    b.create_tag("head-now")                             # -> main head
-    b.fast_forward("stale", "head-now")
-    assert b.read_ref("stale").count() == 3
+    t.create_tag("head-now")                             # -> main head
+    t.fast_forward("stale", "head-now")
+    assert t.read_ref("stale").count() == 3
     # a genuinely divergent branch still refuses
     with pytest.raises(ValueError, match="not an ancestor"):
-        b.fast_forward("other", "head-now")
+        t.fast_forward("other", "head-now")
 
 
 def test_cherrypick_accepts_staged_branch_append(spark, tmp_path):
@@ -1017,21 +947,19 @@ def test_cherrypick_accepts_staged_branch_append(spark, tmp_path):
     used to reject staged snapshots, so the documented path always
     failed). The delta base is ref_base, not the log parent."""
     from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        BranchedLakehouse,
         LakehouseTable,
         cherrypick_snapshot,
     )
 
     t = LakehouseTable(spark, str(tmp_path), "cp")
     t.create(spark.createDataFrame([(1,)], "id long"))   # v1
-    b = BranchedLakehouse(t)
-    b.create_branch("d")                                 # -> v1
-    v_staged = b.write_to_branch(
+    t.create_branch("d")                                 # -> v1
+    v_staged = t.write_to_branch(
         "d", spark.createDataFrame([(9,)], "id long")
     )
     t.append(spark.createDataFrame([(2,)], "id long"))   # main diverges
     with pytest.raises(ValueError, match="not an ancestor"):
-        b.fast_forward_main("d")
+        t.fast_forward("main", "d")
     v = cherrypick_snapshot(t, v_staged)
     assert t.main_head() == v
     assert sorted(r.id for r in t.read().collect()) == [1, 2, 9]
@@ -1066,16 +994,14 @@ def test_cherrypick_legacy_staged_manifest_uses_log_parent(spark, tmp_path):
     import json as _json
 
     from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        BranchedLakehouse,
         LakehouseTable,
         cherrypick_snapshot,
     )
 
     t = LakehouseTable(spark, str(tmp_path), "cpl")
     t.create(spark.createDataFrame([(1,), (2,)], "id long"))  # v1
-    b = BranchedLakehouse(t)
-    b.create_branch("d")
-    v_staged = b.write_to_branch("d", spark.createDataFrame([(9,)], "id long"))
+    t.create_branch("d")
+    v_staged = t.write_to_branch("d", spark.createDataFrame([(9,)], "id long"))
     # simulate a legacy staged manifest: strip the ref_base key
     mp = t._manifest_path(v_staged)
     m = _json.load(open(mp))
@@ -1095,20 +1021,14 @@ def test_repeated_publish_survives_snapshot_expiry(spark, tmp_path):
     publish's ancestry proof: ref retention keeps the staged chain
     (branch head) and the rollforward identity stamps survive, so only
     genuinely unreferenced snapshots expire."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        BranchedLakehouse,
-        LakehouseTable,
-    )
-
     t = LakehouseTable(spark, str(tmp_path), "exp")
     t.create(spark.createDataFrame([(1,)], "id long"))
-    b = BranchedLakehouse(t)
-    b.create_branch("s")
-    b.write_to_branch("s", spark.createDataFrame([(9,)], "id long"))
-    b.fast_forward_main("s")
+    t.create_branch("s")
+    t.write_to_branch("s", spark.createDataFrame([(9,)], "id long"))
+    t.fast_forward("main", "s")
     t.expire_snapshots(keep_last=1)
-    b.write_to_branch("s", spark.createDataFrame([(10,)], "id long"))
-    b.fast_forward_main("s")
+    t.write_to_branch("s", spark.createDataFrame([(10,)], "id long"))
+    t.fast_forward("main", "s")
     assert t.read().count() == 3
 
 
@@ -1201,13 +1121,9 @@ def test_temporal_bound_iso_contract():
 def _boundary_day_table(spark, wh, ddl: str, days):
     """Three files, one per day, via repartitionByRange on the day
     column — the exact-boundary pruning probe's fixture shape."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        StatsLakehouseTable,
-    )
-
     rows = [(d, i) for i, d in enumerate(days)]
     df = spark.createDataFrame(rows, ddl).repartitionByRange(3, "d")
-    t = StatsLakehouseTable(spark, wh, "bday")
+    t = LakehouseTable(spark, wh, "bday")
     t.create(df)
     return t
 
@@ -1258,16 +1174,15 @@ def test_read_pruned_residual_string_column_boundary(spark, wh):
     residual alone decides correctness."""
     import datetime
 
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
     rows = [
         (datetime.datetime(2024, 1, d, 12), f"2024-01-{d:02d}", d)
         for d in (2, 5, 9)
     ]
-    t = PartitionedLakehouseTable(spark, wh, "sb", ["days(ts)"])
-    t.create(spark.createDataFrame(rows, "ts timestamp_ntz, d string, i long"))
+    t = LakehouseTable(spark, wh, "sb")
+    t.create(
+        spark.createDataFrame(rows, "ts timestamp_ntz, d string, i long"),
+        partition_by=["days(ts)"],
+    )
     out, kept, total = t.read_pruned("d", "2024-01-02", "2024-01-06")
     assert kept == total  # no transform of d: nothing prunable
     got = sorted(r.i for r in out.collect())
@@ -1393,16 +1308,15 @@ def test_partitioned_dml_hits_encoded_partition_dirs(spark, wh):
     (review-pass r15, reproduced)."""
     import datetime
 
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
     rows = [
         (datetime.datetime(2024, 1, 1, 8, 0) + datetime.timedelta(days=i % 3), i)
         for i in range(10)
     ]
-    t = PartitionedLakehouseTable(spark, wh, "enc_dml", ["days(ts)"])
-    t.create(spark.createDataFrame(rows, "ts timestamp, i long"))
+    t = LakehouseTable(spark, wh, "enc_dml")
+    t.create(
+        spark.createDataFrame(rows, "ts timestamp, i long"),
+        partition_by=["days(ts)"],
+    )
     t.delete_where(F.col("i") == 3)
     assert t.read().count() == 9
     t.update_set(F.col("i") == 5, {"i": F.lit(500)})
@@ -1416,16 +1330,10 @@ def test_changelog_and_incremental_skip_staged_snapshots(spark, wh):
     unaudited branch rows as a phantom INSERT/DELETE pair, and ONE
     branch write permanently errored every incremental consumer whose
     range crossed it (review-pass r15, both reproduced)."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        BranchedLakehouse,
-        LakehouseTable,
-    )
-
     t = LakehouseTable(spark, wh, "wap_cdc")
     t.create(spark.createDataFrame([(1,), (2,)], "v int").coalesce(1))  # v1
-    b = BranchedLakehouse(t)
-    b.create_branch("audit")
-    b.write_to_branch(
+    t.create_branch("audit")
+    t.write_to_branch(
         "audit", spark.createDataFrame([(99,)], "v int").coalesce(1)
     )  # v2 staged
     t.append(spark.createDataFrame([(3,)], "v int").coalesce(1))  # v3 main
@@ -1498,16 +1406,13 @@ def test_partitioned_read_keeps_user_p_prefixed_column(spark, wh):
     as all-NULL — review-pass r15)."""
     import datetime
 
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
-    t = PartitionedLakehouseTable(spark, wh, "pcol", ["days(ts)"])
+    t = LakehouseTable(spark, wh, "pcol")
     t.create(
         spark.createDataFrame(
             [(datetime.datetime(2024, 1, 1), 1, 0.5)],
             "ts timestamp, i long, p_score double",
-        )
+        ),
+        partition_by=["days(ts)"],
     )
     [row] = t.read().collect()
     assert row.p_score == 0.5
@@ -1518,41 +1423,34 @@ def test_read_nonexistent_table_raises_cleanly(spark, wh):
     """read() on a never-created table raises the contracted ValueError
     (schema_json's rule), not a raw FileNotFoundError (partitioned) or
     a cryptic cannot-infer-schema (base) — review-pass r15."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        LakehouseTable,
-        PartitionedLakehouseTable,
-    )
-
     with pytest.raises(ValueError, match="does not exist"):
         LakehouseTable(spark, wh, "ghost").read()
     with pytest.raises(ValueError, match="does not exist"):
-        PartitionedLakehouseTable(spark, wh, "ghost2", ["days(ts)"]).read()
+        LakehouseTable(spark, wh, "ghost2").read()
 
 
-def test_managed_reopens_with_stats_subclass(spark, wh):
+def test_managed_reopens_with_stats(spark, wh):
     """A re-opened managed table (new Engine over an existing
-    warehouse) must come back as StatsLakehouseTable: the base class
-    crashed CALL rewrite_data_files' sort strategy (AttributeError)
-    and silently dropped the per-file min/max stats from subsequent
-    DML commits (review-pass r15)."""
+    warehouse) keeps per-file min/max stats on every live file through
+    a sort rewrite (CALL rewrite_data_files) and DML."""
     from dbx_workspace_and_emr_iceberg_spark.engine import Engine
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        StatsLakehouseTable,
-    )
 
     e1 = Engine(spark, warehouse=wh)
     e1.create_table("reopen_t", spark.range(100).selectExpr("id AS c"))
     e2 = Engine(spark, warehouse=wh)  # fresh engine, same warehouse
     t = e2.managed("reopen_t")
-    assert isinstance(t, StatsLakehouseTable)
     e2.sql(
         "CALL system.rewrite_data_files('reopen_t', strategy => 'sort', "
         "sort_order => 'c')"
     )
+    m = t._read_manifest(t.main_head())
+    assert m["op"] == "rewrite_sorted:c"
+    assert set(m["stats"]) == set(m["files"]), "sort rewrite lost stats"
     # stats survive DML through the re-opened handle
     t.delete_where(F.col("c") == 1)
     m = t._read_manifest(t.main_head())
-    assert m.get("stats"), "stats dropped by DML on a re-opened table"
+    assert m["op"] == "delete"
+    assert set(m["stats"]) == set(m["files"]), "DML lost stats"
 
 
 def test_catalog_rejects_empty_identifier_parts(spark, wh):
@@ -1596,15 +1494,10 @@ def test_changelog_normalizes_staged_from_version(spark, wh):
     write holds a STAGED from_version; seeding prev_files with branch
     state made the next main commit emit phantom DELETEs for
     branch-only files (ADVICE r15, reproduced)."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        BranchedLakehouse,
-    )
-
     t = LakehouseTable(spark, wh, "t")
     t.create(spark.createDataFrame([(1,), (2,)], "id long"))
-    b = BranchedLakehouse(t)
-    b.create_branch("audit")
-    v2 = b.write_to_branch(
+    t.create_branch("audit")
+    v2 = t.write_to_branch(
         "audit", spark.createDataFrame([(9,)], "id long")
     )  # staged
     v3 = t.append(spark.createDataFrame([(3,)], "id long"))  # main
@@ -1620,15 +1513,14 @@ def test_main_head_json_contracts_expired_walk(spark, wh):
     snapshot — the stream source's schema()/latestOffset otherwise
     surfaced a raw FileNotFoundError (ADVICE r15, reproduced)."""
     from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        BranchedLakehouse,
+        LakehouseTable,
         main_head_json,
     )
 
     t = LakehouseTable(spark, wh, "t")
     v1 = t.create(spark.createDataFrame([(1,)], "id long"))
-    b = BranchedLakehouse(t)
-    b.create_branch("a")
-    b.write_to_branch("a", spark.createDataFrame([(2,)], "id long"))
+    t.create_branch("a")
+    t.write_to_branch("a", spark.createDataFrame([(2,)], "id long"))
     os.remove(os.path.join(t.root, "_snapshots", f"v{v1:05d}.json"))
     with pytest.raises(ValueError, match="publish or drop staged refs"):
         main_head_json(t.root)
@@ -1665,16 +1557,10 @@ def test_expire_protects_main_head_below_staged(spark, tmp_path):
     """When staged branch snapshots occupy the trailing keep_last slots,
     the main head fell into the candidate range — expiring it wedged
     every main-side read, unrecoverably (review-pass r18, reproduced)."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        BranchedLakehouse,
-        LakehouseTable,
-    )
-
     t = LakehouseTable(spark, str(tmp_path), "t")
     t.create(spark.range(3).toDF("id"))
-    b = BranchedLakehouse(t)
-    b.create_branch("s")
-    b.write_to_branch("s", spark.range(3, 6).toDF("id"))
+    t.create_branch("s")
+    t.write_to_branch("s", spark.range(3, 6).toDF("id"))
     assert t.expire_snapshots(keep_last=1) == []  # v1 = main head: kept
     assert t.main_head() == 1
     assert t.read().count() == 3
@@ -1727,21 +1613,15 @@ def test_rollback_refuses_staged_and_missing(spark, tmp_path):
     to main, bypassing the WAP audit gate, and a missing version leaked
     FileNotFoundError (review-pass r18, reproduced).  The audited
     fast_forward publish path still works."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        BranchedLakehouse,
-        LakehouseTable,
-    )
-
     t = LakehouseTable(spark, str(tmp_path), "t")
     t.create(spark.range(2).toDF("id"))
-    b = BranchedLakehouse(t)
-    b.create_branch("audit")
-    b.write_to_branch("audit", spark.range(9).toDF("id"))
+    t.create_branch("audit")
+    t.write_to_branch("audit", spark.range(9).toDF("id"))
     with pytest.raises(ValueError, match="STAGED"):
         t.rollback_to(2)
     with pytest.raises(ValueError, match="no snapshot"):
         t.rollback_to(99)
-    b.fast_forward_main("audit")
+    t.fast_forward("main", "audit")
     assert t.read().count() == 11  # branch write appends to its base
 
 
@@ -1781,17 +1661,11 @@ def test_stats_survive_staged_branch_write(spark, tmp_path):
     branch write, main files absent from the branch manifest lost
     their min/max forever and became unprunable (review-pass r18,
     reproduced)."""
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        BranchedLakehouse,
-        StatsLakehouseTable,
-    )
-
-    t = StatsLakehouseTable(spark, str(tmp_path), "t")
+    t = LakehouseTable(spark, str(tmp_path), "t")
     t.create(spark.range(0, 10).toDF("id").coalesce(1))
     t.append(spark.range(100, 200).toDF("id").coalesce(1))
-    b = BranchedLakehouse(t)
-    b.create_branch("s")
-    b.write_to_branch("s", spark.range(300, 310).toDF("id").coalesce(1))
+    t.create_branch("s")
+    t.write_to_branch("s", spark.range(300, 310).toDF("id").coalesce(1))
     t.append(spark.range(400, 500).toDF("id").coalesce(1))
     m = t._read_manifest(t.main_head())
     assert all(f in m.get("stats", {}) for f in m["files"])
@@ -1952,3 +1826,185 @@ def test_commit_lock_released_on_failure(wh):
         t._commit({"files": [], "schema": {"fields": []}, "op": "x"}, 7)
     # immediately committable again: lock was released
     assert t._commit({"files": [], "schema": {"fields": []}, "op": "x"}, 1) == 2
+
+
+# --- one table class: stats, partition spec and refs as manifest data ------
+
+
+def _four_file_table(spark, warehouse, name):
+    """A table built through the managed-table door with 4 data files
+    holding disjoint ``k`` ranges (0..99, 100..199, ...)."""
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+
+    df = spark.range(400).selectExpr("id AS k", "id % 7 AS v")
+    return Engine(spark, warehouse=warehouse).create_table(
+        name, df.repartitionByRange(4, "k").sortWithinPartitions("k")
+    )
+
+
+def _assert_stats_on_every_file(t, version=None):
+    m = t._read_manifest(version or t.main_head())
+    missing = [f for f in m["files"] if f not in m.get("stats", {})]
+    assert not missing, f"{len(missing)} of {len(m['files'])} files lack stats"
+
+
+def test_partitioned_read_matches_unpartitioned_after_schema_evolution(
+    spark, wh
+):
+    """A partitioned table reads through the same manifest-schema scan
+    as an unpartitioned one: after rename_column and drop_column both
+    return the same columns and values (no stale physical column, no
+    NULLs for a renamed one, no dropped column resurfacing)."""
+    import datetime
+
+    df = spark.createDataFrame(
+        [
+            (u, datetime.datetime(2024, 1, 1 + u % 3, u), u * 10)
+            for u in range(1, 20)
+        ],
+        "user_id long, ts timestamp, v long",
+    )
+    plain = LakehouseTable(spark, wh, "plain")
+    plain.create(df)
+    part = LakehouseTable(spark, wh, "part")
+    part.create(df, partition_by=["days(ts)"])
+
+    def snap(t):
+        got = t.read()
+        return got.columns, sorted(tuple(r) for r in got.collect())
+
+    for t in (plain, part):
+        t.rename_column("v", "w")
+    assert snap(part) == snap(plain)
+    assert snap(part)[0] == ["user_id", "ts", "w"]
+    assert part.read().agg(F.sum("w")).first()[0] == 1900
+
+    for t in (plain, part):
+        t.drop_column("user_id")
+    assert snap(part) == snap(plain)
+    assert snap(part)[0] == ["ts", "w"]
+
+
+def test_catalog_resolved_delete_keeps_stats(spark, wh):
+    """A table resolved through LakehouseCatalog.table() or, over HTTP,
+    RestLakehouseCatalog.table() is the same object a managed table is:
+    a DELETE through it keeps min/max stats on every live file, so a
+    point lookup still prunes to one file."""
+    from dbx_workspace_and_emr_iceberg_spark.sources.catalog import (
+        LakehouseCatalog,
+    )
+    from dbx_workspace_and_emr_iceberg_spark.sources.rest_catalog import (
+        RestCatalogClient,
+        RestCatalogServer,
+        RestLakehouseCatalog,
+    )
+
+    base = os.path.join(wh, "local", "db")
+    _four_file_table(spark, base, "by_dir")
+    _four_file_table(spark, base, "by_rest")
+    with RestCatalogServer(wh, catalog="local") as server:
+        rest = RestLakehouseCatalog(
+            spark, RestCatalogClient(server.uri), default_schema="db"
+        )
+        resolved = [
+            LakehouseCatalog(spark, wh).table("db.by_dir"),
+            rest.table("db.by_rest"),
+        ]
+        for t in resolved:
+            t.delete_where(F.col("k") == 250)
+            assert t.read().count() == 399
+            _assert_stats_on_every_file(t)
+            assert len(t.pruned_files("k", 5, 5)) == 1
+
+
+def test_rollback_to_keeps_stats(spark, wh):
+    """rollback_to(v) commits v's file list with v's per-file stats,
+    including the stats of files the intervening DML rewrote away."""
+    t = _four_file_table(spark, wh, "rb")
+    v1 = t.current_version()
+    t.delete_where(F.col("k") == 250)
+    t.delete_where(F.col("k") == 50)
+    v = t.rollback_to(v1)
+    assert t._read_manifest(v)["files"] == t._read_manifest(v1)["files"]
+    _assert_stats_on_every_file(t, v)
+    assert len(t.pruned_files("k", 250, 250)) == 1
+
+
+def test_footer_stats_read_outside_commit_lock(spark, wh, monkeypatch):
+    """Parquet footers are read before the commit lock is taken, so a
+    slow footer read never holds up concurrent committers — both for a
+    commit's new files and for the live files of a table whose head
+    manifest carries no stats."""
+    import fcntl
+    import json
+
+    from dbx_workspace_and_emr_iceberg_spark.sources import lakehouse
+
+    t = _four_file_table(spark, wh, "lk")
+    # a head manifest written without stats: the next commit reads the
+    # footers of all 4 live files plus its new one
+    path = t._manifest_path(t.current_version())
+    with open(path) as f:
+        m = json.load(f)
+    del m["stats"]
+    with open(path, "w") as f:
+        json.dump(m, f)
+
+    real = lakehouse._file_column_stats
+    reads = []
+
+    def checked(p):
+        fd = os.open(os.path.join(t.root, "_commit.lock"), os.O_CREAT | os.O_RDWR)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)  # raises if held
+            fcntl.flock(fd, fcntl.LOCK_UN)
+        finally:
+            os.close(fd)
+        reads.append(p)
+        return real(p)
+
+    monkeypatch.setattr(lakehouse, "_file_column_stats", checked)
+    t.append(spark.range(400, 410).selectExpr("id AS k", "id % 7 AS v"))
+    assert len(reads) >= 5
+    _assert_stats_on_every_file(t)
+
+
+def test_partition_spec_survives_reopen(spark, wh):
+    """The partition spec is manifest data: a table reopened without
+    naming it — by constructor, through Engine.managed and through
+    LakehouseCatalog.table — writes partitioned files, prunes them and
+    refuses to drop the partition source column."""
+    import datetime
+
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+    from dbx_workspace_and_emr_iceberg_spark.sources.catalog import (
+        LakehouseCatalog,
+    )
+
+    base = os.path.join(wh, "local", "db")
+    schema = "ts timestamp, i long"
+    LakehouseTable(spark, base, "ev").create(
+        spark.createDataFrame(
+            [(datetime.datetime(2024, 1, d, 6), d) for d in (1, 2, 3)], schema
+        ),
+        partition_by=["days(ts)"],
+    )
+    reopened = [
+        LakehouseTable(spark, base, "ev"),
+        Engine(spark, warehouse=base).managed("ev"),
+        LakehouseCatalog(spark, wh).table("db.ev"),
+    ]
+    for n, t in enumerate(reopened, start=1):
+        before = set(t._files())
+        t.append(
+            spark.createDataFrame([(datetime.datetime(2024, 1, 5, 6), 10 + n)], schema)
+        )
+        added = [f for f in t._files() if f not in before]
+        assert added and all("p_days_ts=2024-01-05" in f for f in added), added
+        got, kept, total = t.read_pruned(
+            "ts", "2024-01-05 00:00:00", "2024-01-05 12:00:00", with_files=True
+        )
+        assert set(added) <= set(kept) and len(kept) < len(total)
+        assert sorted(r.i for r in got.collect()) == list(range(11, 11 + n))
+        with pytest.raises(ValueError, match="partition source"):
+            t.drop_column("ts")

@@ -1028,17 +1028,13 @@ def _range_scan_bound(kind, v, form):
 @given(range_scan_case())
 @SLOW
 def test_read_range_matches_bruteforce(spark, case):
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        StatsLakehouseTable,
-    )
-
     kind, idx, lo_i, hi_i, nfiles, form = case
     vals, ddl = _range_scan_pool(kind)
     rows = [(vals[j], i) for i, j in enumerate(idx)]
     wh = tempfile.mkdtemp(prefix="lh_prop_")
     try:
         df = spark.createDataFrame(rows, ddl).repartitionByRange(nfiles, "d")
-        t = StatsLakehouseTable(spark, wh, "t")
+        t = LakehouseTable(spark, wh, "t")
         t.create(df)
         lo = _range_scan_bound(kind, vals[lo_i], form)
         hi = _range_scan_bound(kind, vals[hi_i], form)
@@ -1075,10 +1071,6 @@ def test_read_pruned_matches_bruteforce(spark, case):
     no time transform of d and must degrade to full scan + residual."""
     import datetime
 
-    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        PartitionedLakehouseTable,
-    )
-
     spec, idx, lo_i, hi_i, form = case
     vals = [
         datetime.datetime(2023, 12, 30, 20, 0, 0) + datetime.timedelta(hours=9 * i)
@@ -1087,8 +1079,11 @@ def test_read_pruned_matches_bruteforce(spark, case):
     rows = [(vals[j], i) for i, j in enumerate(idx)]
     wh = tempfile.mkdtemp(prefix="lh_prop_")
     try:
-        t = PartitionedLakehouseTable(spark, wh, "t", [spec])
-        t.create(spark.createDataFrame(rows, "d timestamp, i long"))
+        t = LakehouseTable(spark, wh, "t")
+        t.create(
+            spark.createDataFrame(rows, "d timestamp, i long"),
+            partition_by=[spec],
+        )
         lo = vals[lo_i] if form == "obj" else vals[lo_i].isoformat(
             sep=" " if form == "iso" else "T"
         )

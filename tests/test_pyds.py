@@ -111,7 +111,6 @@ def test_lakehouse_stream_resolves_main_head_not_raw_log(spark, tmp_path):
     (re)starting stream silently drops columns added on main since the
     branch was cut (review-pass r15)."""
     from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        BranchedLakehouse,
         LakehouseTable,
         main_head_json,
     )
@@ -121,10 +120,9 @@ def test_lakehouse_stream_resolves_main_head_not_raw_log(spark, tmp_path):
 
     t = LakehouseTable(spark, str(tmp_path), "st")
     t.create(spark.createDataFrame([(1, 10)], "id long, v long"))  # v1
-    b = BranchedLakehouse(t)
-    b.create_branch("aud")  # at v1 (schema id, v)
+    t.create_branch("aud")  # at v1 (schema id, v)
     t.add_column("w", "string")  # v2: main schema gains w
-    b.write_to_branch(
+    t.write_to_branch(
         "aud", spark.createDataFrame([(9, 90)], "id long, v long")
     )  # v3 STAGED, carries the v1 schema
     assert main_head_json(t.root) == 2

@@ -805,17 +805,15 @@ def test_main_head_raises_past_expired_history(spark, tmp_path):
     import pytest as _pytest
 
     from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
-        BranchedLakehouse,
         LakehouseTable,
     )
 
     t = LakehouseTable(spark, str(tmp_path), "exp_t")
     t.create(spark.createDataFrame([(1,)], "id long"))
     t.append(spark.createDataFrame([(2,)], "id long"))  # v2
-    b = BranchedLakehouse(t)
-    b.create_branch("s")
-    b.write_to_branch("s", spark.createDataFrame([(9,)], "id long"))  # v3 staged
-    b.write_to_branch("s", spark.createDataFrame([(10,)], "id long"))  # v4 staged
+    t.create_branch("s")
+    t.write_to_branch("s", spark.createDataFrame([(9,)], "id long"))  # v3 staged
+    t.write_to_branch("s", spark.createDataFrame([(10,)], "id long"))  # v4 staged
     # r18: expire_snapshots now PROTECTS the main_head() walk path
     # [mh..cur], so this maintenance call can no longer wedge the
     # table — v2 (main head) survives even though keep_last=2 only

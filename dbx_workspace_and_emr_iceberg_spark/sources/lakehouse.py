@@ -12,7 +12,8 @@ re-implements the *table-format contract* in pure PySpark:
   warehouse/<table>/
     data/<uuid>.parquet      immutable data files
     _snapshots/v{N}.json     manifest: file list + per-file column
-                             min/max + schema + partition spec + op
+                             min/max and record count + schema +
+                             partition spec + op
     _current                 current version (atomic rename commit)
     _refs.json               branch and tag pointers
 
@@ -21,10 +22,11 @@ Semantics mirrored from Iceberg v2 (copy-on-write flavor):
     older snapshots are never disturbed (time travel = read old manifest);
   * commits are atomic (os.replace of the _current pointer) and
     optimistic — a concurrent commit surfaces as a version conflict;
-  * DELETE/UPDATE rewrite only the files that contain matching rows
-    (file-level pruning via a contains-match scan), like Iceberg CoW;
-  * MERGE INTO is the join-based rewrite Iceberg's extension rules
-    produce: target ⟕ source on the merge key, per-row action column;
+  * DELETE/UPDATE/MERGE rewrite only the files that contain matching
+    rows (file-level pruning via one contains-match scan), like Iceberg
+    CoW; MERGE's rewrite of those files is the join Iceberg's extension
+    rules produce: target ⟕ source on the merge key, per-row action
+    column;
   * maintenance: compaction (rewrite_data_files), snapshot expiry
     (expire_snapshots), rollback — same operations as Iceberg's
     CALL system.* procedures (SURVEY.md §2.11 M5).
@@ -351,10 +353,26 @@ def partition_transform(spec: str) -> tuple[str, F.Column]:
     raise ValueError(f"unknown partition transform {spec!r}")
 
 
+def _input_path() -> F.Column:
+    """The manifest path of the file the current row was scanned from.
+
+    ``input_file_name`` returns a ``file://`` URI whose path is
+    percent-encoded once more than the on-disk name: a days(ts)
+    partition dir is ``p_days_ts=2024-01-01 00%3A00%3A00`` on disk and
+    ``...%2000%253A00%253A00`` in the URI. ``url_decode`` undoes that
+    one level, but it also reads ``+`` as a space, so a literal ``+``
+    (which the partition-dir escaping leaves as is) is protected first.
+    Every scan that maps rows back to manifest files goes through this
+    one expression."""
+    uri = F.replace(F.input_file_name(), F.lit("file://"), F.lit(""))
+    return F.url_decode(F.replace(uri, F.lit("+"), F.lit("%2B")))
+
+
 def _file_column_stats(path: str) -> dict[str, list]:
-    """Per-file min/max per column from the parquet footer (pyarrow) —
-    only footers are read, never data pages. Values are
-    stored JSON-safe (ISO strings for timestamps)."""
+    """Per-file min/max per column and the row count (Iceberg's
+    ``record_count``) from the parquet footer (pyarrow) — only footers
+    are read, never data pages. Values are stored JSON-safe (ISO
+    strings for timestamps)."""
     import datetime
 
     import pyarrow.parquet as pq
@@ -403,6 +421,7 @@ def _file_column_stats(path: str) -> dict[str, list]:
     return {
         "min": {k: enc(v) for k, v in mins.items()},
         "max": {k: enc(v) for k, v in maxs.items()},
+        "record_count": md.num_rows,
     }
 
 
@@ -629,10 +648,14 @@ class LakehouseTable:
             if f in known or os.path.isfile(f)
         }
 
+    def _head_manifest(self) -> dict:
+        """Main head's manifest; ``{}`` before the table exists."""
+        v = self.main_head()
+        return self._read_manifest(v) if v else {}
+
     def _partition_spec(self) -> list[str]:
         """The partition transforms of main's head (empty = unpartitioned)."""
-        v = self.main_head()
-        return self._read_manifest(v).get("partition_spec", []) if v else []
+        return self._head_manifest().get("partition_spec", [])
 
     def _write_files(
         self, df: DataFrame, partition_by: list[str] | None = None
@@ -665,6 +688,21 @@ class LakehouseTable:
         if v == 0:
             return []
         return self._read_manifest(v)["files"]
+
+    def record_count(self, version: int | None = None) -> int:
+        """Rows in snapshot ``version`` (default: main's head), summed
+        from the manifest's per-file ``record_count`` without reading
+        data. A manifest with a file that lacks the count (written
+        before counts were recorded) falls back to counting the scan."""
+        v = version if version is not None else self.main_head()
+        if v == 0:
+            return 0
+        m = self._read_manifest(v)
+        stats = m.get("stats", {})
+        try:
+            return sum(stats[f]["record_count"] for f in m["files"])
+        except KeyError:
+            return self.read(v).count()
 
     # ---------- S4/S5/S6: create / append / overwrite ----------
 
@@ -769,8 +807,6 @@ class LakehouseTable:
         table metadata, as Iceberg does): no per-file schema inference,
         and files written before a column was added yield NULLs for it.
         """
-        from pyspark.sql.types import StructType
-
         v = version if version is not None else self.main_head()
         if v == 0:
             # contracted error, matching schema_json — the fall-through
@@ -787,12 +823,7 @@ class LakehouseTable:
                 f"table {self.name}: snapshot v{v} expired or never "
                 "existed"
             ) from None
-        files = self._files(v)
-        if not files:
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(m["schema"])
-            )
-        return self._scan_files(files, m)
+        return self._read_file_set(m["files"], m)
 
     def _scan_files(self, files: list[str], manifest: dict) -> DataFrame:
         """Manifest-schema scan of ``files`` with Iceberg-v3 initial
@@ -865,12 +896,7 @@ class LakehouseTable:
             absent = [f for f in spec["absent_files"] if f in fileset]
             if not absent or col not in df.columns:
                 continue
-            # input_file_name returns file:// URIs with URL-encoded
-            # partition-dir characters (%3A for ':' in days(ts) values);
-            # manifests store bare decoded paths
-            in_absent = F.url_decode(
-                F.replace(F.input_file_name(), F.lit("file://"), F.lit(""))
-            ).isin(absent)
+            in_absent = _input_path().isin(absent)
             df = df.withColumn(
                 col,
                 F.when(
@@ -934,52 +960,40 @@ class LakehouseTable:
 
     # ---------- M2/M3: UPDATE / DELETE (copy-on-write, file-pruned) ----------
 
-    def _affected_files(self, cond) -> list[str]:
-        """Files containing ≥1 row matching cond (Iceberg-style CoW
-        pruning: untouched files survive into the next snapshot as-is)."""
-        cur = self._files()
-        if not cur:
+    def _affected_files(self, m: dict, rows) -> list[str]:
+        """The files of manifest ``m`` holding at least one row of
+        ``rows(scan)``, where ``scan`` is their manifest-schema scan
+        with each row's source file in ``__file`` — the one discovery
+        pass behind every copy-on-write rewrite (Iceberg-style: the
+        files it does not return survive into the next snapshot
+        as-is)."""
+        files = m.get("files", [])
+        if not files:
             return []
-        hits = (
-            self._scan_files(cur, self._read_manifest(self.main_head()))
-            .withColumn("__file", F.input_file_name())
-            .filter(cond)
-            .select("__file")
-            .distinct()
-            .collect()
-        )
-        # input_file_name returns file:// URIs with URL-encoded path
-        # characters, while manifests store the on-disk (singly-escaped)
-        # names — a days(ts) partition dir is 'p_days_ts=2024-01-01
-        # 00%3A00%3A00' on disk but '...%2000%253A00%253A00' in the URI.
-        # Without ONE decode the sets never intersect and DELETE/UPDATE
-        # on a time-partitioned table silently no-op (review-pass r15,
-        # reproduced; same normalization _apply_defaults already does
-        # Spark-side). (subscript access: attribute access would
-        # name-mangle __file here)
-        from urllib.parse import unquote
-
-        normalized = {unquote(r["__file"]).removeprefix("file://") for r in hits}
-        return [f for f in cur if f in normalized]
+        scan = self._scan_files(files, m).withColumn("__file", _input_path())
+        # subscript access: attribute access would name-mangle __file
+        hits = {r["__file"] for r in rows(scan).select("__file").distinct().collect()}
+        return [f for f in files if f in hits]
 
     def delete_where(self, cond) -> int:
         """DELETE FROM t WHERE cond (M3)."""
         parent = self.current_version()
-        affected = self._affected_files(cond)
+        m = self._head_manifest()
+        affected = self._affected_files(m, lambda scan: scan.filter(cond))
         if not affected:
             return parent  # no-op delete commits nothing
-        keep = [f for f in self._files() if f not in affected]
+        keep = [f for f in m["files"] if f not in affected]
         # SQL DELETE removes only rows where cond is TRUE; a bare ~cond
         # filter would also drop NULL-predicate rows (NOT NULL => NULL,
         # filtered out). Keep rows where cond is FALSE *or* NULL.
-        survivors = self._scan_files(
-            affected, self._read_manifest(self.main_head())
-        ).filter(~F.coalesce(cond, F.lit(False)))
+        survivors = self._scan_files(affected, m).filter(
+            ~F.coalesce(cond, F.lit(False))
+        )
         new_files = self._write_files(survivors)
         return self._commit(
             {
                 "files": keep + new_files,
-                "schema": self.schema_json(),
+                "schema": m["schema"],
                 "op": "delete",
                 "rewritten": len(affected),
             },
@@ -1001,11 +1015,12 @@ class LakehouseTable:
                 f"{self.name}: UPDATE SET references unknown column(s) "
                 f"{unknown}; table columns: {sorted(known)}"
             )
-        affected = self._affected_files(cond)
+        m = self._head_manifest()
+        affected = self._affected_files(m, lambda scan: scan.filter(cond))
         if not affected:
             return parent
-        keep = [f for f in self._files() if f not in affected]
-        df = self._scan_files(affected, self._read_manifest(self.main_head()))
+        keep = [f for f in m["files"] if f not in affected]
+        df = self._scan_files(affected, m)
         updated = df.select(
             *[
                 F.when(cond, assignments[c]).otherwise(F.col(c)).alias(c)
@@ -1018,7 +1033,7 @@ class LakehouseTable:
         return self._commit(
             {
                 "files": keep + new_files,
-                "schema": self.schema_json(),
+                "schema": m["schema"],
                 "op": "update",
                 "rewritten": len(affected),
             },
@@ -1054,9 +1069,16 @@ class LakehouseTable:
         file rewrite), so pre-existing rows read NULL for them and the
         merge's update/insert branches carry the new values.
 
-        Join-based rewrite, same plan shape Iceberg's extension rules
-        generate. Full-table rewrite here; at scale, pair with
-        _affected_files pruning on the join key range.
+        File-pruned copy-on-write, as Iceberg's MERGE is: one discovery
+        pass semi-joins the live files' merge key with the distinct
+        non-NULL source keys, and only the files it returns (every file
+        holding a matched row) go through the join-based rewrite — the
+        plan shape Iceberg's extension rules generate — together with
+        the whole source, so unmatched source rows still insert. Every
+        other file survives into the new snapshot byte-identical
+        (unmatched and NULL-keyed target rows are kept as they are, and
+        a kept file reads NULL for a column this merge evolves in). A
+        one-file table has nothing to prune and skips the discovery.
 
         ``validate_source_keys`` mirrors Iceberg's cardinality check:
         MERGE errors when one target row matches multiple source rows
@@ -1065,6 +1087,16 @@ class LakehouseTable:
         disable for pre-deduplicated feeds.
         """
         parent = self.current_version()
+        m = self._head_manifest()
+        if not m:
+            raise ValueError(f"table {self.name} does not exist")
+        files = m["files"]
+        if len(files) > 1:
+            # validation, discovery and the rewrite each run the source;
+            # one materialized copy makes them see the same rows, so a
+            # key the discovery missed cannot reach the join and insert
+            # a duplicate of a row in a kept file
+            source = source.localCheckpoint()
         if validate_source_keys:
             # NULL keys are excluded: they can never match a target row
             # (equi-join), so multiple NULL-keyed source rows are plain
@@ -1087,26 +1119,23 @@ class LakehouseTable:
         # Schema evolution is folded into the merge's OWN commit —
         # Iceberg's withSchemaEvolution is a single transaction, so a
         # conflict/failure must leave neither the schema nor the data
-        # half-applied. (A previous spelling committed one add_column
-        # per new source column before the data commit; a final-commit
-        # ConflictError then stranded an evolved-schema-no-data table.)
-        schema = self.schema_json()
-        if schema_evolution:
-            existing = {f["name"] for f in schema["fields"]}
-            for f in source.schema.fields:
-                if f.name not in existing:
-                    schema["fields"].append(
-                        {
-                            "name": f.name,
-                            "type": f.dataType.simpleString(),
-                            "nullable": True,
-                            "metadata": {},
-                        }
-                    )
-        # UNRESOLVED_COLUMN parity (review-pass r18): an update_cols
-        # key naming no target column (post-evolution) was silently
-        # ignored by out_col's `c in update_cols` — matched rows kept
-        # their values while the MERGE reported success
+        # half-applied.
+        existing = {f["name"] for f in m["schema"]["fields"]}
+        evolved = [
+            {
+                "name": f.name,
+                "type": f.dataType.jsonValue(),
+                "nullable": True,
+                "metadata": {},
+            }
+            for f in source.schema.fields
+            if schema_evolution and f.name not in existing
+        ]
+        schema = {**m["schema"], "fields": m["schema"]["fields"] + evolved}
+        # UNRESOLVED_COLUMN parity: an update_cols key naming no target
+        # column (post-evolution) would otherwise be ignored by
+        # out_col's `c in update_cols`, leaving matched rows unchanged
+        # while the MERGE reports success
         if update_cols:
             known = {f["name"] for f in schema["fields"]}
             unknown = sorted(set(update_cols) - known)
@@ -1115,14 +1144,25 @@ class LakehouseTable:
                     f"{self.name}: MERGE UPDATE SET references unknown "
                     f"column(s) {unknown}; table columns: {sorted(known)}"
                 )
-        target = self.read()
-        for fld in schema["fields"]:
-            if fld["name"] not in target.columns:
-                # evolved column: pre-existing rows read NULL, exactly
-                # the manifest-only ADD semantics, but uncommitted
-                target = target.withColumn(
-                    fld["name"], F.lit(None).cast(fld["type"])
-                )
+        if len(files) > 1:
+            keys = (
+                source.select(F.col(on).alias("__src_key"))
+                .filter(F.col("__src_key").isNotNull())
+                .distinct()
+            )
+            affected = self._affected_files(
+                m,
+                lambda scan: scan.join(
+                    keys, scan[on] == keys["__src_key"], "left_semi"
+                ),
+            )
+        else:
+            affected = files
+        rewritten = set(affected)
+        keep = [f for f in files if f not in rewritten]
+        # an evolved column reads NULL in pre-existing rows, exactly
+        # the manifest-only ADD semantics, but uncommitted
+        target = self._read_file_set(affected, {**m, "schema": schema})
         tcols = target.columns
         # Presence is tracked with explicit marker columns, NOT key
         # nullability: a pre-existing target row whose merge-key column
@@ -1180,10 +1220,16 @@ class LakehouseTable:
             .filter(F.col("__act") != "D")
             .select(*[out_col(c) for c in tcols])
         )
-        new_files = self._write_files(merged)
+        # no affected file and no inserts: the data is unchanged
+        new_files = self._write_files(merged) if affected or insert else []
         # single commit carries BOTH the evolved schema and the data
         return self._commit(
-            {"files": new_files, "schema": schema, "op": "merge"},
+            {
+                "files": keep + new_files,
+                "schema": schema,
+                "op": "merge",
+                "rewritten": len(affected),
+            },
             parent,
         )
 

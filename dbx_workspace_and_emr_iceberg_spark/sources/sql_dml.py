@@ -417,7 +417,7 @@ def execute_create(engine, sql: str) -> DataFrame:
     except ValueError:
         return engine.spark.sql(sql)
     t = engine.create_table(table, _run_body(engine, select))
-    n = t.read().count()
+    n = t.record_count()
     return engine.spark.createDataFrame(
         [(table, "ctas", t.current_version(), n)],
         "table string, operation string, version int, n_rows long",
@@ -454,24 +454,16 @@ def execute_insert(engine, sql: str) -> DataFrame:
         )
         # main's view is NOT refreshed: the branch pointer moved, main
         # didn't — that is the W of WAP. n_rows reports the INSERTED
-        # batch (O(batch)): counting the whole branch would full-scan
-        # the table per INSERT statement. NOTE
-        # this differs from the insert/insert_overwrite arms below,
-        # which report the post-statement TABLE total — a branch
-        # INSERT's table total is ambiguous (which ref?), the batch is
-        # not. Counted from the NEWLY WRITTEN files' parquet footers
-        # (O(batch) metadata reads), never by re-running the source
-        # SELECT — a non-deterministic source would otherwise report a
-        # count differing from the rows actually written.
-        import pyarrow.parquet as pq
-
-        man = t._read_manifest(version)
-        base_files = set(t._files(int(man.get("ref_base") or 0)))
-        n = sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in man["files"]
-            if f not in base_files
-        )
+        # batch, unlike the insert/insert_overwrite arms below, which
+        # report the post-statement TABLE total — a branch INSERT's
+        # table total is ambiguous (which ref?), the batch is not.
+        # Counted from the manifests' per-file record counts (a branch
+        # append lists its base's files plus the new ones), never by
+        # re-running the source SELECT — a non-deterministic source
+        # would otherwise report a count differing from the rows
+        # actually written.
+        base = int(t._read_manifest(version).get("ref_base") or 0)
+        n = t.record_count(version) - t.record_count(base)
         return engine.spark.createDataFrame(
             [(f"{table}.branch_{branch}", "insert_branch", version, n)],
             "table string, operation string, version int, n_rows long",
@@ -489,7 +481,7 @@ def execute_insert(engine, sql: str) -> DataFrame:
         version = commit_with_retries(lambda: t.overwrite_positional(df))
         op = "insert_overwrite"
     engine.refresh_view(table)
-    n = t.read().count()
+    n = t.record_count()
     return engine.spark.createDataFrame(
         [(table, op, version, n)],
         "table string, operation string, version int, n_rows long",
@@ -709,7 +701,7 @@ def execute(engine, sql: str) -> DataFrame:
             )
         )
     engine.refresh_view(table)
-    n = t.read().count()
+    n = t.record_count()
     return spark.createDataFrame(
         [(table, kind.lower(), version, n)],
         "table string, operation string, version int, n_rows long",

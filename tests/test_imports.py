@@ -258,6 +258,29 @@ def test_plan_compare_normalizer():
         assert normalize(a) != normalize(other)
 
 
+def test_plan_compare_path_normalizer():
+    """plan_compare's path normalizer strips the random temp dir, UUID part
+    names and write-batch dirs, but keeps path counts and partition
+    directories."""
+    import tempfile
+
+    from tools.plan_compare import normalize_paths
+
+    tmp = tempfile.gettempdir()
+
+    def scan(d, batch, uuid, part="p_days_ts=2024-01-01", n=2):
+        return (
+            f"FileScan parquet [k#1] Location: InMemoryFileIndex({n} paths)"
+            f"[file:{tmp}/{d}/t/data/{batch}/{part}/part-00000-{uuid}.c000.parquet]"
+        )
+
+    a = scan("lakehouse_p3_ab12cd34", "0a1b2c3d4e5f", "0f8e6a1c-1d2e-4f3a-9b8c-7d6e5f4a3b2c")
+    b = scan("lakehouse_p3_zz99yy88", "ffeeddccbbaa", "12345678-aaaa-bbbb-cccc-1234567890ab")
+    assert normalize_paths(a) == normalize_paths(b)
+    assert normalize_paths(a) != normalize_paths(a.replace("(2 paths)", "(3 paths)"))
+    assert normalize_paths(a) != normalize_paths(a.replace("01-01", "01-02"))
+
+
 def test_invariance_sweep_log_parser(tmp_path):
     """Pin tools/invariance_sweep.py's per-axis counting against REAL
     driver_sim output shapes: the axis check is (rc == 0) AND

@@ -2008,3 +2008,308 @@ def test_partition_spec_survives_reopen(spark, wh):
         assert sorted(r.i for r in got.collect()) == list(range(11, 11 + n))
         with pytest.raises(ValueError, match="partition source"):
             t.drop_column("ts")
+
+
+# --- file-pruned copy-on-write MERGE -----------------------------------------
+
+
+def _file_keys(path: str, col: str) -> set:
+    import pyarrow.parquet as pq
+
+    return set(pq.read_table(path, columns=[col]).column(col).to_pylist())
+
+
+def test_merge_rewrites_only_files_holding_a_matched_key(spark, wh):
+    """On a 16-file range-clustered table, a MERGE whose source touches
+    one key range keeps every other file path, and ``rewritten`` is the
+    number of files that hold a matched key."""
+    t = LakehouseTable(spark, wh, "t")
+    t.create(
+        spark.range(1600)
+        .selectExpr("id AS k", "id * 10 AS v")
+        .repartitionByRange(16, "k")
+        .sortWithinPartitions("k")
+    )
+    before = t._files()
+    assert len(before) == 16
+    src_keys = set(range(300, 340))
+    holding = [f for f in before if _file_keys(f, "k") & src_keys]
+    assert 1 <= len(holding) < 16
+    src = spark.range(300, 340).selectExpr("id AS k", "-1L AS v").union(
+        spark.range(5000, 5004).selectExpr("id AS k", "-2L AS v")
+    )
+    t.merge_into(src, on="k")
+    m = t._read_manifest(t.main_head())
+    assert m["op"] == "merge"
+    assert m["rewritten"] == len(holding)
+    assert [f for f in m["files"] if f in before] == [
+        f for f in before if f not in holding
+    ], "untouched files must be carried over unchanged"
+    # kept files carry their stats over; new files get footer stats
+    assert set(m["stats"]) == set(m["files"])
+    got = {r.k: r.v for r in t.read().collect()}
+    assert len(got) == 1604
+    assert all(got[k] == -1 for k in src_keys)
+    assert all(got[k] == -2 for k in range(5000, 5004))
+    assert got[0] == 0 and got[1599] == 15990
+
+
+def _rows(t):
+    return sorted((tuple(r) for r in t.read().collect()), key=repr)
+
+
+def _pruned_vs_full(spark, wh, data, merge, prep=None, partition_by=None):
+    """Run one MERGE on an 8-file table (pruned) and on a one-file copy,
+    which has nothing to prune and rewrites all of it; both must read
+    back the same rows. Returns the pruned table and its pre-merge
+    file list."""
+    pruned = LakehouseTable(spark, wh, "pruned")
+    pruned.create(
+        data.repartitionByRange(8, "k").sortWithinPartitions("k"),
+        partition_by=partition_by,
+    )
+    full = LakehouseTable(spark, wh, "full")
+    full.create(data.coalesce(1))
+    assert len(pruned._files()) > 1 and len(full._files()) == 1
+    for t in (pruned, full):
+        if prep:
+            prep(t)
+    before = pruned._files()
+    for t in (pruned, full):
+        merge(t)
+    assert _rows(pruned) == _rows(full)
+    assert full._read_manifest(full.main_head())["rewritten"] == 1
+    return pruned, before
+
+
+def _kv(spark, rows):
+    return spark.createDataFrame(rows, "k long, v string")
+
+
+def test_merge_pruned_matches_full_rewrite_null_keys_and_delete(spark, wh):
+    data = _kv(
+        spark,
+        [(i, f"v{i}") for i in range(80)] + [(None, "n1"), (None, "n2")],
+    )
+    src = _kv(
+        spark,
+        [(5, "x"), (6, "del"), (70, "y"), (None, "null_src"), (500, "new")],
+    )
+    pruned, before = _pruned_vs_full(
+        spark,
+        wh,
+        data,
+        lambda t: t.merge_into(
+            src,
+            on="k",
+            update_cols={"v": F.col("__src").getField("v")},
+            delete_cond=F.col("__src").getField("v") == "del",
+        ),
+    )
+    vals = {r.v for r in pruned.read().collect()}
+    assert {"n1", "n2", "null_src", "x", "y", "new"} <= vals
+    assert not {"v5", "v6", "del", "v70"} & vals
+    m = pruned._read_manifest(pruned.main_head())
+    assert 1 <= m["rewritten"] < len(before)
+
+
+def test_merge_pruned_matches_full_rewrite_without_insert(spark, wh):
+    data = _kv(spark, [(i, f"v{i}") for i in range(80)])
+    src = _kv(spark, [(3, "x"), (900, "never")])
+    pruned, _ = _pruned_vs_full(
+        spark, wh, data, lambda t: t.merge_into(src, on="k", insert=False)
+    )
+    assert pruned.read().filter("k = 900").count() == 0
+    assert pruned.read().filter("v = 'x'").count() == 1
+
+
+def test_merge_source_matching_no_key_writes_only_inserts(spark, wh):
+    data = _kv(spark, [(i, f"v{i}") for i in range(80)])
+    src = _kv(spark, [(1000, "a"), (1001, "b")])
+    pruned, before = _pruned_vs_full(
+        spark, wh, data, lambda t: t.merge_into(src, on="k")
+    )
+    m = pruned._read_manifest(pruned.main_head())
+    assert m["rewritten"] == 0
+    assert m["files"][: len(before)] == before
+    added = m["files"][len(before):]
+    assert sum(len(_file_keys(f, "k")) for f in added) == 2
+    # nothing matched and nothing to insert: the commit keeps the files
+    v = pruned.merge_into(_kv(spark, [(2000, "z")]), on="k", insert=False)
+    m2 = pruned._read_manifest(v)
+    assert m2["files"] == m["files"] and m2["rewritten"] == 0
+
+
+def test_merge_into_empty_table(spark, wh):
+    """An empty table with no live file: the target side is an empty
+    frame with the manifest schema, so every source row inserts."""
+    t = LakehouseTable(spark, wh, "t")
+    t.create(_kv(spark, [(1, "a")]).coalesce(1))
+    t.delete_where(F.lit(True))
+    # a table whose snapshot lists no file at all
+    t._commit(
+        {"files": [], "schema": t.schema_json(), "op": "delete"},
+        t.current_version(),
+    )
+    assert t.read().count() == 0
+    t.merge_into(_kv(spark, [(1, "x"), (2, "y")]), on="k")
+    assert _rows(t) == [(1, "x"), (2, "y")]
+    m = t._read_manifest(t.main_head())
+    assert m["rewritten"] == 0
+    # an empty table holding one empty file rewrites that file
+    e = LakehouseTable(spark, wh, "e")
+    e.create(spark.createDataFrame([], "k long, v string"))
+    e.merge_into(_kv(spark, [(3, "z")]), on="k")
+    assert _rows(e) == [(3, "z")]
+
+
+def test_merge_pruned_schema_evolution_kept_files_read_null(spark, wh):
+    data = _kv(spark, [(i, f"v{i}") for i in range(80)])
+    src = spark.createDataFrame(
+        [(4, "x", 1.5, 1), (300, "new", 2.5, 2)],
+        "k long, v string, extra double, n long",
+    )
+    pruned, before = _pruned_vs_full(
+        spark,
+        wh,
+        data,
+        lambda t: t.merge_into(src, on="k", schema_evolution=True),
+    )
+    m = pruned._read_manifest(pruned.main_head())
+    assert [f["name"] for f in m["schema"]["fields"]] == ["k", "v", "extra", "n"]
+    kept = [f for f in m["files"] if f in before]
+    assert kept and len(kept) == len(before) - m["rewritten"]
+    got = {r.k: (r.extra, r.n) for r in pruned.read().collect()}
+    assert got[4] == (1.5, 1) and got[300] == (2.5, 2)
+    assert all(v == (None, None) for k, v in got.items() if k not in (4, 300))
+
+
+def test_merge_pruned_partitioned_table(spark, wh):
+    data = _kv(spark, [(i, f"v{i}") for i in range(80)])
+    src = _kv(spark, [(7, "x"), (8, "y"), (99, "new")])
+    pruned, before = _pruned_vs_full(
+        spark,
+        wh,
+        data,
+        lambda t: t.merge_into(src, on="k"),
+        partition_by=["bucket(4, k)"],
+    )
+    m = pruned._read_manifest(pruned.main_head())
+    assert 1 <= m["rewritten"] < len(before)
+    assert all("p_bucket_k=" in f for f in m["files"])
+
+
+def test_merge_pruned_on_renamed_key_column(spark, wh):
+    """Files written before rename_column store the key under its old
+    physical name; discovery and the rewrite both resolve it."""
+    data = _kv(spark, [(i, f"v{i}") for i in range(80)])
+    src = spark.createDataFrame([(9, "x"), (600, "new")], "key long, v string")
+    pruned, before = _pruned_vs_full(
+        spark,
+        wh,
+        data,
+        lambda t: t.merge_into(src, on="key"),
+        prep=lambda t: t.rename_column("k", "key"),
+    )
+    m = pruned._read_manifest(pruned.main_head())
+    assert 1 <= m["rewritten"] < len(before)
+    got = {r.key: r.v for r in pruned.read().collect()}
+    assert got[9] == "x" and got[600] == "new" and got[10] == "v10"
+
+
+def test_merge_one_file_table_skips_discovery(spark, wh, monkeypatch):
+    t = LakehouseTable(spark, wh, "t")
+    t.create(_kv(spark, [(1, "a"), (2, "b")]).coalesce(1))
+    calls = []
+    real = t._affected_files
+    monkeypatch.setattr(
+        t, "_affected_files", lambda *a: calls.append(a) or real(*a)
+    )
+    t.merge_into(_kv(spark, [(2, "x"), (3, "c")]), on="k")
+    assert calls == [], "a one-file table has nothing to prune"
+    assert _rows(t) == [(1, "a"), (2, "x"), (3, "c")]
+    assert t._read_manifest(t.main_head())["rewritten"] == 1
+
+
+def test_merge_unstable_source_cannot_duplicate_a_kept_key(spark, wh, tmp_path):
+    """A source whose rows change between evaluations: its first two
+    evaluations yield a fresh key, later ones a key held by a file the
+    discovery would keep. The merge must classify, discover and join
+    against one materialization, so the key never lands twice."""
+    t = LakehouseTable(spark, wh, "t")
+    t.create(
+        spark.range(80)
+        .selectExpr("id AS k", "CAST(id AS STRING) AS v")
+        .repartitionByRange(8, "k")
+        .sortWithinPartitions("k")
+    )
+    counter = tmp_path / "evaluations"
+    counter.write_text("0")
+
+    @F.udf("long")
+    def drifting_key(_):
+        n = int(counter.read_text()) + 1
+        counter.write_text(str(n))
+        return 1000 if n <= 2 else 40
+
+    src = (
+        spark.range(1)
+        .coalesce(1)
+        .select(drifting_key.asNondeterministic()("id").alias("k"))
+        .withColumn("v", F.lit("src"))
+    )
+    t.merge_into(src, on="k")
+    ks = [r.k for r in t.read().collect()]
+    assert len(ks) == len(set(ks)), "a key was inserted beside its kept row"
+
+
+def test_input_path_matches_manifest_paths_with_plus(spark, wh):
+    """Partition values keep a literal '+' on disk; the one scan-to-
+    manifest path mapping must not read it as a space, or initial
+    defaults and CoW discovery miss those files."""
+    df = spark.createDataFrame(
+        [(1, "a+b c:d"), (2, "plain")], "id long, s string"
+    )
+    t = LakehouseTable(spark, wh, "t")
+    t.create(df, partition_by=["identity(s)"])
+    assert any("+" in f for f in t._files())
+    t.add_column("d", "long", default=7)
+    assert {r.id: r.d for r in t.read().collect()} == {1: 7, 2: 7}
+    t.delete_where(F.col("s") == "a+b c:d")
+    assert [r.id for r in t.read().collect()] == [2]
+
+
+# --- per-file record counts ---------------------------------------------------
+
+
+def test_record_count_sums_manifest_counts(spark, wh):
+    t = LakehouseTable(spark, wh, "t")
+    assert t.record_count() == 0
+    t.create(spark.range(100).selectExpr("id AS k").repartition(4))
+    t.append(spark.range(100, 130).selectExpr("id AS k"))
+    t.delete_where(F.col("k") < 10)
+    m = t._read_manifest(t.main_head())
+    assert all("record_count" in m["stats"][f] for f in m["files"])
+    assert t.record_count() == t.read().count() == 120
+    assert t.record_count(1) == 100
+
+
+def test_record_count_falls_back_to_scan_for_older_manifests(spark, wh):
+    """A manifest whose stats predate per-file record counts still
+    reports the right total (by scanning), and commits on top of it
+    carry the legacy entries forward unchanged."""
+    import json
+
+    t = LakehouseTable(spark, wh, "t")
+    t.create(spark.range(50).selectExpr("id AS k").repartition(3))
+    path = t._manifest_path(t.main_head())
+    m = json.loads(open(path).read())
+    for s in m["stats"].values():
+        del s["record_count"]
+    with open(path, "w") as fh:
+        json.dump(m, fh)
+    assert t.record_count() == 50
+    t.append(spark.range(50, 60).selectExpr("id AS k"))
+    m = t._read_manifest(t.main_head())
+    assert any("record_count" not in m["stats"][f] for f in m["files"])
+    assert t.record_count() == 60

@@ -677,6 +677,88 @@ def test_merge_update_semantics_property(spark, tgt, src, mode, insert):
         _shutil.rmtree(wh, ignore_errors=True)
 
 
+@given(
+    tgt_keys=st.sets(st.integers(0, 60), max_size=40),
+    src_keys=st.sets(st.integers(0, 80), min_size=1, max_size=12),
+    null_rows=st.integers(0, 2),
+    n_files=st.integers(1, 6),
+    insert=st.booleans(),
+)
+@settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
+def test_pruned_merge_matches_pandas_reference(
+    spark, tgt_keys, src_keys, null_rows, n_files, insert
+):
+    """File-pruned MERGE on a range-clustered multi-file table against
+    a pandas merge: matched rows take the source value unless the
+    delete condition (source v divisible by 7) holds, unmatched source
+    rows insert iff insert=True, target-only and NULL-keyed rows
+    survive. Every pre-merge file the new snapshot keeps holds no
+    matched key, and every file it drops held one."""
+    import shutil as _shutil
+    import tempfile as _tempfile
+
+    import pandas as pd
+    import pyarrow.parquet as pq
+
+    target = [(k, 10 * k) for k in sorted(tgt_keys)]
+    target += [(None, -1 - i) for i in range(null_rows)]
+    source = [(k, 1000 + k) for k in sorted(src_keys)]
+
+    tn = pd.DataFrame([r for r in target if r[0] is None], columns=["k", "v"])
+    tk = pd.DataFrame([r for r in target if r[0] is not None], columns=["k", "v"])
+    s = pd.DataFrame(source, columns=["k", "v"])
+    j = tk.merge(s, on="k", how="outer", suffixes=("", "_s"), indicator=True)
+    both = j[(j["_merge"] == "both") & (j["v_s"] % 7 != 0)]
+    parts = [
+        tn,
+        j[j["_merge"] == "left_only"][["k", "v"]],
+        both[["k", "v_s"]].rename(columns={"v_s": "v"}),
+    ]
+    if insert:
+        parts.append(
+            j[j["_merge"] == "right_only"][["k", "v_s"]].rename(columns={"v_s": "v"})
+        )
+    expected = [
+        (None if pd.isna(k) else int(k), int(v))
+        for p in parts
+        for k, v in zip(p["k"], p["v"])
+    ]
+
+    wh = _tempfile.mkdtemp(prefix="merge_pruned_prop_")
+    try:
+        t = LakehouseTable(spark, wh, "mp")
+        t.create(
+            spark.createDataFrame(target, "k long, v long")
+            .repartitionByRange(n_files, "k")
+            .sortWithinPartitions("k")
+        )
+        before = t._files()
+        t.merge_into(
+            spark.createDataFrame(source, "k long, v long"),
+            on="k",
+            insert=insert,
+            delete_cond=F.col("__src").getField("v") % 7 == 0,
+        )
+        def order(r):
+            return (r[0] is not None, r[0] or 0, r[1])
+
+        got = sorted(((r.k, r.v) for r in t.read().collect()), key=order)
+        assert got == sorted(expected, key=order), (
+            sorted(tgt_keys), sorted(src_keys), insert
+        )
+        after = set(t._files())
+        matched = set(src_keys) & set(tgt_keys)
+
+        def holds_match(f):
+            return bool(set(pq.read_table(f).column("k").to_pylist()) & matched)
+
+        assert not any(holds_match(f) for f in before if f in after)
+        if len(before) > 1:
+            assert all(holds_match(f) for f in before if f not in after)
+    finally:
+        _shutil.rmtree(wh, ignore_errors=True)
+
+
 # --- chunked exclusive prefix vs native window -------------------------------
 
 

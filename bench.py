@@ -546,10 +546,14 @@ def main() -> None:
         for n in add_passes[0]
     }
     exec_s = {}
+    # summed from the unrounded values: adding 2dp-rounded entries
+    # would accumulate one rounding error per query
+    exec_total = 0.0
     for n, walls in all_walls.items():
         runs = exec_runs.get(n, [])
         i = walls.index(min(walls))
         v = runs[i] if i < len(runs) else None
+        exec_total += v or 0.0
         # 2dp: the dict must fit the driver's 2000-char tail window
         # together with floor_total/noise_floor (r19 verdict #2)
         exec_s[n] = None if v is None else round(v, 2)
@@ -662,9 +666,7 @@ def main() -> None:
         # keeps the whole tail section under the cap)
         "exec_s": exec_s,
         "floor_total": round(sum(floors.values()), 3),
-        "exec_total_s": round(
-            sum(v for v in exec_s.values() if v is not None), 3
-        ),
+        "exec_total_s": round(exec_total, 3),
         # how many floor samples lost their executor clock (REST
         # failure during that run) — review-pass r18: silently dropping
         # Nones made a flaky UI endpoint read as a plan improvement

@@ -26,7 +26,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .lakehouse import LakehouseTable
+from .lakehouse import LakehouseTable, log_head
 
 
 class LakehouseCatalog:
@@ -105,11 +105,9 @@ class LakehouseCatalog:
         )
         if not os.path.isdir(root):
             return []
-        out = []
-        for d in sorted(os.listdir(root)):
-            if os.path.exists(os.path.join(root, d, "_current")):
-                out.append(d)
-        return out
+        return [
+            d for d in sorted(os.listdir(root)) if log_head(os.path.join(root, d))
+        ]
 
 
 def catalog_for_session(

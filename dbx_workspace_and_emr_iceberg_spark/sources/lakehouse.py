@@ -31,6 +31,14 @@ Semantics mirrored from Iceberg v2 (copy-on-write flavor):
     (expire_snapshots), rollback — same operations as Iceberg's
     CALL system.* procedures (SURVEY.md §2.11 M5).
 
+The log is read only through this module's json-over-fs reader:
+:func:`log_head` (the `_current` pointer), :func:`manifest_path` and
+:func:`read_manifest` (one snapshot), :func:`manifests` (the surviving
+snapshots of a version range), :func:`main_at` / :func:`main_head_json`
+(main's state past branch-staged snapshots) and :func:`content_parent`
+(the snapshot a commit's content was built on). The table, the stream
+source, the REST catalog and both catalogs' listings all call it.
+
 At 100 TB: data files are the unit of parallelism and pruning; the
 manifest holds per-file column min/max for data skipping; rewrites
 touch only affected files; nothing here funnels data through the
@@ -113,92 +121,121 @@ def iceberg_rest_catalog_conf(
     return conf
 
 
-def main_head_json(root: str) -> int:
-    """Main's logical head: the newest snapshot NOT tagged
-    ``staged_ref`` by a branch write, pure json-over-fs so consumers
-    with no table object (the Python stream source's schema()/offset
-    resolution) share it with :meth:`LakehouseTable.main_head`.
+# ---------------------------------------------------------------------------
+# The snapshot-log reader: every read of `_current`, of a manifest path
+# and of main's head in the package goes through these functions. They
+# are json-over-fs (no SparkSession), so the stream source, the REST
+# catalog and both catalogs' table listing share them with
+# LakehouseTable. Nothing is cached across calls: a version above
+# `_current` can still be replaced by crash recovery.
+# ---------------------------------------------------------------------------
 
-    The emulation keeps ONE snapshot log (Iceberg's snapshot list is
-    likewise shared across refs) with `_current` as the log head;
-    branch commits advance the log but not main, so every MAIN-side
-    content resolution (reads, DML base file lists, schema, a stream's
-    schema) goes through this walk — the raw log head may be another
-    branch's STAGED snapshot. Equal to the log head whenever no staged
-    snapshot sits on top. Raises ValueError if the walk falls off
-    expired history (publish or drop staged refs before expiring)."""
+
+def log_head(root: str) -> int:
+    """The raw log head `_current` points at; 0 before the first commit
+    (or when ``root`` is no table at all). After a branch write it is
+    that branch's staged snapshot, not main (see :func:`main_at`)."""
     try:
         with open(os.path.join(root, "_current")) as f:
-            v = int(f.read().strip())
-    except FileNotFoundError:
+            return int(f.read().strip())
+    except (FileNotFoundError, NotADirectoryError):
         return 0
-    while v:
+
+
+def manifest_path(root: str, v: int) -> str:
+    return os.path.join(root, "_snapshots", f"v{v:05d}.json")
+
+
+def read_manifest(root: str, v: int) -> dict:
+    """Manifest of snapshot ``v``; FileNotFoundError once it expired."""
+    with open(manifest_path(root, v)) as f:
+        return json.load(f)
+
+
+def manifests(root: str, lo: int = 1, hi: int | None = None):
+    """Yield ``(version, manifest)`` for the surviving snapshots in
+    ``[lo, hi]`` (default: the whole log up to its head), oldest first,
+    each manifest read once. Expired snapshots are skipped."""
+    for v in range(max(lo, 1), (log_head(root) if hi is None else hi) + 1):
         try:
-            with open(
-                os.path.join(root, "_snapshots", f"v{v:05d}.json")
-            ) as f:
-                if not json.load(f).get("staged_ref"):
-                    return v
+            yield v, read_manifest(root, v)
+        except FileNotFoundError:
+            continue
+
+
+def main_at(root: str, v: int) -> int:
+    """The newest main (non-staged) version at or below ``v``; 0 when
+    main has no snapshot there. The log is shared by every ref and a
+    branch write tags its snapshot ``staged_ref``, so main's state at a
+    log position is found by walking down past staged snapshots.
+    Raises ValueError if the walk reaches an expired manifest: main's
+    state there is unknowable."""
+    w = v
+    while w:
+        try:
+            if not read_manifest(root, w).get("staged_ref"):
+                return w
         except FileNotFoundError:
             raise ValueError(
-                f"{root}: main head expired below staged snapshots — "
-                "publish or drop staged refs before expire_snapshots"
+                f"{root}: main state at v{v} expired below staged "
+                "snapshots — publish or drop staged refs before "
+                "expire_snapshots"
             ) from None
-        v -= 1
+        w -= 1
     return 0
 
 
-def appended_files_between(
-    root: str, from_version: int, to_version: int
-) -> list[str]:
-    """Manifest diff: data files that the append-only commits in
-    ``(from_version, to_version]`` added, in commit order.
+def main_head_json(root: str) -> int:
+    """Main's logical head: :func:`main_at` the raw log head. Every
+    main-side resolution (reads, DML base file lists, schema, a
+    stream's schema and offsets, the REST LoadTable route) uses it,
+    because the log head may be a branch's staged snapshot."""
+    return main_at(root, log_head(root))
 
-    Pure json-over-filesystem — no SparkSession — so BOTH incremental
-    consumers share it: ``LakehouseTable.read_incremental`` (batch) and
-    ``pyds.LakehouseStreamReader.partitions`` (streaming offset planner,
-    which must run without driver-side Spark state). Raises ValueError
-    on any non-append snapshot in range, matching Iceberg's
-    incremental-scan contract.
-    """
 
-    def manifest(v: int) -> dict:
-        try:
-            with open(
-                os.path.join(root, "_snapshots", f"v{v:05d}.json")
-            ) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            # expire_snapshots removes old manifests; surface the
-            # CONTRACTED error type so read_incremental's "use
-            # changelog()" wrapping and lakehouse_stream restarts from
-            # an old checkpointed offset both fail gracefully instead
-            # of leaking a raw FileNotFoundError.
-            raise ValueError(
-                f"snapshot v{v} expired; incremental range "
-                f"({from_version}, {to_version}] unavailable — "
-                "re-baseline from a full scan"
-            ) from None
+def content_parent(m: dict) -> int:
+    """The version whose content snapshot ``m`` was built on: a branch
+    write's ``ref_base`` (a staged manifest older than ``ref_base``
+    falls back to its log parent), a rollforward's source, otherwise
+    the log parent. For a main commit main's state at that log parent,
+    ``main_at(root, content_parent(m))``, is what it was based on."""
+    if m.get("staged_ref"):
+        return int(m["ref_base"] if "ref_base" in m else m.get("parent") or 0)
+    return int(m.get("rollforward_of") or m.get("parent") or 0)
 
+
+def _main_range(
+    root: str, lo: int, hi: int, what: str
+) -> tuple[dict | None, dict[int, dict]]:
+    """``(base, later)`` for a diff over ``(lo, hi]``: ``base`` is the
+    manifest of main's state at ``lo`` (None at version 0) and
+    ``later`` maps every version in ``(lo, hi]`` to its manifest, staged
+    ones included. Every manifest is read once, apart from a staged
+    ``lo``'s walk down to main. A manifest missing from the range
+    raises the contracted ValueError."""
+    ms = dict(manifests(root, lo, hi))
+    gone = next((v for v in range(max(lo, 1), hi + 1) if v not in ms), None)
+    if gone is not None:
+        raise ValueError(
+            f"snapshot v{gone} expired; {what} range ({lo}, {hi}] "
+            "unavailable — re-baseline from a full scan"
+        )
+    base_m = ms.pop(lo, None)
+    if base_m is not None and base_m.get("staged_ref"):
+        # a checkpointed offset can be a staged version (the raw log
+        # head right after a branch write): the diff base is main's
+        # state below it, never the branch's
+        base_v = main_at(root, lo - 1)
+        base_m = read_manifest(root, base_v) if base_v else None
+    return base_m, ms
+
+
+def _appended(base: dict | None, later: dict[int, dict]) -> list[str]:
     added: list[str] = []
-    # running previous-MAIN file set: snapshots STAGED by a branch
-    # write (staged_ref) add nothing to main and are SKIPPED — the
-    # main_head() WAP guard applied to the incremental walk
-    # (review-pass r15, reproduced: one branch write used to
-    # permanently error every main-side incremental/stream consumer
-    # whose range crossed it, and a staged v-1 polluted the next main
-    # append's delta base)
-    # a checkpointed offset can itself be a staged version (raw log
-    # head at checkpoint time): the delta base is the last MAIN
-    # snapshot at or before it, never a branch state
-    base = from_version
-    while base and manifest(base).get("staged_ref"):
-        base -= 1
-    prev = set(manifest(base)["files"]) if base else set()
-    for v in range(from_version + 1, to_version + 1):
-        m = manifest(v)
+    prev = set(base["files"]) if base else set()
+    for v, m in later.items():
         if m.get("staged_ref"):
-            continue
+            continue  # a branch write adds nothing to main
         if m["op"] not in ("append", "create"):
             raise ValueError(
                 f"incremental scan over non-append snapshot v{v} "
@@ -207,6 +244,23 @@ def appended_files_between(
         added.extend(f for f in m["files"] if f not in prev)
         prev = set(m["files"])
     return added
+
+
+def appended_files_between(
+    root: str, from_version: int, to_version: int
+) -> list[str]:
+    """Manifest diff: data files that main's append-only commits in
+    ``(from_version, to_version]`` added, in commit order.
+
+    Shared by ``LakehouseTable.read_incremental`` (batch) and
+    ``pyds.LakehouseStreamReader.partitions`` (the streaming offset
+    planner, which runs without driver-side Spark state). Raises
+    ValueError on any non-append main snapshot in range, matching
+    Iceberg's incremental-scan contract, and on an expired manifest in
+    range."""
+    return _appended(
+        *_main_range(root, from_version, to_version, "incremental")
+    )
 
 
 class ConflictError(RuntimeError):
@@ -449,7 +503,7 @@ class LakehouseTable:
         self.spark = spark
         self.root = os.path.join(warehouse, name)
         self.data_dir = os.path.join(self.root, "data")
-        self.snap_dir = os.path.join(self.root, "_snapshots")
+        self.snap_dir = os.path.dirname(manifest_path(self.root, 0))
         self.refs_path = os.path.join(self.root, "_refs.json")
         self.name = name
 
@@ -459,22 +513,18 @@ class LakehouseTable:
         return os.path.join(self.root, "_current")
 
     def current_version(self) -> int:
-        try:
-            with open(self._current_path()) as f:
-                return int(f.read().strip())
-        except FileNotFoundError:
-            return 0
+        """The raw log head — see :func:`log_head`."""
+        return log_head(self.root)
 
     def main_head(self) -> int:
         """Main's logical head — see :func:`main_head_json`."""
         return main_head_json(self.root)
 
     def _manifest_path(self, version: int) -> str:
-        return os.path.join(self.snap_dir, f"v{version:05d}.json")
+        return manifest_path(self.root, version)
 
     def _read_manifest(self, version: int) -> dict:
-        with open(self._manifest_path(version)) as f:
-            return json.load(f)
+        return read_manifest(self.root, version)
 
     #: Max seconds a committer waits for the per-table commit lock
     #: before giving up with a (retryable) ConflictError.  Commits are
@@ -809,16 +859,15 @@ class LakehouseTable:
         """
         v = version if version is not None else self.main_head()
         if v == 0:
-            # contracted error, matching schema_json — the fall-through
-            # used to die in createDataFrame([], None) with a cryptic
-            # "can not infer schema" (review-pass r15)
+            # contracted error, matching schema_json: a missing table
+            # has no schema to build even an empty frame from
             raise ValueError(f"table {self.name} does not exist")
         try:
             m = self._read_manifest(v)
         except FileNotFoundError:
             # explicit-version read of an expired/never-existing
             # snapshot: the contracted error type, not a leaked
-            # internal path (review-pass r15)
+            # internal path
             raise ValueError(
                 f"table {self.name}: snapshot v{v} expired or never "
                 "existed"
@@ -913,21 +962,16 @@ class LakehouseTable:
         older than` contract, not an empty frame (an empty frame would
         silently mean 'table existed and was empty'). Snapshots staged
         by a branch write (``staged_ref``) are SKIPPED, mirroring
-        main_head(): a main-side time-travel read landing on an
-        unaudited staged snapshot would be the WAP leak every other
-        main-side resolution already routes around (review-pass
-        finding, reproduced: INSERT INTO t.branch_b then TIMESTAMP AS
-        OF now returned the staged rows)."""
-        best = None
-        for v in range(1, self.current_version() + 1):
-            try:
-                m = self._read_manifest(v)
-            except FileNotFoundError:
-                continue  # expired
-            if m.get("staged_ref"):
-                continue  # branch-staged: not main history
-            if m["timestamp_ms"] <= ts_ms:
-                best = v
+        main_head(): a main-side time-travel read must never land on
+        an unaudited staged snapshot."""
+        best = max(
+            (
+                v
+                for v, m in manifests(self.root)
+                if not m.get("staged_ref") and m["timestamp_ms"] <= ts_ms
+            ),
+            default=None,
+        )
         if best is None:
             raise ValueError(
                 f"{self.name}: no snapshot at or before timestamp {ts_ms}"
@@ -937,23 +981,13 @@ class LakehouseTable:
     # ---------- S7: metadata tables ----------
 
     def snapshots(self) -> DataFrame:
-        """The `t.snapshots` metadata relation. Snapshots removed by
-        expire_snapshots() are skipped, matching history()."""
-        rows = []
-        for v in range(1, self.current_version() + 1):
-            try:
-                m = self._read_manifest(v)
-            except FileNotFoundError:
-                continue  # expired snapshot
-            rows.append(
-                (
-                    m["version"],
-                    m["parent"],
-                    m["op"],
-                    len(m["files"]),
-                    m["timestamp_ms"],
-                )
-            )
+        """The `t.snapshots` metadata relation, one row per surviving
+        snapshot (expire_snapshots() removes rows); history() projects
+        it."""
+        rows = [
+            (m["version"], m["parent"], m["op"], len(m["files"]), m["timestamp_ms"])
+            for _, m in manifests(self.root)
+        ]
         return self.spark.createDataFrame(
             rows, "version int, parent int, operation string, n_files int, ts_ms long"
         )
@@ -1308,14 +1342,8 @@ class LakehouseTable:
         candidates = [v for v in range(1, cur + 1)][:-keep_last]
         # Load every surviving manifest FIRST; the expire set is decided
         # before any liveness accounting so an age-PROTECTED candidate's
-        # files count as live (deciding per-candidate inside the delete
-        # loop deleted files a protected manifest still referenced).
-        manifests: dict[int, dict] = {}
-        for v in range(1, cur + 1):
-            try:
-                manifests[v] = self._read_manifest(v)
-            except FileNotFoundError:
-                continue  # expired by an earlier call (any keep_last)
+        # files count as live.
+        ms = dict(manifests(self.root, 1, cur))
         # Ref retention (Iceberg semantics): a snapshot a branch or tag
         # still points to — and any staged snapshot whose branch still
         # exists — is non-expirable regardless of keep_last/age, so
@@ -1324,39 +1352,30 @@ class LakehouseTable:
         protected = {int(v) for v in refs["branches"].values()}
         protected.update(int(v) for v in refs["tags"].values())
         protected.update(
-            v
-            for v, m in manifests.items()
-            if m.get("staged_ref") in refs["branches"]
+            v for v, m in ms.items() if m.get("staged_ref") in refs["branches"]
         )
         # MAIN-head retention: when staged branch snapshots occupy the
         # trailing keep_last slots, the current main head falls into the
         # candidate range, and expiring it would wedge every main-side
-        # read with "main head expired below staged snapshots".
-        # Protect the whole main_head() walk path [mh .. cur]: every
-        # snapshot the staged-skipping walk may touch must stay
+        # read. Protect the whole main_head() walk path [mh .. cur]:
+        # every snapshot the staged-skipping walk may touch must stay
         # readable (a dropped branch's staged snapshot between cur and
         # mh would otherwise hole the walk).
-        mh = cur
-        while mh > 0 and manifests.get(mh, {}).get("staged_ref"):
-            mh -= 1
+        mh = max((v for v, m in ms.items() if not m.get("staged_ref")), default=0)
         protected.update(range(mh, cur + 1))
         to_expire = [
             v
             for v in candidates
-            if v in manifests
+            if v in ms
             and v not in protected
-            and (
-                older_than_ms is None
-                or manifests[v]["timestamp_ms"] < older_than_ms
-            )
+            and (older_than_ms is None or ms[v]["timestamp_ms"] < older_than_ms)
         ]
-        live_files: set[str] = set()
-        for v, m in manifests.items():
-            if v not in to_expire:
-                live_files.update(m["files"])
+        live_files = {
+            f for v, m in ms.items() if v not in to_expire for f in m["files"]
+        }
         removed = []
         for v in to_expire:
-            for f in manifests[v]["files"]:
+            for f in ms[v]["files"]:
                 if f not in live_files and os.path.exists(f):
                     os.remove(f)
             os.remove(self._manifest_path(v))
@@ -1437,12 +1456,7 @@ class LakehouseTable:
         committed files survive. Default sweeps regardless (tests);
         production callers should pass now-minus-grace.
         """
-        live: set[str] = set()
-        for v in range(1, self.current_version() + 1):
-            try:
-                live.update(self._read_manifest(v)["files"])
-            except FileNotFoundError:
-                continue  # expired snapshot
+        live = {f for _, m in manifests(self.root) for f in m["files"]}
         removed: list[str] = []
         if not os.path.isdir(self.data_dir):
             return removed
@@ -1479,40 +1493,48 @@ class LakehouseTable:
         file is rewritten and compaction naturally graduates rows out of
         the default (rewritten files physically contain the column).
         """
+        from pyspark.sql.types import DataType
+
         parent = self.current_version()
-        schema = self.schema_json()
+        m = self._head_manifest()
+        if not m:
+            raise ValueError(f"table {self.name} does not exist")
+        schema = m["schema"]
         if any(f["name"] == name for f in schema["fields"]):
-            # duplicate fields would commit a corrupt schema every
-            # later snapshot inherits (review-pass r18); Iceberg
-            # rejects the duplicate at DDL time
+            # a duplicate field would commit a corrupt schema every
+            # later snapshot inherits; Iceberg rejects it at DDL time
             raise ValueError(
                 f"{self.name}: column {name!r} already exists"
             )
+        # stored as the type's JSON form, which StructType.fromJson
+        # parses on every later read; DDL names ('int', 'bigint') are not
         schema["fields"].append(
-            {"name": name, "type": spark_type, "nullable": True, "metadata": {}}
-        )
-        manifest: dict = {
-            "files": self._files(),
-            "schema": schema,
-            "op": f"add_column:{name}",
-        }
-        # ALWAYS record the current files as not-containing the new
-        # column (review-pass r18, reproduced): without the absence
-        # record, re-adding a previously DROPPED column resurrected the
-        # old physical values via the name-based scan — Iceberg's
-        # field-id semantics read NULL.  value=None is a NULL initial
-        # default (_apply_defaults casts F.lit(None) to the column
-        # type), so the default-less case now matches field-id reads.
-        if parent:
-            defaults = dict(
-                self._read_manifest(self.main_head()).get("defaults", {})
-            )
-            defaults[name] = {
-                "value": default,
-                "absent_files": self._files(),
+            {
+                "name": name,
+                "type": DataType.fromDDL(spark_type).jsonValue(),
+                "nullable": True,
+                "metadata": {},
             }
-            manifest["defaults"] = defaults
-        return self._commit(manifest, parent)
+        )
+        # ALWAYS record the current files as not-containing the new
+        # column, so re-adding a previously DROPPED column reads NULL
+        # (Iceberg's field-id semantics) instead of the old physical
+        # values the name-based scan would find. value=None is a NULL
+        # initial default (_apply_defaults casts F.lit(None) to the
+        # column type).
+        defaults = {
+            **m.get("defaults", {}),
+            name: {"value": default, "absent_files": m["files"]},
+        }
+        return self._commit(
+            {
+                "files": m["files"],
+                "schema": schema,
+                "op": f"add_column:{name}",
+                "defaults": defaults,
+            },
+            parent,
+        )
 
     def read_evolved(self, version: int | None = None) -> DataFrame:
         """Alias of read(): the manifest schema already governs scans."""
@@ -1631,13 +1653,15 @@ class LakehouseTable:
         """
         # default to the newest MAIN snapshot: a raw-log default would
         # resolve to a staged branch snapshot right after a WAP write
-        # (review-pass r15 — same guard as read()/changelog())
         to_v = to_version if to_version is not None else self.main_head()
         try:
-            added = appended_files_between(self.root, from_version, to_v)
+            base, later = _main_range(self.root, from_version, to_v, "incremental")
+            added = _appended(base, later)
         except ValueError as e:
             raise ValueError(f"{e}; use changelog() instead") from None
-        return self._read_file_set(added, self._read_manifest(to_v))
+        return self._read_file_set(
+            added, later[to_v] if to_v in later else self._read_manifest(to_v)
+        )
 
     def changelog(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """Row-level CDC between snapshots — Iceberg's
@@ -1655,24 +1679,16 @@ class LakehouseTable:
 
         Snapshots STAGED by a branch write (``staged_ref``) are skipped
         and each main snapshot diffs against the previous MAIN state —
-        the same WAP guard main_head()/read_as_of_timestamp apply
-        (review-pass r15, reproduced: a staged audit write used to leak
-        into main's CDC as a phantom INSERT/DELETE pair). The default
-        ``to_version`` is main_head() for the same reason. Expired
-        manifests in range raise the contracted ValueError
-        (appended_files_between's rule), never a raw FileNotFoundError.
+        the same WAP guard main_head()/read_as_of_timestamp apply, so a
+        staged audit write never shows in main's CDC. The default
+        ``to_version`` is main_head() for the same reason. The range is
+        read as :func:`appended_files_between` reads it: each manifest
+        once, and an expired one raises the contracted ValueError.
         """
         to_v = to_version if to_version is not None else self.main_head()
-
-        def _manifest_or_expired(v: int) -> dict:
-            try:
-                return self._read_manifest(v)
-            except FileNotFoundError:
-                raise ValueError(
-                    f"snapshot v{v} expired; changelog range "
-                    f"({from_version}, {to_v}] unavailable — "
-                    "re-baseline from a full scan"
-                ) from None
+        # the range is read once; every pair's diff and alignment below
+        # works on these manifests
+        prev_m, later = _main_range(self.root, from_version, to_v, "changelog")
 
         # Schema evolution inside the range: every pair's frames are
         # aligned to the FINAL (to_v) schema — Iceberg's changelog
@@ -1683,23 +1699,21 @@ class LakehouseTable:
         # drop/rename boundary simply errors.
         from pyspark.sql.types import StructType
 
-        final_schema = StructType.fromJson(_manifest_or_expired(to_v)["schema"])
+        final_m = later[to_v] if to_v in later else self._read_manifest(to_v)
+        final_schema = StructType.fromJson(final_m["schema"])
 
         def _align(df: DataFrame, pair_v: int) -> DataFrame:
             mapping: dict[str, str] = {}  # name-at-pair_v -> later name
-            for w in range(pair_v + 1, to_v + 1):
-                try:
-                    op = self._read_manifest(w)["op"]
-                except FileNotFoundError:
+            for w, m in later.items():
+                if w <= pair_v or not m["op"].startswith("rename_column:"):
                     continue
-                if op.startswith("rename_column:"):
-                    old, new = op.split(":", 1)[1].split("->", 1)
-                    for k, tgt in list(mapping.items()):
-                        if tgt == old:
-                            mapping[k] = new
-                            break
-                    else:
-                        mapping[old] = new
+                old, new = m["op"].split(":", 1)[1].split("->", 1)
+                for k, tgt in list(mapping.items()):
+                    if tgt == old:
+                        mapping[k] = new
+                        break
+                else:
+                    mapping[old] = new
             inverse = {n: o for o, n in mapping.items()}
             cols = set(df.columns)
             sel = []
@@ -1714,20 +1728,14 @@ class LakehouseTable:
         parts: list[DataFrame] = []
         # running previous-MAIN state: staged snapshots are skipped, so
         # each main snapshot diffs against the last main one, not the
-        # raw log parent.  from_version itself can be STAGED (a caller
-        # who checkpointed the raw log head right after a WAP write) —
-        # normalize it down to the last MAIN snapshot, the same base
-        # walk appended_files_between uses, or prev_files seeds with
-        # branch state and the next main commit emits phantom DELETEs
-        # for branch-only files (ADVICE r15, reproduced).
-        base_v = from_version
-        while base_v and _manifest_or_expired(base_v).get("staged_ref"):
-            base_v -= 1
-        prev_v = base_v
-        prev_m = _manifest_or_expired(base_v) if base_v else None
+        # raw log parent; a staged from_version starts from main's
+        # state below it, or the next main commit would emit phantom
+        # DELETEs for branch-only files
+        # (every renamed-at version in `later` is above from_version, so
+        # it stands in for the base as the first pair's rename base)
+        prev_v = from_version if prev_m else 0
         prev_files = set(prev_m["files"]) if prev_m else set()
-        for v in range(from_version + 1, to_v + 1):
-            m = _manifest_or_expired(v)
+        for v, m in later.items():
             if m.get("staged_ref"):
                 continue  # branch-staged: not part of main's history
             cur_files = set(m["files"])
@@ -1741,14 +1749,12 @@ class LakehouseTable:
             prev_v, prev_m, prev_files = v, m, cur_files
             if not added and not removed:
                 continue  # metadata-only commit (e.g. add_column)
-            # align BOTH sides to the final schema BEFORE the exceptAll
-            # (review-pass r15, reproduced): a single commit that
-            # changes files AND schema — merge_into with
-            # schema_evolution, overwrite with a new shape — otherwise
-            # feeds exceptAll two different-arity frames and crashes
-            # with NUM_COLUMNS_MISMATCH. The rem side's rename base is
-            # the previous MAIN version, so a rename committed AT v
-            # still re-keys the pre-image columns.
+            # align BOTH sides to the final schema BEFORE the exceptAll:
+            # a single commit that changes files AND schema (merge_into
+            # with schema_evolution, overwrite with a new shape) would
+            # otherwise feed exceptAll two different-arity frames. The
+            # rem side's rename base is the previous MAIN version, so a
+            # rename committed AT v still re-keys the pre-image columns.
             add_df = _align(self._read_file_set(added, m), v)
             rem_df = _align(
                 self._read_file_set(removed, pair_prev_m),
@@ -2029,28 +2035,21 @@ class LakehouseTable:
         self._save_refs(refs)
         return at_version
 
-    def _manifest_or_none(self, v: int) -> dict | None:
-        try:
-            return self._read_manifest(v)
-        except FileNotFoundError:
-            return None  # expired — callers treat as unprovable
-
     def _rollforward_identity(self, v: int) -> set[int]:
         """``v`` plus every version it is a rollforward of,
         transitively: a rollback_to / publish commit carries its
         source's CONTENT under a new version number, so ancestry
         proofs must treat the whole chain as one point in history (a
         long-lived staging branch can then publish more than once)."""
-        ids, cur = {v}, v
-        while cur > 0:
-            m = self._manifest_or_none(cur)
-            if m is None or not m.get("rollforward_of"):
-                break
-            cur = int(m["rollforward_of"])
-            if cur in ids:
-                break
-            ids.add(cur)
-        return ids
+        ids = {v}
+        while True:
+            try:
+                v = int(self._read_manifest(v).get("rollforward_of") or 0)
+            except FileNotFoundError:
+                return ids  # expired: the chain is unprovable past here
+            if not v or v in ids:
+                return ids
+            ids.add(v)
 
     def _assert_fast_forward(self, frm: int, to: int, label: str) -> None:
         """True-fast-forward guard: ``frm`` (the ref being moved) must
@@ -2062,61 +2061,30 @@ class LakehouseTable:
         publish) — a data-loss hazard, not a merge. Divergent
         publishes go through cherrypick_snapshot.
 
-        The content chain walked from ``to`` downward:
-          * staged snapshot → its ``ref_base`` (the branch head the
-            write was based on, written by write_to_branch);
-          * rollforward commit → its ``rollforward_of`` source (same
-            content, older identity);
-          * plain main commit → the newest non-staged version below it
-            (main commits base on main_head(), which is exactly that
-            walk) — so a stale branch catching up to a NEWER main head
-            is recognized as the genuine fast-forward it is (Iceberg's
-            standard branch catch-up).
-        ``frm`` matches through its own rollforward identity, so a
-        published (rolled-forward) main head equals the branch content
-        it was published from.
+        The chain walks down from ``to`` by :func:`content_parent`; a
+        plain main commit's step continues to main's state at its log
+        parent (:func:`main_at`, what main_head() resolved to when it
+        was written), so a stale branch catching up to a NEWER main
+        head is recognized as the genuine fast-forward it is (Iceberg's
+        standard branch catch-up). ``frm`` matches through its own
+        rollforward identity, so a published (rolled-forward) main head
+        equals the branch content it was published from. Each manifest
+        is read at most twice, so the walk is linear in the history.
         """
         frm_ids = self._rollforward_identity(frm)
-        # per-call manifest memo: the main-side predecessor scan below
-        # re-reads one version at a time; with each version's manifest
-        # read at most once per call the walk stays linear in the
-        # version count on a long history with many staged snapshots.
-        memo: dict[int, dict | None] = {}
-
-        def mf(v: int):
-            if v not in memo:
-                memo[v] = self._manifest_or_none(v)
-            return memo[v]
-
         cur, seen = to, set()
-        while True:
-            if cur in frm_ids:
-                return  # frm is an ancestor: genuine fast-forward
-            if cur <= 0 or cur in seen:
-                break
+        while cur > 0 and cur not in frm_ids and cur not in seen:
             seen.add(cur)
-            m = mf(cur)
-            if m is None:
+            try:
+                m = self._read_manifest(cur)
+                nxt = content_parent(m)
+                if not (m.get("staged_ref") or m.get("rollforward_of")):
+                    nxt = main_at(self.root, nxt)
+            except (FileNotFoundError, ValueError):
                 break  # chain expired: cannot prove ancestry → refuse
-            if m.get("staged_ref"):
-                # pre-ref_base staged manifests fall back to log parent
-                cur = int(m.get("ref_base") or m.get("parent") or 0)
-            elif m.get("rollforward_of"):
-                cur = int(m["rollforward_of"])
-            else:
-                # main-side commit: content predecessor = newest
-                # non-staged version below (what main_head() resolved
-                # to when this commit was written)
-                nxt = cur - 1
-                while nxt > 0:
-                    mm = mf(nxt)
-                    if mm is None:
-                        nxt = 0  # expired below: unprovable → refuse
-                        break
-                    if not mm.get("staged_ref"):
-                        break
-                    nxt -= 1
-                cur = nxt
+            cur = nxt
+        if cur in frm_ids:
+            return  # frm is an ancestor: genuine fast-forward
         raise ValueError(
             f"fast_forward: {label} (v{frm}) is not an ancestor of the "
             f"target snapshot v{to} — the refs diverged; use "
@@ -2420,17 +2388,9 @@ class LakehouseTable:
 
 
 def history(table: LakehouseTable) -> DataFrame:
-    """The `t.history` metadata relation: commit lineage."""
-    rows = []
-    for v in range(1, table.current_version() + 1):
-        try:
-            m = table._read_manifest(v)
-        except FileNotFoundError:
-            continue  # expired snapshot
-        rows.append((v, m["parent"], m["op"], m["timestamp_ms"]))
-    return table.spark.createDataFrame(
-        rows, "version int, parent int, operation string, ts_ms long"
-    )
+    """The `t.history` metadata relation: commit lineage, a projection
+    of :meth:`LakehouseTable.snapshots`."""
+    return table.snapshots().select("version", "parent", "operation", "ts_ms")
 
 
 def cherrypick_snapshot(table: LakehouseTable, version: int) -> int:
@@ -2439,30 +2399,17 @@ def cherrypick_snapshot(table: LakehouseTable, version: int) -> int:
 
     Staged branch appends (op ``branch_append:<name>``) are accepted
     too — they are append-type deltas with a valid base file list — so
-    the recovery path _assert_fast_forward's refusal message points at
-    actually works (ADVICE r9: it used to reject staged snapshots, so
-    the documented path for publishing divergent work always failed).
-    The delta base is the snapshot's CONTENT parent: ``ref_base`` for
-    a staged append (the branch head it was based on), the log parent
-    otherwise.
+    publishing divergent work, the path _assert_fast_forward's refusal
+    message points at, works. The delta base is the snapshot's
+    :func:`content_parent`: the branch head a staged append was based
+    on, the log parent otherwise.
     """
     m = table._read_manifest(version)
     op = m["op"]
     if op not in ("append", "create") and not op.startswith("branch_append:"):
         raise ValueError(f"can only cherry-pick append snapshots, got {op!r}")
-    if m.get("staged_ref"):
-        # pre-ref_base staged manifests fall back to the LOG parent
-        # (same fallback as _assert_fast_forward) — treating base=None
-        # as "no base" would count the branch's inherited base files as
-        # delta and resurrect rows main has since deleted (review-pass
-        # finding). `in` test, not `or`: ref_base == 0 legitimately
-        # means "based on the empty table".
-        base = m["ref_base"] if "ref_base" in m else m.get("parent")
-    else:
-        base = m.get("parent")
-    parent_files = (
-        set(table._read_manifest(int(base))["files"]) if base else set()
-    )
+    base = content_parent(m)
+    parent_files = set(table._read_manifest(base)["files"]) if base else set()
     delta = [f for f in m["files"] if f not in parent_files]
     parent = table.current_version()
     cur = table._files()  # one head walk, not one per delta file

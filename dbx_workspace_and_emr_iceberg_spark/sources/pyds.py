@@ -262,24 +262,16 @@ class LakehouseStreamDataSource(DataSource):
         return root
 
     def schema(self) -> StructType:
-        import json
-        import os
-
-        # resolve through the MAIN head, never the raw log head: right
-        # after a WAP branch write `_current` points at a STAGED
-        # snapshot carrying the branch-BASE schema — a stream
-        # (re)starting then would silently drop columns added on main
-        # since the branch was cut (review-pass r15)
-        from .lakehouse import main_head_json
+        # main's schema, never the raw log head's: right after a branch
+        # write the log head is a STAGED snapshot carrying the branch
+        # base's schema, which lacks columns main added since
+        from .lakehouse import main_head_json, read_manifest
 
         root = self._root()
         v = main_head_json(root)
         if v == 0:
             raise ValueError(f"lakehouse_stream: no main snapshot in {root}")
-        with open(
-            os.path.join(root, "_snapshots", f"v{v:05d}.json")
-        ) as f:
-            return StructType.fromJson(json.load(f)["schema"])
+        return StructType.fromJson(read_manifest(root, v)["schema"])
 
     def streamReader(self, schema: StructType) -> "LakehouseStreamReader":
         return LakehouseStreamReader(self._root(), schema)

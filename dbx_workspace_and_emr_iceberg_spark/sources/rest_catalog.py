@@ -48,7 +48,13 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from pyspark.sql import SparkSession
 
-from .lakehouse import LakehouseTable
+from .lakehouse import (
+    LakehouseTable,
+    log_head,
+    main_head_json,
+    manifest_path,
+    read_manifest,
+)
 
 
 def _error_body(code: int, msg: str, err_type: str) -> bytes:
@@ -225,9 +231,7 @@ class RestCatalogServer:
             return 404, _error_body(404, f"no route {path}", "NoSuchRoute")
         if len(rest) == 3:  # .../tables
             tbls = sorted(
-                d
-                for d in os.listdir(ns_dir)
-                if os.path.exists(os.path.join(ns_dir, d, "_current"))
+                d for d in os.listdir(ns_dir) if log_head(os.path.join(ns_dir, d))
             )
             return 200, json.dumps(
                 {
@@ -237,18 +241,16 @@ class RestCatalogServer:
                 }
             ).encode()
         # .../tables/{table} -> LoadTableResult
+        # main's head and schema, never a branch's staged snapshot
         tbl_root = os.path.join(ns_dir, rest[3])
-        cur = os.path.join(tbl_root, "_current")
-        if not os.path.exists(cur):
+        v = main_head_json(tbl_root)
+        if not v:
             return 404, _error_body(
                 404, f"table {rest[1]}.{rest[3]} not found",
                 "NoSuchTableException",
             )
-        with open(cur) as f:
-            v = int(f.read().strip())
-        meta_path = os.path.join(tbl_root, "_snapshots", f"v{v:05d}.json")
-        with open(meta_path) as f:
-            manifest = json.load(f)
+        meta_path = manifest_path(tbl_root, v)
+        manifest = read_manifest(tbl_root, v)
         return 200, json.dumps(
             {
                 "metadata-location": meta_path,

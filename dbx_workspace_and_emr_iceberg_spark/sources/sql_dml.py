@@ -441,7 +441,7 @@ def execute_insert(engine, sql: str) -> DataFrame:
         t = engine.managed(table)
     except (KeyError, ValueError):
         return engine.spark.sql(sql)
-    from .lakehouse import commit_with_retries
+    from .lakehouse import commit_with_retries, content_parent
 
     df = _run_body(engine, body)
     if branch is not None:
@@ -462,7 +462,7 @@ def execute_insert(engine, sql: str) -> DataFrame:
         # re-running the source SELECT — a non-deterministic source
         # would otherwise report a count differing from the rows
         # actually written.
-        base = int(t._read_manifest(version).get("ref_base") or 0)
+        base = content_parent(t._read_manifest(version))
         n = t.record_count(version) - t.record_count(base)
         return engine.spark.createDataFrame(
             [(f"{table}.branch_{branch}", "insert_branch", version, n)],

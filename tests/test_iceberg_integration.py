@@ -198,6 +198,34 @@ class TestRestCatalogStub:
         assert cat.client._token is not None
         assert len(rest_env["server"]._tokens) >= 1
 
+    def test_load_table_serves_main_not_a_staged_snapshot(self, rest_env):
+        """After a branch write the log head is the branch's staged
+        snapshot; LoadTable reports main's version and schema, and the
+        table listing skips a stray file beside the tables."""
+        from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
+            LakehouseTable,
+        )
+        from dbx_workspace_and_emr_iceberg_spark.sources.rest_catalog import (
+            RestCatalogClient,
+        )
+
+        spark = rest_env["spark"]
+        ns_dir = os.path.join(rest_env["wh"], "local", "db")
+        t = LakehouseTable(spark, ns_dir, "kv")
+        t.create(spark.createDataFrame([(1, "a")], "k long, v string"))
+        t.create_branch("b")
+        t.add_column("w", "string")  # v2: main gains w
+        t.write_to_branch(
+            "b", spark.createDataFrame([(2, "b")], "k long, v string")
+        )  # v3: staged, the branch base's schema
+        assert t.current_version() == 3
+        open(os.path.join(ns_dir, "stray.txt"), "w").close()
+        client = RestCatalogClient(rest_env["uri"], credential="client:secret")
+        meta = client.load_table("db", "kv")["metadata"]
+        assert meta["current-version"] == 2
+        assert [f["name"] for f in meta["schema"]["fields"]] == ["k", "v", "w"]
+        assert client.list_tables("db") == ["kv", "nation"]
+
     def test_bad_credential_is_401(self, rest_env):
         from dbx_workspace_and_emr_iceberg_spark.sources.rest_catalog import (
             RestCatalogClient,

@@ -512,3 +512,51 @@ def test_bench_previous_floors_layout_gated(tmp_path, monkeypatch):
     )
     assert bench.previous_floors("single") == {"q1": 4.0}
     assert bench.previous_floors("multi16") == {"q1": 3.0}  # sidecar still wins
+
+
+def test_snapshot_log_format_lives_in_one_module():
+    """Only sources/lakehouse.py knows the on-disk log: no other package
+    module spells the `_snapshots` directory or the `_current` pointer
+    in a string (path join, f-string or literal path)."""
+    import ast
+
+    owner = os.path.join(PKG, "sources", "lakehouse.py")
+    offenders = []
+    for dirpath, _dirs, names in os.walk(PKG):
+        for fn in names:
+            path = os.path.join(dirpath, fn)
+            if not fn.endswith(".py") or path == owner:
+                continue
+            with open(path) as f:
+                tree = ast.parse(f.read(), path)
+            for node in ast.walk(tree):
+                if not (isinstance(node, ast.Constant) and isinstance(node.value, str)):
+                    continue
+                v = node.value
+                if (
+                    v in ("_current", "_snapshots")
+                    or "_snapshots/" in v
+                    or "/_current" in v
+                ):
+                    offenders.append(f"{os.path.relpath(path, PKG)}:{node.lineno}")
+    assert offenders == [], f"snapshot-log paths outside lakehouse.py: {offenders}"
+
+
+def test_bench_one_rejects_bad_passes_without_traceback():
+    """A malformed --passes value ends bench_one with a one-line message
+    before any Spark session starts."""
+    import subprocess
+
+    for bad in (["--passes", "foo"], ["--passes="], ["--passes", "--x"], ["--passes", "0"]):
+        r = subprocess.run(
+            [sys.executable, os.path.join(REPO, "tools", "bench_one.py"), *bad],
+            capture_output=True,
+            text=True,
+            timeout=120,
+        )
+        assert r.returncode != 0, bad
+        assert "Traceback" not in r.stderr, (bad, r.stderr)
+        assert r.stderr.strip().count("\n") == 0 and "--passes" in r.stderr, (
+            bad,
+            r.stderr,
+        )

@@ -2313,3 +2313,54 @@ def test_record_count_falls_back_to_scan_for_older_manifests(spark, wh):
     m = t._read_manifest(t.main_head())
     assert any("record_count" not in m["stats"][f] for f in m["files"])
     assert t.record_count() == 60
+
+
+def test_add_column_stores_a_parseable_type(spark, wh):
+    """A DDL type name is stored in the JSON form StructType.fromJson
+    reads back: 'bigint' stored as given made the next read() fail to
+    parse the manifest schema."""
+    from pyspark.sql.types import LongType
+
+    t = LakehouseTable(spark, wh, "t")
+    t.create(spark.createDataFrame([(1,), (2,)], "k long"))
+    t.add_column("c", "bigint")
+    df = t.read()
+    assert isinstance(df.schema["c"].dataType, LongType)
+    assert sorted((r.k, r.c) for r in df.collect()) == [(1, None), (2, None)]
+
+
+def test_log_walks_read_each_manifest_at_most_twice(spark, wh, monkeypatch):
+    """changelog() and read_incremental() read the snapshot log once
+    per call (plus main-head resolution), not once per version pair:
+    over 12 commits no manifest file is opened more than twice."""
+    import builtins
+    import collections
+    import re
+
+    t = LakehouseTable(spark, wh, "t")
+    t.create(spark.createDataFrame([(0,)], "k long"))
+    for i in range(1, 9):
+        t.append(spark.createDataFrame([(i,)], "k long"))
+    t.create_branch("b")
+    t.write_to_branch("b", spark.createDataFrame([(100,)], "k long"))
+    t.append(spark.createDataFrame([(9,)], "k long"))
+    t.append(spark.createDataFrame([(10,)], "k long"))
+    assert t.current_version() == 12
+
+    real_open = builtins.open
+    opens: collections.Counter = collections.Counter()
+
+    def counting_open(file, *args, **kwargs):
+        if isinstance(file, str) and re.search(r"_snapshots/v\d+\.json$", file):
+            opens[file] += 1
+        return real_open(file, *args, **kwargs)
+
+    monkeypatch.setattr(builtins, "open", counting_open)
+    for read in (t.changelog, t.read_incremental):
+        opens.clear()
+        df = read(0)
+        assert len(opens) == 12  # every version was read ...
+        assert max(opens.values()) <= 2, opens  # ... at most twice
+        monkeypatch.setattr(builtins, "open", real_open)
+        assert sorted(r.k for r in df.collect()) == list(range(11))
+        monkeypatch.setattr(builtins, "open", counting_open)

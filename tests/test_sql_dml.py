@@ -595,6 +595,22 @@ def test_alter_table_door_evolution(spark, tmp_path):
     spark.catalog.dropTempView("alt_t")
 
 
+def test_alter_add_column_ddl_type_reads_back(spark, tmp_path):
+    """`ADD COLUMN c INT DEFAULT 5` stores a type the next read parses:
+    old rows read the default, the column is an integer column."""
+    from pyspark.sql.types import IntegerType
+
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+
+    eng = Engine(spark, warehouse=str(tmp_path))
+    eng.create_table("ai_t", spark.createDataFrame([(1,), (2,)], "k long"))
+    eng.sql("ALTER TABLE ai_t ADD COLUMN c INT DEFAULT 5")
+    df = eng.managed("ai_t").read()
+    assert isinstance(df.schema["c"].dataType, IntegerType)
+    assert sorted((r.k, r.c) for r in df.collect()) == [(1, 5), (2, 5)]
+    spark.catalog.dropTempView("ai_t")
+
+
 def test_ctas_and_insert_door(spark, tmp_path):
     """CREATE TABLE AS / INSERT INTO / INSERT OVERWRITE through the
     SQL door — the reference's spark-sql write flow (README.md:35-45)

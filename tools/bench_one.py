@@ -23,14 +23,20 @@ from dbx_workspace_and_emr_iceberg_spark.registry import all_queries  # noqa: E4
 from dbx_workspace_and_emr_iceberg_spark.session import get_spark  # noqa: E402
 
 
-def main() -> None:
-    # accept both --passes=N and --passes N (ADVICE r19: the split("=")
-    # form raised IndexError on bare --passes and swallowed the value
-    # token into the query-name list).  Only the EXACT spellings are
-    # recognized; any other --flag is ignored like the old parser did
-    # (review-pass r20: treating unknown --flags as query names would
-    # crash with KeyError after paying Spark startup).
-    argv = sys.argv[1:]
+def _passes(value: str) -> int:
+    try:
+        n = int(value)
+    except ValueError:
+        n = 0
+    if n < 1:
+        sys.exit(f"--passes needs a positive integer, got {value!r}")
+    return n
+
+
+def parse_args(argv: list[str]) -> tuple[list[str], int]:
+    """(query names, passes) from ``argv``: both ``--passes=N`` and
+    ``--passes N`` are accepted, a missing or non-positive value exits
+    with a one-line message, and any other ``--flag`` is ignored."""
     args: list[str] = []
     passes = 3
     i = 0
@@ -39,15 +45,19 @@ def main() -> None:
         if a == "--passes":
             if i + 1 >= len(argv):
                 sys.exit("--passes needs a value (N or --passes=N)")
-            passes = int(argv[i + 1])
+            passes = _passes(argv[i + 1])
             i += 1
         elif a.startswith("--passes="):
-            passes = int(a.split("=", 1)[1])
-        elif a.startswith("--"):
-            pass  # unknown flag: ignored, as before r20
-        else:
+            passes = _passes(a.split("=", 1)[1])
+        elif not a.startswith("--"):
             args.append(a)
         i += 1
+    return args, passes
+
+
+def main() -> None:
+    # parsed before Spark starts, so a bad flag costs no session
+    args, passes = parse_args(sys.argv[1:])
     run_dir = bench_layout(SF_DIR)
     spark = get_spark(
         app_name="spark-graft-bench-one",

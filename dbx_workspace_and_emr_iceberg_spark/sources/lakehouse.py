@@ -34,9 +34,9 @@ Semantics mirrored from Iceberg v2 (copy-on-write flavor):
 The log is read only through this module's json-over-fs reader:
 :func:`log_head` (the `_current` pointer), :func:`manifest_path` and
 :func:`read_manifest` (one snapshot), :func:`manifests` (the surviving
-snapshots of a version range), :func:`main_at` / :func:`main_head_json`
-(main's state past branch-staged snapshots) and :func:`content_parent`
-(the snapshot a commit's content was built on). The table, the stream
+snapshots of a version range), :func:`main_walk` / :func:`main_at` /
+:func:`main_head_json` (main's state past branch-staged snapshots) and
+:func:`content_parent` (the snapshot a commit's content was built on). The table, the stream
 source, the REST catalog and both catalogs' listings all call it.
 
 At 100 TB: data files are the unit of parallelism and pruning; the
@@ -163,26 +163,33 @@ def manifests(root: str, lo: int = 1, hi: int | None = None):
             continue
 
 
-def main_at(root: str, v: int) -> int:
-    """The newest main (non-staged) version at or below ``v``; 0 when
-    main has no snapshot there. The log is shared by every ref and a
-    branch write tags its snapshot ``staged_ref``, so main's state at a
-    log position is found by walking down past staged snapshots.
+def main_walk(root: str, v: int) -> tuple[int, dict]:
+    """``(version, manifest)`` of the newest main (non-staged) snapshot
+    at or below ``v``; ``(0, {})`` when main has no snapshot there. The
+    log is shared by every ref and a branch write tags its snapshot
+    ``staged_ref``, so main's state at a log position is found by
+    walking down past staged snapshots, each manifest read once.
     Raises ValueError if the walk reaches an expired manifest: main's
     state there is unknowable."""
     w = v
     while w:
         try:
-            if not read_manifest(root, w).get("staged_ref"):
-                return w
+            m = read_manifest(root, w)
         except FileNotFoundError:
             raise ValueError(
                 f"{root}: main state at v{v} expired below staged "
                 "snapshots — publish or drop staged refs before "
                 "expire_snapshots"
             ) from None
+        if not m.get("staged_ref"):
+            return w, m
         w -= 1
-    return 0
+    return 0, {}
+
+
+def main_at(root: str, v: int) -> int:
+    """The version :func:`main_walk` resolves ``v`` to."""
+    return main_walk(root, v)[0]
 
 
 def main_head_json(root: str) -> int:
@@ -429,22 +436,35 @@ def _file_column_stats(path: str) -> dict[str, list]:
     strings for timestamps)."""
     import datetime
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     md = pq.ParquetFile(path).metadata
     mins: dict[str, object] = {}
     maxs: dict[str, object] = {}
+    # a column with a chunk that holds values but carries no comparable
+    # min/max (writers drop oversized stats) gets no range for the file:
+    # the other chunks' range would let the planner skip its rows
+    unknown: set[str] = set()
     for rg in range(md.num_row_groups):
         g = md.row_group(rg)
         for ci in range(g.num_columns):
             col = g.column(ci)
             st = col.statistics
-            if st is None or not st.has_min_max:
-                continue
             name = col.path_in_schema
-            lo, hi = st.min, st.max
-            if isinstance(lo, bytes):
-                continue  # binary stats aren't comparable cross-engine
+            if st is None or not st.has_min_max:
+                if st is None or st.num_values:
+                    unknown.add(name)
+                continue  # an all-NULL chunk adds no range
+            try:
+                lo, hi = st.min, st.max
+            except pa.ArrowNotImplementedError:
+                lo = hi = None  # a type pyarrow cannot decode (DECIMAL)
+            # only these store as JSON and compare like Spark does
+            # (binary stats aren't comparable cross-engine)
+            if not isinstance(lo, (bool, int, float, str, datetime.date)):
+                unknown.add(name)
+                continue
             if name not in mins or lo < mins[name]:
                 mins[name] = lo
             if name not in maxs or hi > maxs[name]:
@@ -473,10 +493,122 @@ def _file_column_stats(path: str) -> dict[str, list]:
         return v
 
     return {
-        "min": {k: enc(v) for k, v in mins.items()},
-        "max": {k: enc(v) for k, v in maxs.items()},
+        "min": {k: enc(v) for k, v in mins.items() if k not in unknown},
+        "max": {k: enc(v) for k, v in maxs.items() if k not in unknown},
         "record_count": md.num_rows,
     }
+
+
+# ---------------------------------------------------------------------------
+# Scan planning: Spark's own pushed source filters evaluated against the
+# manifest's per-file min/max (Iceberg's inclusive metrics evaluator)
+# ---------------------------------------------------------------------------
+
+#: pushed source-filter class -> the comparison the planner evaluates;
+#: every other class (IsNull, IsNotNull, Not, StringStartsWith, ...)
+#: keeps the file
+_FILTER_OPS = {
+    "EqualTo": "=",
+    "In": "in",
+    "LessThan": "<",
+    "LessThanOrEqual": "<=",
+    "GreaterThan": ">",
+    "GreaterThanOrEqual": ">=",
+}
+
+
+def _pushed_filters(df: DataFrame) -> list | None:
+    """The JVM source filters Spark pushes into the one file scan of
+    ``df``'s physical plan — planned, never executed. None when the
+    plan has no single file scan (a filter the optimizer folded away, a
+    subquery over another file table): the caller keeps every file."""
+    scans = []
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves().iterator()
+    while leaves.hasNext():
+        node = leaves.next()
+        if node.getClass().getSimpleName() == "FileSourceScanExec":
+            scans.append(node)
+    if len(scans) != 1:
+        return None
+    pushed = scans[0].pushedDownFilters().iterator()
+    out = []
+    while pushed.hasNext():
+        out.append(pushed.next())
+    return out
+
+
+def _stat_value(v, dt):
+    """A pushed filter value in the manifest stats' encoding for a
+    column of type ``dt``; None when it cannot be compared exactly."""
+    from pyspark.sql.types import IntegralType, StringType
+
+    if isinstance(dt, IntegralType):
+        return v if isinstance(v, int) and not isinstance(v, bool) else None
+    if isinstance(dt, StringType):
+        # stats order bytes; a collated column compares otherwise
+        binary = getattr(dt, "collation", "UTF8_BINARY") == "UTF8_BINARY"
+        return v if binary and isinstance(v, str) else None
+    if not is_temporal_dtype(dt) or not hasattr(v, "getClass"):
+        return None
+    # a java.sql.Timestamp prints in the JVM's zone, its instant in UTC —
+    # the zone the stats encoder stores
+    cls = v.getClass().getName()
+    text = v.toInstant().toString() if cls == "java.sql.Timestamp" else v.toString()
+    iso = temporal_bound_iso(text.removesuffix("Z"), sep="T")
+    # Spark hands values before the Gregorian switch over rebased to the
+    # hybrid calendar, the stats hold them proleptic
+    return iso if iso is not None and iso >= "1583" else None
+
+
+def _filter_tree(jf, types: dict):
+    """A pushed JVM source filter as the nested tuple the evaluator
+    reads: ``('and'|'or', left, right)`` or ``(op, column, values)``;
+    None for a filter or value it cannot compare."""
+    kind = jf.getClass().getSimpleName()
+    if kind in ("And", "Or"):
+        return (
+            kind.lower(),
+            _filter_tree(jf.left(), types),
+            _filter_tree(jf.right(), types),
+        )
+    op = _FILTER_OPS.get(kind)
+    col = jf.attribute() if op else None
+    if col not in types:
+        return None
+    # a NULL in an IN list never matches; a NULL comparand is unknown
+    raw = [v for v in jf.values() if v is not None] if op == "in" else [jf.value()]
+    vals = [_stat_value(v, types[col]) for v in raw]
+    return None if None in vals else (op, col, vals)
+
+
+def _may_match(node, bounds) -> bool:
+    """Inclusive evaluation: False only when ``bounds(column)`` — a
+    file's ``(min, max)`` for the column, or None when unknown — proves
+    no row of the file satisfies ``node``."""
+    if node is None:
+        return True
+    if node[0] == "and":
+        return _may_match(node[1], bounds) and _may_match(node[2], bounds)
+    if node[0] == "or":
+        return _may_match(node[1], bounds) or _may_match(node[2], bounds)
+    op, col, vals = node
+    mm = bounds(col)
+    if mm is None:
+        return True
+    lo, hi = mm
+    try:
+        if op in ("=", "in"):
+            return any(lo <= v <= hi for v in vals)
+        v = vals[0]
+        if op == "<":
+            return lo < v
+        if op == "<=":
+            return lo <= v
+        if op == ">":
+            return hi > v
+        return hi >= v
+    except TypeError:
+        return True  # a stat of another type: keep
 
 
 class LakehouseTable:
@@ -698,10 +830,16 @@ class LakehouseTable:
             if f in known or os.path.isfile(f)
         }
 
+    def _base(self) -> tuple[int, dict]:
+        """``(log head, main head's manifest)`` from one walk: the
+        parent a main-side write commits against and the state it
+        builds on. The manifest is ``{}`` before the table exists."""
+        parent = self.current_version()
+        return parent, main_walk(self.root, parent)[1]
+
     def _head_manifest(self) -> dict:
         """Main head's manifest; ``{}`` before the table exists."""
-        v = self.main_head()
-        return self._read_manifest(v) if v else {}
+        return self._base()[1]
 
     def _partition_spec(self) -> list[str]:
         """The partition transforms of main's head (empty = unpartitioned)."""
@@ -733,26 +871,26 @@ class LakehouseTable:
         )
 
     def _files(self, version: int | None = None) -> list[str]:
-        # default = main_head(), NOT the raw log head: see main_head()
-        v = version if version is not None else self.main_head()
-        if v == 0:
-            return []
-        return self._read_manifest(v)["files"]
+        # default = main's head, NOT the raw log head: see main_head()
+        if version is None:
+            return self._head_manifest().get("files", [])
+        return self._read_manifest(version)["files"] if version else []
 
     def record_count(self, version: int | None = None) -> int:
         """Rows in snapshot ``version`` (default: main's head), summed
         from the manifest's per-file ``record_count`` without reading
         data. A manifest with a file that lacks the count (written
         before counts were recorded) falls back to counting the scan."""
-        v = version if version is not None else self.main_head()
-        if v == 0:
+        m = self._head_manifest() if version is None else (
+            self._read_manifest(version) if version else {}
+        )
+        if not m:
             return 0
-        m = self._read_manifest(v)
         stats = m.get("stats", {})
         try:
             return sum(stats[f]["record_count"] for f in m["files"])
         except KeyError:
-            return self.read(v).count()
+            return self.read(m["version"]).count()
 
     # ---------- S4/S5/S6: create / append / overwrite ----------
 
@@ -784,7 +922,21 @@ class LakehouseTable:
         `INSERT … VALUES`, whose frame arrives named col1/col2). Use
         :meth:`append_positional` for positional INSERT semantics.
         """
-        table_cols = [f["name"] for f in self.schema_json()["fields"]]
+        return self._append(df, positional=False)
+
+    def append_positional(self, df: DataFrame) -> int:
+        """SQL ``INSERT INTO`` binds columns POSITIONALLY: arity must
+        match, then each incoming column is renamed and cast to the
+        table column at its ordinal (ANSI cast errors surface)."""
+        return self._append(df, positional=True)
+
+    def _append(self, df: DataFrame, positional: bool) -> int:
+        parent, m = self._base()
+        if not m:
+            raise ValueError(f"table {self.name} does not exist")
+        if positional:
+            df = self._bind_positional(df, m["schema"])
+        table_cols = [f["name"] for f in m["schema"]["fields"]]
         missing = [c for c in table_cols if c not in df.columns]
         if missing:
             raise ValueError(
@@ -792,17 +944,13 @@ class LakehouseTable:
                 f"frame has {df.columns} — rename/select to match, or use "
                 "append_positional for INSERT-style positional binding"
             )
-        parent = self.current_version()
-        files = self._files() + self._write_files(df.select(table_cols))
-        return self._commit(
-            {"files": files, "schema": self.schema_json(), "op": "append"}, parent
+        new_files = self._write_files(
+            df.select(table_cols), m.get("partition_spec", [])
         )
-
-    def append_positional(self, df: DataFrame) -> int:
-        """SQL ``INSERT INTO`` binds columns POSITIONALLY: arity must
-        match, then each incoming column is renamed and cast to the
-        table column at its ordinal (ANSI cast errors surface)."""
-        return self.append(self._bind_positional(df))
+        return self._commit(
+            {"files": m["files"] + new_files, "schema": m["schema"], "op": "append"},
+            parent,
+        )
 
     def _bind_positional(
         self, df: DataFrame, schema: dict | None = None
@@ -843,10 +991,10 @@ class LakehouseTable:
         return self.overwrite(self._bind_positional(df))
 
     def schema_json(self) -> dict:
-        v = self.main_head()
-        if v == 0:
+        m = self._head_manifest()
+        if not m:
             raise ValueError(f"table {self.name} does not exist")
-        return self._read_manifest(v)["schema"]
+        return m["schema"]
 
     # ---------- S1/S8: scan + time travel ----------
 
@@ -857,21 +1005,22 @@ class LakehouseTable:
         table metadata, as Iceberg does): no per-file schema inference,
         and files written before a column was added yield NULLs for it.
         """
-        v = version if version is not None else self.main_head()
-        if v == 0:
-            # contracted error, matching schema_json: a missing table
-            # has no schema to build even an empty frame from
-            raise ValueError(f"table {self.name} does not exist")
         try:
-            m = self._read_manifest(v)
+            m = self._head_manifest() if version is None else (
+                self._read_manifest(version) if version else {}
+            )
         except FileNotFoundError:
             # explicit-version read of an expired/never-existing
             # snapshot: the contracted error type, not a leaked
             # internal path
             raise ValueError(
-                f"table {self.name}: snapshot v{v} expired or never "
+                f"table {self.name}: snapshot v{version} expired or never "
                 "existed"
             ) from None
+        if not m:
+            # contracted error, matching schema_json: a missing table
+            # has no schema to build even an empty frame from
+            raise ValueError(f"table {self.name} does not exist")
         return self._read_file_set(m["files"], m)
 
     def _scan_files(self, files: list[str], manifest: dict) -> DataFrame:
@@ -891,7 +1040,10 @@ class LakehouseTable:
         layer's equivalent), each group scans with its PHYSICAL schema
         and immediately aliases back to logical names, then the groups
         union. Pre-rename files thus keep their values — an explicit
-        logical-schema read would have nulled them."""
+        logical-schema read would have nulled them. A column re-added
+        under a name that a group's files store another (renamed)
+        column under is not in those files: it reads NULL there, and
+        its initial default over that."""
         from pyspark.sql.types import StructField, StructType
 
         schema = StructType.fromJson(manifest["schema"])
@@ -918,17 +1070,21 @@ class LakehouseTable:
         parts = []
         for s, fs in groups.items():
             mapping = dict(s)  # logical -> physical for this group
+            shadowed = set(mapping.values()) - set(mapping)
+            stored = [f for f in schema.fields if f.name not in shadowed]
             phys = StructType(
                 [
                     StructField(
                         mapping.get(fld.name, fld.name), fld.dataType, True
                     )
-                    for fld in schema.fields
+                    for fld in stored
                 ]
             )
             pdf = self.spark.read.schema(phys).parquet(*fs).select(
                 *[
-                    F.col(mapping.get(fld.name, fld.name)).alias(fld.name)
+                    F.lit(None).cast(fld.dataType).alias(fld.name)
+                    if fld.name in shadowed
+                    else F.col(mapping.get(fld.name, fld.name)).alias(fld.name)
                     for fld in schema.fields
                 ]
             )
@@ -992,38 +1148,147 @@ class LakehouseTable:
             rows, "version int, parent int, operation string, n_files int, ts_ms long"
         )
 
+    # ---------- scan planning ----------
+
+    def _plan_files(self, m: dict, cond) -> tuple[list[str], dict]:
+        """The files of manifest ``m`` that may hold a row satisfying
+        ``cond``, and a scan report — THE planner behind every pruned
+        read and every DML's file discovery.
+
+        The filters are Spark's own: those it pushes into the planned
+        (never executed) scan of one live file under the manifest
+        schema. Each is evaluated inclusively against every file's
+        min/max, so a file is dropped only when its stats prove no row
+        can match; a filter class or value the evaluator cannot compare,
+        a file without stats and a column the file does not physically
+        hold all keep the file. Logical names map through ``renames``
+        to the physical name a file stores the column under; a column
+        a file predates (an ``absent_files`` entry of ``defaults``) or
+        stores another column under reads its default there, never its
+        physical stats."""
+        from pyspark.sql.types import StructType
+
+        files = m.get("files", [])
+        report: dict = {"total_files": len(files), "filters": []}
+        pushed = None
+        if files:
+            schema = StructType.fromJson(m["schema"])
+            pushed = _pushed_filters(
+                self.spark.read.schema(schema).parquet(files[0]).filter(cond)
+            )
+        if pushed:
+            report["filters"] = [jf.toString() for jf in pushed]
+            types = {f.name: f.dataType for f in schema.fields}
+            trees = [t for t in (_filter_tree(jf, types) for jf in pushed) if t]
+            physical = {
+                (logical, f): e["physical"]
+                for logical, entries in m.get("renames", {}).items()
+                for e in entries
+                for f in e["files"]
+            }
+            held = {(f, p) for (_, f), p in physical.items()}
+            absent = {
+                c: set(d["absent_files"])
+                for c, d in m.get("defaults", {}).items()
+            }
+            stats = m.get("stats", {})
+
+            def bounds_in(f: str):
+                def bounds(col: str):
+                    p = physical.get((col, f))
+                    if f in absent.get(col, ()) or (p is None and (f, col) in held):
+                        return None
+                    s = stats.get(f) or {}
+                    lo = s.get("min", {}).get(p or col)
+                    hi = s.get("max", {}).get(p or col)
+                    if lo is None or hi is None:
+                        return None
+                    if is_temporal_dtype(types[col]):
+                        # a stat written before dates gained their
+                        # midnight normalizes like the bound did
+                        lo = temporal_bound_iso(lo, sep="T")
+                        hi = temporal_bound_iso(hi, sep="T")
+                        if lo is None or hi is None:
+                            return None
+                    return lo, hi
+
+                return bounds
+
+            files = [
+                f
+                for f in files
+                if all(_may_match(t, bounds_in(f)) for t in trees)
+            ]
+        report["planned_files"] = len(files)
+        return files, report
+
+    def _range_cond(self, m: dict, col: str, lo, hi):
+        """``lo <= col <= hi`` as a Column. Bounds on a TEMPORAL column
+        are normalized ISO strings cast to the column's own type (a
+        naive Python datetime handed to Spark raw becomes a zoned
+        literal converted through the driver's local timezone); a bound
+        the normalizer cannot canonicalize raises ValueError. Other
+        bounds — a date-shaped bound on a STRING column too — pass
+        verbatim."""
+        from pyspark.sql.types import StructType
+
+        schema = StructType.fromJson(m["schema"])
+        dt = schema[col].dataType if col in schema.fieldNames() else None
+        if dt is None or not is_temporal_dtype(dt):
+            return (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
+        lo_n, hi_n = temporal_bound_iso(lo), temporal_bound_iso(hi)
+        if lo_n is None or hi_n is None:
+            # fractional-minute ISO shapes like '08:30.5' are rejected:
+            # pass full seconds
+            raise ValueError(
+                f"unsupported temporal bound for {col!r}: "
+                f"{lo!r}..{hi!r} — pass "
+                "'YYYY-MM-DD[ HH:MM:SS[.ffffff]]' or datetime/date"
+            )
+        return (F.col(col) >= F.lit(lo_n).cast(dt)) & (
+            F.col(col) <= F.lit(hi_n).cast(dt)
+        )
+
     # ---------- M2/M3: UPDATE / DELETE (copy-on-write, file-pruned) ----------
 
-    def _affected_files(self, m: dict, rows) -> list[str]:
-        """The files of manifest ``m`` holding at least one row of
+    def _affected_files(self, m: dict, files: list[str], rows) -> list[str]:
+        """The ``files`` of manifest ``m`` holding at least one row of
         ``rows(scan)``, where ``scan`` is their manifest-schema scan
-        with each row's source file in ``__file`` — the one discovery
-        pass behind every copy-on-write rewrite (Iceberg-style: the
-        files it does not return survive into the next snapshot
-        as-is)."""
-        files = m.get("files", [])
+        with each row's source file in ``__file`` — the one exact
+        discovery pass behind every copy-on-write rewrite, run over the
+        files the planner kept (Iceberg-style: the files it does not
+        return survive into the next snapshot as-is)."""
         if not files:
             return []
+        if len(files) == 1:
+            # one candidate: an emptiness probe (a limit-1 job, no shuffle)
+            return [] if rows(self._scan_files(files, m)).isEmpty() else files
         scan = self._scan_files(files, m).withColumn("__file", _input_path())
         # subscript access: attribute access would name-mangle __file
         hits = {r["__file"] for r in rows(scan).select("__file").distinct().collect()}
         return [f for f in files if f in hits]
 
+    def _filtered_files(self, m: dict, cond) -> list[str]:
+        """The files of ``m`` holding a row where ``cond`` is TRUE:
+        the exact discovery over the files the planner keeps."""
+        planned, _ = self._plan_files(m, cond)
+        return self._affected_files(m, planned, lambda scan: scan.filter(cond))
+
     def delete_where(self, cond) -> int:
         """DELETE FROM t WHERE cond (M3)."""
-        parent = self.current_version()
-        m = self._head_manifest()
-        affected = self._affected_files(m, lambda scan: scan.filter(cond))
+        parent, m = self._base()
+        affected = self._filtered_files(m, cond)
         if not affected:
             return parent  # no-op delete commits nothing
-        keep = [f for f in m["files"] if f not in affected]
+        rewritten = set(affected)
+        keep = [f for f in m["files"] if f not in rewritten]
         # SQL DELETE removes only rows where cond is TRUE; a bare ~cond
         # filter would also drop NULL-predicate rows (NOT NULL => NULL,
         # filtered out). Keep rows where cond is FALSE *or* NULL.
         survivors = self._scan_files(affected, m).filter(
             ~F.coalesce(cond, F.lit(False))
         )
-        new_files = self._write_files(survivors)
+        new_files = self._write_files(survivors, m.get("partition_spec", []))
         return self._commit(
             {
                 "files": keep + new_files,
@@ -1036,24 +1301,25 @@ class LakehouseTable:
 
     def update_set(self, cond, assignments: dict[str, F.Column]) -> int:
         """UPDATE t SET ... WHERE cond (M2)."""
-        parent = self.current_version()
-        # UNRESOLVED_COLUMN parity (review-pass r18, reproduced): the
-        # dict was only consulted via `c in assignments`, so a typo'd
-        # SET column ("SET prce = 0") made the whole UPDATE a silent
-        # no-op that still committed a new version and reported
-        # success — Spark/Iceberg raise for the same statement.
-        known = {f["name"] for f in self.schema_json()["fields"]}
+        parent, m = self._base()
+        if not m:
+            raise ValueError(f"table {self.name} does not exist")
+        # UNRESOLVED_COLUMN parity: the dict is only consulted via
+        # `c in assignments`, so a typo'd SET column ("SET prce = 0")
+        # would make the whole UPDATE a silent no-op that still
+        # committed a new version — Spark/Iceberg raise for it.
+        known = {f["name"] for f in m["schema"]["fields"]}
         unknown = sorted(set(assignments) - known)
         if unknown:
             raise ValueError(
                 f"{self.name}: UPDATE SET references unknown column(s) "
                 f"{unknown}; table columns: {sorted(known)}"
             )
-        m = self._head_manifest()
-        affected = self._affected_files(m, lambda scan: scan.filter(cond))
+        affected = self._filtered_files(m, cond)
         if not affected:
             return parent
-        keep = [f for f in m["files"] if f not in affected]
+        rewritten = set(affected)
+        keep = [f for f in m["files"] if f not in rewritten]
         df = self._scan_files(affected, m)
         updated = df.select(
             *[
@@ -1063,7 +1329,7 @@ class LakehouseTable:
                 for c in df.columns
             ]
         )
-        new_files = self._write_files(updated)
+        new_files = self._write_files(updated, m.get("partition_spec", []))
         return self._commit(
             {
                 "files": keep + new_files,
@@ -1103,53 +1369,77 @@ class LakehouseTable:
         file rewrite), so pre-existing rows read NULL for them and the
         merge's update/insert branches carry the new values.
 
-        File-pruned copy-on-write, as Iceberg's MERGE is: one discovery
-        pass semi-joins the live files' merge key with the distinct
-        non-NULL source keys, and only the files it returns (every file
-        holding a matched row) go through the join-based rewrite — the
-        plan shape Iceberg's extension rules generate — together with
-        the whole source, so unmatched source rows still insert. Every
-        other file survives into the new snapshot byte-identical
-        (unmatched and NULL-keyed target rows are kept as they are, and
-        a kept file reads NULL for a column this merge evolves in). A
-        one-file table has nothing to prune and skips the discovery.
+        File-pruned copy-on-write, as Iceberg's MERGE is: the planner
+        keeps the files whose key range meets the source keys'
+        ``[min, max]``; one discovery pass semi-joins those files' merge
+        key with the non-NULL source keys, and only the files
+        it returns (every file holding a matched row) go through the
+        join-based rewrite — the plan shape Iceberg's extension rules
+        generate — together with the whole source, so unmatched source
+        rows still insert. Every other file survives into the new
+        snapshot byte-identical (unmatched and NULL-keyed target rows
+        are kept as they are, and a kept file reads NULL for a column
+        this merge evolves in). A one-file table has nothing to prune
+        and skips the discovery; on a multi-file table it stays exact,
+        so a file is rewritten only when it holds a matched row.
 
         ``validate_source_keys`` mirrors Iceberg's cardinality check:
         MERGE errors when one target row matches multiple source rows
-        (a bare join would silently fan the target out instead). One
-        small aggregation on the (usually far smaller) source side;
-        disable for pre-deduplicated feeds.
+        (a bare join would silently fan the target out instead). It
+        rides the one aggregate over the (usually far smaller) source
+        that also yields the key range; disable for pre-deduplicated
+        feeds.
         """
-        parent = self.current_version()
-        m = self._head_manifest()
+        from pyspark.sql.types import (
+            DateType,
+            IntegralType,
+            StringType,
+            StructType,
+            TimestampNTZType,
+        )
+
+        parent, m = self._base()
         if not m:
             raise ValueError(f"table {self.name} does not exist")
         files = m["files"]
-        if len(files) > 1:
+        multi = len(files) > 1
+        if multi:
             # validation, discovery and the rewrite each run the source;
             # one materialized copy makes them see the same rows, so a
             # key the discovery missed cannot reach the join and insert
             # a duplicate of a row in a kept file
             source = source.localCheckpoint()
-        if validate_source_keys:
-            # NULL keys are excluded: they can never match a target row
-            # (equi-join), so multiple NULL-keyed source rows are plain
-            # NOT-MATCHED inserts — real MERGE accepts them; counting
-            # the NULL group as duplicates raised a spurious
-            # cardinality error (review-pass r15, reproduced)
-            dup = (
-                source.filter(F.col(on).isNotNull())
-                .groupBy(on)
-                .count()
-                .filter(F.col("count") > 1)
-                .limit(1)
-                .count()
+        key = F.col(on)
+        key_type = source.select(key).schema[0].dataType
+        target_types = {
+            f.name: f.dataType for f in StructType.fromJson(m["schema"]).fields
+        }
+        # the key range prunes only where its string round trip is exact
+        # and orders as the target column does
+        plan = (
+            multi
+            and target_types.get(on) == key_type
+            and isinstance(
+                key_type, (IntegralType, StringType, DateType, TimestampNTZType)
             )
-            if dup:
-                raise ValueError(
-                    f"merge_into: source has duplicate rows for key {on!r} "
-                    "(Iceberg MERGE cardinality violation)"
-                )
+        )
+        aggs = []
+        if validate_source_keys:
+            # NULL keys are excluded from both counts: they can never
+            # match a target row (equi-join), so multiple NULL-keyed
+            # source rows are plain NOT-MATCHED inserts, as in real MERGE
+            aggs += [F.count(key).alias("n"), F.count_distinct(key).alias("d")]
+        if plan:
+            aggs += [
+                F.min(key).cast("string").alias("lo"),
+                F.max(key).cast("string").alias("hi"),
+            ]
+        src_stats = source.agg(*aggs).first() if aggs else None
+        if validate_source_keys and src_stats["n"] != src_stats["d"]:
+            raise ValueError(
+                f"merge_into: source has duplicate rows for key {on!r} "
+                "(Iceberg MERGE cardinality violation)"
+            )
         # Schema evolution is folded into the merge's OWN commit —
         # Iceberg's withSchemaEvolution is a single transaction, so a
         # conflict/failure must leave neither the schema nor the data
@@ -1178,20 +1468,34 @@ class LakehouseTable:
                     f"{self.name}: MERGE UPDATE SET references unknown "
                     f"column(s) {unknown}; table columns: {sorted(known)}"
                 )
-        if len(files) > 1:
-            keys = (
-                source.select(F.col(on).alias("__src_key"))
-                .filter(F.col("__src_key").isNotNull())
-                .distinct()
+        if not multi:
+            affected = files
+        else:
+            planned = files
+            if plan:
+                lo, hi = src_stats["lo"], src_stats["hi"]
+                planned = (
+                    self._plan_files(
+                        m,
+                        key.between(
+                            F.lit(lo).cast(key_type), F.lit(hi).cast(key_type)
+                        ),
+                    )[0]
+                    if lo is not None
+                    else []  # no non-NULL source key: nothing can match
+                )
+            # a semi-join keeps each target row once however many
+            # source rows share its key: no distinct pass needed
+            keys = source.select(key.alias("__src_key")).filter(
+                F.col("__src_key").isNotNull()
             )
             affected = self._affected_files(
                 m,
+                planned,
                 lambda scan: scan.join(
                     keys, scan[on] == keys["__src_key"], "left_semi"
                 ),
             )
-        else:
-            affected = files
         rewritten = set(affected)
         keep = [f for f in files if f not in rewritten]
         # an evolved column reads NULL in pre-existing rows, exactly
@@ -1255,7 +1559,11 @@ class LakehouseTable:
             .select(*[out_col(c) for c in tcols])
         )
         # no affected file and no inserts: the data is unchanged
-        new_files = self._write_files(merged) if affected or insert else []
+        new_files = (
+            self._write_files(merged, m.get("partition_spec", []))
+            if affected or insert
+            else []
+        )
         # single commit carries BOTH the evolved schema and the data
         return self._commit(
             {
@@ -2175,71 +2483,13 @@ class LakehouseTable:
         return self.spark.createDataFrame(rows, "file_path string, stats_json string")
 
     def pruned_files(self, col: str, lo, hi) -> list[str]:
-        """Files whose [min,max] for col intersects [lo,hi] — the scan
-        set for a range predicate. Files without stats are kept (safe)."""
-        head = self.main_head()
-        if head == 0:
+        """Files whose [min,max] for col intersects [lo,hi] — the
+        planner's scan set for the range predicate. Files without stats
+        are kept (safe)."""
+        m = self._head_manifest()
+        if not m:
             raise ValueError(f"table {self.name} does not exist")
-        return self._pruned_files_in(self._read_manifest(head), col, lo, hi)
-
-    def _pruned_files_in(self, m: dict, col: str, lo, hi) -> list[str]:
-        """pruned_files against an ALREADY-READ head manifest — range
-        scans read the snapshot log once and share the manifest between
-        pruning, schema and the file scan."""
-        # stats store timestamps as ISO strings; normalize TEMPORAL
-        # bounds to the stats' 'T'-separated convention (ISO-8601
-        # orders lexicographically only within one separator
-        # convention).  The normalization is gated on the COLUMN's own
-        # dtype, exactly like read_range's bound() below: a date-SHAPED
-        # bound on a STRING column must compare raw
-        # against the raw string stats — normalizing it to
-        # '...T00:00:00' would over-prune a file whose string max is
-        # the bare 'YYYY-MM-DD'.  DATE-column stats carry an explicit
-        # midnight (see _file_column_stats.enc), so DATE bounds share
-        # the timestamp convention after normalization.  The gate
-        # travels with this API — callers can't forget it.
-        from pyspark.sql.types import StructType
-
-        schema = StructType.fromJson(m["schema"])
-        temporal_col = col in schema.fieldNames() and is_temporal_dtype(
-            schema[col].dataType
-        )
-        if temporal_col:
-            lo_n = temporal_bound_iso(lo, sep="T")
-            hi_n = temporal_bound_iso(hi, sep="T")
-            if lo_n is None or hi_n is None:
-                # a bound the normalizer can't canonicalize must FAIL
-                # LOUDLY on a temporal column — the raw space-separated
-                # string would compare lexicographically against
-                # 'T'-separated stats and silently drop files
-                # (fractional-minute ISO shapes like '08:30.5' are
-                # rejected: pass full seconds)
-                raise ValueError(
-                    f"unsupported temporal bound for {col!r}: "
-                    f"{lo!r}..{hi!r} — pass "
-                    "'YYYY-MM-DD[ HH:MM:SS[.ffffff]]' or datetime/date"
-                )
-            lo, hi = lo_n, hi_n
-        stats = m.get("stats", {})
-        out = []
-        for f in m["files"]:
-            s = stats.get(f)
-            if not s or col not in s.get("min", {}):
-                out.append(f)
-                continue
-            fmin, fmax = s["min"][col], s["max"][col]
-            if temporal_col:
-                # self-healing for stats written before the midnight
-                # canonicalization: manifests carry
-                # file stats FORWARD across commits, so a legacy
-                # date-only 'YYYY-MM-DD' stat on a DATE column would
-                # still sort before its own day's normalized bound —
-                # pad stats through the same normalizer the bounds use
-                fmin = temporal_bound_iso(fmin, sep="T") or fmin
-                fmax = temporal_bound_iso(fmax, sep="T") or fmax
-            if not (fmax < lo or fmin > hi):
-                out.append(f)
-        return out
+        return self._plan_files(m, self._range_cond(m, col, lo, hi))[0]
 
     def rewrite_sorted(self, col: str, target_files: int = 8) -> int:
         """rewrite_data_files(strategy => 'sort', sort_order => col):
@@ -2350,41 +2600,15 @@ class LakehouseTable:
         )
 
     def read_range(self, col: str, lo, hi) -> DataFrame:
-        """Range scan using min/max skipping + the residual filter.
-
-        Datetime bounds are normalized to ISO strings cast to the
-        COLUMN's own type: a naive Python datetime passed to Spark
-        becomes a ZONED literal converted through the Python process's
-        LOCAL timezone, so comparing it against an NTZ column would
-        shift the range by the host's UTC offset."""
-        from pyspark.sql.types import StructType
-
-        head = self.main_head()
-        if head == 0:
+        """Range scan: the planned files (min/max skipping) + the
+        residual filter, both from one range condition (see
+        :meth:`_range_cond` for the bound conventions)."""
+        # one snapshot-log walk serves planning, schema and the scan
+        m = self._head_manifest()
+        if not m:
             raise ValueError(f"table {self.name} does not exist")
-        # ONE snapshot-log walk + manifest read serves pruning, schema
-        # and the file scan
-        m = self._read_manifest(head)
-        files = self._pruned_files_in(m, col, lo, hi)
-        if not files:
-            schema = StructType.fromJson(m["schema"])
-            return self.spark.createDataFrame([], schema)
-        df = self._scan_files(files, m)
-
-        temporal_col = is_temporal_dtype(df.schema[col].dataType)
-
-        def bound(v):
-            # only TEMPORAL columns get the ISO normalization + cast;
-            # string/numeric bounds pass through verbatim
-            if temporal_col:
-                iso_v = temporal_bound_iso(v)
-                if iso_v is not None:
-                    return F.lit(iso_v).cast(df.schema[col].dataType)
-            return F.lit(v)
-
-        return df.filter(
-            (F.col(col) >= bound(lo)) & (F.col(col) <= bound(hi))
-        )
+        cond = self._range_cond(m, col, lo, hi)
+        return self._read_file_set(self._plan_files(m, cond)[0], m).filter(cond)
 
 
 def history(table: LakehouseTable) -> DataFrame:

@@ -37,6 +37,7 @@ keys exercise the same client behaviors they would against UC/Polaris.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import secrets
 import threading
@@ -51,9 +52,8 @@ from pyspark.sql import SparkSession
 from .lakehouse import (
     LakehouseTable,
     log_head,
-    main_head_json,
+    main_walk,
     manifest_path,
-    read_manifest,
 )
 
 
@@ -110,16 +110,27 @@ class RestCatalogServer:
                 self.end_headers()
                 self.wfile.write(body)
 
-            def do_GET(self):
-                code, body = server._get(
-                    self.path, self.headers.get("Authorization")
-                )
+            def _reply(self, route, *args) -> None:
+                # error boundary: a route that raises (a log whose main
+                # walk reaches an expired manifest) answers with an
+                # Iceberg ErrorModel, never a dropped connection
+                try:
+                    code, body = route(*args)
+                except Exception as e:
+                    logging.getLogger(__name__).exception(
+                        "route %s failed", self.path
+                    )
+                    code, body = 500, _error_body(500, str(e), type(e).__name__)
                 self._send(code, body)
+
+            def do_GET(self):
+                self._reply(
+                    server._get, self.path, self.headers.get("Authorization")
+                )
 
             def do_POST(self):
                 n = int(self.headers.get("Content-Length") or 0)
-                code, body = server._post(self.path, self.rfile.read(n))
-                self._send(code, body)
+                self._reply(server._post, self.path, self.rfile.read(n))
 
         self._httpd = ThreadingHTTPServer(("127.0.0.1", 0), Handler)
         self._thread = threading.Thread(
@@ -243,14 +254,13 @@ class RestCatalogServer:
         # .../tables/{table} -> LoadTableResult
         # main's head and schema, never a branch's staged snapshot
         tbl_root = os.path.join(ns_dir, rest[3])
-        v = main_head_json(tbl_root)
+        v, manifest = main_walk(tbl_root, log_head(tbl_root))
         if not v:
             return 404, _error_body(
                 404, f"table {rest[1]}.{rest[3]} not found",
                 "NoSuchTableException",
             )
         meta_path = manifest_path(tbl_root, v)
-        manifest = read_manifest(tbl_root, v)
         return 200, json.dumps(
             {
                 "metadata-location": meta_path,

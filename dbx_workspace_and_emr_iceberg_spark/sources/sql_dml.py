@@ -391,6 +391,27 @@ def parse_insert(sql: str) -> tuple[str, str, str]:
     return mode.upper(), table, body
 
 
+#: the one-row result shapes of the SQL door
+_COMMIT_RESULT = "table string, operation string, version int, n_rows bigint"
+_ALTER_RESULT = "table string, operation string, version int, detail string"
+_CALL_RESULT = "table string, procedure string, result string"
+
+
+def _one_row(engine, ddl: str, *values) -> DataFrame:
+    """A one-row result frame with the columns of ``ddl`` (``name
+    type, ...``), built as a local relation: ``collect()`` runs no
+    Spark job and starts no Python worker. The values bind as named
+    parameters, never formatted into the SQL — table names and CALL
+    results reach it. The columns are non-nullable."""
+    cols = [c.split() for c in ddl.split(",")]
+    row = ", ".join(f"CAST(:p{i} AS {typ})" for i, (_, typ) in enumerate(cols))
+    names = ", ".join(f"`{name}`" for name, _ in cols)
+    return engine.spark.sql(
+        f"SELECT * FROM VALUES ({row}) AS s({names})",
+        args={f"p{i}": v for i, v in enumerate(values)},
+    )
+
+
 def _run_body(engine, select: str) -> DataFrame:
     """Run a DML body SELECT with the same VERSION/TIMESTAMP AS OF
     resolution engine.sql applies to standalone SELECTs — snapshotting
@@ -417,10 +438,8 @@ def execute_create(engine, sql: str) -> DataFrame:
     except ValueError:
         return engine.spark.sql(sql)
     t = engine.create_table(table, _run_body(engine, select))
-    n = t.record_count()
-    return engine.spark.createDataFrame(
-        [(table, "ctas", t.current_version(), n)],
-        "table string, operation string, version int, n_rows long",
+    return _one_row(
+        engine, _COMMIT_RESULT, table, "ctas", t.current_version(), t.record_count()
     )
 
 
@@ -464,9 +483,9 @@ def execute_insert(engine, sql: str) -> DataFrame:
         # actually written.
         base = content_parent(t._read_manifest(version))
         n = t.record_count(version) - t.record_count(base)
-        return engine.spark.createDataFrame(
-            [(f"{table}.branch_{branch}", "insert_branch", version, n)],
-            "table string, operation string, version int, n_rows long",
+        return _one_row(
+            engine, _COMMIT_RESULT, f"{table}.branch_{branch}", "insert_branch",
+            version, n,
         )
     if mode == "INTO":
         # SQL INSERT binds positionally (a VALUES frame arrives named
@@ -481,11 +500,7 @@ def execute_insert(engine, sql: str) -> DataFrame:
         version = commit_with_retries(lambda: t.overwrite_positional(df))
         op = "insert_overwrite"
     engine.refresh_view(table)
-    n = t.record_count()
-    return engine.spark.createDataFrame(
-        [(table, op, version, n)],
-        "table string, operation string, version int, n_rows long",
-    )
+    return _one_row(engine, _COMMIT_RESULT, table, op, version, t.record_count())
 
 
 _ALTER_ADD_RE = re.compile(
@@ -604,15 +619,11 @@ def execute_alter(engine, sql: str) -> DataFrame:
             version = t.drop_branch(name)
         else:  # drop_tag
             version = t.drop_tag(name)
-        return engine.spark.createDataFrame(
-            [(table, "alter", version, f"{action} {name}")],
-            "table string, operation string, version int, detail string",
+        return _one_row(
+            engine, _ALTER_RESULT, table, "alter", version, f"{action} {name}"
         )
     engine.refresh_view(table)
-    return engine.spark.createDataFrame(
-        [(table, "alter", version, detail)],
-        "table string, operation string, version int, detail string",
-    )
+    return _one_row(engine, _ALTER_RESULT, table, "alter", version, detail)
 
 
 # --- dispatcher ------------------------------------------------------------
@@ -701,10 +712,8 @@ def execute(engine, sql: str) -> DataFrame:
             )
         )
     engine.refresh_view(table)
-    n = t.record_count()
-    return spark.createDataFrame(
-        [(table, kind.lower(), version, n)],
-        "table string, operation string, version int, n_rows long",
+    return _one_row(
+        engine, _COMMIT_RESULT, table, kind.lower(), version, t.record_count()
     )
 
 
@@ -925,6 +934,4 @@ def execute_call(engine, sql: str) -> DataFrame:
         if isinstance(result, list)
         else str(result)
     )
-    return engine.spark.createDataFrame(
-        [(table, proc, summary)], "table string, procedure string, result string"
-    )
+    return _one_row(engine, _CALL_RESULT, table, proc, summary)

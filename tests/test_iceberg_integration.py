@@ -226,6 +226,35 @@ class TestRestCatalogStub:
         assert [f["name"] for f in meta["schema"]["fields"]] == ["k", "v", "w"]
         assert client.list_tables("db") == ["kv", "nation"]
 
+    def test_load_table_on_a_broken_log_is_an_error_body(self, rest_env):
+        """A LoadTable whose main walk reaches a manifest removed outside
+        expire_snapshots answers with an Iceberg ErrorModel (500), not a
+        dropped connection."""
+        from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
+            LakehouseTable,
+            manifest_path,
+        )
+        from dbx_workspace_and_emr_iceberg_spark.sources.rest_catalog import (
+            RestCatalogClient,
+            RestCatalogError,
+        )
+
+        spark = rest_env["spark"]
+        t = LakehouseTable(spark, os.path.join(rest_env["wh"], "local", "db"), "kv")
+        t.create(spark.createDataFrame([(1, "a")], "k long, v string"))
+        t.create_branch("b")
+        t.write_to_branch(
+            "b", spark.createDataFrame([(2, "b")], "k long, v string")
+        )  # v2: staged, so main's head is the walk down to v1
+        os.remove(manifest_path(t.root, 1))
+        client = RestCatalogClient(rest_env["uri"], credential="client:secret")
+        with pytest.raises(RestCatalogError) as ei:
+            client.load_table("db", "kv")
+        assert ei.value.status == 500
+        assert "expired below staged snapshots" in str(ei.value)
+        # the server survives the failed route
+        assert "nation" in client.list_tables("db")
+
     def test_bad_credential_is_401(self, rest_env):
         from dbx_workspace_and_emr_iceberg_spark.sources.rest_catalog import (
             RestCatalogClient,

@@ -2364,3 +2364,59 @@ def test_log_walks_read_each_manifest_at_most_twice(spark, wh, monkeypatch):
         monkeypatch.setattr(builtins, "open", real_open)
         assert sorted(r.k for r in df.collect()) == list(range(11))
         monkeypatch.setattr(builtins, "open", counting_open)
+
+
+@pytest.mark.parametrize("default", [None, 7])
+def test_rename_then_readd_column_reads_default_not_old_values(
+    spark, wh, default
+):
+    """A column renamed away and re-added under its old name: the
+    pre-rename files store the renamed column under that name, so they
+    read the re-added column as its initial default (or NULL), and the
+    planner never prunes it on those files' stats."""
+    t = LakehouseTable(spark, wh, "t")
+    t.create(
+        spark.range(0, 40, 1, 4).selectExpr("id AS k", "CAST(id AS string) AS v")
+    )
+    t.rename_column("k", "k2")
+    assert len(t.pruned_files("k2", 0, 9)) == 1  # old files prune on k
+    t.add_column("k", "long", default=default)
+    rows = t.read().collect()
+    assert sorted(r.k2 for r in rows) == list(range(40))
+    assert {r.k for r in rows} == {default}
+    # the old files' physical k spans 0..39; the logical k does not
+    assert len(t.pruned_files("k", 100, 200)) == 4
+    assert len(t.pruned_files("k2", 0, 9)) == 1
+    if default is not None:
+        assert t.read_range("k", default, default).count() == 40
+        t.delete_where(F.expr(f"k = {default} AND k2 < 5"))
+        assert t.read().count() == 35
+    # a file written after the re-add stores k physically and prunes on
+    # it: the one the DELETE rewrote (k = 7) drops, the new one is kept
+    t.append(
+        spark.createDataFrame(
+            [(100, "x", 500)], "k2 long, v string, k long"
+        ).coalesce(1)
+    )
+    assert len(t.pruned_files("k", 500, 500)) == (5 if default is None else 4)
+    assert len(t.pruned_files("k2", 100, 100)) == 1
+    assert t.read_range("k", 500, 500).collect()[0].k2 == 100
+
+
+def test_decimal_column_commits_without_stats(spark, wh):
+    """A DECIMAL column's footer stats are not decodable or JSON-safe:
+    the table still commits, the column gets no range, and pruning on
+    it keeps every file."""
+    import decimal
+
+    t = LakehouseTable(spark, wh, "dec")
+    t.create(
+        spark.createDataFrame(
+            [(1, decimal.Decimal("1.50")), (2, decimal.Decimal("2.25"))],
+            "k long, p decimal(10,2)",
+        ).coalesce(1)
+    )
+    stats = t._read_manifest(t.main_head())["stats"]
+    assert all("p" not in s["min"] and "k" in s["min"] for s in stats.values())
+    assert len(t.pruned_files("p", 5, 6)) == 1
+    assert [r.k for r in t.read_range("p", 2, 3).collect()] == [2]

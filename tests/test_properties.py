@@ -1859,3 +1859,131 @@ def test_funnel_stages_matches_bruteforce(spark, rows):
         assert r.conv_bp == expect, (rows, [tuple(r) for r in got])
         prev = n
     spark.catalog.clearCache()
+
+
+# --- the scan planner: planned files ⊇ files holding a matching row ---------
+
+_PLAN_COLS = {
+    # logical column -> (SQL literal, value pool)
+    "l2": (str, list(range(8))),
+    "s": (lambda v: f"'{v}'", ["a", "ab", "b", "c", "d"]),
+    "d": (
+        lambda v: f"DATE'{v.isoformat()}'",
+        [__import__("datetime").date(2024, 1, 1 + i) for i in range(8)],
+    ),
+}
+
+
+@st.composite
+def _plan_leaf(draw):
+    col = draw(st.sampled_from(sorted(_PLAN_COLS)))
+    pool = _PLAN_COLS[col][1]
+    op = draw(st.sampled_from(["=", "<", "<=", ">", ">=", "IN", "IS NULL"]))
+    if op == "IS NULL":
+        return (op, col, None)
+    if op == "IN":
+        return (op, col, draw(st.lists(st.sampled_from(pool), min_size=1, max_size=3)))
+    return (op, col, draw(st.sampled_from(pool)))
+
+
+_plan_cond = st.recursive(
+    _plan_leaf(),
+    lambda sub: st.tuples(st.sampled_from(["AND", "OR"]), sub, sub),
+    max_leaves=4,
+)
+
+
+def _plan_sql(c) -> str:
+    if c[0] in ("AND", "OR"):
+        return f"({_plan_sql(c[1])} {c[0]} {_plan_sql(c[2])})"
+    op, col, v = c
+    lit = _PLAN_COLS[col][0]
+    if op == "IS NULL":
+        return f"{col} IS NULL"
+    if op == "IN":
+        return f"{col} IN ({', '.join(lit(x) for x in v)})"
+    return f"{col} {op} {lit(v)}"
+
+
+def _plan_eval(c, row):
+    """SQL three-valued truth of condition ``c`` on ``row`` (None =
+    UNKNOWN)."""
+    import operator
+
+    if c[0] in ("AND", "OR"):
+        a, b = _plan_eval(c[1], row), _plan_eval(c[2], row)
+        if c[0] == "AND":
+            return False if False in (a, b) else (None if None in (a, b) else True)
+        return True if True in (a, b) else (None if None in (a, b) else False)
+    op, col, v = c
+    x = row[col]
+    if op == "IS NULL":
+        return x is None
+    if x is None:
+        return None
+    if op == "IN":
+        return x in v
+    return {
+        "=": operator.eq, "<": operator.lt, "<=": operator.le,
+        ">": operator.gt, ">=": operator.ge,
+    }[op](x, v)
+
+
+@st.composite
+def _plan_files_case(draw):
+    """Four files of rows over ``(l, s, d)``: NULL-heavy, some columns
+    all-NULL in a file; ``l`` is renamed to ``l2`` after the first two
+    files, so those prune on their physical ``l`` stats."""
+    files = []
+    for _ in range(4):
+        all_null = draw(st.sets(st.sampled_from(sorted(_PLAN_COLS)), max_size=1))
+        rows = []
+        for _ in range(draw(st.integers(1, 6))):
+            rows.append(
+                tuple(
+                    None
+                    if col in all_null
+                    else draw(st.sampled_from([None, None] + pool))
+                    for col, (_, pool) in sorted(_PLAN_COLS.items())
+                )
+            )
+        files.append(rows)
+    # planning runs no job, so each table checks many conditions
+    conds = draw(st.lists(_plan_cond, min_size=16, max_size=16))
+    return files, conds
+
+
+@given(_plan_files_case())
+@SLOW
+def test_plan_files_keeps_every_file_with_a_match(spark, case):
+    import pyarrow.parquet as pq
+
+    files, conds = case
+    wh = tempfile.mkdtemp(prefix="lh_plan_")
+    try:
+        t = LakehouseTable(spark, wh, "t")
+        # column order follows sorted(_PLAN_COLS): d, l2 (as l), s
+        for i, rows in enumerate(files):
+            name = "l" if i < 2 else "l2"
+            df = spark.createDataFrame(rows, f"d date, {name} long, s string")
+            if i == 0:
+                t.create(df.coalesce(1))
+            else:
+                t.append(df.coalesce(1))
+            if i == 1:
+                t.rename_column("l", "l2")
+        m = t._read_manifest(t.main_head())
+        assert len(m["files"]) == 4
+        for c in conds:
+            planned, report = t._plan_files(m, F.expr(_plan_sql(c)))
+            assert report["planned_files"] == len(planned)
+            for f in m["files"]:
+                rows = pq.read_table(f).to_pylist()
+                rows = [
+                    {"l2": r.get("l2", r.get("l")), "s": r["s"], "d": r["d"]}
+                    for r in rows
+                ]
+                if any(_plan_eval(c, r) is True for r in rows):
+                    assert f in planned, (_plan_sql(c), rows, m["stats"][f])
+    finally:
+        shutil.rmtree(wh, ignore_errors=True)

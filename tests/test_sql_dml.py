@@ -1123,3 +1123,146 @@ def test_n_rows_matches_table_count_after_every_statement(spark, tmp_path):
     finally:
         spark.catalog.dropTempView("nr_src")
         spark.catalog.dropTempView("nr_upd")
+
+
+# --- SQL-door write costs ----------------------------------------------------
+
+
+def _clustered_table(spark, eng, name):
+    """64 rows in 16 files, file i holding k in [4i, 4i + 3]."""
+    t = eng.create_table(
+        name, spark.range(0, 64, 1, 16).selectExpr("id AS k", "id * 10 AS v")
+    )
+    assert len(t._files()) == 16
+    return t
+
+
+def test_sql_door_results_run_no_job_and_discovery_scans_planned_files(
+    spark, tmp_path, monkeypatch
+):
+    """collect() of every one-row SQL-door result (DML, INSERT, CTAS,
+    ALTER, CALL) runs no Spark job and keeps its column names and
+    types; DML discovery scans only the files the planner keeps."""
+    import uuid
+
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+
+    eng = Engine(spark, warehouse=str(tmp_path))
+    t = _clustered_table(spark, eng, "jobs_t")
+    scanned = []
+    real = t._affected_files
+    monkeypatch.setattr(
+        t,
+        "_affected_files",
+        lambda m, files, rows: scanned.append(list(files)) or real(m, files, rows),
+    )
+    spark.createDataFrame([(62, 1), (100, 2)], "k long, v long").createOrReplaceTempView(
+        "jobs_one"
+    )
+    spark.createDataFrame([(5, 1), (30, 2)], "k long, v long").createOrReplaceTempView(
+        "jobs_many"
+    )
+    commit = [
+        ("table", "string"), ("operation", "string"), ("version", "int"),
+        ("n_rows", "bigint"),
+    ]
+    alter = commit[:3] + [("detail", "string")]
+    call = [("table", "string"), ("procedure", "string"), ("result", "string")]
+    merge = (
+        "MERGE INTO jobs_t t USING {} s ON t.k = s.k "
+        "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *"
+    )
+    # (statement, result columns, n_rows, the files its discovery scans
+    # — computed before it runs — or None where it runs none)
+    stmts = [
+        (
+            "DELETE FROM jobs_t WHERE k BETWEEN 10 AND 21", commit, 52,
+            lambda: t.pruned_files("k", 10, 21),  # files 2..5
+        ),
+        (
+            "UPDATE jobs_t SET v = 0 WHERE k = 40", commit, 52,
+            lambda: t.pruned_files("k", 40, 40),  # file 10
+        ),
+        # keys 62..100 plan to file 15 alone: its discovery is a probe
+        (merge.format("jobs_one"), commit, 53, lambda: t.pruned_files("k", 62, 100)),
+        (merge.format("jobs_many"), commit, 53, lambda: t.pruned_files("k", 5, 30)),
+        ("INSERT INTO jobs_t VALUES (200, 2)", commit, 54, lambda: None),
+        ("CREATE TABLE jobs_c AS SELECT * FROM jobs_t", commit, 54, lambda: None),
+        ("ALTER TABLE jobs_t ADD COLUMN w string", alter, None, lambda: None),
+        ("CALL system.rewrite_manifests('jobs_t')", call, None, lambda: None),
+    ]
+    assert len(t.pruned_files("k", 10, 21)) == 4
+    tracker = spark.sparkContext.statusTracker()
+    sc = spark.sparkContext
+    try:
+        for sql, shape, n_rows, planned in stmts:
+            planned = planned()
+            scanned.clear()
+            out = eng.sql(sql)
+            group = f"sql-door-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, sql)
+            rows = out.collect()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            assert list(tracker.getJobIdsForGroup(group)) == [], sql
+            assert [
+                (f.name, f.dataType.simpleString()) for f in out.schema
+            ] == shape, sql
+            assert len(rows) == 1
+            if n_rows is not None:
+                assert rows[0].n_rows == n_rows, sql
+            if planned is None:
+                assert scanned == [], sql
+            else:
+                assert 1 <= len(planned) < len(t._files()), sql
+                assert scanned == [planned], sql
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.catalog.dropTempView("jobs_one")
+        spark.catalog.dropTempView("jobs_many")
+    got = {r.k: r.v for r in eng.managed("jobs_t").read().collect()}
+    assert got[62] == 1 and got[100] == 2 and got[5] == 1 and got[30] == 2
+    assert got[40] == 0 and 10 not in got and got[9] == 90
+
+
+def test_sql_door_writes_open_the_parent_manifest_at_most_twice(
+    spark, tmp_path, monkeypatch
+):
+    """A SQL-door DELETE, UPDATE, MERGE or INSERT reads the manifest it
+    builds on once for its base and once in the commit: the write path
+    passes that base along instead of re-resolving main's head."""
+    import builtins
+    import collections
+
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+
+    eng = Engine(spark, warehouse=str(tmp_path))
+    t = _clustered_table(spark, eng, "opens_t")
+    spark.createDataFrame([(1, 5), (99, 6)], "k long, v long").createOrReplaceTempView(
+        "opens_src"
+    )
+    real_open = builtins.open
+    opens: collections.Counter = collections.Counter()
+
+    def counting_open(file, *args, **kwargs):
+        if isinstance(file, str):
+            opens[file] += 1
+        return real_open(file, *args, **kwargs)
+
+    try:
+        for sql in (
+            "DELETE FROM opens_t WHERE k BETWEEN 10 AND 21",
+            "UPDATE opens_t SET v = 0 WHERE k = 40",
+            "MERGE INTO opens_t t USING opens_src s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET v = s.v WHEN NOT MATCHED THEN INSERT *",
+            "INSERT INTO opens_t VALUES (200, 2)",
+        ):
+            parent = t._manifest_path(t.current_version())
+            opens.clear()
+            monkeypatch.setattr(builtins, "open", counting_open)
+            eng.sql(sql)
+            monkeypatch.setattr(builtins, "open", real_open)
+            assert t._manifest_path(t.current_version()) != parent, sql
+            assert 1 <= opens[parent] <= 2, (sql, opens[parent])
+    finally:
+        monkeypatch.setattr(builtins, "open", real_open)
+        spark.catalog.dropTempView("opens_src")

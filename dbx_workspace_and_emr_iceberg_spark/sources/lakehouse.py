@@ -10,16 +10,23 @@ code change). This container has no Iceberg jars, so this module
 re-implements the *table-format contract* in pure PySpark:
 
   warehouse/<table>/
-    data/<uuid>.parquet      immutable data files
-    _snapshots/v{N}.json     manifest: file list + per-file column
-                             min/max and record count + schema +
-                             partition spec + op
+    data/<uuid>/*.parquet    immutable data files, one dir per write
+    _snapshots/v{N}.json     manifest: file list + schema + partition
+                             spec + op + the stats manifests covering
+                             the files (``manifests``)
+    _stats/<uuid>.json       stats manifest: per-file column min/max
+                             and record count, immutable, reused by path
     _current                 current version (atomic rename commit)
     _refs.json               branch and tag pointers
 
 Semantics mirrored from Iceberg v2 (copy-on-write flavor):
   * every write = new immutable data files + a new manifest; readers of
     older snapshots are never disturbed (time travel = read old manifest);
+  * a snapshot reuses its parent's stats manifests by path and writes
+    one only for the files it adds, so its metadata grows with the
+    change, not with the table (Iceberg's manifest reuse); a tiered
+    merge keeps O(log files) of them per snapshot, and their entries
+    within twice the live files;
   * commits are atomic (os.replace of the _current pointer) and
     optimistic — a concurrent commit surfaces as a version conflict;
   * DELETE/UPDATE/MERGE rewrite only the files that contain matching
@@ -28,29 +35,36 @@ Semantics mirrored from Iceberg v2 (copy-on-write flavor):
     rules produce: target ⟕ source on the merge key, per-row action
     column;
   * maintenance: compaction (rewrite_data_files), snapshot expiry
-    (expire_snapshots), rollback — same operations as Iceberg's
+    (expire_snapshots, which also deletes the stats manifests no
+    retained snapshot references), manifest compaction
+    (rewrite_manifests), rollback — same operations as Iceberg's
     CALL system.* procedures (SURVEY.md §2.11 M5).
 
 The log is read only through this module's json-over-fs reader:
 :func:`log_head` (the `_current` pointer), :func:`manifest_path` and
-:func:`read_manifest` (one snapshot), :func:`manifests` (the surviving
-snapshots of a version range), :func:`main_walk` / :func:`main_at` /
-:func:`main_head_json` (main's state past branch-staged snapshots) and
-:func:`content_parent` (the snapshot a commit's content was built on). The table, the stream
+:func:`read_manifest` (one snapshot, its ``stats`` assembled from its
+stats manifests; a legacy snapshot with inline ``stats`` reads as
+written), :func:`manifests` (the surviving snapshots of a version
+range), :func:`main_walk` / :func:`main_at` / :func:`main_head_json`
+(main's state past branch-staged snapshots) and :func:`content_parent`
+(the snapshot a commit's content was built on). The table, the stream
 source, the REST catalog and both catalogs' listings all call it.
 
 At 100 TB: data files are the unit of parallelism and pruning; the
-manifest holds per-file column min/max for data skipping; rewrites
+stats manifests hold per-file column min/max for data skipping, and a
+commit writes them only for the files it adds; rewrites
 touch only affected files; nothing here funnels data through the
 driver — the driver only moves file *names*.
 """
 
 from __future__ import annotations
 
+import contextlib
 import fcntl
 import json
 import os
 import re
+import shutil
 import time
 import uuid
 
@@ -146,24 +160,58 @@ def manifest_path(root: str, v: int) -> str:
     return os.path.join(root, "_snapshots", f"v{v:05d}.json")
 
 
-def read_manifest(root: str, v: int) -> dict:
-    """Manifest of snapshot ``v``; FileNotFoundError once it expired."""
+#: where stats manifests live, relative to the table root; a snapshot's
+#: ``manifests`` entries name them by this relative path
+STATS_DIR = "_stats"
+
+
+def _load_stats(root: str, ref: dict) -> dict | None:
+    """The ``{file: stats}`` entries of one stats manifest; None when it
+    is gone (a reader then plans its files unpruned, which is safe)."""
+    try:
+        with open(os.path.join(root, ref["path"])) as f:
+            return json.load(f)
+    except FileNotFoundError:
+        return None
+
+
+def read_manifest(root: str, v: int, stats: bool = True) -> dict:
+    """Manifest of snapshot ``v``; FileNotFoundError once it expired.
+
+    A snapshot lists its stats manifests in ``manifests``; ``stats`` is
+    assembled from them for the listed files, each stats manifest opened
+    once. A legacy snapshot carries ``stats`` inline and reads as
+    written. ``stats=False`` skips the assembly for callers that need
+    only the file list, schema and lineage."""
     with open(manifest_path(root, v)) as f:
-        return json.load(f)
+        m = json.load(f)
+    return _with_stats(root, m) if stats else m
+
+
+def _with_stats(root: str, m: dict) -> dict:
+    """``m`` with ``stats`` assembled from its stats manifests."""
+    if "manifests" in m:
+        known: dict = {}
+        for ref in m["manifests"]:
+            known.update(_load_stats(root, ref) or {})
+        m["stats"] = {f: known[f] for f in m["files"] if f in known}
+    return m
 
 
 def manifests(root: str, lo: int = 1, hi: int | None = None):
     """Yield ``(version, manifest)`` for the surviving snapshots in
     ``[lo, hi]`` (default: the whole log up to its head), oldest first,
-    each manifest read once. Expired snapshots are skipped."""
+    each manifest read once. Expired snapshots are skipped. The
+    manifests are raw: ``stats`` is not assembled from the stats
+    manifests (see :func:`read_manifest`)."""
     for v in range(max(lo, 1), (log_head(root) if hi is None else hi) + 1):
         try:
-            yield v, read_manifest(root, v)
+            yield v, read_manifest(root, v, stats=False)
         except FileNotFoundError:
             continue
 
 
-def main_walk(root: str, v: int) -> tuple[int, dict]:
+def main_walk(root: str, v: int, stats: bool = True) -> tuple[int, dict]:
     """``(version, manifest)`` of the newest main (non-staged) snapshot
     at or below ``v``; ``(0, {})`` when main has no snapshot there. The
     log is shared by every ref and a branch write tags its snapshot
@@ -174,7 +222,7 @@ def main_walk(root: str, v: int) -> tuple[int, dict]:
     w = v
     while w:
         try:
-            m = read_manifest(root, w)
+            m = read_manifest(root, w, stats=False)
         except FileNotFoundError:
             raise ValueError(
                 f"{root}: main state at v{v} expired below staged "
@@ -182,14 +230,14 @@ def main_walk(root: str, v: int) -> tuple[int, dict]:
                 "expire_snapshots"
             ) from None
         if not m.get("staged_ref"):
-            return w, m
+            return w, (_with_stats(root, m) if stats else m)
         w -= 1
     return 0, {}
 
 
 def main_at(root: str, v: int) -> int:
     """The version :func:`main_walk` resolves ``v`` to."""
-    return main_walk(root, v)[0]
+    return main_walk(root, v, stats=False)[0]
 
 
 def main_head_json(root: str) -> int:
@@ -233,7 +281,7 @@ def _main_range(
         # head right after a branch write): the diff base is main's
         # state below it, never the branch's
         base_v = main_at(root, lo - 1)
-        base_m = read_manifest(root, base_v) if base_v else None
+        base_m = read_manifest(root, base_v, stats=False) if base_v else None
     return base_m, ms
 
 
@@ -615,8 +663,9 @@ class LakehouseTable:
     """One snapshot-versioned table under a warehouse directory — the
     Iceberg Table analog: however it is opened (constructor, Engine,
     LakehouseCatalog, RestLakehouseCatalog), its behaviour comes from
-    the manifest, which carries the per-file column stats (always on)
-    and the partition spec; branch and tag refs live beside the log."""
+    the manifest, which carries the partition spec and names the stats
+    manifests holding the per-file column stats (always on); branch and
+    tag refs live beside the log."""
 
     def __init__(self, spark: SparkSession, warehouse: str, name: str):
         # the name is a PATH COMPONENT: '..' or a separator would
@@ -655,8 +704,8 @@ class LakehouseTable:
     def _manifest_path(self, version: int) -> str:
         return manifest_path(self.root, version)
 
-    def _read_manifest(self, version: int) -> dict:
-        return read_manifest(self.root, version)
+    def _read_manifest(self, version: int, stats: bool = True) -> dict:
+        return read_manifest(self.root, version, stats)
 
     #: Max seconds a committer waits for the per-table commit lock
     #: before giving up with a (retryable) ConflictError.  Commits are
@@ -696,7 +745,9 @@ class LakehouseTable:
                     ) from None
                 time.sleep(0.005)
 
-    def _commit(self, manifest: dict, expected_parent: int) -> int:
+    def _commit(
+        self, manifest: dict, expected_parent: int, compact: dict | None = None
+    ) -> int:
         """Atomic optimistic commit: write manifest vN+1, then swing the
         _current pointer via os.replace (atomic on POSIX).
 
@@ -712,22 +763,37 @@ class LakehouseTable:
         Cross-host object stores would need a real catalog CAS
         (Iceberg's actual design); this layer is local-FS scoped.
 
-        File stats (parquet footer reads) are computed BEFORE the lock:
-        they depend only on the immutable files and manifests, and the
-        version check under the lock still refuses a moved parent.
+        The snapshot's stats manifests (:meth:`_stats_refs`; parquet
+        footer reads included) are settled BEFORE the lock: they depend
+        only on the immutable files and manifests, and the version
+        check under the lock still refuses a moved parent. A refused
+        commit deletes the stats manifest it wrote. ``compact`` (a
+        ``{file: stats}`` map) replaces them with one stats manifest of
+        exactly its entries for the listed files.
         """
         try:
-            pm = self._read_manifest(expected_parent) if expected_parent else {}
+            pm = (
+                read_manifest(self.root, expected_parent, stats=False)
+                if expected_parent
+                else {}
+            )
         except FileNotFoundError:
             pm = None  # parent expired: the version check below refuses
+        new_ref = None
         if pm is not None:
-            manifest["stats"] = self._file_stats(manifest, pm)
-        lock_fd = self._acquire_commit_lock()
+            manifest["manifests"], new_ref = self._stats_refs(manifest, pm, compact)
         try:
-            return self._commit_locked(manifest, expected_parent, pm)
-        finally:
-            fcntl.flock(lock_fd, fcntl.LOCK_UN)
-            os.close(lock_fd)
+            lock_fd = self._acquire_commit_lock()
+            try:
+                return self._commit_locked(manifest, expected_parent, pm)
+            finally:
+                fcntl.flock(lock_fd, fcntl.LOCK_UN)
+                os.close(lock_fd)
+        except BaseException:
+            if new_ref is not None:
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(os.path.join(self.root, new_ref["path"]))
+            raise
 
     def _commit_locked(
         self, manifest: dict, expected_parent: int, pm: dict | None
@@ -761,7 +827,7 @@ class LakehouseTable:
         # ConflictError.
         try:
             with open(self._manifest_path(version), "x") as f:
-                json.dump(manifest, f, indent=1)
+                json.dump(manifest, f, separators=(",", ":"))
         except FileExistsError:
             stale = False
             if self.current_version() < version:
@@ -774,7 +840,8 @@ class LakehouseTable:
                 # would re-open the exact lost-update race the
                 # exclusive create closes.
                 try:
-                    ts = self._read_manifest(version).get("timestamp_ms", 0)
+                    prior = read_manifest(self.root, version, stats=False)
+                    ts = prior.get("timestamp_ms", 0)
                     stale = time.time() * 1000 - ts > 60_000
                 except (json.JSONDecodeError, FileNotFoundError):
                     stale = True  # torn write = crashed writer
@@ -787,7 +854,7 @@ class LakehouseTable:
             # it loses nothing and un-wedges the table (a live stalled
             # writer cannot reach here — it still holds the flock)
             with open(self._manifest_path(version), "w") as f:
-                json.dump(manifest, f, indent=1)
+                json.dump(manifest, f, separators=(",", ":"))
         # verify the claim immediately before the swing: if anything
         # out-of-protocol replaced our manifest, fail loudly instead
         # of pointing _current at someone else's content while
@@ -805,45 +872,120 @@ class LakehouseTable:
         os.replace(tmp, self._current_path())
         return version
 
-    def _file_stats(self, manifest: dict, parent: dict) -> dict:
-        """Per-file column min/max for every file ``manifest`` lists —
-        Iceberg's always-on column metrics. Stats are a function of the
-        immutable file, so they are copied from any manifest that
-        already holds them (the log parent; the main head when the log
-        parent is a branch's staged snapshot; the content source of a
-        rollforward or a branch write) and read from the parquet footer
-        only for files none of those has. A listed path that is not a
-        file gets no stats; the pruner keeps files without stats."""
-        known = dict(parent.get("stats", {}))
-        if any(f not in known for f in manifest["files"]):
-            sources = {manifest.get("rollforward_of"), manifest.get("ref_base")}
-            if parent.get("staged_ref"):
-                sources.add(self.main_head())
-            for v in sources - {None, 0}:
-                try:
-                    known.update(self._read_manifest(v).get("stats", {}))
-                except FileNotFoundError:
-                    continue  # expired source: footers below
-        return {
-            f: known[f] if f in known else _file_column_stats(f)
-            for f in manifest["files"]
-            if f in known or os.path.isfile(f)
-        }
+    def _stats_refs(
+        self, manifest: dict, parent: dict, compact: dict | None = None
+    ) -> tuple[list[dict], dict | None]:
+        """The stats manifests covering ``manifest``'s files, and the
+        one new stats manifest among them (None when it writes none).
 
-    def _base(self) -> tuple[int, dict]:
+        Per-file column min/max and record counts are Iceberg's
+        always-on column metrics, a function of the immutable file, so
+        a snapshot reuses its sources' stats manifests by path and
+        writes stats only for the files no source covers. The sources
+        are the content source of a rollforward or a branch write, main
+        head when the log parent is a branch's staged snapshot, and the
+        log parent; a file a source lists is covered by that source's
+        ``manifests`` — worked out from the ``files`` lists alone. A
+        legacy source's inline stats migrate into the new stats
+        manifest; the parquet footer is read for the rest. A listed
+        path that is not a file gets no stats; the planner keeps files
+        without stats.
+
+        A commit that writes a new stats manifest also absorbs each
+        referenced one with no more entries than it writes (smallest
+        first, its live entries only): a tiered merge that keeps the
+        refs at O(log files) however many small commits land. Entries
+        of deleted files stay in the refs that hold them, so once the
+        refs' entries exceed twice the live files the commit absorbs
+        every ref: metadata stays bounded by the live table, not its
+        history. A referenced stats manifest that has gone missing
+        (swept or deleted outside the protocol) is found when absorbed;
+        the commit then absorbs every ref and reads the footer of each
+        live file left without an entry. With ``compact`` the one new
+        stats manifest holds its entries and no source is consulted."""
+        files = manifest["files"]
+        refs: list[dict] = []
+        entries: dict = {}
+        if compact is not None:
+            entries = {f: compact[f] for f in files if f in compact}
+        else:
+            todo = set(files)
+            for src in self._stats_sources(manifest, parent):
+                listed = todo.intersection(src.get("files", ()))
+                if "manifests" in src:
+                    if listed:
+                        todo -= listed
+                        refs += [r for r in src["manifests"] if r not in refs]
+                    continue
+                inline = src.get("stats", {})
+                for f in listed.intersection(inline):
+                    entries[f] = inline[f]
+                    todo.discard(f)
+            for f in files:
+                if f in todo and os.path.isfile(f):
+                    entries[f] = _file_column_stats(f)
+            live = set(files)
+            absorb_all = sum(r["entries"] for r in refs) + len(entries) > 2 * len(live)
+            lost = False
+            if entries or absorb_all:
+                for ref in sorted(refs, key=lambda r: r["entries"]):
+                    if not (absorb_all or lost) and ref["entries"] > len(entries):
+                        break
+                    refs.remove(ref)
+                    got = _load_stats(self.root, ref)
+                    lost = lost or got is None
+                    for f, st in (got or {}).items():
+                        if f in live:
+                            entries.setdefault(f, st)
+            if lost:
+                for f in files:
+                    if f not in entries and os.path.isfile(f):
+                        entries[f] = _file_column_stats(f)
+        if not entries:
+            return refs, None
+        entries = {f: entries[f] for f in files if f in entries}
+        new_ref = {
+            "path": os.path.join(STATS_DIR, f"{uuid.uuid4().hex}.json"),
+            "entries": len(entries),
+        }
+        os.makedirs(os.path.join(self.root, STATS_DIR), exist_ok=True)
+        with open(os.path.join(self.root, new_ref["path"]), "x") as f:
+            json.dump(entries, f, separators=(",", ":"))
+        return refs + [new_ref], new_ref
+
+    def _stats_sources(self, manifest: dict, parent: dict) -> list[dict]:
+        """Raw manifests whose stats a commit of ``manifest`` on
+        ``parent`` may reuse, the content source first (see
+        :meth:`_stats_refs`); an expired source is skipped."""
+        out = []
+        content = manifest.get("rollforward_of") or manifest.get("ref_base")
+        if content and content != parent.get("version"):
+            try:
+                out.append(self._read_manifest(content, stats=False))
+            except FileNotFoundError:
+                pass
+        if parent.get("staged_ref"):
+            try:
+                out.append(main_walk(self.root, parent["version"], stats=False)[1])
+            except ValueError:
+                pass
+        return out + [parent]
+
+    def _base(self, stats: bool = True) -> tuple[int, dict]:
         """``(log head, main head's manifest)`` from one walk: the
         parent a main-side write commits against and the state it
-        builds on. The manifest is ``{}`` before the table exists."""
+        builds on. The manifest is ``{}`` before the table exists;
+        ``stats=False`` leaves its file stats unread."""
         parent = self.current_version()
-        return parent, main_walk(self.root, parent)[1]
+        return parent, main_walk(self.root, parent, stats)[1]
 
-    def _head_manifest(self) -> dict:
+    def _head_manifest(self, stats: bool = True) -> dict:
         """Main head's manifest; ``{}`` before the table exists."""
-        return self._base()[1]
+        return self._base(stats)[1]
 
     def _partition_spec(self) -> list[str]:
         """The partition transforms of main's head (empty = unpartitioned)."""
-        return self._head_manifest().get("partition_spec", [])
+        return self._head_manifest(stats=False).get("partition_spec", [])
 
     def _write_files(
         self, df: DataFrame, partition_by: list[str] | None = None
@@ -873,8 +1015,8 @@ class LakehouseTable:
     def _files(self, version: int | None = None) -> list[str]:
         # default = main's head, NOT the raw log head: see main_head()
         if version is None:
-            return self._head_manifest().get("files", [])
-        return self._read_manifest(version)["files"] if version else []
+            return self._head_manifest(stats=False).get("files", [])
+        return self._read_manifest(version, stats=False)["files"] if version else []
 
     def record_count(self, version: int | None = None) -> int:
         """Rows in snapshot ``version`` (default: main's head), summed
@@ -931,7 +1073,7 @@ class LakehouseTable:
         return self._append(df, positional=True)
 
     def _append(self, df: DataFrame, positional: bool) -> int:
-        parent, m = self._base()
+        parent, m = self._base(stats=False)
         if not m:
             raise ValueError(f"table {self.name} does not exist")
         if positional:
@@ -991,7 +1133,7 @@ class LakehouseTable:
         return self.overwrite(self._bind_positional(df))
 
     def schema_json(self) -> dict:
-        m = self._head_manifest()
+        m = self._head_manifest(stats=False)
         if not m:
             raise ValueError(f"table {self.name} does not exist")
         return m["schema"]
@@ -1006,8 +1148,8 @@ class LakehouseTable:
         and files written before a column was added yield NULLs for it.
         """
         try:
-            m = self._head_manifest() if version is None else (
-                self._read_manifest(version) if version else {}
+            m = self._head_manifest(stats=False) if version is None else (
+                self._read_manifest(version, stats=False) if version else {}
             )
         except FileNotFoundError:
             # explicit-version read of an expired/never-existing
@@ -1456,6 +1598,13 @@ class LakehouseTable:
             if schema_evolution and f.name not in existing
         ]
         schema = {**m["schema"], "fields": m["schema"]["fields"] + evolved}
+        # the pre-existing files hold no evolved column, whatever values a
+        # dropped column of that name left in them: as after add_column,
+        # they are recorded absent and read NULL
+        defaults = {
+            **m.get("defaults", {}),
+            **{c["name"]: {"value": None, "absent_files": files} for c in evolved},
+        }
         # UNRESOLVED_COLUMN parity: an update_cols key naming no target
         # column (post-evolution) would otherwise be ignored by
         # out_col's `c in update_cols`, leaving matched rows unchanged
@@ -1500,7 +1649,9 @@ class LakehouseTable:
         keep = [f for f in files if f not in rewritten]
         # an evolved column reads NULL in pre-existing rows, exactly
         # the manifest-only ADD semantics, but uncommitted
-        target = self._read_file_set(affected, {**m, "schema": schema})
+        target = self._read_file_set(
+            affected, {**m, "schema": schema, "defaults": defaults}
+        )
         tcols = target.columns
         # Presence is tracked with explicit marker columns, NOT key
         # nullability: a pre-existing target row whose merge-key column
@@ -1565,15 +1716,15 @@ class LakehouseTable:
             else []
         )
         # single commit carries BOTH the evolved schema and the data
-        return self._commit(
-            {
-                "files": keep + new_files,
-                "schema": schema,
-                "op": "merge",
-                "rewritten": len(affected),
-            },
-            parent,
-        )
+        out = {
+            "files": keep + new_files,
+            "schema": schema,
+            "op": "merge",
+            "rewritten": len(affected),
+        }
+        if evolved:
+            out["defaults"] = defaults
+        return self._commit(out, parent)
 
     # ---------- M4: rollback ----------
 
@@ -1597,7 +1748,7 @@ class LakehouseTable:
         raw FileNotFoundError."""
         parent = self.current_version()
         try:
-            m = self._read_manifest(version)
+            m = self._read_manifest(version, stats=False)
         except FileNotFoundError:
             raise ValueError(
                 f"{self.name}: no snapshot v{version} (missing or "
@@ -1678,36 +1829,64 @@ class LakehouseTable:
             and v not in protected
             and (older_than_ms is None or ms[v]["timestamp_ms"] < older_than_ms)
         ]
-        live_files = {
-            f for v, m in ms.items() if v not in to_expire for f in m["files"]
-        }
+        kept = [m for v, m in ms.items() if v not in to_expire]
+        live_files = {f for m in kept for f in m["files"]}
+        live_refs = {r["path"] for m in kept for r in m.get("manifests", ())}
         removed = []
         for v in to_expire:
-            for f in ms[v]["files"]:
-                if f not in live_files and os.path.exists(f):
-                    os.remove(f)
+            self._remove_data_files(
+                f for f in ms[v]["files"] if f not in live_files
+            )
+            for r in ms[v].get("manifests", ()):
+                if r["path"] not in live_refs:
+                    with contextlib.suppress(FileNotFoundError):
+                        os.remove(os.path.join(self.root, r["path"]))
             os.remove(self._manifest_path(v))
             removed.append(v)
         return removed
 
+    def _remove_data_files(self, paths) -> None:
+        """Delete data files with their Hadoop checksum sidecars
+        (``.<name>.crc``); a write batch left holding only its
+        ``_SUCCESS`` markers (and emptied partition dirs) goes too."""
+        batches = set()
+        for f in paths:
+            d, name = os.path.split(f)
+            for p in (f, os.path.join(d, f".{name}.crc")):
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(p)
+            rel = os.path.relpath(f, self.data_dir).split(os.sep)
+            if len(rel) > 1 and rel[0] != "..":
+                batches.add(os.path.join(self.data_dir, rel[0]))
+        for b in sorted(batches):
+            left = [n for _, _, names in os.walk(b) for n in names]
+            if "_SUCCESS" in left and set(left) <= {"_SUCCESS", "._SUCCESS.crc"}:
+                shutil.rmtree(b, ignore_errors=True)
+
     def rewrite_manifests(self) -> int:
         """CALL system.rewrite_manifests (M5, SURVEY §2.11 ←
         main.tf:803's extension surface): metadata-ONLY commit that
-        normalizes the current manifest — file entries deduped and
-        sorted by path. Iceberg's procedure re-clusters manifest
-        entries by partition so scan planning touches fewer manifest
-        files; in this single-manifest-per-snapshot layer the analog
-        is the canonical ordering (deterministic scan sets, dedup'd
-        entries). Data files are untouched, exactly like Iceberg."""
-        parent = self.current_version()
-        files = sorted(dict.fromkeys(self._files()))
+        compacts the current snapshot's metadata — file entries deduped
+        and sorted by path, and its stats manifests replaced by one
+        holding exactly the live files, as Iceberg's procedure rewrites
+        many small manifests into few; a live file whose stats entry was
+        lost gets it back from its parquet footer. Data files are
+        untouched, exactly like Iceberg."""
+        parent, m = self._base()
+        if not m:
+            raise ValueError(f"table {self.name} does not exist")
+        files = sorted(dict.fromkeys(m["files"]))
+        stats = m.get("stats", {})
+        # a file whose stats were lost gets them back from its footer
+        compact = {
+            f: stats[f] if f in stats else _file_column_stats(f)
+            for f in files
+            if f in stats or os.path.isfile(f)
+        }
         return self._commit(
-            {
-                "files": files,
-                "schema": self.schema_json(),
-                "op": "rewrite_manifests",
-            },
+            {"files": files, "schema": m["schema"], "op": "rewrite_manifests"},
             parent,
+            compact=compact,
         )
 
     def cherrypick(self, version: int) -> int:
@@ -1757,32 +1936,47 @@ class LakehouseTable:
         extension whose ``system.remove_orphan_files`` does this on
         EMR). Distinct from expire_snapshots: that drops old SNAPSHOTS
         (and their now-unreferenced files); this sweeps files no
-        manifest ever claimed.
+        manifest ever claimed, and the stats manifests no snapshot
+        references. Returns the removed paths relative to the data dir.
 
         ``older_than_ms`` is Iceberg's safety valve — only files whose
         mtime predates it are swept, so an in-flight writer's not-yet-
         committed files survive. Default sweeps regardless (tests);
         production callers should pass now-minus-grace.
         """
-        live = {f for _, m in manifests(self.root) for f in m["files"]}
+        ms = [m for _, m in manifests(self.root)]
+        live = {f for m in ms for f in m["files"]}
+
+        def aged(path: str) -> bool:
+            return (
+                older_than_ms is None
+                or os.path.getmtime(path) * 1000 < older_than_ms
+            )
+
         removed: list[str] = []
+        # stats manifests no snapshot references (a crashed commit's)
+        refs = {r["path"] for m in ms for r in m.get("manifests", ())}
+        stats_dir = os.path.join(self.root, STATS_DIR)
+        names = sorted(os.listdir(stats_dir)) if os.path.isdir(stats_dir) else []
+        for fn in names:
+            path = os.path.join(stats_dir, fn)
+            if os.path.join(STATS_DIR, fn) not in refs and aged(path):
+                os.remove(path)
+                removed.append(os.path.relpath(path, self.data_dir))
         if not os.path.isdir(self.data_dir):
             return removed
         # data files sit in per-batch subdirs (_write_files); walk the
-        # tree. Only *.parquet is swept — _SUCCESS markers of LIVE
-        # batches are not orphans, and manifests never list them.
+        # tree. Only *.parquet is swept (with its checksum sidecar) —
+        # _SUCCESS markers of LIVE batches are not orphans, and
+        # manifests never list them.
+        orphans = []
         for dirpath, _dirs, files in sorted(os.walk(self.data_dir)):
             for fn in sorted(files):
                 path = os.path.join(dirpath, fn)
-                if not fn.endswith(".parquet") or path in live:
-                    continue
-                if (
-                    older_than_ms is not None
-                    and os.path.getmtime(path) * 1000 >= older_than_ms
-                ):
-                    continue
-                os.remove(path)
-                removed.append(os.path.relpath(path, self.data_dir))
+                if fn.endswith(".parquet") and path not in live and aged(path):
+                    orphans.append(path)
+                    removed.append(os.path.relpath(path, self.data_dir))
+        self._remove_data_files(orphans)
         return removed
 
     # ---------- M6: schema evolution ----------
@@ -1876,7 +2070,7 @@ class LakehouseTable:
             "schema": schema,
             "op": f"drop_column:{name}",
         }
-        pm = self._read_manifest(self.main_head())
+        pm = self._read_manifest(self.main_head(), stats=False)
         defaults = {
             k: v for k, v in pm.get("defaults", {}).items() if k != name
         }
@@ -1909,7 +2103,7 @@ class LakehouseTable:
         for f in schema["fields"]:
             if f["name"] == old:
                 f["name"] = new
-        pm = self._read_manifest(self.main_head())
+        pm = self._read_manifest(self.main_head(), stats=False)
         renames = dict(pm.get("renames", {}))
         cur_files = self._files()
         # chain-safe: files already mapped to an even-older physical
@@ -2352,7 +2546,9 @@ class LakehouseTable:
         ids = {v}
         while True:
             try:
-                v = int(self._read_manifest(v).get("rollforward_of") or 0)
+                v = int(
+                    self._read_manifest(v, stats=False).get("rollforward_of") or 0
+                )
             except FileNotFoundError:
                 return ids  # expired: the chain is unprovable past here
             if not v or v in ids:
@@ -2384,7 +2580,7 @@ class LakehouseTable:
         while cur > 0 and cur not in frm_ids and cur not in seen:
             seen.add(cur)
             try:
-                m = self._read_manifest(cur)
+                m = self._read_manifest(cur, stats=False)
                 nxt = content_parent(m)
                 if not (m.get("staged_ref") or m.get("rollforward_of")):
                     nxt = main_at(self.root, nxt)
@@ -2444,7 +2640,7 @@ class LakehouseTable:
         if name not in refs["branches"]:
             raise KeyError(f"unknown branch {name}")
         base = refs["branches"][name]
-        schema = self._read_manifest(base)["schema"]
+        schema = self._read_manifest(base, stats=False)["schema"]
         if positional:
             df = self._bind_positional(df, schema)
         cols = [f["name"] for f in schema["fields"]]
@@ -2628,12 +2824,12 @@ def cherrypick_snapshot(table: LakehouseTable, version: int) -> int:
     :func:`content_parent`: the branch head a staged append was based
     on, the log parent otherwise.
     """
-    m = table._read_manifest(version)
+    m = table._read_manifest(version, stats=False)
     op = m["op"]
     if op not in ("append", "create") and not op.startswith("branch_append:"):
         raise ValueError(f"can only cherry-pick append snapshots, got {op!r}")
     base = content_parent(m)
-    parent_files = set(table._read_manifest(base)["files"]) if base else set()
+    parent_files = set(table._files(base))
     delta = [f for f in m["files"] if f not in parent_files]
     parent = table.current_version()
     cur = table._files()  # one head walk, not one per delta file

@@ -271,7 +271,7 @@ class LakehouseStreamDataSource(DataSource):
         v = main_head_json(root)
         if v == 0:
             raise ValueError(f"lakehouse_stream: no main snapshot in {root}")
-        return StructType.fromJson(read_manifest(root, v)["schema"])
+        return StructType.fromJson(read_manifest(root, v, stats=False)["schema"])
 
     def streamReader(self, schema: StructType) -> "LakehouseStreamReader":
         return LakehouseStreamReader(self._root(), schema)

@@ -254,7 +254,7 @@ class RestCatalogServer:
         # .../tables/{table} -> LoadTableResult
         # main's head and schema, never a branch's staged snapshot
         tbl_root = os.path.join(ns_dir, rest[3])
-        v, manifest = main_walk(tbl_root, log_head(tbl_root))
+        v, manifest = main_walk(tbl_root, log_head(tbl_root), stats=False)
         if not v:
             return 404, _error_body(
                 404, f"table {rest[1]}.{rest[3]} not found",

@@ -560,3 +560,19 @@ def test_bench_one_rejects_bad_passes_without_traceback():
             bad,
             r.stderr,
         )
+
+
+def test_commit_curve_smoke(spark, tmp_path):
+    """tools/commit_curve.py at small N: a one-file append writes the
+    same few stats bytes at 4 and at 40 files, and the planner keeps the
+    one file whose key range meets the probe."""
+    import sys as _sys
+
+    _sys.path.insert(0, os.path.join(REPO, "tools"))
+    import commit_curve
+
+    small, large = commit_curve.curve(spark, [4, 40], appends=1, work=str(tmp_path))
+    assert (small["files"], large["files"]) == (4, 40)
+    assert 0 < small["stats_bytes"] < small["commit_bytes"]
+    assert abs(large["stats_bytes"] - small["stats_bytes"]) <= 8
+    assert small["planned"] == large["planned"] == 1

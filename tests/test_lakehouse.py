@@ -1203,7 +1203,8 @@ def test_pruned_files_self_heals_legacy_date_stats(spark, wh):
     # rewrite the head manifest's stats to the LEGACY date-only form
     head = t.main_head()
     mpath = t._manifest_path(head)
-    m = json.loads(open(mpath).read())
+    m = t._read_manifest(head)
+    del m["manifests"]  # the legacy form: stats inline
     for s in m["stats"].values():
         for side in ("min", "max"):
             if "d" in s[side]:
@@ -1944,8 +1945,8 @@ def test_footer_stats_read_outside_commit_lock(spark, wh, monkeypatch):
     # a head manifest written without stats: the next commit reads the
     # footers of all 4 live files plus its new one
     path = t._manifest_path(t.current_version())
-    with open(path) as f:
-        m = json.load(f)
+    m = t._read_manifest(t.current_version())
+    del m["manifests"]  # the legacy form: stats inline
     del m["stats"]
     with open(path, "w") as f:
         json.dump(m, f)
@@ -2303,7 +2304,8 @@ def test_record_count_falls_back_to_scan_for_older_manifests(spark, wh):
     t = LakehouseTable(spark, wh, "t")
     t.create(spark.range(50).selectExpr("id AS k").repartition(3))
     path = t._manifest_path(t.main_head())
-    m = json.loads(open(path).read())
+    m = t._read_manifest(t.main_head())
+    del m["manifests"]  # the legacy form: stats inline
     for s in m["stats"].values():
         del s["record_count"]
     with open(path, "w") as fh:
@@ -2420,3 +2422,368 @@ def test_decimal_column_commits_without_stats(spark, wh):
     assert all("p" not in s["min"] and "k" in s["min"] for s in stats.values())
     assert len(t.pruned_files("p", 5, 6)) == 1
     assert [r.k for r in t.read_range("p", 2, 3).collect()] == [2]
+
+
+# --- stats manifests ----------------------------------------------------------
+
+
+def _stats_of(t, ref) -> dict:
+    import json
+
+    with open(os.path.join(t.root, ref["path"])) as f:
+        return json.load(f)
+
+
+def _stats_dir(t) -> set[str]:
+    d = os.path.join(t.root, "_stats")
+    names = os.listdir(d) if os.path.isdir(d) else []
+    return {os.path.join("_stats", n) for n in names}
+
+
+def _referenced(t) -> set[str]:
+    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import manifests
+
+    return {
+        r["path"]
+        for _, m in manifests(t.root)
+        for r in m.get("manifests", ())
+    }
+
+
+def _write_one_file(t, i: int) -> str:
+    """A one-row parquet data file written beside the table's batches,
+    outside Spark, for metadata-only commits."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    d = os.path.join(t.data_dir, f"b{i:03d}")
+    os.makedirs(d, exist_ok=True)
+    path = os.path.join(d, "part-0.parquet")
+    pq.write_table(pa.table({"k": pa.array([i], pa.int64())}), path)
+    return path
+
+
+def test_append_writes_a_stats_manifest_of_its_new_files_only(spark, tmp_path):
+    """A one-file append writes stats for that file alone, whatever the
+    table's size: the new stats manifest is the same size on a 2-file
+    and a 16-file table, and the parent's stats manifests are reused by
+    path."""
+    sizes = {}
+    for n in (2, 16):
+        t = LakehouseTable(spark, str(tmp_path / f"w{n:02d}"), "t")
+        t.create(spark.range(0, 1600, 1, n).selectExpr("id AS k"))
+        before = t._read_manifest(t.main_head(), stats=False)["manifests"]
+        t.append(spark.range(5000, 5100, 1, 1).selectExpr("id AS k"))
+        m = t._read_manifest(t.main_head())
+        added = [f for f in m["files"] if f not in t._files(1)]
+        assert len(added) == 1
+        assert m["manifests"][:-1] == before  # reused by path
+        new = m["manifests"][-1]
+        assert new["entries"] == 1
+        assert set(_stats_of(t, new)) == set(added)
+        assert set(m["stats"]) == set(m["files"])
+        sizes[n] = os.path.getsize(os.path.join(t.root, new["path"]))
+    assert sizes[16] == sizes[2], sizes
+
+
+def test_stats_cover_exactly_the_files_after_every_commit(spark, wh):
+    """Every kind of commit leaves stats for exactly its live files,
+    equal to the footer stats of each file."""
+    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
+        _file_column_stats,
+    )
+
+    t = LakehouseTable(spark, wh, "t")
+
+    def check(v):
+        m = t._read_manifest(v)
+        assert set(m["stats"]) == set(m["files"]), m["op"]
+        for f in m["files"]:
+            assert m["stats"][f] == _file_column_stats(f), m["op"]
+
+    def rows(lo, hi, n=1):
+        return spark.range(lo, hi, 1, n).selectExpr("id AS k", "id % 7 AS v")
+
+    check(t.create(rows(0, 400, 4).repartitionByRange(4, "k")))
+    check(t.append(rows(400, 450)))
+    check(t.delete_where(F.col("k") < 10))
+    check(t.update_set(F.col("k").between(200, 210), {"v": F.lit(-1)}))
+    check(t.merge_into(rows(395, 405), on="k"))
+    check(t.rollback_to(2))
+    t.create_branch("b")
+    check(t.write_to_branch("b", rows(900, 910)))
+    check(t.append(rows(950, 960)))
+    check(t.cherrypick(7))
+    t.create_branch("c")
+    check(t.write_to_branch("c", rows(970, 980)))
+    check(t.fast_forward("main", "c"))
+    check(t.rewrite_manifests())
+
+
+def test_rollback_reuses_the_base_stats_manifests(spark, wh):
+    t = LakehouseTable(spark, wh, "t")
+    t.create(spark.range(0, 100, 1, 2).selectExpr("id AS k"))
+    t.append(spark.range(100, 110, 1, 1).selectExpr("id AS k"))
+    before = _stats_dir(t)
+    v = t.rollback_to(1)
+    assert _stats_dir(t) == before  # wrote none
+    assert (
+        t._read_manifest(v, stats=False)["manifests"]
+        == t._read_manifest(1, stats=False)["manifests"]
+    )
+
+
+def test_expire_keeps_only_referenced_stats_manifests(spark, wh):
+    """expire_snapshots deletes the stats manifests no retained snapshot
+    references and keeps the rest, including those a retained snapshot
+    reuses from an expired one."""
+    t = LakehouseTable(spark, wh, "t")
+    t.create(spark.range(0, 100, 1, 2).selectExpr("id AS k"))
+    for i in range(3):
+        t.append(spark.range(100 + 10 * i, 110 + 10 * i, 1, 1).selectExpr("id AS k"))
+    t.delete_where(F.col("k") == 105)
+    assert len(_stats_dir(t)) >= 3
+    t.expire_snapshots(keep_last=1)
+    head = t._read_manifest(t.main_head())
+    refs = {r["path"] for r in head["manifests"]}
+    assert _stats_dir(t) == refs
+    assert set(head["stats"]) == set(head["files"])
+    assert t.read().count() == 129
+
+
+def test_small_commits_keep_logarithmic_stats_manifests(spark, wh):
+    """64 successive one-file commits: the tiered merge keeps the head's
+    stats manifests at O(log files), and every file keeps its stats."""
+    t = LakehouseTable(spark, wh, "t")
+    schema = {"type": "struct", "fields": [
+        {"name": "k", "type": "long", "nullable": True, "metadata": {}}
+    ]}
+    files: list[str] = []
+    v = 0
+    for i in range(65):
+        files = files + [_write_one_file(t, i)]
+        v = t._commit({"files": files, "schema": schema, "op": "append"}, v)
+    m = t._read_manifest(v)
+    assert len(m["manifests"]) <= 7, [r["entries"] for r in m["manifests"]]
+    assert sum(r["entries"] for r in m["manifests"]) == 65
+    assert set(m["stats"]) == set(files)
+    assert [m["stats"][f]["min"]["k"] for f in files] == list(range(65))
+    # deleting most files with small commits: the refs' dead entries stay
+    # within twice the live files instead of growing with history
+    while len(files) > 3:
+        files = files[2:] if len(files) % 3 else files[1:]
+        v = t._commit({"files": files, "schema": schema, "op": "delete"}, v)
+        m = t._read_manifest(v)
+        assert sum(r["entries"] for r in m["manifests"]) <= 2 * len(files)
+        assert set(m["stats"]) == set(files)
+        assert _stats_dir(t) >= _referenced(t)
+
+
+def test_lost_stats_manifest_is_healed_by_commit_and_rewrite(spark, wh):
+    """A referenced stats manifest that goes missing loses no stats for
+    good: a commit that absorbs it reads the footers of its live files,
+    and rewrite_manifests restores the entries of one it kept."""
+    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
+        _file_column_stats,
+    )
+
+    t = LakehouseTable(spark, wh, "t")
+    schema = {"type": "struct", "fields": [
+        {"name": "k", "type": "long", "nullable": True, "metadata": {}}
+    ]}
+
+    def commit(files, v):
+        v = t._commit({"files": files, "schema": schema, "op": "append"}, v)
+        return v, t._read_manifest(v)
+
+    def lose(ref):
+        os.remove(os.path.join(t.root, ref["path"]))
+
+    # absorbed by the next commit: its files' stats come from the footers
+    files = [_write_one_file(t, i) for i in range(3)]
+    v, m = commit(files, 0)
+    lose(m["manifests"][0])
+    files = files + [_write_one_file(t, i) for i in range(3, 6)]
+    v, m = commit(files, v)
+    assert {f: _file_column_stats(f) for f in files} == m["stats"]
+    assert _stats_dir(t) == {r["path"] for r in m["manifests"]}
+    # too large to absorb: rewrite_manifests repairs it
+    big = m["manifests"][0]
+    assert big["entries"] == 6
+    lose(big)
+    files = files + [_write_one_file(t, 6)]
+    v, m = commit(files, v)
+    assert big in m["manifests"] and set(m["stats"]) == {files[-1]}
+    v = t.rewrite_manifests()
+    m = t._read_manifest(v)
+    assert {f: _file_column_stats(f) for f in files} == m["stats"]
+    assert len(m["manifests"]) == 1
+
+
+def test_refused_commit_leaves_no_stats_manifest(spark, wh):
+    t1 = LakehouseTable(spark, wh, "t")
+    t1.create(spark.range(0, 10, 1, 1).selectExpr("id AS k"))
+    t2 = LakehouseTable(spark, wh, "t")
+    t1.append(spark.range(10, 20, 1, 1).selectExpr("id AS k"))
+    stray = _write_one_file(t2, 99)
+    with pytest.raises(ConflictError):
+        t2._commit(
+            {"files": t2._files(1) + [stray], "schema": t2.schema_json(), "op": "x"},
+            1,
+        )
+    assert _stats_dir(t1) == _referenced(t1)
+
+
+def test_legacy_inline_stats_migrate_once(spark, wh):
+    """A snapshot written with inline stats reads as written; the next
+    commit moves those stats into one stats manifest, and the commit
+    after that writes only its own file's."""
+    import json
+
+    t = LakehouseTable(spark, wh, "t")
+    t.create(spark.range(0, 300, 1, 3).selectExpr("id AS k"))
+    m = t._read_manifest(1)
+    del m["manifests"]
+    with open(t._manifest_path(1), "w") as f:
+        json.dump(m, f)
+    legacy = t._read_manifest(1)
+    assert "manifests" not in legacy and set(legacy["stats"]) == set(legacy["files"])
+    t.append(spark.range(300, 310, 1, 1).selectExpr("id AS k"))
+    m2 = t._read_manifest(2)
+    assert [r["entries"] for r in m2["manifests"]] == [4]
+    [new] = [f for f in t._files(2) if f not in legacy["files"]]
+    assert m2["stats"] == {**legacy["stats"], new: m2["stats"][new]}
+    t.append(spark.range(310, 320, 1, 1).selectExpr("id AS k"))
+    m3 = t._read_manifest(3, stats=False)
+    assert m3["manifests"][0] == m2["manifests"][0]
+    assert [r["entries"] for r in m3["manifests"]] == [4, 1]
+    assert t.pruned_files("k", 0, 50) == t._files(1)[:1]
+
+
+def test_rewrite_manifests_compacts_to_one_stats_manifest(spark, wh):
+    t = LakehouseTable(spark, wh, "t")
+    t.create(spark.range(0, 100, 1, 2).selectExpr("id AS k"))
+    for i in range(3):
+        t.append(spark.range(100 + 10 * i, 110 + 10 * i, 1, 1).selectExpr("id AS k"))
+    t.delete_where(F.col("k") == 0)
+    files = t._files()
+    assert len(t._read_manifest(t.main_head(), stats=False)["manifests"]) > 1
+    v = t.rewrite_manifests()
+    m = t._read_manifest(v)
+    assert m["files"] == sorted(files)
+    [ref] = m["manifests"]
+    assert set(_stats_of(t, ref)) == set(files) and ref["entries"] == len(files)
+    assert m["stats"] == t._read_manifest(v - 1)["stats"]
+
+
+def test_merge_schema_evolution_does_not_revive_a_dropped_column(spark, wh):
+    """A column dropped and brought back by a schema-evolving MERGE reads
+    NULL in the pre-existing rows, as add_column's does — not the values
+    the dropped column left in the data files."""
+    t = LakehouseTable(spark, wh, "t")
+    t.create(spark.createDataFrame([(1, "old"), (2, "old2")], "k long, v string"))
+    t.drop_column("v")
+    src = spark.createDataFrame([(3, "new")], "k long, v string")
+    t.merge_into(src, on="k", schema_evolution=True)
+    assert sorted(tuple(r) for r in t.read().collect()) == [
+        (1, None), (2, None), (3, "new")
+    ]
+    # a multi-file target: kept and rewritten files both read NULL
+    t2 = LakehouseTable(spark, wh, "t2")
+    t2.create(
+        spark.createDataFrame(
+            [(i, f"old{i}") for i in range(8)], "k long, v string"
+        ).repartitionByRange(4, "k")
+    )
+    t2.drop_column("v")
+    src2 = spark.createDataFrame([(0, "upd"), (9, "new")], "k long, v string")
+    t2.merge_into(src2, on="k", update_cols={}, schema_evolution=True)
+    got = dict(tuple(r) for r in t2.read().collect())
+    assert got == {**{i: None for i in range(8)}, 9: "new"}
+
+
+def test_expire_and_orphan_sweep_remove_checksum_sidecars(spark, wh):
+    """Deleting a data file deletes its ``.crc`` sidecar, and a write
+    batch left holding only its _SUCCESS markers goes with it."""
+    t = LakehouseTable(spark, wh, "t")
+    t.create(spark.range(0, 30, 1, 1).selectExpr("id AS k"))
+    for i in range(3):
+        t.delete_where(F.col("k") == i)
+
+    def debris():
+        out = []
+        for d, _dirs, names in os.walk(t.data_dir):
+            for n in names:
+                if n.endswith(".parquet.crc") and n[1:-4] not in names:
+                    out.append(os.path.join(d, n))
+        return out
+
+    def batches():
+        return set(os.listdir(t.data_dir))
+
+    t.expire_snapshots(keep_last=1)
+    assert debris() == []
+    live = {os.path.relpath(f, t.data_dir).split(os.sep)[0] for f in t._files()}
+    assert batches() == live
+    # an uncommitted write is an orphan batch: swept whole
+    t._write_files(spark.range(5).selectExpr("id AS k"))
+    assert len(batches()) == len(live) + 1
+    removed = t.remove_orphan_files()
+    assert removed and all(r.endswith(".parquet") for r in removed)
+    assert batches() == live and debris() == []
+    assert t.read().count() == 27
+
+
+def test_racing_commits_leak_no_stats_manifest(spark, wh):
+    """Eight threads race one-file commits with retries: every commit
+    lands once, every file keeps its stats, and the refused attempts
+    leave no stats manifest behind."""
+    import sys
+    import threading
+
+    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
+        commit_with_retries,
+    )
+
+    schema = {"type": "struct", "fields": [
+        {"name": "k", "type": "long", "nullable": True, "metadata": {}}
+    ]}
+    LakehouseTable(spark, wh, "t")._commit(
+        {"files": [], "schema": schema, "op": "create"}, 0
+    )
+    errors = []
+
+    def writer(w):
+        t = LakehouseTable(spark, wh, "t")
+        try:
+            for j in range(4):
+                f = _write_one_file(t, 10 * w + j)
+
+                def op(f=f):
+                    parent = t.current_version()
+                    files = t._files(parent) + [f]
+                    return t._commit(
+                        {"files": files, "schema": schema, "op": "append"}, parent
+                    )
+
+                commit_with_retries(op, retries=200, backoff_s=0.001)
+        except Exception as e:  # reported below; the thread must end
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=writer, args=(w,)) for w in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == []
+    t = LakehouseTable(spark, wh, "t")
+    m = t._read_manifest(t.current_version())
+    assert len(m["files"]) == len(set(m["files"])) == 32
+    assert set(m["stats"]) == set(m["files"])
+    assert _stats_dir(t) == _referenced(t)

@@ -1863,6 +1863,19 @@ def test_funnel_stages_matches_bruteforce(spark, rows):
 
 # --- the scan planner: planned files ⊇ files holding a matching row ---------
 
+def _instants(tz):
+    """Timestamps around whole seconds, hours and days, some with a
+    fraction; zoned (UTC) when ``tz`` is given."""
+    import datetime
+
+    base = datetime.datetime(2024, 1, 1, tzinfo=tz)
+    return [
+        base + datetime.timedelta(seconds=s)
+        for s in (0, 0.000001, 1.5, 59.999999, 3600, 3600.25, 86400, 86400 * 3)
+    ]
+
+
+_UTC = __import__("datetime").timezone.utc
 _PLAN_COLS = {
     # logical column -> (SQL literal, value pool)
     "l2": (str, list(range(8))),
@@ -1870,6 +1883,15 @@ _PLAN_COLS = {
     "d": (
         lambda v: f"DATE'{v.isoformat()}'",
         [__import__("datetime").date(2024, 1, 1 + i) for i in range(8)],
+    ),
+    # the session zone is UTC, so a zoned literal spells its UTC time
+    "ts": (
+        lambda v: f"TIMESTAMP'{v.replace(tzinfo=None).isoformat(sep=' ')}'",
+        _instants(_UTC),
+    ),
+    "tn": (
+        lambda v: f"TIMESTAMP_NTZ'{v.isoformat(sep=' ')}'",
+        _instants(None),
     ),
 }
 
@@ -1931,7 +1953,7 @@ def _plan_eval(c, row):
 
 @st.composite
 def _plan_files_case(draw):
-    """Four files of rows over ``(l, s, d)``: NULL-heavy, some columns
+    """Four files of rows over ``(l, s, d, ts, tn)``: NULL-heavy, some columns
     all-NULL in a file; ``l`` is renamed to ``l2`` after the first two
     files, so those prune on their physical ``l`` stats."""
     files = []
@@ -1962,10 +1984,12 @@ def test_plan_files_keeps_every_file_with_a_match(spark, case):
     wh = tempfile.mkdtemp(prefix="lh_plan_")
     try:
         t = LakehouseTable(spark, wh, "t")
-        # column order follows sorted(_PLAN_COLS): d, l2 (as l), s
+        # column order follows sorted(_PLAN_COLS): d, l2 (as l), s, tn, ts
         for i, rows in enumerate(files):
             name = "l" if i < 2 else "l2"
-            df = spark.createDataFrame(rows, f"d date, {name} long, s string")
+            df = spark.createDataFrame(
+                rows, f"d date, {name} long, s string, tn timestamp_ntz, ts timestamp"
+            )
             if i == 0:
                 t.create(df.coalesce(1))
             else:
@@ -1980,7 +2004,14 @@ def test_plan_files_keeps_every_file_with_a_match(spark, case):
             for f in m["files"]:
                 rows = pq.read_table(f).to_pylist()
                 rows = [
-                    {"l2": r.get("l2", r.get("l")), "s": r["s"], "d": r["d"]}
+                    {
+                        "l2": r.get("l2", r.get("l")),
+                        "s": r["s"],
+                        "d": r["d"],
+                        "tn": r["tn"],
+                        # parquet's INT96 timestamps read back naive UTC
+                        "ts": r["ts"] and r["ts"].replace(tzinfo=_UTC),
+                    }
                     for r in rows
                 ]
                 if any(_plan_eval(c, r) is True for r in rows):

@@ -1109,7 +1109,8 @@ def test_n_rows_matches_table_count_after_every_statement(spark, tmp_path):
         # carry the legacy entries forward and fall back to a scan
         t = eng.managed("nr_t")
         path = t._manifest_path(t.main_head())
-        m = json.loads(open(path).read())
+        m = t._read_manifest(t.main_head())
+        del m["manifests"]  # the legacy form: stats inline
         for s in m["stats"].values():
             del s["record_count"]
         with open(path, "w") as fh:

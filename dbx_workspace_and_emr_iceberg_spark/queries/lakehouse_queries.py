@@ -674,7 +674,7 @@ def m6_lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
 
         v = t.add_column("r_comment", "string")
         assert set(t._files()) == files_v1, "ADD COLUMN rewrote no files"
-        evolved = t.read_evolved()
+        evolved = t.read()
         assert "r_comment" in evolved.columns, "new column visible"
         assert evolved.filter(F.col("r_comment").isNotNull()).count() == 0, (
             "new column reads NULL from old files"
@@ -688,12 +688,12 @@ def m6_lakehouse_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame
                 F.lit("filled").alias("r_comment"),
             )
         )
-        full = t.read_evolved()
+        full = t.read()
         assert full.filter(F.col("r_comment") == "filled").count() == 2, (
             "new files carry the evolved column"
         )
         # old snapshot still reads with original schema
-        assert "r_comment" not in t.read_evolved(version=1).columns, (
+        assert "r_comment" not in t.read(version=1).columns, (
             "time travel sees pre-evolution schema"
         )
         steps.append(("evolved_append", v, full.count()))

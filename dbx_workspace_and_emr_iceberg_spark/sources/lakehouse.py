@@ -189,13 +189,16 @@ def read_manifest(root: str, v: int, stats: bool = True) -> dict:
 
 
 def _with_stats(root: str, m: dict) -> dict:
-    """``m`` with ``stats`` assembled from its stats manifests."""
-    if "manifests" in m:
-        known: dict = {}
-        for ref in m["manifests"]:
-            known.update(_load_stats(root, ref) or {})
-        m["stats"] = {f: known[f] for f in m["files"] if f in known}
-    return m
+    """``m`` with ``stats`` assembled from its stats manifests, each
+    opened once; a legacy manifest (inline ``stats``) as it is. Every
+    other read of a manifest is raw: only a caller that uses the file
+    stats pays for them."""
+    if "manifests" not in m:
+        return m
+    known: dict = {}
+    for ref in m["manifests"]:
+        known.update(_load_stats(root, ref) or {})
+    return {**m, "stats": {f: known[f] for f in m["files"] if f in known}}
 
 
 def manifests(root: str, lo: int = 1, hi: int | None = None):
@@ -211,12 +214,12 @@ def manifests(root: str, lo: int = 1, hi: int | None = None):
             continue
 
 
-def main_walk(root: str, v: int, stats: bool = True) -> tuple[int, dict]:
-    """``(version, manifest)`` of the newest main (non-staged) snapshot
-    at or below ``v``; ``(0, {})`` when main has no snapshot there. The
-    log is shared by every ref and a branch write tags its snapshot
-    ``staged_ref``, so main's state at a log position is found by
-    walking down past staged snapshots, each manifest read once.
+def main_walk(root: str, v: int) -> tuple[int, dict]:
+    """``(version, raw manifest)`` of the newest main (non-staged)
+    snapshot at or below ``v``; ``(0, {})`` when main has no snapshot
+    there. The log is shared by every ref and a branch write tags its
+    snapshot ``staged_ref``, so main's state at a log position is found
+    by walking down past staged snapshots, each manifest read once.
     Raises ValueError if the walk reaches an expired manifest: main's
     state there is unknowable."""
     w = v
@@ -230,14 +233,14 @@ def main_walk(root: str, v: int, stats: bool = True) -> tuple[int, dict]:
                 "expire_snapshots"
             ) from None
         if not m.get("staged_ref"):
-            return w, (_with_stats(root, m) if stats else m)
+            return w, m
         w -= 1
     return 0, {}
 
 
 def main_at(root: str, v: int) -> int:
     """The version :func:`main_walk` resolves ``v`` to."""
-    return main_walk(root, v, stats=False)[0]
+    return main_walk(root, v)[0]
 
 
 def main_head_json(root: str) -> int:
@@ -659,6 +662,14 @@ def _may_match(node, bounds) -> bool:
         return True  # a stat of another type: keep
 
 
+def _spent_batch(d: str) -> bool:
+    """Whether write batch ``d`` holds nothing but its ``_SUCCESS``
+    markers: its data files are gone. A batch still being written has
+    no ``_SUCCESS`` yet."""
+    left = {n for _, _, names in os.walk(d) for n in names}
+    return "_SUCCESS" in left and left <= {"_SUCCESS", "._SUCCESS.crc"}
+
+
 class LakehouseTable:
     """One snapshot-versioned table under a warehouse directory — the
     Iceberg Table analog: however it is opened (constructor, Engine,
@@ -721,9 +732,9 @@ class LakehouseTable:
         PROCESSES and other THREADS alike, and the kernel releases it
         automatically if the holder dies — a crashed mid-commit writer
         can never wedge the table, while a merely-stalled one keeps
-        its claim (review-pass r19: the 60s staleness heuristic alone
-        let a >60s-stalled writer be 'recovered' by a peer, both then
-        reporting success with one commit silently lost)."""
+        its claim: no peer can 'recover' a live writer's half-done
+        commit, so two writers never both report success for one
+        version."""
         os.makedirs(self.root, exist_ok=True)
         fd = os.open(
             os.path.join(self.root, "_commit.lock"),
@@ -858,8 +869,9 @@ class LakehouseTable:
         # verify the claim immediately before the swing: if anything
         # out-of-protocol replaced our manifest, fail loudly instead
         # of pointing _current at someone else's content while
-        # reporting OUR commit as the success
-        if self._read_manifest(version).get("writer") != writer_id:
+        # reporting OUR commit as the success (the raw read: the token
+        # needs no file stats)
+        if self._read_manifest(version, stats=False).get("writer") != writer_id:
             raise ConflictError(
                 f"{self.name}: manifest v{version} was replaced by a "
                 "foreign writer between claim and publish"
@@ -965,40 +977,46 @@ class LakehouseTable:
             except FileNotFoundError:
                 pass
         if parent.get("staged_ref"):
-            try:
-                out.append(main_walk(self.root, parent["version"], stats=False)[1])
+            try:  # main's head lies below a staged parent
+                out.append(main_walk(self.root, parent["version"] - 1)[1])
             except ValueError:
                 pass
         return out + [parent]
 
-    def _base(self, stats: bool = True) -> tuple[int, dict]:
-        """``(log head, main head's manifest)`` from one walk: the
-        parent a main-side write commits against and the state it
-        builds on. The manifest is ``{}`` before the table exists;
-        ``stats=False`` leaves its file stats unread."""
+    def _base(self) -> tuple[int, dict]:
+        """``(log head, main head's raw manifest)`` from one walk: the
+        parent a main-side operation commits against and the one state
+        it reads its files, schema, partition spec, renames and defaults
+        from. The manifest is ``{}`` before the table exists."""
         parent = self.current_version()
-        return parent, main_walk(self.root, parent, stats)[1]
+        return parent, main_walk(self.root, parent)[1]
 
-    def _head_manifest(self, stats: bool = True) -> dict:
-        """Main head's manifest; ``{}`` before the table exists."""
-        return self._base(stats)[1]
+    def _existing_base(self) -> tuple[int, dict]:
+        """:meth:`_base` of a table that must exist."""
+        parent, m = self._base()
+        if not m:
+            raise ValueError(f"table {self.name} does not exist")
+        return parent, m
 
-    def _partition_spec(self) -> list[str]:
-        """The partition transforms of main's head (empty = unpartitioned)."""
-        return self._head_manifest(stats=False).get("partition_spec", [])
+    def _base_with(self, version: int, vm: dict) -> tuple[int, dict]:
+        """:meth:`_base` for an operation that has read snapshot
+        ``version``'s raw manifest ``vm``: when that snapshot is the log
+        head it is not read again."""
+        parent = self.current_version()
+        if version == parent and not vm.get("staged_ref"):
+            return parent, vm
+        # a staged log head is not main: main's head lies below it
+        return parent, main_walk(self.root, parent - (version == parent))[1]
 
-    def _write_files(
-        self, df: DataFrame, partition_by: list[str] | None = None
-    ) -> list[str]:
+    def _write_files(self, df: DataFrame, spec: list[str]) -> list[str]:
         """Materialize df as new immutable parquet files; returns paths.
         Files are written to a unique subdir then registered by name —
         the manifest, not the directory listing, defines the table.
 
-        Partitioned tables (``partition_by``, default: the table's
-        spec) lay files out in hive-style dirs of *derived* transform
-        columns, which the files themselves do not store — the 'hidden'
-        in hidden partitioning."""
-        spec = self._partition_spec() if partition_by is None else partition_by
+        A partitioned layout (``spec``, the partition transforms of the
+        base the write commits on; empty = unpartitioned) puts files in
+        hive-style dirs of *derived* transform columns, which the files
+        themselves do not store — the 'hidden' in hidden partitioning."""
         out = os.path.join(self.data_dir, uuid.uuid4().hex[:12])
         writer = df.write
         if spec:
@@ -1012,20 +1030,22 @@ class LakehouseTable:
             if f.endswith(".parquet")
         )
 
-    def _files(self, version: int | None = None) -> list[str]:
-        # default = main's head, NOT the raw log head: see main_head()
+    def _snapshot(self, version: int | None) -> dict:
+        """Raw manifest of snapshot ``version``: main's head (NOT the
+        raw log head, see main_head()) when None, ``{}`` at 0."""
         if version is None:
-            return self._head_manifest(stats=False).get("files", [])
-        return self._read_manifest(version, stats=False)["files"] if version else []
+            return self._base()[1]
+        return self._read_manifest(version, stats=False) if version else {}
+
+    def _files(self, version: int | None = None) -> list[str]:
+        return self._snapshot(version).get("files", [])
 
     def record_count(self, version: int | None = None) -> int:
         """Rows in snapshot ``version`` (default: main's head), summed
         from the manifest's per-file ``record_count`` without reading
         data. A manifest with a file that lacks the count (written
         before counts were recorded) falls back to counting the scan."""
-        m = self._head_manifest() if version is None else (
-            self._read_manifest(version) if version else {}
-        )
+        m = _with_stats(self.root, self._snapshot(version))
         if not m:
             return 0
         stats = m.get("stats", {})
@@ -1073,9 +1093,7 @@ class LakehouseTable:
         return self._append(df, positional=True)
 
     def _append(self, df: DataFrame, positional: bool) -> int:
-        parent, m = self._base(stats=False)
-        if not m:
-            raise ValueError(f"table {self.name} does not exist")
+        parent, m = self._existing_base()
         if positional:
             df = self._bind_positional(df, m["schema"])
         table_cols = [f["name"] for f in m["schema"]["fields"]]
@@ -1094,14 +1112,12 @@ class LakehouseTable:
             parent,
         )
 
-    def _bind_positional(
-        self, df: DataFrame, schema: dict | None = None
-    ) -> DataFrame:
+    def _bind_positional(self, df: DataFrame, schema: dict) -> DataFrame:
         """Rename and cast ``df``'s columns by ordinal onto ``schema``
-        (default: main's schema; a branch write passes its base's)."""
+        (the write's base schema: main's, or a branch's)."""
         from pyspark.sql.types import StructType
 
-        st = StructType.fromJson(schema or self.schema_json())
+        st = StructType.fromJson(schema)
         if len(df.columns) != len(st.fields):
             raise ValueError(
                 f"INSERT into {self.name}: {len(df.columns)} values for "
@@ -1117,26 +1133,28 @@ class LakehouseTable:
     def overwrite(self, df: DataFrame) -> int:
         """INSERT OVERWRITE (static, S6). NOTE: replaces the table
         SCHEMA with the frame's — the DataFrame-door semantics; the SQL
-        door binds positionally first (overwrite_positional)."""
-        parent = self.current_version()
-        files = self._write_files(df)
+        door binds positionally first (overwrite_positional). On a
+        missing table it is an unpartitioned create."""
+        return self._overwrite(df, positional=False)
+
+    def overwrite_positional(self, df: DataFrame) -> int:
+        """SQL ``INSERT OVERWRITE`` binds POSITIONALLY into the
+        EXISTING schema, so the table keeps its column names whatever
+        the frame's are (a VALUES frame arrives named col1/col2)."""
+        return self._overwrite(df, positional=True)
+
+    def _overwrite(self, df: DataFrame, positional: bool) -> int:
+        parent, m = self._existing_base() if positional else self._base()
+        if positional:
+            df = self._bind_positional(df, m["schema"])
+        files = self._write_files(df, m.get("partition_spec", []))
         return self._commit(
             {"files": files, "schema": df.schema.jsonValue(), "op": "overwrite"},
             parent,
         )
 
-    def overwrite_positional(self, df: DataFrame) -> int:
-        """SQL ``INSERT OVERWRITE`` binds POSITIONALLY into the
-        EXISTING schema — without the binding a VALUES frame (named
-        col1/col2) silently RENAMED the table's columns through
-        overwrite()'s schema replacement (review-pass r15)."""
-        return self.overwrite(self._bind_positional(df))
-
     def schema_json(self) -> dict:
-        m = self._head_manifest(stats=False)
-        if not m:
-            raise ValueError(f"table {self.name} does not exist")
-        return m["schema"]
+        return self._existing_base()[1]["schema"]
 
     # ---------- S1/S8: scan + time travel ----------
 
@@ -1148,9 +1166,7 @@ class LakehouseTable:
         and files written before a column was added yield NULLs for it.
         """
         try:
-            m = self._head_manifest(stats=False) if version is None else (
-                self._read_manifest(version, stats=False) if version else {}
-            )
+            m = self._snapshot(version)
         except FileNotFoundError:
             # explicit-version read of an expired/never-existing
             # snapshot: the contracted error type, not a leaked
@@ -1307,7 +1323,8 @@ class LakehouseTable:
         to the physical name a file stores the column under; a column
         a file predates (an ``absent_files`` entry of ``defaults``) or
         stores another column under reads its default there, never its
-        physical stats."""
+        physical stats. ``m`` may be raw: the stats are assembled only
+        when Spark pushed a filter to evaluate."""
         from pyspark.sql.types import StructType
 
         files = m.get("files", [])
@@ -1333,7 +1350,7 @@ class LakehouseTable:
                 c: set(d["absent_files"])
                 for c, d in m.get("defaults", {}).items()
             }
-            stats = m.get("stats", {})
+            stats = _with_stats(self.root, m).get("stats", {})
 
             def bounds_in(f: str):
                 def bounds(col: str):
@@ -1365,19 +1382,27 @@ class LakehouseTable:
         return files, report
 
     def _range_cond(self, m: dict, col: str, lo, hi):
-        """``lo <= col <= hi`` as a Column. Bounds on a TEMPORAL column
-        are normalized ISO strings cast to the column's own type (a
-        naive Python datetime handed to Spark raw becomes a zoned
-        literal converted through the driver's local timezone); a bound
-        the normalizer cannot canonicalize raises ValueError. Other
-        bounds — a date-shaped bound on a STRING column too — pass
-        verbatim."""
+        """``lo <= col <= hi`` as a Column, its bounds from
+        :meth:`_range_bounds`."""
+        lo_l, hi_l = self._range_bounds(m, col, lo, hi)
+        return (F.col(col) >= lo_l) & (F.col(col) <= hi_l)
+
+    def _range_bounds(self, m: dict, col: str, lo, hi):
+        """The range bounds on ``col`` as literal Columns — THE dtype
+        gate of every range read. Bounds on a TEMPORAL column are
+        normalized ISO strings cast to the column's own type (a naive
+        Python datetime handed to Spark raw becomes a zoned literal
+        converted through the driver's local timezone); a bound the
+        normalizer cannot canonicalize raises ValueError. Other bounds —
+        a date-shaped bound on a STRING column too — pass verbatim
+        (padding one to '... 00:00:00' would over-filter its boundary
+        rows lexicographically)."""
         from pyspark.sql.types import StructType
 
         schema = StructType.fromJson(m["schema"])
         dt = schema[col].dataType if col in schema.fieldNames() else None
         if dt is None or not is_temporal_dtype(dt):
-            return (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
+            return F.lit(lo), F.lit(hi)
         lo_n, hi_n = temporal_bound_iso(lo), temporal_bound_iso(hi)
         if lo_n is None or hi_n is None:
             # fractional-minute ISO shapes like '08:30.5' are rejected:
@@ -1387,9 +1412,7 @@ class LakehouseTable:
                 f"{lo!r}..{hi!r} — pass "
                 "'YYYY-MM-DD[ HH:MM:SS[.ffffff]]' or datetime/date"
             )
-        return (F.col(col) >= F.lit(lo_n).cast(dt)) & (
-            F.col(col) <= F.lit(hi_n).cast(dt)
-        )
+        return F.lit(lo_n).cast(dt), F.lit(hi_n).cast(dt)
 
     # ---------- M2/M3: UPDATE / DELETE (copy-on-write, file-pruned) ----------
 
@@ -1416,52 +1439,63 @@ class LakehouseTable:
         planned, _ = self._plan_files(m, cond)
         return self._affected_files(m, planned, lambda scan: scan.filter(cond))
 
+    def _commit_rewrite(
+        self, parent: int, m: dict, affected: list[str], rows, op: str, **extra
+    ) -> int:
+        """The copy-on-write tail every row-level DML shares: commit
+        ``m``'s files minus ``affected``, plus ``rows`` (None = none)
+        written with ``m``'s partition spec; ``extra`` overrides or adds
+        manifest keys (MERGE's evolved schema and defaults)."""
+        rewritten = set(affected)
+        keep = [f for f in m["files"] if f not in rewritten]
+        new_files = (
+            [] if rows is None else self._write_files(rows, m.get("partition_spec", []))
+        )
+        return self._commit(
+            {
+                "files": keep + new_files,
+                "schema": m["schema"],
+                "op": op,
+                "rewritten": len(affected),
+                **extra,
+            },
+            parent,
+        )
+
     def delete_where(self, cond) -> int:
         """DELETE FROM t WHERE cond (M3)."""
         parent, m = self._base()
         affected = self._filtered_files(m, cond)
         if not affected:
             return parent  # no-op delete commits nothing
-        rewritten = set(affected)
-        keep = [f for f in m["files"] if f not in rewritten]
         # SQL DELETE removes only rows where cond is TRUE; a bare ~cond
         # filter would also drop NULL-predicate rows (NOT NULL => NULL,
         # filtered out). Keep rows where cond is FALSE *or* NULL.
         survivors = self._scan_files(affected, m).filter(
             ~F.coalesce(cond, F.lit(False))
         )
-        new_files = self._write_files(survivors, m.get("partition_spec", []))
-        return self._commit(
-            {
-                "files": keep + new_files,
-                "schema": m["schema"],
-                "op": "delete",
-                "rewritten": len(affected),
-            },
-            parent,
-        )
+        return self._commit_rewrite(parent, m, affected, survivors, "delete")
+
+    def _check_set_columns(self, what: str, cols, schema: dict) -> None:
+        """UNRESOLVED_COLUMN parity: a SET column naming no column of
+        ``schema`` raises, as in Spark/Iceberg. Assignments are looked
+        up by ``c in cols``, so a typo ("SET prce = 0") would otherwise
+        leave every row unchanged while the statement commits."""
+        known = {f["name"] for f in schema["fields"]}
+        unknown = sorted(set(cols) - known)
+        if unknown:
+            raise ValueError(
+                f"{self.name}: {what} SET references unknown column(s) "
+                f"{unknown}; table columns: {sorted(known)}"
+            )
 
     def update_set(self, cond, assignments: dict[str, F.Column]) -> int:
         """UPDATE t SET ... WHERE cond (M2)."""
-        parent, m = self._base()
-        if not m:
-            raise ValueError(f"table {self.name} does not exist")
-        # UNRESOLVED_COLUMN parity: the dict is only consulted via
-        # `c in assignments`, so a typo'd SET column ("SET prce = 0")
-        # would make the whole UPDATE a silent no-op that still
-        # committed a new version — Spark/Iceberg raise for it.
-        known = {f["name"] for f in m["schema"]["fields"]}
-        unknown = sorted(set(assignments) - known)
-        if unknown:
-            raise ValueError(
-                f"{self.name}: UPDATE SET references unknown column(s) "
-                f"{unknown}; table columns: {sorted(known)}"
-            )
+        parent, m = self._existing_base()
+        self._check_set_columns("UPDATE", assignments, m["schema"])
         affected = self._filtered_files(m, cond)
         if not affected:
             return parent
-        rewritten = set(affected)
-        keep = [f for f in m["files"] if f not in rewritten]
         df = self._scan_files(affected, m)
         updated = df.select(
             *[
@@ -1471,16 +1505,7 @@ class LakehouseTable:
                 for c in df.columns
             ]
         )
-        new_files = self._write_files(updated, m.get("partition_spec", []))
-        return self._commit(
-            {
-                "files": keep + new_files,
-                "schema": m["schema"],
-                "op": "update",
-                "rewritten": len(affected),
-            },
-            parent,
-        )
+        return self._commit_rewrite(parent, m, affected, updated, "update")
 
     # ---------- M1: MERGE INTO ----------
 
@@ -1536,13 +1561,12 @@ class LakehouseTable:
             DateType,
             IntegralType,
             StringType,
+            StructField,
             StructType,
             TimestampNTZType,
         )
 
-        parent, m = self._base()
-        if not m:
-            raise ValueError(f"table {self.name} does not exist")
+        parent, m = self._existing_base()
         files = m["files"]
         multi = len(files) > 1
         if multi:
@@ -1588,12 +1612,7 @@ class LakehouseTable:
         # half-applied.
         existing = {f["name"] for f in m["schema"]["fields"]}
         evolved = [
-            {
-                "name": f.name,
-                "type": f.dataType.jsonValue(),
-                "nullable": True,
-                "metadata": {},
-            }
+            StructField(f.name, f.dataType).jsonValue()
             for f in source.schema.fields
             if schema_evolution and f.name not in existing
         ]
@@ -1605,18 +1624,8 @@ class LakehouseTable:
             **m.get("defaults", {}),
             **{c["name"]: {"value": None, "absent_files": files} for c in evolved},
         }
-        # UNRESOLVED_COLUMN parity: an update_cols key naming no target
-        # column (post-evolution) would otherwise be ignored by
-        # out_col's `c in update_cols`, leaving matched rows unchanged
-        # while the MERGE reports success
-        if update_cols:
-            known = {f["name"] for f in schema["fields"]}
-            unknown = sorted(set(update_cols) - known)
-            if unknown:
-                raise ValueError(
-                    f"{self.name}: MERGE UPDATE SET references unknown "
-                    f"column(s) {unknown}; table columns: {sorted(known)}"
-                )
+        # post-evolution: a SET may name a column this MERGE adds
+        self._check_set_columns("MERGE UPDATE", update_cols or {}, schema)
         if not multi:
             affected = files
         else:
@@ -1645,8 +1654,6 @@ class LakehouseTable:
                     keys, scan[on] == keys["__src_key"], "left_semi"
                 ),
             )
-        rewritten = set(affected)
-        keep = [f for f in files if f not in rewritten]
         # an evolved column reads NULL in pre-existing rows, exactly
         # the manifest-only ADD semantics, but uncommitted
         target = self._read_file_set(
@@ -1684,12 +1691,9 @@ class LakehouseTable:
             # UPDATE semantics (SQL standard, and this method's own
             # docstring): update_cols=None means UPDATE SET * (every
             # column from source); an explicit dict updates ONLY the
-            # listed columns — unlisted ones KEEP THE TARGET VALUE.
-            # (Review-pass r10 finding, reproduced: the old spelling
-            # took unlisted columns from source, so a SQL-door
-            # `UPDATE SET t.v = s.v` silently overwrote every other
-            # column too, and a delete-only MERGE rewrote matched rows
-            # from source.) An empty dict therefore means "no UPDATE
+            # listed columns — unlisted ones KEEP THE TARGET VALUE, so
+            # `UPDATE SET t.v = s.v` leaves every other column as the
+            # target holds it. An empty dict therefore means "no UPDATE
             # clause": matched rows survive byte-identical.
             if update_cols is None:
                 updated = F.col("__src").getField(c)
@@ -1709,22 +1713,17 @@ class LakehouseTable:
             .filter(F.col("__act") != "D")
             .select(*[out_col(c) for c in tcols])
         )
-        # no affected file and no inserts: the data is unchanged
-        new_files = (
-            self._write_files(merged, m.get("partition_spec", []))
-            if affected or insert
-            else []
+        # single commit carries BOTH the evolved schema and the data; no
+        # affected file and no inserts: the data is unchanged
+        return self._commit_rewrite(
+            parent,
+            m,
+            affected,
+            merged if affected or insert else None,
+            "merge",
+            schema=schema,
+            **({"defaults": defaults} if evolved else {}),
         )
-        # single commit carries BOTH the evolved schema and the data
-        out = {
-            "files": keep + new_files,
-            "schema": schema,
-            "op": "merge",
-            "rewritten": len(affected),
-        }
-        if evolved:
-            out["defaults"] = defaults
-        return self._commit(out, parent)
 
     # ---------- M4: rollback ----------
 
@@ -1775,11 +1774,22 @@ class LakehouseTable:
     def compact(self, target_partitions: int = 4) -> int:
         """rewrite_data_files: coalesce small files (M5). Reads the
         current snapshot and rewrites it as target_partitions files."""
-        parent = self.current_version()
-        df = self.read().coalesce(target_partitions)
-        new_files = self._write_files(df)
+        return self._rewrite_table(
+            lambda df: df.coalesce(target_partitions), "compact"
+        )
+
+    def _rewrite_table(self, transform, op: str) -> int:
+        """The whole-table rewrite behind compaction and re-clustering:
+        main's files, scanned under its schema, written back as
+        ``transform(scan)`` with its partition spec, replace them all."""
+        parent, m = self._existing_base()
+        df = transform(self._read_file_set(m["files"], m))
         return self._commit(
-            {"files": new_files, "schema": self.schema_json(), "op": "compact"},
+            {
+                "files": self._write_files(df, m.get("partition_spec", [])),
+                "schema": m["schema"],
+                "op": op,
+            },
             parent,
         )
 
@@ -1847,8 +1857,9 @@ class LakehouseTable:
 
     def _remove_data_files(self, paths) -> None:
         """Delete data files with their Hadoop checksum sidecars
-        (``.<name>.crc``); a write batch left holding only its
-        ``_SUCCESS`` markers (and emptied partition dirs) goes too."""
+        (``.<name>.crc``; a path already gone still takes its sidecar);
+        a write batch left holding only its ``_SUCCESS`` markers (and
+        emptied partition dirs) goes too."""
         batches = set()
         for f in paths:
             d, name = os.path.split(f)
@@ -1859,8 +1870,7 @@ class LakehouseTable:
             if len(rel) > 1 and rel[0] != "..":
                 batches.add(os.path.join(self.data_dir, rel[0]))
         for b in sorted(batches):
-            left = [n for _, _, names in os.walk(b) for n in names]
-            if "_SUCCESS" in left and set(left) <= {"_SUCCESS", "._SUCCESS.crc"}:
+            if _spent_batch(b):
                 shutil.rmtree(b, ignore_errors=True)
 
     def rewrite_manifests(self) -> int:
@@ -1872,11 +1882,9 @@ class LakehouseTable:
         many small manifests into few; a live file whose stats entry was
         lost gets it back from its parquet footer. Data files are
         untouched, exactly like Iceberg."""
-        parent, m = self._base()
-        if not m:
-            raise ValueError(f"table {self.name} does not exist")
+        parent, m = self._existing_base()
         files = sorted(dict.fromkeys(m["files"]))
-        stats = m.get("stats", {})
+        stats = _with_stats(self.root, m).get("stats", {})
         # a file whose stats were lost gets them back from its footer
         compact = {
             f: stats[f] if f in stats else _file_column_stats(f)
@@ -1943,6 +1951,11 @@ class LakehouseTable:
         mtime predates it are swept, so an in-flight writer's not-yet-
         committed files survive. Default sweeps regardless (tests);
         production callers should pass now-minus-grace.
+
+        Deletion debris goes too, under the same age rule: a checksum
+        sidecar whose data file is gone (reported by its own path) and
+        a write batch that holds only its ``_SUCCESS`` markers (reported
+        by its directory).
         """
         ms = [m for _, m in manifests(self.root)]
         live = {f for m in ms for f in m["files"]}
@@ -1966,17 +1979,26 @@ class LakehouseTable:
         if not os.path.isdir(self.data_dir):
             return removed
         # data files sit in per-batch subdirs (_write_files); walk the
-        # tree. Only *.parquet is swept (with its checksum sidecar) —
-        # _SUCCESS markers of LIVE batches are not orphans, and
-        # manifests never list them.
+        # tree. *.parquet is swept with its checksum sidecar; a sidecar
+        # whose data file is gone stands for that file. _SUCCESS markers
+        # of LIVE batches are not orphans, and manifests never list them.
         orphans = []
         for dirpath, _dirs, files in sorted(os.walk(self.data_dir)):
             for fn in sorted(files):
                 path = os.path.join(dirpath, fn)
-                if fn.endswith(".parquet") and path not in live and aged(path):
-                    orphans.append(path)
+                sidecar = fn.startswith(".") and fn.endswith(".parquet.crc")
+                if sidecar and fn[1:-4] in files:
+                    continue  # swept with its data file
+                data = os.path.join(dirpath, fn[1:-4] if sidecar else fn)
+                if data.endswith(".parquet") and data not in live and aged(path):
+                    orphans.append(data)
                     removed.append(os.path.relpath(path, self.data_dir))
         self._remove_data_files(orphans)
+        for b in sorted(os.listdir(self.data_dir)):
+            path = os.path.join(self.data_dir, b)
+            if _spent_batch(path) and aged(os.path.join(path, "_SUCCESS")):
+                shutil.rmtree(path, ignore_errors=True)
+                removed.append(b)
         return removed
 
     # ---------- M6: schema evolution ----------
@@ -1995,12 +2017,9 @@ class LakehouseTable:
         file is rewritten and compaction naturally graduates rows out of
         the default (rewritten files physically contain the column).
         """
-        from pyspark.sql.types import DataType
+        from pyspark.sql.types import DataType, StructField
 
-        parent = self.current_version()
-        m = self._head_manifest()
-        if not m:
-            raise ValueError(f"table {self.name} does not exist")
+        parent, m = self._existing_base()
         schema = m["schema"]
         if any(f["name"] == name for f in schema["fields"]):
             # a duplicate field would commit a corrupt schema every
@@ -2011,12 +2030,7 @@ class LakehouseTable:
         # stored as the type's JSON form, which StructType.fromJson
         # parses on every later read; DDL names ('int', 'bigint') are not
         schema["fields"].append(
-            {
-                "name": name,
-                "type": DataType.fromDDL(spark_type).jsonValue(),
-                "nullable": True,
-                "metadata": {},
-            }
+            StructField(name, DataType.fromDDL(spark_type)).jsonValue()
         )
         # ALWAYS record the current files as not-containing the new
         # column, so re-adding a previously DROPPED column reads NULL
@@ -2038,15 +2052,11 @@ class LakehouseTable:
             parent,
         )
 
-    def read_evolved(self, version: int | None = None) -> DataFrame:
-        """Alias of read(): the manifest schema already governs scans."""
-        return self.read(version)
-
-    def _guard_partition_source(self, op: str, col: str) -> None:
-        """Evolving a column a partition transform reads would break
-        every subsequent write's layout — refuse loudly (Iceberg makes
-        you evolve the partition spec first)."""
-        for spec in self._partition_spec():
+    def _guard_partition_source(self, op: str, col: str, m: dict) -> None:
+        """Evolving a column a partition transform of ``m`` reads would
+        break every subsequent write's layout — refuse loudly (Iceberg
+        makes you evolve the partition spec first)."""
+        for spec in m.get("partition_spec", []):
             if re.search(rf"\b{re.escape(col)}\b", spec):
                 raise ValueError(
                     f"{op}: column {col!r} is a partition source "
@@ -2059,28 +2069,22 @@ class LakehouseTable:
         scans simply stop selecting the physical column, Iceberg's
         drop-by-field-id behavior). Any rename/default bookkeeping for
         the column is dropped with it."""
-        parent = self.current_version()
-        self._guard_partition_source("drop_column", name)
-        schema = self.schema_json()
+        parent, m = self._existing_base()
+        self._guard_partition_source("drop_column", name, m)
+        schema = m["schema"]
         if name not in {f["name"] for f in schema["fields"]}:
             raise ValueError(f"drop_column: no column {name!r}")
         schema["fields"] = [f for f in schema["fields"] if f["name"] != name]
         manifest: dict = {
-            "files": self._files(),
+            "files": m["files"],
             "schema": schema,
             "op": f"drop_column:{name}",
         }
-        pm = self._read_manifest(self.main_head(), stats=False)
-        defaults = {
-            k: v for k, v in pm.get("defaults", {}).items() if k != name
-        }
-        if defaults or pm.get("defaults"):
-            manifest["defaults"] = defaults
-        renames = {
-            k: v for k, v in pm.get("renames", {}).items() if k != name
-        }
-        if renames or pm.get("renames"):
-            manifest["renames"] = renames
+        # an emptied map is written, or the commit would inherit the
+        # parent's entry for the dropped column
+        for key in ("defaults", "renames"):
+            if m.get(key):
+                manifest[key] = {k: v for k, v in m[key].items() if k != name}
         return self._commit(manifest, parent)
 
     def rename_column(self, old: str, new: str) -> int:
@@ -2092,9 +2096,9 @@ class LakehouseTable:
         name; scans resolve per file (:meth:`_scan_files`). Files
         written (or rewritten — compaction, CoW DML) after the rename
         carry the new name and graduate out of the mapping naturally."""
-        parent = self.current_version()
-        self._guard_partition_source("rename_column", old)
-        schema = self.schema_json()
+        parent, m = self._existing_base()
+        self._guard_partition_source("rename_column", old, m)
+        schema = m["schema"]
         names = {f["name"] for f in schema["fields"]}
         if old not in names:
             raise ValueError(f"rename_column: no column {old!r}")
@@ -2103,9 +2107,8 @@ class LakehouseTable:
         for f in schema["fields"]:
             if f["name"] == old:
                 f["name"] = new
-        pm = self._read_manifest(self.main_head(), stats=False)
-        renames = dict(pm.get("renames", {}))
-        cur_files = self._files()
+        renames = dict(m.get("renames", {}))
+        cur_files = m["files"]
         # chain-safe: files already mapped to an even-older physical
         # name keep that mapping; only the rest physically hold `old`
         prior = renames.pop(old, [])
@@ -2121,7 +2124,7 @@ class LakehouseTable:
             "op": f"rename_column:{old}->{new}",
             "renames": renames,
         }
-        defaults = pm.get("defaults", {})
+        defaults = m.get("defaults", {})
         if defaults:
             manifest["defaults"] = {
                 (new if k == old else k): v for k, v in defaults.items()
@@ -2162,7 +2165,7 @@ class LakehouseTable:
         except ValueError as e:
             raise ValueError(f"{e}; use changelog() instead") from None
         return self._read_file_set(
-            added, later[to_v] if to_v in later else self._read_manifest(to_v)
+            added, later.get(to_v) or self._read_manifest(to_v, stats=False)
         )
 
     def changelog(self, from_version: int, to_version: int | None = None) -> DataFrame:
@@ -2201,7 +2204,7 @@ class LakehouseTable:
         # drop/rename boundary simply errors.
         from pyspark.sql.types import StructType
 
-        final_m = later[to_v] if to_v in later else self._read_manifest(to_v)
+        final_m = later.get(to_v) or self._read_manifest(to_v, stats=False)
         final_schema = StructType.fromJson(final_m["schema"])
 
         def _align(df: DataFrame, pair_v: int) -> DataFrame:
@@ -2298,87 +2301,57 @@ class LakehouseTable:
         transform of ``col`` (bucket/truncate transforms, or spec eras
         from before partition evolution) are KEPT — safe over-read,
         exactly how Iceberg handles partition-spec evolution. The
-        residual predicate is still applied, so correctness never
-        depends on pruning."""
-        from pyspark.sql.types import StructType
+        residual predicate ``lo <= col < hi`` is still applied, its
+        bounds built by the dtype gate every range read shares
+        (:meth:`_range_bounds`), so correctness never depends on
+        pruning; bounds that are not ISO-temporal prune no file.
 
-        def iso(v) -> str:
-            # Canonicalize EVERY bound to 'YYYY-MM-DD HH:MM:SS...' — the
-            # trunc() slices below are positional, so a raw date-only or
-            # 'T'-separated string would truncate wrongly and silently
-            # prune files that contain matching rows.
-            out = temporal_bound_iso(v)
-            assert out is not None, (
-                f"non-temporal bound for time-transform pruning: {v!r}"
-            )
-            return out
+        The pruning reads partition values from the file PATHS, not
+        from the stats manifests, on purpose: Spark writes ``timestamp``
+        columns as INT96, whose parquet footers carry no min/max, so for
+        such a column the path is the only thing that can prune
+        (``test_partition_spec_survives_reopen`` shows it)."""
+        # date_trunc's string form for each unit, derived from the ISO
+        # bound — lexicographic compare is then exact
+        kept_chars = {"years": 4, "months": 7, "days": 10, "hours": 13}
 
         def trunc(name: str, s: str) -> str:
-            # date_trunc's string form for each unit, derived from the
-            # ISO bound — lexicographic compare is then exact
-            if name == "years":
-                return s[:4] + "-01-01 00:00:00"
-            if name == "months":
-                return s[:7] + "-01 00:00:00"
-            if name == "days":
-                return s[:10] + " 00:00:00"
-            return s[:13] + ":00:00"  # hours
+            n = kept_chars[name]
+            return s[:n] + "0000-01-01 00:00:00"[n:]
 
-        lo_iso, hi_iso = iso(lo), iso(hi)
-
-        def residual(frame: DataFrame) -> DataFrame:
-            # TEMPORAL columns compare the normalized ISO bounds CAST
-            # to the column's own dtype — the same treatment
-            # read_range.bound() applies: a naive Python
-            # datetime handed to Spark raw becomes a ZONED literal
-            # converted through the driver process's LOCAL timezone, so
-            # comparing it against an NTZ column would shift the range
-            # by the host's UTC offset.  A date-shaped STRING column
-            # (e.g. a truncate()-partitioned ISO-day column) compares
-            # the RAW bounds verbatim — padding them to '... 00:00:00'
-            # would over-filter its boundary rows lexicographically
-            # (the same dtype gate as pruned_files).
-            dt = frame.schema[col].dataType
-            if is_temporal_dtype(dt):
-                lo_l, hi_l = F.lit(lo_iso).cast(dt), F.lit(hi_iso).cast(dt)
-            else:
-                lo_l, hi_l = F.lit(lo), F.lit(hi)
-            return frame.filter((F.col(col) >= lo_l) & (F.col(col) < hi_l))
-
-        # ONE snapshot-log walk + manifest read serves file list,
-        # schema and the scan
-        head = self.main_head()
-        if head == 0:
-            raise ValueError(f"table {self.name} does not exist")
-        m = self._read_manifest(head)
+        # ONE snapshot-log walk serves file list, schema and the scan
+        m = self._existing_base()[1]
+        lo_l, hi_l = self._range_bounds(m, col, lo, hi)
+        # every bound is canonical 'YYYY-MM-DD HH:MM:SS...': the trunc()
+        # slices are positional, so a raw date-only or 'T'-separated
+        # string would truncate wrongly and prune files with matching rows
+        lo_iso, hi_iso = temporal_bound_iso(lo), temporal_bound_iso(hi)
+        prefixes = (
+            {f"p_{n}_{col}": n for n in kept_chars}
+            if lo_iso is not None and hi_iso is not None
+            else {}
+        )
         files = m["files"]
-        prefixes = {f"p_{n}_{col}": n for n in ("years", "months", "days", "hours")}
-        keep = []
-        for f in files:
-            verdict = None  # None = no transform of col on this path
-            for k, v in partition_segments(f):
-                if k in prefixes:
-                    n = prefixes[k]
-                    # partition value is the truncated period START; a
-                    # period overlaps [lo, hi] iff its start is within
-                    # [trunc(lo), trunc(hi)] (inclusive both ends).
-                    # AND across segments: a path carrying several time
-                    # transforms of col (e.g. days+hours) must satisfy
-                    # every one — each verdict alone is sound, so the
-                    # conjunction is the tightest sound prune.
-                    seg_ok = trunc(n, lo_iso) <= v <= trunc(n, hi_iso)
-                    verdict = seg_ok if verdict is None else (verdict and seg_ok)
-            if verdict is None or verdict:
-                keep.append(f)
-        schema = StructType.fromJson(m["schema"])
-        if not keep:
-            empty = self.spark.createDataFrame([], schema)
-            out = residual(empty)
-            return (out, [], list(files)) if with_files else (out, 0, len(files))
-        df = self._scan_files(sorted(keep), m)
-        out = residual(df)
+        # a partition value is the truncated period START; a period
+        # overlaps [lo, hi] iff its start is within [trunc(lo), trunc(hi)]
+        # (inclusive both ends). A path carrying several time transforms
+        # of col (e.g. days+hours) must satisfy every one — each alone is
+        # sound, so the conjunction is the tightest sound prune; a path
+        # with none is kept
+        keep = sorted(
+            f
+            for f in files
+            if all(
+                trunc(prefixes[k], lo_iso) <= v <= trunc(prefixes[k], hi_iso)
+                for k, v in partition_segments(f)
+                if k in prefixes
+            )
+        )
+        out = self._read_file_set(keep, m).filter(
+            (F.col(col) >= lo_l) & (F.col(col) < hi_l)
+        )
         if with_files:
-            return out, sorted(keep), list(files)
+            return out, keep, list(files)
         return out, len(keep), len(files)
 
     def overwrite_partitions(self, df: DataFrame) -> int:
@@ -2401,10 +2374,10 @@ class LakehouseTable:
         across spec changes). On a missing table it is an unpartitioned
         create; ``create(df, partition_by=...)`` makes a partitioned one.
         """
-        parent = self.current_version()
-        if parent == 0:
+        parent, m = self._base()
+        if not m:
             return self.create(df)
-        spec = self._partition_spec()
+        spec = m.get("partition_spec", [])
         cols = [partition_transform(s) for s in spec]
         names = [n for n, _ in cols]
         touched = {
@@ -2416,20 +2389,17 @@ class LakehouseTable:
         }
 
         def file_partition(f: str):
-            vals = {}
-            for k, v in partition_segments(f):
-                if k in names:
-                    vals[k] = v
+            vals = dict(partition_segments(f))
             # missing derived column (older spec era) => tuple with None,
             # which can never equal a touched tuple of strings => kept
             return tuple(vals.get(n) for n in names)
 
-        keep = [f for f in self._files() if file_partition(f) not in touched]
+        keep = [f for f in m["files"] if file_partition(f) not in touched]
         new_files = self._write_files(df, spec)
         return self._commit(
             {
                 "files": keep + new_files,
-                "schema": self.schema_json(),
+                "schema": m["schema"],
                 "op": "overwrite_partitions",
                 "replaced_partitions": sorted("/".join(t) for t in touched),
             },
@@ -2440,11 +2410,11 @@ class LakehouseTable:
         """Partition evolution (M7): future writes use the new spec; old
         files keep their layout — exactly Iceberg's spec-versioning.
         Manifest-only commit, no rewrite."""
-        parent = self.current_version()
+        parent, m = self._existing_base()
         return self._commit(
             {
-                "files": self._files(),
-                "schema": self.schema_json(),
+                "files": m["files"],
+                "schema": m["schema"],
                 "op": f"evolve_partitioning:{','.join(new_specs)}",
                 "partition_spec": list(new_specs),
             },
@@ -2482,17 +2452,13 @@ class LakehouseTable:
         is the WAP footgun); IF NOT EXISTS makes it a no-op returning
         the existing pointer; re-pointing is replace_branch. Defaults
         to main_head(), never a staged branch snapshot."""
-        refs = self._refs()
-        if name in refs["branches"]:
-            if if_not_exists:
-                return refs["branches"][name]
-            raise ValueError(
-                f"branch {name} exists (use REPLACE BRANCH to re-point)"
-            )
-        v = at_version if at_version is not None else self.main_head()
-        refs["branches"][name] = v
-        self._save_refs(refs)
-        return v
+        return self._create_ref(
+            "branches",
+            name,
+            at_version,
+            if_not_exists,
+            f"branch {name} exists (use REPLACE BRANCH to re-point)",
+        )
 
     def create_tag(
         self,
@@ -2500,29 +2466,43 @@ class LakehouseTable:
         at_version: int | None = None,
         if_not_exists: bool = False,
     ) -> int:
+        return self._create_ref(
+            "tags",
+            name,
+            at_version,
+            if_not_exists,
+            f"tag {name} exists (tags are immutable)",
+        )
+
+    def _create_ref(
+        self,
+        kind: str,
+        name: str,
+        at_version: int | None,
+        if_not_exists: bool,
+        exists: str,
+    ) -> int:
         refs = self._refs()
-        if name in refs["tags"]:
+        if name in refs[kind]:
             if if_not_exists:
-                return refs["tags"][name]
-            raise ValueError(f"tag {name} exists (tags are immutable)")
+                return refs[kind][name]
+            raise ValueError(exists)
         v = at_version if at_version is not None else self.main_head()
-        refs["tags"][name] = v
+        refs[kind][name] = v
         self._save_refs(refs)
         return v
 
     def drop_branch(self, name: str) -> int:
-        refs = self._refs()
-        if name not in refs["branches"]:
-            raise KeyError(f"unknown branch {name}")
-        v = refs["branches"].pop(name)
-        self._save_refs(refs)
-        return v
+        return self._drop_ref("branches", "branch", name)
 
     def drop_tag(self, name: str) -> int:
+        return self._drop_ref("tags", "tag", name)
+
+    def _drop_ref(self, kind: str, label: str, name: str) -> int:
         refs = self._refs()
-        if name not in refs["tags"]:
-            raise KeyError(f"unknown tag {name}")
-        v = refs["tags"].pop(name)
+        if name not in refs[kind]:
+            raise KeyError(f"unknown {label} {name}")
+        v = refs[kind].pop(name)
         self._save_refs(refs)
         return v
 
@@ -2640,7 +2620,10 @@ class LakehouseTable:
         if name not in refs["branches"]:
             raise KeyError(f"unknown branch {name}")
         base = refs["branches"][name]
-        schema = self._read_manifest(base, stats=False)["schema"]
+        bm = self._read_manifest(base, stats=False)
+        # files land in main's layout
+        parent, m = self._base_with(base, bm)
+        schema = bm["schema"]
         if positional:
             df = self._bind_positional(df, schema)
         cols = [f["name"] for f in schema["fields"]]
@@ -2649,8 +2632,9 @@ class LakehouseTable:
             raise ValueError(
                 f"append to branch {name}: frame lacks column(s) {missing}"
             )
-        parent = self.current_version()
-        files = self._files(base) + self._write_files(df.select(cols))
+        files = bm["files"] + self._write_files(
+            df.select(cols), m.get("partition_spec", [])
+        )
         v = self._commit(
             {
                 "files": files,
@@ -2671,7 +2655,7 @@ class LakehouseTable:
 
     def files(self) -> DataFrame:
         """The `t.files` metadata relation: path + per-column min/max."""
-        m = self._read_manifest(self.main_head())
+        m = _with_stats(self.root, self._existing_base()[1])
         rows = [
             (f, json.dumps(m.get("stats", {}).get(f, {})))
             for f in m["files"]
@@ -2682,9 +2666,7 @@ class LakehouseTable:
         """Files whose [min,max] for col intersects [lo,hi] — the
         planner's scan set for the range predicate. Files without stats
         are kept (safe)."""
-        m = self._head_manifest()
-        if not m:
-            raise ValueError(f"table {self.name} does not exist")
+        m = self._existing_base()[1]
         return self._plan_files(m, self._range_cond(m, col, lo, hi))[0]
 
     def rewrite_sorted(self, col: str, target_files: int = 8) -> int:
@@ -2696,20 +2678,10 @@ class LakehouseTable:
         min/max pruning then hits ~1/target_files of the files for a
         point/range predicate instead of all of them.
         """
-        parent = self.current_version()
-        df = (
-            self.read()
-            .repartitionByRange(target_files, F.col(col))
-            .sortWithinPartitions(col)
-        )
-        new_files = self._write_files(df)
-        return self._commit(
-            {
-                "files": new_files,
-                "schema": self.schema_json(),
-                "op": f"rewrite_sorted:{col}",
-            },
-            parent,
+        return self._rewrite_table(
+            lambda df: df.repartitionByRange(target_files, F.col(col))
+            .sortWithinPartitions(col),
+            f"rewrite_sorted:{col}",
         )
 
     def rewrite_zorder(
@@ -2746,20 +2718,6 @@ class LakehouseTable:
                 f"bits must be in [1, 31] (the z-value is 2*bits bits of "
                 f"a signed 64-bit long), got {bits}"
             )
-        parent = self.current_version()
-        df = self.read()
-        bounds = df.agg(
-            F.min(F.col(col_a).cast("double")).alias("a_lo"),
-            F.max(F.col(col_a).cast("double")).alias("a_hi"),
-            F.min(F.col(col_b).cast("double")).alias("b_lo"),
-            F.max(F.col(col_b).cast("double")).alias("b_hi"),
-        ).collect()[0]
-        if bounds["a_lo"] is None or bounds["b_lo"] is None:
-            raise ValueError(
-                f"rewrite_zorder({col_a!r}, {col_b!r}): no numeric values "
-                "to cluster on (empty table, or a column that is "
-                "non-numeric / all NULL after cast to double)"
-            )
         max_v = (1 << bits) - 1
 
         def norm(c: str, lo: float, hi: float):
@@ -2770,39 +2728,43 @@ class LakehouseTable:
                 F.floor(scaled * (max_v + 1)).cast("long"),
             )
 
-        na = norm(col_a, bounds["a_lo"], bounds["a_hi"])
-        nb = norm(col_b, bounds["b_lo"], bounds["b_hi"])
-        z = F.lit(0).cast("long")
-        for i in range(bits):
-            z = z.bitwiseOR(
-                F.shiftleft(F.shiftright(na, i).bitwiseAND(F.lit(1)), 2 * i)
-            ).bitwiseOR(
-                F.shiftleft(F.shiftright(nb, i).bitwiseAND(F.lit(1)), 2 * i + 1)
+        def zorder(df: DataFrame) -> DataFrame:
+            bounds = df.agg(
+                F.min(F.col(col_a).cast("double")).alias("a_lo"),
+                F.max(F.col(col_a).cast("double")).alias("a_hi"),
+                F.min(F.col(col_b).cast("double")).alias("b_lo"),
+                F.max(F.col(col_b).cast("double")).alias("b_hi"),
+            ).collect()[0]
+            if bounds["a_lo"] is None or bounds["b_lo"] is None:
+                raise ValueError(
+                    f"rewrite_zorder({col_a!r}, {col_b!r}): no numeric values "
+                    "to cluster on (empty table, or a column that is "
+                    "non-numeric / all NULL after cast to double)"
+                )
+            na = norm(col_a, bounds["a_lo"], bounds["a_hi"])
+            nb = norm(col_b, bounds["b_lo"], bounds["b_hi"])
+            z = F.lit(0).cast("long")
+            for i in range(bits):
+                z = z.bitwiseOR(
+                    F.shiftleft(F.shiftright(na, i).bitwiseAND(F.lit(1)), 2 * i)
+                ).bitwiseOR(
+                    F.shiftleft(F.shiftright(nb, i).bitwiseAND(F.lit(1)), 2 * i + 1)
+                )
+            return (
+                df.withColumn("__z", z)
+                .repartitionByRange(target_files, F.col("__z"))
+                .sortWithinPartitions("__z")
+                .drop("__z")
             )
-        zdf = (
-            df.withColumn("__z", z)
-            .repartitionByRange(target_files, F.col("__z"))
-            .sortWithinPartitions("__z")
-            .drop("__z")
-        )
-        new_files = self._write_files(zdf)
-        return self._commit(
-            {
-                "files": new_files,
-                "schema": self.schema_json(),
-                "op": f"rewrite_zorder:{col_a},{col_b}",
-            },
-            parent,
-        )
+
+        return self._rewrite_table(zorder, f"rewrite_zorder:{col_a},{col_b}")
 
     def read_range(self, col: str, lo, hi) -> DataFrame:
         """Range scan: the planned files (min/max skipping) + the
         residual filter, both from one range condition (see
         :meth:`_range_cond` for the bound conventions)."""
         # one snapshot-log walk serves planning, schema and the scan
-        m = self._head_manifest()
-        if not m:
-            raise ValueError(f"table {self.name} does not exist")
+        m = self._existing_base()[1]
         cond = self._range_cond(m, col, lo, hi)
         return self._read_file_set(self._plan_files(m, cond)[0], m).filter(cond)
 
@@ -2828,17 +2790,14 @@ def cherrypick_snapshot(table: LakehouseTable, version: int) -> int:
     op = m["op"]
     if op not in ("append", "create") and not op.startswith("branch_append:"):
         raise ValueError(f"can only cherry-pick append snapshots, got {op!r}")
-    base = content_parent(m)
-    parent_files = set(table._files(base))
+    parent_files = set(table._files(content_parent(m)))
     delta = [f for f in m["files"] if f not in parent_files]
-    parent = table.current_version()
-    cur = table._files()  # one head walk, not one per delta file
-    cur_set = set(cur)
-    files = cur + [f for f in delta if f not in cur_set]
+    parent, head = table._base_with(version, m)
+    cur_set = set(head["files"])
     return table._commit(
         {
-            "files": files,
-            "schema": table.schema_json(),
+            "files": head["files"] + [f for f in delta if f not in cur_set],
+            "schema": head["schema"],
             "op": f"cherrypick_v{version}",
         },
         parent,

@@ -198,7 +198,8 @@ class RestCatalogServer:
             # prefix tells the client which catalog segment to insert in
             # later routes — the REST spec's multi-tenancy hook. BOTH
             # 'overrides' and 'prefix' are optional per the spec; the
-            # prefix-less posture omits them entirely (ADVICE r16).
+            # prefix-less posture omits them entirely, and clients must
+            # accept that.
             if self.prefixless:
                 return 200, json.dumps({"defaults": {}}).encode()
             return 200, json.dumps(
@@ -254,7 +255,7 @@ class RestCatalogServer:
         # .../tables/{table} -> LoadTableResult
         # main's head and schema, never a branch's staged snapshot
         tbl_root = os.path.join(ns_dir, rest[3])
-        v, manifest = main_walk(tbl_root, log_head(tbl_root), stats=False)
+        v, manifest = main_walk(tbl_root, log_head(tbl_root))
         if not v:
             return 404, _error_body(
                 404, f"table {rest[1]}.{rest[3]} not found",

@@ -481,7 +481,7 @@ def execute_insert(engine, sql: str) -> DataFrame:
         # re-running the source SELECT — a non-deterministic source
         # would otherwise report a count differing from the rows
         # actually written.
-        base = content_parent(t._read_manifest(version))
+        base = content_parent(t._read_manifest(version, stats=False))
         n = t.record_count(version) - t.record_count(base)
         return _one_row(
             engine, _COMMIT_RESULT, f"{table}.branch_{branch}", "insert_branch",
@@ -489,14 +489,13 @@ def execute_insert(engine, sql: str) -> DataFrame:
         )
     if mode == "INTO":
         # SQL INSERT binds positionally (a VALUES frame arrives named
-        # col1/col2 — name-based append would reject or, worse before
-        # r7's validation, silently null the rows)
+        # col1/col2, which the name-based append rejects)
         version = commit_with_retries(lambda: t.append_positional(df))
         op = "insert"
     else:
         # OVERWRITE binds positionally too: the raw overwrite() commits
-        # the FRAME's schema, so a VALUES overwrite silently renamed
-        # the table's columns to col1/col2 (review-pass r15)
+        # the FRAME's schema, so a VALUES overwrite would rename the
+        # table's columns to col1/col2
         version = commit_with_retries(lambda: t.overwrite_positional(df))
         op = "insert_overwrite"
     engine.refresh_view(table)

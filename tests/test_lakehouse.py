@@ -1189,6 +1189,29 @@ def test_read_pruned_residual_string_column_boundary(spark, wh):
     assert got == [2, 5], f"boundary day dropped: {got}"
 
 
+def test_read_pruned_bounds_pass_the_range_dtype_gate(spark, wh):
+    """read_pruned builds its bounds with the dtype gate every range read
+    shares: a bound that is not ISO-temporal is compared verbatim on a
+    string column (and prunes no file), and raises the contracted
+    ValueError on a temporal column, also under ``python -O``."""
+    import datetime
+
+    rows = [
+        (datetime.datetime(2024, 1, d, 12), f"2024-01-{d:02d}", d)
+        for d in (2, 5, 9)
+    ]
+    t = LakehouseTable(spark, wh, "gate")
+    t.create(
+        spark.createDataFrame(rows, "ts timestamp_ntz, d string, i long"),
+        partition_by=["days(ts)"],
+    )
+    out, kept, total = t.read_pruned("d", "2024-01-0", "2024-01-06")
+    assert kept == total
+    assert sorted(r.i for r in out.collect()) == [2, 5]
+    with pytest.raises(ValueError, match="unsupported temporal bound"):
+        t.read_pruned("ts", "2024-01-02 08:30.5", "2024-01-06")
+
+
 def test_pruned_files_self_heals_legacy_date_stats(spark, wh):
     """Review-pass r15: manifests carry file stats FORWARD across
     commits, so stats written before the midnight canonicalization
@@ -1804,8 +1827,8 @@ def test_commit_foreign_manifest_replacement_raises(wh):
 
     orig_read = t._read_manifest
 
-    def tampered_read(version):
-        m = orig_read(version)
+    def tampered_read(version, stats=True):
+        m = orig_read(version, stats)
         if version == 2:
             m = dict(m, writer="somebody-else")
         return m
@@ -2726,12 +2749,50 @@ def test_expire_and_orphan_sweep_remove_checksum_sidecars(spark, wh):
     live = {os.path.relpath(f, t.data_dir).split(os.sep)[0] for f in t._files()}
     assert batches() == live
     # an uncommitted write is an orphan batch: swept whole
-    t._write_files(spark.range(5).selectExpr("id AS k"))
+    t._write_files(spark.range(5).selectExpr("id AS k"), [])
     assert len(batches()) == len(live) + 1
     removed = t.remove_orphan_files()
     assert removed and all(r.endswith(".parquet") for r in removed)
     assert batches() == live and debris() == []
     assert t.read().count() == 27
+
+
+def test_orphan_sweep_removes_deletion_debris(spark, wh):
+    """Debris that deleting data files without their sidecars and batch
+    dirs leaves behind: a checksum sidecar whose data file is gone and
+    a write batch holding only its _SUCCESS markers. The sweep removes
+    both, honours ``older_than_ms`` and leaves the live table whole."""
+    import time
+
+    t = LakehouseTable(spark, wh, "t")
+    t.create(spark.range(0, 30, 1, 2).selectExpr("id AS k"))
+    live_batch = os.path.dirname(t._files()[0])
+    sidecar = os.path.join(live_batch, ".part-00009-gone.snappy.parquet.crc")
+    spent = os.path.join(t.data_dir, "0123456789ab")
+    spent_with_sidecar = os.path.join(t.data_dir, "ba9876543210")
+    planted = [
+        sidecar,
+        os.path.join(spent, "_SUCCESS"),
+        os.path.join(spent, "._SUCCESS.crc"),
+        os.path.join(spent_with_sidecar, "_SUCCESS"),
+        os.path.join(spent_with_sidecar, ".part-00000-x.snappy.parquet.crc"),
+    ]
+    for p in planted:
+        os.makedirs(os.path.dirname(p), exist_ok=True)
+        with open(p, "w"):
+            pass
+    assert t.remove_orphan_files(older_than_ms=0) == []
+    assert all(os.path.exists(p) for p in planted)
+    removed = t.remove_orphan_files(older_than_ms=int(time.time() * 1000) + 60_000)
+    assert sorted(removed) == sorted([
+        os.path.relpath(sidecar, t.data_dir),
+        os.path.relpath(planted[-1], t.data_dir),
+        "0123456789ab",
+    ])
+    assert not any(os.path.exists(p) for p in planted)
+    assert not os.path.exists(spent) and not os.path.exists(spent_with_sidecar)
+    assert os.listdir(t.data_dir) == [os.path.basename(live_batch)]
+    assert t.read().count() == 30
 
 
 def test_racing_commits_leak_no_stats_manifest(spark, wh):

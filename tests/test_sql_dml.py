@@ -9,6 +9,7 @@ what must parse, into what, and what must be rejected loudly.
 
 from __future__ import annotations
 
+import os
 import shutil
 import tempfile
 
@@ -1267,3 +1268,80 @@ def test_sql_door_writes_open_the_parent_manifest_at_most_twice(
     finally:
         monkeypatch.setattr(builtins, "open", real_open)
         spark.catalog.dropTempView("opens_src")
+
+
+def test_table_operations_open_their_base_manifest_at_most_twice(
+    spark, tmp_path, monkeypatch
+):
+    """Every table operation that commits reads the manifest it commits
+    against once for its base and once in the commit; the metadata
+    readers ``files()`` and ``record_count()`` read main's head once. A
+    metadata-only commit opens no stats manifest."""
+    import builtins
+    import collections
+
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
+        STATS_DIR,
+        cherrypick_snapshot,
+    )
+
+    eng = Engine(spark, warehouse=str(tmp_path))
+    t = _clustered_table(spark, eng, "base_t")
+    frame = spark.range(0, 8, 1, 2).selectExpr("id AS k", "id * 10 AS v")
+    values = spark.createDataFrame([(1, 2)], "a long, b long")
+    real_open = builtins.open
+    opens: collections.Counter = collections.Counter()
+
+    def counting_open(file, *args, **kwargs):
+        if isinstance(file, str):
+            opens[file] += 1
+        return real_open(file, *args, **kwargs)
+
+    def counted(op):
+        opens.clear()
+        monkeypatch.setattr(builtins, "open", counting_open)
+        try:
+            return op()
+        finally:
+            monkeypatch.setattr(builtins, "open", real_open)
+
+    stats_dir = os.path.join(t.root, STATS_DIR)
+    metadata_only = {"add_column", "rename_column", "drop_column",
+                     "evolve_partitioning"}
+    ops = [
+        ("add_column", lambda: t.add_column("c", "string")),
+        ("rename_column", lambda: t.rename_column("c", "d")),
+        ("drop_column", lambda: t.drop_column("d")),
+        ("evolve_partitioning", lambda: t.evolve_partitioning(["bucket(2, k)"])),
+        ("overwrite_partitions", lambda: t.overwrite_partitions(frame)),
+        ("compact", lambda: t.compact(2)),
+        ("rewrite_sorted", lambda: t.rewrite_sorted("k", target_files=2)),
+        ("rewrite_zorder", lambda: t.rewrite_zorder("k", "v", target_files=2)),
+        ("rewrite_manifests", t.rewrite_manifests),
+        ("overwrite", lambda: t.overwrite(frame)),
+        ("overwrite_positional", lambda: t.overwrite_positional(values)),
+        ("rollback_to", lambda: t.rollback_to(1)),
+        ("write_to_branch", lambda: t.write_to_branch("b", frame)),
+        # the branch's head is now the staged log head
+        ("write_to_branch", lambda: t.write_to_branch("b", frame)),
+        ("cherrypick_snapshot",
+         lambda: cherrypick_snapshot(t, t.current_version())),
+    ]
+    for name, op in ops:
+        if name == "write_to_branch" and "b" not in t._refs()["branches"]:
+            t.create_branch("b")
+        parent = t._manifest_path(t.current_version())
+        counted(op)
+        assert t._manifest_path(t.current_version()) != parent, name
+        assert 1 <= opens[parent] <= 2, (name, opens[parent])
+        if name in metadata_only:
+            stats_opens = sum(
+                n for f, n in opens.items() if f.startswith(stats_dir)
+            )
+            assert stats_opens == 0, (name, stats_opens)
+    head = t._manifest_path(t.main_head())
+    for name, op in (("files", lambda: t.files().collect()),
+                     ("record_count", t.record_count)):
+        counted(op)
+        assert opens[head] == 1, (name, opens[head])

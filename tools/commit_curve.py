@@ -140,7 +140,7 @@ def measure(spark, n: int, work: str, appends: int = 3) -> dict:
 
     commit_ms, commit_bytes, stats_bytes = [], [], []
     for j in range(appends):
-        new = t._write_files(_frame(spark, work, (n + j) * ROWS))
+        new = t._write_files(_frame(spark, work, (n + j) * ROWS), [])
         parent = t.current_version()
         files = t._files() + new
         schema = t.schema_json()

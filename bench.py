@@ -11,10 +11,8 @@ collect, no disk write) — the honest measure of plan cost.
 
 from __future__ import annotations
 
-import glob
 import json
 import os
-import re
 import sys
 import time
 import urllib.request
@@ -28,22 +26,18 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def bench_layout(sf_dir: str) -> str:
-    """Multi-file copy of the fixture dir for benchmarking (VERDICT-r17
-    #2): the driver's fixtures are ONE parquet file per table, so every
-    scan-rooted stage inherits 1-2 tasks — floors then measure a
-    fixture artifact (plus the repartition() workarounds it forced into
-    x24/x49) instead of the operators.  A real 100 TB table arrives as
+    """Multi-file copy of the fixture dir for benchmarking: the fixtures
+    are ONE parquet file per table, so every scan-rooted stage
+    would inherit 1-2 tasks and the floors would measure a fixture
+    artifact instead of the operators. A real 100 TB table arrives as
     thousands of splits; 16 order-preserving slices per table restore
     that shape at fixture scale with NO extra shuffle in any plan.
 
     Materialized once per source fingerprint under /tmp and reused
-    (pure pyarrow — runs before the SparkSession exists).  Opt out with
-    SPARK_GRAFT_BENCH_LAYOUT=single (e.g. to A/B the layouts).
-    Degrades to the source dir on any failure: the bench must never
-    die on its own plumbing.
+    (pure pyarrow — runs before the SparkSession exists). Degrades to
+    the source dir on any failure: the bench must never die on its own
+    plumbing, and the result then records ``"layout": "single"``.
     """
-    if os.environ.get("SPARK_GRAFT_BENCH_LAYOUT", "multi16") == "single":
-        return sf_dir
     try:
         import hashlib
         import shutil
@@ -56,11 +50,9 @@ def bench_layout(sf_dir: str) -> str:
         sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), "tools"))
         from make_layout_fixtures import write_sliced
 
-        # fingerprint on ns-mtime + size + parquet row count (review-
-        # pass r18: whole-second mtime + size let a regenerated fixture
-        # alias to the stale cached layout — same row count and width
-        # within one second — and the multifile16 axis would then sweep
-        # data the suite no longer uses)
+        # fingerprint on ns-mtime + size + parquet row count: whole-second
+        # mtime + size would let a fixture regenerated within one second
+        # (same row count and width) alias to the stale cached layout
         stats = []
         for t in sorted(TABLES):
             f = os.path.join(sf_dir, f"{t}.parquet")
@@ -76,9 +68,8 @@ def bench_layout(sf_dir: str) -> str:
         if os.path.exists(marker):
             return dst
         # build in a PRIVATE mkdtemp and write the marker BEFORE the
-        # rename (review-pass r18: a shared dst+'.building' let two
-        # racing processes interleave into a _COMPLETE-marked dir
-        # missing tables — permanently poisoning the cache)
+        # rename: a shared build dir would let two racing processes
+        # interleave into a _COMPLETE-marked dir missing tables
         os.makedirs(parent, exist_ok=True)
         tmp = tempfile.mkdtemp(prefix=f"{fp}.", dir=parent)
         for t in TABLES:
@@ -102,9 +93,11 @@ def bench_layout(sf_dir: str) -> str:
         print(f"bench_layout: falling back to {sf_dir}: {e}", file=sys.stderr)
         return sf_dir
 
+
 #: Headline set: one representative per operator family, weighted toward
 #: the plans that dominate real workloads (scan-agg, star join, window,
-#: distinct, as-of, dedup, similarity, text).
+#: distinct, as-of, dedup, similarity, text). "value"/"queries" sum this
+#: set only, so it stays fixed; heavy new plans report under ADDITIONS.
 HEADLINE = [
     "q1_pricing_summary",
     "j9_star_multiway",
@@ -127,36 +120,33 @@ HEADLINE = [
     "x8_sessionization",
     "x9_doc_chunking",
     "x10_int8_quantization",
-    # round-6 additions — one fast representative per new family
+    # runtime filter, Python data source, interval frame, bitmap
+    # distinct, URL parsing, bigram LM
     "j13_bloom_runtime_filter",
     "s13_python_datasource",
     "w6_interval_range_frame",
     "a10_bitmap_distinct",
     "x21_url_parsing",
     "x22_bigram_lm",
-    # round-7 additions: the respelled distributed prefix sum (plan
-    # changed — keep it honest under the clock), the one-pass
-    # profiler (single-aggregate telemetry shape), paragraph dedup
-    # (digest-window + reassembly — the round's new dedup plan shape),
-    # and the JL projection (mapInPandas matmul throughput)
+    # distributed prefix sum, one-pass profiler (single aggregate),
+    # paragraph dedup (digest window + reassembly), JL projection
+    # (mapInPandas matmul throughput)
     "x23_vocab_growth",
     "x25_table_profile",
     "x27_paragraph_dedup",
     "x29_random_projection",
     # stride-1 k-gram span dedup: the corpus-linear explode + digest
-    # aggregate + island-merge window — the heaviest new r7 plan shape
+    # aggregate + island-merge window
     "x34_dup_span_detect",
     # DS-suite representative: per-basket self-join pair explosion +
     # pair aggregate + deterministic top-k cut
     "qd6_basket_pairs",
-    # iterative-algorithm representative: 8 Pregel-style power
-    # iterations (join + groupBy per round) over the host link graph
+    # iterative algorithm: 8 Pregel-style power iterations (join +
+    # groupBy per round) over the host link graph
     "x35_host_pagerank",
-    # round-8 additions: DSIR importance scoring (corpus-linear token
-    # explode + broadcast 256-row bucket-score join + TakeOrdered),
-    # CCNet perplexity terciles (bigram LM + chunked percent_rank — the
-    # skew-proof window respell under the clock), and the ordered
-    # funnel (chained per-user conditional MIN aggregates)
+    # DSIR importance scoring (token explode + broadcast bucket-score
+    # join + TakeOrdered), CCNet perplexity terciles (bigram LM +
+    # chunked percent_rank), the ordered funnel (chained per-user MINs)
     "x38_dsir_importance",
     "x43_perplexity_buckets",
     "qd9_funnel_analysis",
@@ -164,13 +154,11 @@ HEADLINE = [
     # argmax broadcast -> map-side replace) rounds with per-round
     # state cache — distinct from x35's join+groupBy iteration
     "x46_bpe_merges",
-    # round-9 additions (r8 verdict #5): the r8 heavyweights the shared
-    # regression signal could not yet see — line-rule filtering +
-    # reassembly (x44), the (token, doc) posting-list build (x45), the
-    # 256-cell count-min sketch + broadcast probe (x47), the integer
-    # chi-square drift report's double corpus scan (x48), RFM's triple
-    # chunked percent_rank (qd10), last-touch attribution's as-of-style
-    # window (qd11), and the streaming history-dedup batch twin (t18)
+    # line-rule filtering + reassembly (x44), the posting-list build
+    # (x45), the count-min sketch + broadcast probe (x47), the drift
+    # report's double corpus scan (x48), RFM's triple chunked
+    # percent_rank (qd10), last-touch attribution's as-of-style window
+    # (qd11) and the streaming history-dedup batch twin (t18)
     "x44_line_filtering",
     "x45_inverted_index",
     "x47_countmin_heavy_hitters",
@@ -178,71 +166,45 @@ HEADLINE = [
     "qd10_rfm_segmentation",
     "qd11_lasttouch_attribution",
     "t18_stream_dedup_history",
-    # round-10 additions — the round's new/changed plan shapes under
-    # the clock: the banded-LSH candidate join (x2b, replaces the
-    # all-pairs fixture), the value-oracled bloom build+probe (x24),
-    # the broadcast integer-dot semantic contamination scan (x49),
-    # and the chunked-rank quantile gate (x15, plan changed r10)
+    # the banded-LSH candidate join (x2b), the bloom build+probe (x24),
+    # the broadcast integer-dot contamination scan (x49) and the
+    # chunked-rank quantile gate (x15)
     "x2b_ngram_jaccard",
     "x24_bloom_contamination",
     "x49_semantic_contamination",
     "x15_quality_quantile_gate",
 ]
 
-#: Second reported section (r11 verdict #6): new/changed heavy plans get
-#: round-over-round tracking from the round they land, WITHOUT breaking
-#: the shared-49 set's comparability — "value"/"queries" stay the
-#: shared set; these report under "additions_*".
+#: Second reported section: heavy plans tracked run over run under
+#: "additions_*" without changing the HEADLINE set "value"/"queries" sum.
 ADDITIONS = [
-    # r11: global-order packing (chunked distributed prefix sum)
+    # global-order packing (chunked distributed prefix sum)
     "x50_sequence_packing",
-    # r11: cluster-balanced diversity sampling (k-means CTE + md5)
+    # cluster-balanced diversity sampling (k-means CTE + md5)
     "x51_cluster_balanced_sample",
-    # r12: packing stage respelled onto the chunked machinery
+    # packing stage on the chunked prefix-sum machinery
     "x31_curation_pipeline_v2",
 ]
 
-#: Heavy-tail WATCH list (r13 verdict #3): the third-run set is now
-#: DYNAMIC — the top-5 headline queries by the WORST of this run's two
-#: shared passes, unioned with these static watch entries.  The
-#: r12-era static top-5 missed x49's 7.70 s pass-2 outlier (real min
-#: 2.25 s — box noise) because the list was frozen from the PREVIOUS
-#: round's history; the dynamic worst-of-both selection guarantees the
-#: round's actual heaviest plans — including pass-2-only outliers like
-#: x49's — each carry their own q1-style noise floor.  Watch entries are the known
-#: multi-round swingers that deserve a spread even in a fast round:
-#: t18 swung 6.5 -> 4.4 -> 6.9 s across r10-r12 on an unchanged plan,
-#: and x49 is the r13 escapee.  Reported under "heavy_tail" as
-#: {runs, min, spread_pct}; runs[0:2] are the two shared passes
-#: (comparable round-over-round), runs[2] is the extra repeat.
-HEAVY_TAIL_WATCH = [
-    "t18_stream_dedup_history",
-    "x49_semantic_contamination",
-]
-
 #: How many of this run's heaviest headline entries (by worst of the
-#: two shared passes) get the third run (before the watch-list union).
+#: two shared passes) "heavy_tail" reports.
 HEAVY_TAIL_TOP_N = 5
 
 
 def heavy_tail_names(worst: dict[str, float]) -> list[str]:
-    """The round's third-run set: top-N by per-query time, then any
-    watch entries not already selected (stable order: heaviest first,
-    then watch order).  The caller feeds the per-query WORST of the
-    two shared passes (review-pass r14): selection off pass-1 alone
-    would re-open the exact r13 hole this exists to close — x49's
-    outlier was a pass-2-only 7.7 s, and both passes have completed by
-    the time the third runs start, so the worst-of-both is free.  Pure
+    """The heavy-tail report's names: the top-N by per-query time,
+    heaviest first. The caller feeds the per-query WORST of the two
+    shared passes, so an outlier in either pass is selected; both
+    passes have completed by then, so the worst-of-both is free. Pure
     function of the timings so the unit test can pin the selection
     rule without running Spark."""
-    top = sorted(worst, key=worst.get, reverse=True)[:HEAVY_TAIL_TOP_N]
-    return top + [n for n in HEAVY_TAIL_WATCH if n not in top]
+    return sorted(worst, key=worst.get, reverse=True)[:HEAVY_TAIL_TOP_N]
 
 
 class ExecClock:
-    """Per-query executor-run-time deltas (r16 verdict #5: wall alone
-    cannot separate box noise from plan change — executor time is
-    contention-insensitive for CPU-bound plans).
+    """Per-query executor-run-time deltas: wall time alone cannot
+    separate box noise from a plan change, and executor time is
+    contention-insensitive for CPU-bound plans.
 
     Reads the UI REST ``/stages`` endpoint — ONE HTTP call per
     snapshot with bulk JSON parsing (the py4j alternative costs ~3
@@ -269,14 +231,13 @@ class ExecClock:
     def delta_s(self, settle_s: float = 0.5) -> float | None:
         """Executor-run-time seconds accrued since the previous call.
 
-        Stage metrics flush asynchronously after an action returns
-        (ADVICE r17): a snapshot taken immediately can miss runtime
-        that lands moments later, silently draining it into the NEXT
-        query's delta.  So re-poll until two consecutive reads agree
-        on total executorRunTime (or the small settle budget is
-        spent) before computing the delta.  Both call sites sit
-        outside the wall-clock timed region, so settling never
-        inflates a reported wall time.
+        Stage metrics flush asynchronously after an action returns: a
+        snapshot taken immediately can miss runtime that lands moments
+        later, silently draining it into the NEXT query's delta.  So
+        re-poll until two consecutive reads agree on total
+        executorRunTime (or the small settle budget is spent) before
+        computing the delta.  Both call sites sit outside the wall-clock
+        timed region, so settling never inflates a reported wall time.
         """
         if self._url is None:
             return None
@@ -296,11 +257,10 @@ class ExecClock:
                 nxt = self._snapshot()
                 nxt_total = total(nxt)
                 stages = nxt
-                # two equal totals alone can both be PRE-flush reads
-                # (review-pass r18) — also require no ACTIVE stage, so
-                # a lagging final stage keeps us polling.  Runtime that
-                # still lands later is topped up onto this query by the
-                # next drain's leak attribution (timed_run).
+                # two equal totals alone can both be PRE-flush reads, so
+                # also require no ACTIVE stage: a lagging final stage
+                # keeps us polling.  Runtime that still lands later is
+                # topped up onto this query by the next drain (timed_run).
                 if nxt_total == prev_total and not busy(nxt):
                     break
                 prev_total = nxt_total
@@ -318,70 +278,31 @@ class ExecClock:
 
 
 #: Full-result sidecar: the driver records only the LAST 2000 chars of
-#: the printed line (BENCH_r*.json has carried tail-only, parsed=None
-#: since r8), so bench.py persists the complete result dict here —
-#: the judge's per-query exec_s/exec_runs live in this file, and
-#: previous_floors() reads it for the >25%-mover rule.
+#: the printed line, so bench.py persists the complete result dict here
+#: (per-query floors and exec runs included), and previous_floors()
+#: reads it for the >25%-mover rule.
 FULL_RESULT_PATH = os.path.join(
     os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL_LAST.json"
 )
 
 
-def previous_floors(layout: str | None = None) -> dict[str, float]:
-    """Per-query floors from the previous bench run, for the
-    >25%-mover re-pass rule: prefer the full-result sidecar (written by
-    the previous run; this run overwrites it only at the very end),
-    fall back to the latest driver BENCH_r*.json (useful only through
-    r7 — later rounds are tail-truncated with parsed=None). Empty dict
-    when no usable history exists — the bench must never fail on its
-    own history.
-
-    ``layout``: when given, sidecar history recorded on a DIFFERENT
-    physical layout is skipped (review-pass r18): floors diffed across
-    the single-file/multi16 boundary are cross-layout nonsense — every
-    query "moves" >25%, the re-pass rule fires suite-wide, and an A/B
-    run with SPARK_GRAFT_BENCH_LAYOUT=single would poison the next
-    normal round's baseline.  Pre-r18 sidecars carry no layout field
-    and are treated as single-file."""
+def previous_floors(layout: str) -> dict[str, float]:
+    """Per-query floors of the previous bench run, for the >25%-mover
+    re-pass rule: the sidecar's ``best_floors`` over its per-run
+    ``floors`` and ``additions_floors`` (the previous run overwrote it
+    only at its very end). A sidecar recorded on a different physical
+    ``layout`` is ignored — floors diffed across the single-file/multi16
+    boundary would make every query "move" >25% — and one without a
+    layout field counts as single-file. Empty dict when no usable
+    history exists: the bench must never fail on its own history."""
     try:
         with open(FULL_RESULT_PATH) as f:
             data = json.load(f)
-        prev_layout = data.get("layout", "single")
-        if layout is None or prev_layout == layout:
-            # best_floors (r19): the layout-gated running min across
-            # rounds — strictly better mover baseline than one run's
-            # floors, which lagged the best observed by up to 48%
-            # (VERDICT r18 #2: the sidecar as "best known" mis-baselined
-            # anyone reading it)
-            out = dict(data.get("floors") or {})
-            out.update(data.get("additions_floors") or {})
-            out.update(data.get("best_floors") or {})
-            if out:
-                return {k: float(v) for k, v in out.items()}
-        # sidecar recorded on a different layout: fall through to the
-        # BENCH_r*.json scan below rather than returning empty — that
-        # single-file history is explicitly valid when layout=='single'
-        # (ADVICE r18: the early return starved an A/B run with
-        # SPARK_GRAFT_BENCH_LAYOUT=single of any floors, so its
-        # >25%-mover re-pass could never fire)
-    except Exception:
-        pass
-    best_round, best_path = -1, None
-    here = os.path.dirname(os.path.abspath(__file__))
-    for p in glob.glob(os.path.join(here, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", p)
-        if m and int(m.group(1)) > best_round:
-            best_round, best_path = int(m.group(1)), p
-    if best_path is None or (layout is not None and layout != "single"):
-        # BENCH_r*.json history predates the layout field (all
-        # single-file) — unusable as a multi16 baseline
-        return {}
-    try:
-        with open(best_path) as f:
-            data = json.load(f)
-        parsed = data.get("parsed") or data
-        out = dict(parsed.get("floors") or {})
-        out.update(parsed.get("additions_floors") or {})
+        if data.get("layout", "single") != layout:
+            return {}
+        out = dict(data.get("floors") or {})
+        out.update(data.get("additions_floors") or {})
+        out.update(data.get("best_floors") or {})
         return {k: float(v) for k, v in out.items()}
     except Exception:
         return {}
@@ -394,15 +315,15 @@ def main() -> None:
     except ValueError:
         sf_num = None
     run_dir = bench_layout(SF_DIR)
+    layout_name = "single" if run_dir == SF_DIR else "multi16"
     # UI on for this session only: ExecClock reads executor time off
-    # the REST stages endpoint (r16 verdict #5).  openCostInBytes is
-    # raised to maxPartitionBytes so Spark assigns each fixture slice
-    # its own scan task instead of re-packing the 16 small files back
-    # into one partition — maxSplitBytes = min(maxPartitionBytes,
-    # max(openCost, bytes/core)) stays 128 MB, so no empty intra-file
-    # split tails appear either.  This reproduces the task structure a
-    # real multi-split table has natively; it is a no-op for the
-    # single-file layout.
+    # the REST stages endpoint.  openCostInBytes is raised to
+    # maxPartitionBytes so Spark assigns each fixture slice its own scan
+    # task instead of re-packing the 16 small files back into one
+    # partition — maxSplitBytes = min(maxPartitionBytes, max(openCost,
+    # bytes/core)) stays 128 MB, so no empty intra-file split tails
+    # appear either.  This reproduces the task structure a real
+    # multi-split table has natively.
     spark = get_spark(
         app_name="spark-graft-bench",
         extra_conf={
@@ -419,13 +340,10 @@ def main() -> None:
         "overwrite"
     ).save()
 
-    # Noise-floor calibration (r7 verdict #7): the shared headline set
-    # drifted +7.6% between r6 and r7 purely from box noise, and as the
-    # set grows the total is the only regression signal — so measure the
-    # box itself. One fixed reference plan (q1, already warmed) timed
-    # three times back-to-back at the bench SF; the spread is the
-    # same-plan-same-data variance floor. A future round's total drift
-    # within ~this spread is noise, not regression.
+    # Noise-floor calibration: one fixed reference plan (q1, already
+    # warmed) timed three times back-to-back at the bench SF; the spread
+    # is the same-plan-same-data variance floor of this box, and a total
+    # drift within it is noise, not regression.
     calib_runs: list[float] = []
     for _ in range(3):
         spark.catalog.clearCache()
@@ -440,35 +358,20 @@ def main() -> None:
         ),
     }
 
-    # THREE passes, all reported (r15 verdict #1: the r15 "+18% warm
-    # total" was pure box noise at an 83% measured noise floor — a
-    # single sample per query cannot adjudicate a 40% delta, so every
-    # query now gets the best-of-N treatment the heavy tail already
-    # had).  Pass 1 pays codegen compilation and external CPU
-    # contention; passes 2-3 are stable plan-cost samples.  For
-    # round-over-round comparability, "value"/"queries" stay
-    # min-of-the-FIRST-TWO passes (the r11-r15 definition); the new
-    # "floors" section is min-of-all-three — the number the judge
-    # should diff between rounds.
-    passes: list[dict[str, float]] = []
-    timings: dict[str, float] = {}
-    add_passes: list[dict[str, float]] = []
-    add_timings: dict[str, float] = {}
     exec_clock = ExecClock(spark)
     exec_clock.delta_s()  # drain warmup/calibration stages
-    #: per-query executor-time aligned 1:1 with every wall sample —
-    #: {name: [e1, e2, e3, ...extra]} (r16 verdict #5: a wall move with
+    #: per-query wall samples and the executor time of each, aligned 1:1:
+    #: the three passes first, then any mover re-runs (a wall move with
     #: flat executor time is contention; both moving is a plan change)
+    walls: dict[str, list[float]] = {n: [] for n in HEADLINE + ADDITIONS}
     exec_runs: dict[str, list[float | None]] = {}
 
-    #: the (name, run-index) whose exec sample the NEXT drain should
-    #: top up: metrics that flush after the post-run settle belong to
-    #: the query that did the work, not the void (review-pass r18 —
-    #: the drain's return value used to be discarded, so any runtime
-    #: the settle missed silently vanished from exec_s)
+    #: the (name, run-index) whose exec sample the NEXT drain should top
+    #: up: metrics that flush after the post-run settle belong to the
+    #: query that did the work, or they would vanish from exec_s
     last_sample: list = [None]
 
-    def timed_run(name: str) -> float:
+    def timed_run(name: str) -> None:
         q = queries[name]
         # Cold cache per timed run: queries that .cache() internally
         # (x2) must pay their real plan cost on EVERY pass — without
@@ -482,91 +385,66 @@ def main() -> None:
             exec_runs[ln][li] = round((prev or 0.0) + leak, 3)
         t0 = time.perf_counter()
         q.fn(spark, run_dir).write.format("noop").mode("overwrite").save()
-        dt = round(time.perf_counter() - t0, 3)
+        walls[name].append(round(time.perf_counter() - t0, 3))
         exec_runs.setdefault(name, []).append(exec_clock.delta_s())
         last_sample[0] = (name, len(exec_runs[name]) - 1)
-        return dt
 
+    # THREE passes, all reported: one sample per query cannot separate
+    # a 40% delta from box noise.  Pass 1 pays codegen compilation and
+    # external CPU contention; passes 2-3 are stable plan-cost samples.
+    # "value"/"queries" are the min of the FIRST TWO passes; "floors"
+    # (min of every run) is the number to diff between runs.
     for _pass in range(3):
-        cur: dict[str, float] = {}
-        add_cur: dict[str, float] = {}
-        for name, sink in [(n, cur) for n in HEADLINE] + [
-            (n, add_cur) for n in ADDITIONS
-        ]:
-            sink[name] = timed_run(name)
-        passes.append(cur)
-        add_passes.append(add_cur)
+        for name in walls:
+            timed_run(name)
 
-    # Adaptive re-pass (r16 verdict #5): any query whose 3-pass floor
-    # moved >25% vs the previous round's recorded floor gets TWO extra
-    # passes, so a single-round mover is adjudicated from 5 samples
-    # instead of 3.  Extra runs fold into the floors below.
-    prev_floors = previous_floors(
-        "single" if run_dir == SF_DIR else "multi16"
-    )
-    extra_passes: dict[str, list[float]] = {}
-    three_pass_floor = {
-        n: min(p[n] for p in passes) for n in passes[0]
-    } | {n: min(p[n] for p in add_passes) for n in add_passes[0]}
+    # Adaptive re-pass: any query whose 3-pass floor moved >25% vs the
+    # previous run's floor gets TWO extra runs, so a mover is judged
+    # from 5 samples instead of 3.  Extra runs fold into the floors.
+    prev_floors = previous_floors(layout_name)
     movers = sorted(
         n
-        for n, f in three_pass_floor.items()
+        for n, w in walls.items()
         if prev_floors.get(n, 0) > 0
-        and abs(f - prev_floors[n]) / prev_floors[n] > 0.25
+        and abs(min(w) - prev_floors[n]) / prev_floors[n] > 0.25
     )
     for _ in range(2):
         for name in movers:
-            extra_passes.setdefault(name, []).append(timed_run(name))
+            timed_run(name)
 
-    # shared-set comparability: min of the FIRST TWO passes, the
-    # r11-r15 definition of "queries"/"value"
-    timings = {n: min(p[n] for p in passes[:2]) for n in passes[0]}
-    add_timings = {
-        n: min(p[n] for p in add_passes[:2]) for n in add_passes[0]
-    }
-    # the judge's number (r15 verdict #1): per-query best-of-all-runs —
-    # diff FLOORS between rounds, and treat any floor delta under
-    # noise_floor.spread_pct as box noise, not regression.  >25%-mover
-    # extra passes (r16 verdict #5) fold in here.
-    floors = {
-        n: min([p[n] for p in passes] + extra_passes.get(n, []))
-        for n in passes[0]
-    }
-    add_floors = {
-        n: min([p[n] for p in add_passes] + extra_passes.get(n, []))
-        for n in add_passes[0]
-    }
-    # executor-time at each query's floor sample: index of the min wall
-    # across all runs (3 passes + any extras), same order as exec_runs
-    all_walls = {
-        n: [p[n] for p in passes] + extra_passes.get(n, [])
-        for n in passes[0]
-    } | {
-        n: [p[n] for p in add_passes] + extra_passes.get(n, [])
-        for n in add_passes[0]
-    }
+    def per_pass(names: list[str]) -> list[dict[str, float]]:
+        return [{n: walls[n][i] for n in names} for i in range(3)]
+
+    passes, add_passes = per_pass(HEADLINE), per_pass(ADDITIONS)
+    extra_passes = {n: walls[n][3:] for n in movers}
+    # "queries"/"value": min of the FIRST TWO passes
+    timings = {n: min(walls[n][:2]) for n in HEADLINE}
+    add_timings = {n: min(walls[n][:2]) for n in ADDITIONS}
+    # per-query best of all runs: diff FLOORS between runs, and treat
+    # any floor delta under noise_floor.spread_pct as box noise
+    floors = {n: min(walls[n]) for n in HEADLINE}
+    add_floors = {n: min(walls[n]) for n in ADDITIONS}
+    # executor time at each query's floor sample (its min-wall run)
     exec_s = {}
     # summed from the unrounded values: adding 2dp-rounded entries
     # would accumulate one rounding error per query
     exec_total = 0.0
-    for n, walls in all_walls.items():
+    for n, w in walls.items():
         runs = exec_runs.get(n, [])
-        i = walls.index(min(walls))
+        i = w.index(min(w))
         v = runs[i] if i < len(runs) else None
         exec_total += v or 0.0
         # 2dp: the dict must fit the driver's 2000-char tail window
-        # together with floor_total/noise_floor (r19 verdict #2)
+        # together with floor_total/noise_floor
         exec_s[n] = None if v is None else round(v, 2)
 
-    # Heavy-tail spreads: every query now has three same-session runs,
-    # so the per-query noise-floor report (r12 verdict #7) is computed
-    # from the passes — no extra runs needed.  Selection stays dynamic
-    # (r13 verdict #3): top-5 by the WORST of the two shared passes,
-    # plus the static watch entries.
+    # Heavy-tail spreads: the per-query noise floor of this run's
+    # heaviest plans (by the WORST of the two shared passes, so an
+    # outlier in either pass is reported), from the three passes.
     heavy_tail: dict[str, dict] = {}
-    worst = {n: max(p[n] for p in passes[:2]) for n in passes[0]}
+    worst = {n: max(walls[n][:2]) for n in HEADLINE}
     for name in heavy_tail_names(worst):
-        runs = [p[name] for p in passes]
+        runs = walls[name][:3]
         heavy_tail[name] = {
             "runs": runs,
             "min": min(runs),
@@ -575,24 +453,17 @@ def main() -> None:
             ),
         }
 
-    # best_floors (r19, VERDICT r18 #2): layout-gated running min —
-    # the sidecar must always carry the best floor ever observed on
-    # this layout (it lagged the driver's own best run by up to 48%,
-    # mis-baselining every reader).  Noise gate (VERDICT r18 #5): a
-    # run whose q1 calibration spread is >=50% is too noisy to be
-    # floor EVIDENCE — its samples are kept out of the running min
-    # (min-folding only rejects inflated samples anyway, but the gate
-    # makes the evidentiary rule explicit and reportable), except to
-    # seed queries with no prior floor at all.
-    this_run_floors = {**floors, **add_floors}
-    layout_name = "single" if run_dir == SF_DIR else "multi16"
-    prev_best = prev_floors  # same layout-gated lookup the mover rule used
+    # best_floors: the running min per layout, so a mover is judged
+    # against the best floor ever observed on this layout, not one noisy
+    # run.  Noise gate: a run whose q1 calibration spread is >=50% is not
+    # floor evidence — its samples stay out of the running min, except
+    # to seed queries with no prior floor at all.
     gate_accept = noise_floor["spread_pct"] < 50.0
     best_floors = {}
     seeded = []
-    for n, f in this_run_floors.items():
-        if n in prev_best:
-            best_floors[n] = round(min(prev_best[n], f), 3) if gate_accept else prev_best[n]
+    for n, f in {**floors, **add_floors}.items():
+        if n in prev_floors:
+            best_floors[n] = round(min(prev_floors[n], f), 3) if gate_accept else prev_floors[n]
         else:
             best_floors[n] = f
             if not gate_accept:
@@ -607,17 +478,15 @@ def main() -> None:
 
     total = round(sum(timings.values()), 3)
     # KEY ORDER IS LOAD-BEARING: the driver records only the LAST 2000
-    # chars of this line (tail-only since r8), so the END of the line
-    # carries the judge-critical summary and the bulky per-run traces
-    # sit at the front.  The window holds ~1770 chars of payload, so a
-    # PRECEDENCE CHOICE is explicit here (r19 verdict #2): per-query
+    # chars of this line, so the END of the line carries the summary
+    # and the bulky per-run traces sit at the front.  The window holds
+    # ~1770 chars of payload, so the precedence is explicit: per-query
     # exec_s + floor_gate + floor_total/exec_total_s + noise_floor win
     # the tail — exec_s is the contention-immune adjudication number —
-    # and per-query floors/best_floors live in the committed
-    # BENCH_FULL_LAST.json sidecar (plus the full line when the driver
-    # parses it unchopped, as it did in r19).  Headroom check: the
-    # exec_s-to-end section measured ~1690 chars at 53 queries; ~11
-    # more benched queries would overflow — rebalance then.
+    # and per-query floors/best_floors live in the BENCH_FULL_LAST.json
+    # sidecar (and in the full line when it is parsed unchopped).
+    # Headroom: the exec_s-to-end section measured ~1690 chars at 53
+    # queries; ~11 more benched queries would overflow — rebalance then.
     result = {
         "metric": "headline_total_wall",
         "value": total,
@@ -625,56 +494,45 @@ def main() -> None:
         "queries": timings,
         "passes": passes,
         "pass_totals": [round(sum(p.values()), 3) for p in passes],
-        # cold pass-1 total is as informative as the min total
-        # (r6 verdict #6): surfaced explicitly so readers don't
-        # have to derive it from passes
         "cold_total": round(sum(passes[0].values()), 3),
-        # round-over-round tracking for new heavy plans without
-        # polluting the shared headline set (r11 verdict #6)
+        # heavy plans tracked beside, not inside, the headline set
         "additions_queries": add_timings,
         "additions_total": round(sum(add_timings.values()), 3),
         "additions_passes": add_passes,
-        # per-query executor-time trace (r16 verdict #5): wall moved
-        # but exec flat -> contention; both moved -> plan change.
-        # The floor-sample exec_s dict sits in the TAIL section below
-        # (r19 verdict #2).
+        # per-query executor-time trace: wall moved but exec flat ->
+        # contention; both moved -> plan change.  The floor-sample
+        # exec_s dict sits in the TAIL section below.
         "exec_runs": exec_runs,
-        # per-query noise floors for the historically heaviest
-        # plans (r12 verdict #7): 3 same-session runs each
+        # per-query noise floors for this run's heaviest plans: 3
+        # same-session runs each
         "heavy_tail": heavy_tail,
         "additions_floors": add_floors,
-        # per-query best-of-all-runs (r15 verdict #1) — the
-        # round-over-round adjudication numbers: diff these,
-        # not single samples, and read deltas against
-        # noise_floor.spread_pct
+        # per-query best-of-all-runs: diff these, not single samples,
+        # and read deltas against noise_floor.spread_pct
         "floors": floors,
         # >25% floor movers vs the previous run's floors, each re-run
         # twice more (5 samples total)
         "movers_gt_25pct": movers,
         "extra_passes": extra_passes,
-        # layout-gated running min across rounds (r19): the "best
-        # known" number — always <= this run's floors; the mover rule
-        # baselines against these via previous_floors()
+        # running min per layout: the best known number, always <= this
+        # run's floors; the mover rule baselines against it
         "best_floors": best_floors,
-        # noise gate decision (r19): whether this run's samples were
-        # clean enough (q1 spread <50%) to fold into best_floors
+        # whether this run's samples were clean enough (q1 spread <50%)
+        # to fold into best_floors
         "floor_gate": floor_gate,
-        # per-query executor time at each query's floor sample —
-        # placed HERE, inside the last-2000-chars window the driver
-        # archives (r19 verdict #2: exec_s is the contention-immune
-        # adjudication number and must survive tail truncation; 2dp
-        # keeps the whole tail section under the cap)
+        # per-query executor time at each query's floor sample, inside
+        # the tail window: it is the contention-immune adjudication
+        # number and must survive truncation (2dp keeps it under the cap)
         "exec_s": exec_s,
         "floor_total": round(sum(floors.values()), 3),
         "exec_total_s": round(exec_total, 3),
-        # how many floor samples lost their executor clock (REST
-        # failure during that run) — review-pass r18: silently dropping
-        # Nones made a flaky UI endpoint read as a plan improvement
+        # floor samples that lost their executor clock (REST failure
+        # during that run): dropping them silently would make a flaky
+        # UI endpoint read as a plan improvement
         "exec_missing": sum(1 for v in exec_s.values() if v is None),
         "noise_floor": noise_floor,
-        # which physical layout the floors were measured on (r18:
-        # floors re-seeded on the 16-slice layout — not comparable to
-        # r17-and-earlier single-file floors)
+        # the physical layout the floors were measured on: floors are
+        # comparable only within one layout
         "layout": layout_name,
         "sf": sf_num,
     }

@@ -22,6 +22,10 @@ re-implements the *table-format contract* in pure PySpark:
 Semantics mirrored from Iceberg v2 (copy-on-write flavor):
   * every write = new immutable data files + a new manifest; readers of
     older snapshots are never disturbed (time travel = read old manifest);
+  * a commit takes its schema and the column mappings that resolve it
+    against the files (renames, initial defaults) from one snapshot, the
+    one its content comes from, and its partition spec from the snapshot
+    whose layout its new files follow (:func:`_carried`);
   * a snapshot reuses its parent's stats manifests by path and writes
     one only for the files it adds, so its metadata grows with the
     change, not with the table (Iceberg's manifest reuse); a tiered
@@ -260,6 +264,24 @@ def content_parent(m: dict) -> int:
     if m.get("staged_ref"):
         return int(m["ref_base"] if "ref_base" in m else m.get("parent") or 0)
     return int(m.get("rollforward_of") or m.get("parent") or 0)
+
+
+def _carried(m: dict, layout: dict | None = None) -> dict:
+    """The manifest keys a commit takes from ``m``, the snapshot it reads
+    its schema from: ``schema`` and the ``renames`` and ``defaults`` that
+    map that schema onto the files, plus the ``partition_spec`` of
+    ``layout`` (default ``m``), the snapshot whose spec lays out the files
+    the commit writes. A mapping is written only when it is non-empty, so
+    the manifests of a table that never renames, adds a default or
+    partitions carry none of them."""
+    layout = m if layout is None else layout
+    out = {
+        "schema": m["schema"],
+        "renames": m.get("renames"),
+        "defaults": m.get("defaults"),
+        "partition_spec": layout.get("partition_spec"),
+    }
+    return {k: v for k, v in out.items() if v}
 
 
 def _main_range(
@@ -816,14 +838,6 @@ class LakehouseTable:
             )
         version = expected_parent + 1
         os.makedirs(self.snap_dir, exist_ok=True)
-        # column initial-defaults (add_column(default=...)), rename
-        # mappings (rename_column) and the partition spec ride every
-        # subsequent commit unchanged unless the committer set its own —
-        # a commit that dropped them would silently break old-file reads
-        # or the next write's layout
-        for key in ("defaults", "renames", "partition_spec"):
-            if key not in manifest and pm.get(key):
-                manifest[key] = pm[key]
         manifest["version"] = version
         manifest["parent"] = expected_parent
         manifest["timestamp_ms"] = int(time.time() * 1000)
@@ -1060,7 +1074,8 @@ class LakehouseTable:
         """CREATE TABLE AS SELECT (S5). ``partition_by`` is the partition
         spec — Iceberg transforms such as ``["days(ts)", "bucket(4, id)"]``
         (see :func:`partition_transform`); it is recorded in the manifest
-        and every later commit inherits it until evolve_partitioning."""
+        and every commit that writes files on it lays them out by it
+        until evolve_partitioning (see :func:`_carried`)."""
         if self.current_version() != 0:
             raise ValueError(f"table {self.name} already exists")
         spec = list(partition_by or [])
@@ -1108,7 +1123,7 @@ class LakehouseTable:
             df.select(table_cols), m.get("partition_spec", [])
         )
         return self._commit(
-            {"files": m["files"] + new_files, "schema": m["schema"], "op": "append"},
+            {"files": m["files"] + new_files, **_carried(m), "op": "append"},
             parent,
         )
 
@@ -1148,10 +1163,10 @@ class LakehouseTable:
         if positional:
             df = self._bind_positional(df, m["schema"])
         files = self._write_files(df, m.get("partition_spec", []))
-        return self._commit(
-            {"files": files, "schema": df.schema.jsonValue(), "op": "overwrite"},
-            parent,
-        )
+        # every file is new and stores the frame's columns by name: no
+        # rename or default maps onto it, only the layout carries over
+        carried = _carried({"schema": df.schema.jsonValue()}, layout=m)
+        return self._commit({"files": files, **carried, "op": "overwrite"}, parent)
 
     def schema_json(self) -> dict:
         return self._existing_base()[1]["schema"]
@@ -1454,7 +1469,7 @@ class LakehouseTable:
         return self._commit(
             {
                 "files": keep + new_files,
-                "schema": m["schema"],
+                **_carried(m),
                 "op": op,
                 "rewritten": len(affected),
                 **extra,
@@ -1727,7 +1742,7 @@ class LakehouseTable:
 
     # ---------- M4: rollback ----------
 
-    def rollback_to(self, version: int, _allow_staged: bool = False) -> int:
+    def rollback_to(self, version: int) -> int:
         """CALL system.rollback_to_snapshot (M4): new commit whose file
         list is the old snapshot's — history is preserved, not erased.
 
@@ -1737,32 +1752,44 @@ class LakehouseTable:
         content's version identity, so the next publish from the same
         long-lived branch can still prove ancestry.
 
-        Refuses a STAGED (unaudited branch-write) snapshot unless
-        ``_allow_staged``: the direct ``CALL system.rollback_to_snapshot``
-        door must not publish unaudited rows to main, bypassing the WAP
-        audit gate of ``fast_forward("main", b)`` — the one caller
-        allowed to pass the flag, after its own _assert_fast_forward.
+        Refuses a STAGED (unaudited branch-write) snapshot: the direct
+        ``CALL system.rollback_to_snapshot`` door must not publish
+        unaudited rows to main, bypassing the WAP audit gate of
+        ``fast_forward("main", b)``, which publishes through
+        :meth:`_rollforward` after its own _assert_fast_forward.
         Iceberg's procedure likewise refuses non-ancestors.  A
         missing/expired version raises the contracted ValueError, not a
         raw FileNotFoundError."""
         parent = self.current_version()
-        try:
-            m = self._read_manifest(version, stats=False)
-        except FileNotFoundError:
-            raise ValueError(
-                f"{self.name}: no snapshot v{version} (missing or "
-                "expired)"
-            ) from None
-        if m.get("staged_ref") and not _allow_staged:
+        m = self._existing_snapshot(version)
+        if m.get("staged_ref"):
             raise ValueError(
                 f"{self.name}: v{version} is a STAGED snapshot of "
                 f"branch {m['staged_ref']!r} — publish it through "
                 "fast_forward after auditing, not rollback_to_snapshot"
             )
+        return self._rollforward(parent, version, m)
+
+    def _existing_snapshot(self, version: int) -> dict:
+        """Raw manifest of snapshot ``version``; the contracted
+        ValueError once it expired (or never existed)."""
+        try:
+            return self._read_manifest(version, stats=False)
+        except FileNotFoundError:
+            raise ValueError(
+                f"{self.name}: no snapshot v{version} (missing or "
+                "expired)"
+            ) from None
+
+    def _rollforward(self, parent: int, version: int, m: dict) -> int:
+        """Commit snapshot ``version``'s content (``m``, its raw
+        manifest, with its schema, mappings and spec) on log head
+        ``parent``, stamped ``rollforward_of`` so ancestry proofs treat
+        it as the same content point as its source."""
         return self._commit(
             {
                 "files": m["files"],
-                "schema": m["schema"],
+                **_carried(m),
                 "op": f"rollback_to_v{version}",
                 "rollforward_of": version,
             },
@@ -1787,7 +1814,7 @@ class LakehouseTable:
         return self._commit(
             {
                 "files": self._write_files(df, m.get("partition_spec", [])),
-                "schema": m["schema"],
+                **_carried(m),
                 "op": op,
             },
             parent,
@@ -1892,7 +1919,7 @@ class LakehouseTable:
             if f in stats or os.path.isfile(f)
         }
         return self._commit(
-            {"files": files, "schema": m["schema"], "op": "rewrite_manifests"},
+            {"files": files, **_carried(m), "op": "rewrite_manifests"},
             parent,
             compact=compact,
         )
@@ -2045,9 +2072,8 @@ class LakehouseTable:
         return self._commit(
             {
                 "files": m["files"],
-                "schema": schema,
+                **_carried({**m, "defaults": defaults}),
                 "op": f"add_column:{name}",
-                "defaults": defaults,
             },
             parent,
         )
@@ -2075,17 +2101,18 @@ class LakehouseTable:
         if name not in {f["name"] for f in schema["fields"]}:
             raise ValueError(f"drop_column: no column {name!r}")
         schema["fields"] = [f for f in schema["fields"] if f["name"] != name]
-        manifest: dict = {
-            "files": m["files"],
-            "schema": schema,
-            "op": f"drop_column:{name}",
+        kept = {
+            key: {k: v for k, v in m.get(key, {}).items() if k != name}
+            for key in ("defaults", "renames")
         }
-        # an emptied map is written, or the commit would inherit the
-        # parent's entry for the dropped column
-        for key in ("defaults", "renames"):
-            if m.get(key):
-                manifest[key] = {k: v for k, v in m[key].items() if k != name}
-        return self._commit(manifest, parent)
+        return self._commit(
+            {
+                "files": m["files"],
+                **_carried({**m, **kept}),
+                "op": f"drop_column:{name}",
+            },
+            parent,
+        )
 
     def rename_column(self, old: str, new: str) -> int:
         """ALTER TABLE RENAME COLUMN (M6): manifest-only — Iceberg
@@ -2118,18 +2145,17 @@ class LakehouseTable:
             "files": [f for f in cur_files if f not in mapped],
         }
         renames[new] = prior + [entry]
-        manifest: dict = {
-            "files": cur_files,
-            "schema": schema,
-            "op": f"rename_column:{old}->{new}",
-            "renames": renames,
+        defaults = {
+            (new if k == old else k): v for k, v in m.get("defaults", {}).items()
         }
-        defaults = m.get("defaults", {})
-        if defaults:
-            manifest["defaults"] = {
-                (new if k == old else k): v for k, v in defaults.items()
-            }
-        return self._commit(manifest, parent)
+        return self._commit(
+            {
+                "files": cur_files,
+                **_carried({**m, "renames": renames, "defaults": defaults}),
+                "op": f"rename_column:{old}->{new}",
+            },
+            parent,
+        )
 
     # ---------- S8+: incremental scan / CDC changelog ----------
 
@@ -2399,7 +2425,7 @@ class LakehouseTable:
         return self._commit(
             {
                 "files": keep + new_files,
-                "schema": m["schema"],
+                **_carried(m),
                 "op": "overwrite_partitions",
                 "replaced_partitions": sorted("/".join(t) for t in touched),
             },
@@ -2414,7 +2440,7 @@ class LakehouseTable:
         return self._commit(
             {
                 "files": m["files"],
-                "schema": m["schema"],
+                **_carried(m),
                 "op": f"evolve_partitioning:{','.join(new_specs)}",
                 "partition_spec": list(new_specs),
             },
@@ -2535,7 +2561,9 @@ class LakehouseTable:
                 return ids
             ids.add(v)
 
-    def _assert_fast_forward(self, frm: int, to: int, label: str) -> None:
+    def _assert_fast_forward(
+        self, frm: int, to: int, label: str, tm: dict | None = None
+    ) -> None:
         """True-fast-forward guard: ``frm`` (the ref being moved) must
         be an ANCESTOR of ``to`` in the CONTENT chain. Iceberg's
         system.fast_forward refuses when the target is not a
@@ -2553,14 +2581,15 @@ class LakehouseTable:
         standard branch catch-up). ``frm`` matches through its own
         rollforward identity, so a published (rolled-forward) main head
         equals the branch content it was published from. Each manifest
-        is read at most twice, so the walk is linear in the history.
+        is read at most twice, so the walk is linear in the history;
+        ``tm``, when given, is ``to``'s raw manifest as the caller read it.
         """
         frm_ids = self._rollforward_identity(frm)
         cur, seen = to, set()
         while cur > 0 and cur not in frm_ids and cur not in seen:
             seen.add(cur)
             try:
-                m = self._read_manifest(cur, stats=False)
+                m = tm if cur == to and tm else self._read_manifest(cur, stats=False)
                 nxt = content_parent(m)
                 if not (m.get("staged_ref") or m.get("rollforward_of")):
                     nxt = main_at(self.root, nxt)
@@ -2586,8 +2615,12 @@ class LakehouseTable:
         if v is None:
             raise KeyError(f"unknown ref {to}")
         if branch == "main":
-            self._assert_fast_forward(self.main_head(), v, "main")
-            return self.rollback_to(v, _allow_staged=True)
+            # one read of the target serves the ancestry proof and the
+            # rollforward; main's head is walked to from below it
+            vm = self._existing_snapshot(v)
+            parent, m = self._base_with(v, vm)
+            self._assert_fast_forward(m.get("version", 0), v, "main", vm)
+            return self._rollforward(parent, v, vm)
         if branch not in refs["branches"]:
             raise KeyError(f"unknown branch {branch}")
         self._assert_fast_forward(refs["branches"][branch], v, branch)
@@ -2638,7 +2671,8 @@ class LakehouseTable:
         v = self._commit(
             {
                 "files": files,
-                "schema": schema,
+                # the branch's schema and mappings, main's layout
+                **_carried(bm, layout=m),
                 "op": f"branch_append:{name}",
                 "staged_ref": name,
                 # content parent (the branch head this append was based
@@ -2797,7 +2831,7 @@ def cherrypick_snapshot(table: LakehouseTable, version: int) -> int:
     return table._commit(
         {
             "files": head["files"] + [f for f in delta if f not in cur_set],
-            "schema": head["schema"],
+            **_carried(head),
             "op": f"cherrypick_v{version}",
         },
         parent,

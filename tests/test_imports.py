@@ -167,46 +167,36 @@ def test_rows_only_set_is_pinned():
 
 
 def test_bench_query_lists_resolve():
-    """bench.py's HEADLINE / ADDITIONS / HEAVY_TAIL_WATCH lists must
-    name registered queries (a rename that misses bench.py would crash
-    the driver's per-round bench run, not a local test) and the watch
-    list must be a subset of HEADLINE (the third timed run reuses the
-    two shared-pass timings by name)."""
+    """bench.py's HEADLINE / ADDITIONS lists must name registered
+    queries (a rename that misses bench.py would crash a bench run,
+    not a local test)."""
     import bench
 
     from dbx_workspace_and_emr_iceberg_spark.registry import all_queries
 
     names = set(all_queries())
-    for lst in (bench.HEADLINE, bench.ADDITIONS, bench.HEAVY_TAIL_WATCH):
+    for lst in (bench.HEADLINE, bench.ADDITIONS):
         missing = [n for n in lst if n not in names]
         assert not missing, missing
-    assert set(bench.HEAVY_TAIL_WATCH) <= set(bench.HEADLINE)
     assert len(set(bench.HEADLINE)) == len(bench.HEADLINE)  # no dups
 
 
 def test_bench_heavy_tail_selection_dynamic():
-    """Pin the r13-verdict-#3 rule: the third-run set is the top-5 of
-    THIS run's per-query times (main() feeds the WORST of the two
-    shared passes, so a pass-2-only outlier like r13's x49 is caught)
-    plus any watch entries not already in it — a static list frozen
-    from last round's history missed that 7.7 s outlier in r13."""
+    """The heavy-tail set is the top-5 of THIS run's per-query times
+    (main() feeds the WORST of the two shared passes, so a pass-2-only
+    outlier is caught), heaviest first."""
     import bench
 
     worst = {f"q{i:02d}": float(i) for i in range(1, 20)}
     worst["t18_stream_dedup_history"] = 0.5
     worst["x49_semantic_contamination"] = 25.0
     sel = bench.heavy_tail_names(worst)
-    # heaviest five first, heaviest-first order
-    assert sel[:5] == ["x49_semantic_contamination", "q19", "q18", "q17", "q16"]
-    # watch entries not in the top-5 are appended, no duplicates
-    assert sel[5:] == ["t18_stream_dedup_history"]
-    assert len(sel) == len(set(sel))
+    assert sel == ["x49_semantic_contamination", "q19", "q18", "q17", "q16"]
 
 
 def test_bench_heavy_tail_selection_properties():
     """Property-pin heavy_tail_names over random timing dicts: the
-    result is the TOP_N argmaxes (heaviest first) plus every watch
-    entry, no duplicates, and never longer than TOP_N + |watch|."""
+    result is the TOP_N argmaxes (heaviest first), no duplicates."""
     from hypothesis import given
     from hypothesis import strategies as st
 
@@ -217,25 +207,15 @@ def test_bench_heavy_tail_selection_properties():
         names, st.floats(0.001, 1e6, allow_nan=False), min_size=1, max_size=40
     )
 
-    @given(timings, st.booleans())
-    def check(worst, include_watch):
-        if include_watch:
-            worst = dict(worst)
-            for i, w in enumerate(bench.HEAVY_TAIL_WATCH):
-                worst[w] = 0.0005 + i * 1e-6  # never in the top-N
+    @given(timings)
+    def check(worst):
         sel = bench.heavy_tail_names(worst)
         n_top = min(bench.HEAVY_TAIL_TOP_N, len(worst))
-        assert len(sel) == len(set(sel))
-        assert len(sel) <= bench.HEAVY_TAIL_TOP_N + len(bench.HEAVY_TAIL_WATCH)
-        top = sel[:n_top]
-        # the selected head is exactly the N heaviest, heaviest first
-        assert [worst[n] for n in top] == sorted(
+        assert len(sel) == len(set(sel)) == n_top
+        # exactly the N heaviest, heaviest first
+        assert [worst[n] for n in sel] == sorted(
             worst.values(), reverse=True
         )[:n_top]
-        # watch entries always present when they exist in the run
-        for w in bench.HEAVY_TAIL_WATCH:
-            if w in worst:
-                assert w in sel
 
     check()
 
@@ -476,10 +456,9 @@ def test_sim_cell_collision_channels_closed_r18():
 
 
 def test_bench_previous_floors_layout_gated(tmp_path, monkeypatch):
-    """Review-pass r18: floors recorded on a different physical layout
-    must not seed the >25%-mover rule — cross-layout diffs fire the
-    re-pass suite-wide and an A/B run would poison the next baseline.
-    Pre-r18 sidecars (no layout field) count as single-file."""
+    """Floors recorded on a different physical layout must not seed the
+    >25%-mover rule — cross-layout diffs would fire the re-pass
+    suite-wide. A sidecar without a layout field counts as single-file."""
     import json as _json
 
     import bench
@@ -488,7 +467,7 @@ def test_bench_previous_floors_layout_gated(tmp_path, monkeypatch):
     p.write_text(_json.dumps({"floors": {"q1": 1.0}, "layout": "multi16"}))
     monkeypatch.setattr(bench, "FULL_RESULT_PATH", str(p))
     assert bench.previous_floors("multi16") == {"q1": 1.0}
-    # best_floors (r19) wins over the per-run floors when present
+    # best_floors wins over the per-run floors when present
     p.write_text(
         _json.dumps(
             {
@@ -502,16 +481,9 @@ def test_bench_previous_floors_layout_gated(tmp_path, monkeypatch):
     p.write_text(_json.dumps({"floors": {"q1": 2.0}}))
     assert bench.previous_floors("single") == {"q1": 2.0}
     assert bench.previous_floors("multi16") == {}
-    # ADVICE r18: a multi16 sidecar must NOT starve a layout=single
-    # lookup — fall through to the BENCH_r*.json scan (single-only)
+    # and a multi16 sidecar gives a single-file run no floors
     p.write_text(_json.dumps({"floors": {"q1": 3.0}, "layout": "multi16"}))
-    r = tmp_path / "BENCH_r99.json"
-    r.write_text(_json.dumps({"parsed": {"floors": {"q1": 4.0}}}))
-    monkeypatch.setattr(
-        bench.glob, "glob", lambda pat: [str(r)] if "BENCH_r" in pat else []
-    )
-    assert bench.previous_floors("single") == {"q1": 4.0}
-    assert bench.previous_floors("multi16") == {"q1": 3.0}  # sidecar still wins
+    assert bench.previous_floors("single") == {}
 
 
 def test_snapshot_log_format_lives_in_one_module():

@@ -1954,6 +1954,29 @@ def test_rollback_to_keeps_stats(spark, wh):
     assert len(t.pruned_files("k", 250, 250)) == 1
 
 
+def test_commit_takes_column_mappings_from_its_schema_snapshot(spark, wh):
+    """A commit whose schema comes from another snapshot than main's head
+    (a rollback, a branch write) takes that snapshot's renames too: a
+    rename on main's head must not re-map the older schema's columns."""
+    rows = [(1, 10), (2, 20)]
+    df = spark.createDataFrame(rows, "k long, v long")
+
+    t = LakehouseTable(spark, wh, "rb")
+    t.create(df)
+    t.rename_column("v", "w")
+    t.rollback_to(1)
+    assert t.read().columns == ["k", "v"]
+    assert sorted(map(tuple, t.read().collect())) == rows
+
+    b = LakehouseTable(spark, wh, "br")
+    b.create(df)
+    b.create_branch("b")
+    b.rename_column("v", "w")
+    b.write_to_branch("b", spark.createDataFrame([(3, 30)], "k long, v long"))
+    assert sorted(map(tuple, b.read_ref("b").collect())) == rows + [(3, 30)]
+    assert sorted(map(tuple, b.read().collect())) == rows  # main reads w
+
+
 def test_footer_stats_read_outside_commit_lock(spark, wh, monkeypatch):
     """Parquet footers are read before the commit lock is taken, so a
     slow footer read never holds up concurrent committers — both for a

@@ -1340,6 +1340,14 @@ def test_table_operations_open_their_base_manifest_at_most_twice(
                 n for f, n in opens.items() if f.startswith(stats_dir)
             )
             assert stats_opens == 0, (name, stats_opens)
+    # publishing a staged branch head: the ancestry proof and the
+    # rollforward commit share one read of it
+    t.replace_branch("b", t.main_head())
+    t.write_to_branch("b", frame)
+    staged = t._manifest_path(t.current_version())
+    counted(lambda: t.fast_forward("main", "b"))
+    assert t.main_head() == t.current_version() > t._refs()["branches"]["b"]
+    assert 1 <= opens[staged] <= 2, ("fast_forward", opens[staged])
     head = t._manifest_path(t.main_head())
     for name, op in (("files", lambda: t.files().collect()),
                      ("record_count", t.record_count)):

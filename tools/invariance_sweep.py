@@ -230,24 +230,11 @@ def main(argv: list[str]) -> int:
 
     if "multifile16" in names:
         # resolve through the bench's own materializer — single source
-        # of truth for the layout the floors are measured on.  PIN the
-        # layout knob first (review-pass r18, the child_env rule):
-        # bench_layout reads ambient SPARK_GRAFT_BENCH_LAYOUT, and a
-        # leftover exported 'single' from a bench A/B session would
-        # otherwise make it return the source dir and abort the whole
-        # sweep with a misleading "fix the materializer" message.
+        # of truth for the layout the floors are measured on
         from bench import bench_layout
 
-        saved = os.environ.get("SPARK_GRAFT_BENCH_LAYOUT")
-        os.environ["SPARK_GRAFT_BENCH_LAYOUT"] = "multi16"
-        try:
-            src = "/root/testdata/sf0.01"
-            d = bench_layout(src)
-        finally:
-            if saved is None:
-                os.environ.pop("SPARK_GRAFT_BENCH_LAYOUT", None)
-            else:
-                os.environ["SPARK_GRAFT_BENCH_LAYOUT"] = saved
+        src = AXES["splits"][0]  # the single-file sf0.01 fixtures
+        d = bench_layout(src)
         if d == src:
             # bench_layout degrades to the source on failure (right for
             # the bench, wrong here: the axis would silently sweep the

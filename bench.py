@@ -286,19 +286,21 @@ FULL_RESULT_PATH = os.path.join(
 )
 
 
-def previous_floors(layout: str) -> dict[str, float]:
+def previous_floors(layout: str, sf: float | None) -> dict[str, float]:
     """Per-query floors of the previous bench run, for the >25%-mover
     re-pass rule: the sidecar's ``best_floors`` over its per-run
     ``floors`` and ``additions_floors`` (the previous run overwrote it
     only at its very end). A sidecar recorded on a different physical
-    ``layout`` is ignored — floors diffed across the single-file/multi16
-    boundary would make every query "move" >25% — and one without a
-    layout field counts as single-file. Empty dict when no usable
-    history exists: the bench must never fail on its own history."""
+    ``layout`` or at a different scale factor ``sf`` is ignored — floors
+    diffed across either boundary would make every query "move" >25%;
+    one without a layout field counts as single-file, one without an
+    ``sf`` (or a run whose ``sf`` is unknown) has no comparable floors.
+    Empty dict when no usable history exists: the bench must never fail
+    on its own history."""
     try:
         with open(FULL_RESULT_PATH) as f:
             data = json.load(f)
-        if data.get("layout", "single") != layout:
+        if data.get("layout", "single") != layout or sf is None or data.get("sf") != sf:
             return {}
         out = dict(data.get("floors") or {})
         out.update(data.get("additions_floors") or {})
@@ -401,7 +403,7 @@ def main() -> None:
     # Adaptive re-pass: any query whose 3-pass floor moved >25% vs the
     # previous run's floor gets TWO extra runs, so a mover is judged
     # from 5 samples instead of 3.  Extra runs fold into the floors.
-    prev_floors = previous_floors(layout_name)
+    prev_floors = previous_floors(layout_name, sf_num)
     movers = sorted(
         n
         for n, w in walls.items()

@@ -807,14 +807,14 @@ def m7_partition_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
     only the matching day's files AND matches a full-scan residual
     filter, and that partition evolution is manifest-only.
 
-    VALUE-ORACLED r12 (the o5/f8c layout-contract precedent, VERDICT
-    r11 #4): the raw scan-set size is engine layout, but "the pruned
-    scan is a <= 1/5 subset", "evolution rewrote zero files" and every
-    row count are fixture-independent 0/1 contracts / derivable
-    values. Flags are computed from the measurements with NO preceding
-    assert (ADVICE r11) — a violation flips the flag and hash-reds,
-    instead of raising before the oracle can see it. m7b remains the
-    content twin pinning the row VALUES through the same lifecycle."""
+    Value-oracled: the raw scan-set size is engine layout, but "the
+    pruned scan holds only the probe day", "evolution rewrote zero
+    files" and every row count are fixture-independent 0/1 contracts
+    or derivable values. Flags are computed from the measurements with
+    no preceding assert — a violation flips the flag and the hash
+    mismatches, instead of raising before the oracle can see it. m7b
+    is the content twin pinning the row VALUES through the same
+    lifecycle."""
     wh = tempfile.mkdtemp(prefix="lakehouse_")
     try:
         # ten days of events: days(ts) x bucket(4) = ~40 partition dirs —
@@ -839,17 +839,12 @@ def m7_partition_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
         # scan — matching rows only ever live in matching dirs) plus
         # result parity vs the full-scan residual filter
         day_lo, day_hi = "2024-01-15 00:00:00", "2024-01-16 00:00:00"
-        day_df, kept_f, all_f = t.read_pruned(
-            "ts", day_lo, day_hi, with_files=True
-        )
-        # partition-LEVEL contract (r14): the kept files' day values
-        # are exactly the probe's two boundary days out of the ten
-        # written — layout-invariant where the old files-ratio
-        # (n_scan * 5 <= n_total) broke on multi-file input layouts
-        kept_days_m7 = _hidden_partition_values(kept_f, "p_days_ts")
+        day_df, kept_f, all_f = t.read_pruned("ts", day_lo, day_hi)
+        # partition-LEVEL contract (layout-invariant: a file-count ratio
+        # scales with the writer's input task count): the kept files'
+        # day values are exactly the probe day, out of the ten written
         pruned_ok = int(
-            "2024-01-15 00:00:00" in kept_days_m7  # probe day scanned
-            and kept_days_m7 <= _DAY_PROBE_PARTS
+            _hidden_partition_values(kept_f, "p_days_ts") == _DAY_PROBE_PARTS
             and len(_hidden_partition_values(all_f, "p_days_ts")) == 10
         )
         full = t.read().filter(
@@ -873,9 +868,8 @@ def m7_partition_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
                     pruned_ok,
                     n_day,
                     # literal-1 oracle twin makes fixture drift to an
-                    # EMPTY probe day hash-red instead of letting the
+                    # EMPTY probe day mismatch instead of letting the
                     # parity flag pass vacuously on 0 == 0
-                    # (review-pass r12; was an in-query assert)
                     int(n_day > 0),
                     int(n_day == full.count()),
                     evolution_metadata_only,
@@ -895,20 +889,18 @@ def m7_partition_transforms(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _hidden_partition_values(files: list, prefix: str) -> set:
     """Distinct unquoted values of one hidden-partition path segment
     (e.g. ``prefix='p_days_ts'``).  Pruning contracts are stated at
-    the PARTITION level because file-count ratios are layout noise
-    (r14 multi-file fixture sweep): per-partition file counts scale
-    with the writer's input task count, so a ratio threshold tuned on
-    the single-file fixtures broke on a 4-file input while the
-    pruning itself was exactly right."""
+    the PARTITION level because file-count ratios are layout noise:
+    per-partition file counts scale with the writer's input task
+    count, while the set of partitions a probe keeps does not."""
     from ..sources.lakehouse import partition_segments
 
     return {v for f in files for k, v in partition_segments(f) if k == prefix}
 
 
-#: the [Jan 15, Jan 16) probe's exact partition-level scan set: day 15
-#: plus day 16 (read_pruned keeps trunc(hi)'s period inclusively — a
-#: sound over-read; see read_pruned)
-_DAY_PROBE_PARTS = {"2024-01-15 00:00:00", "2024-01-16 00:00:00"}
+#: the [Jan 15, Jan 16) probe's exact partition-level scan set: a
+#: days(ts) file's min/max lie inside its day, so the planner keeps
+#: day 15's files and no other day's
+_DAY_PROBE_PARTS = {"2024-01-15 00:00:00"}
 
 
 def _event_out_cols() -> list:
@@ -928,9 +920,10 @@ def _event_out_cols() -> list:
 # hash-proves the CONTENT side (m5b/m6c precedent): the day slice read
 # THROUGH the manifest predicate rewrite, and the final table after
 # evolve-to-months + append, must both equal frames DuckDB derives
-# from the fixture. The scan-set evidence (files_scanned < files_total
-# before AND after evolution) stays in-query — a full scan would still
-# return right values, so the assert is what pins the pruning.
+# from the fixture. The scan-set evidence (only the probe day's
+# day-era files, before AND after evolution) stays in-query — a full
+# scan would still return right values, so the assert is what pins the
+# pruning.
 
 _M7B_ORACLE = """
 WITH ev AS (
@@ -961,14 +954,13 @@ ORDER BY phase, event_id
 def m7b_partition_evolution_values(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Value-oracled partition evolution (r10 verdict #3): CTAS under
-    days(ts) x bucket(4, user_id) -> hidden-pruned day read (content
-    tagged phase='day') -> evolve spec to months(ts) (asserted
-    manifest-only) -> append a second deterministic slice -> full
-    content (phase='final'). DuckDB replays both frames relationally
-    from the fixture; the pruning effect itself is asserted in-query
-    on read_pruned's (files_scanned, files_total) both before and
-    after the spec change."""
+    """Value-oracled partition evolution: CTAS under days(ts) x
+    bucket(4, user_id) -> hidden-pruned day read (content tagged
+    phase='day') -> evolve spec to months(ts) (asserted manifest-only)
+    -> append a second deterministic slice -> full content
+    (phase='final'). DuckDB replays both frames relationally from the
+    fixture; the pruning effect itself is asserted in-query on
+    read_pruned's kept files both before and after the spec change."""
     wh = tempfile.mkdtemp(prefix="lakehouse_m7b_")
     try:
         ev = (
@@ -985,20 +977,12 @@ def m7b_partition_evolution_values(
         t.create(base, partition_by=["days(ts)", "bucket(4, user_id)"])
 
         day_lo, day_hi = "2024-01-15 00:00:00", "2024-01-16 00:00:00"
-        day_df, kept_f, all_f = t.read_pruned(
-            "ts", day_lo, day_hi, with_files=True
-        )
-        # partition-LEVEL pruning contract (r14, layout-invariant —
-        # the old files-ratio broke on multi-file input layouts while
-        # the pruning was exactly right): the kept day values are the
-        # probe's two boundary days, out of the ten written
+        day_df, kept_f, all_f = t.read_pruned("ts", day_lo, day_hi)
+        # partition-LEVEL pruning contract (layout-invariant): the kept
+        # day values are the probe day, out of the ten written
         kept_days = _hidden_partition_values(kept_f, "p_days_ts")
         all_days = _hidden_partition_values(all_f, "p_days_ts")
-        assert (
-            "2024-01-15 00:00:00" in kept_days  # over-pruning guard
-            and kept_days <= _DAY_PROBE_PARTS
-            and len(all_days) == 10
-        ), (
+        assert kept_days == _DAY_PROBE_PARTS and len(all_days) == 10, (
             f"pre-evolution rewrite did not prune: kept {sorted(kept_days)} "
             f"of {sorted(all_days)}"
         )
@@ -1009,26 +993,18 @@ def m7b_partition_evolution_values(
         t.append(appended)
 
         # post-evolution pruning: old-spec (day-era) files still prune
-        # to the probe's two days; new-spec files carry months(ts) and
-        # are kept whole (safe over-read on the month partition)
-        _, kept_f2, all_f2 = t.read_pruned(
-            "ts", day_lo, day_hi, with_files=True
-        )
+        # to the probe day, and the pruned read over both spec eras
+        # returns exactly the full scan's rows for the probe
+        day_df2, kept_f2, _ = t.read_pruned("ts", day_lo, day_hi)
         kept_days2 = _hidden_partition_values(kept_f2, "p_days_ts")
-        assert (
-            "2024-01-15 00:00:00" in kept_days2
-            and kept_days2 <= _DAY_PROBE_PARTS
-        ), (
+        assert kept_days2 == _DAY_PROBE_PARTS, (
             f"post-evolution day-era scan grew: {sorted(kept_days2)}"
         )
-        month_files = [
-            f
-            for f in all_f2
-            if not _hidden_partition_values([f], "p_days_ts")
-        ]
-        assert month_files and set(month_files) <= set(kept_f2), (
-            "month-era files must exist and be kept whole (over-read)"
-        )
+        n_full = t.read().filter(
+            (F.col("ts") >= F.lit(day_lo).cast("timestamp"))
+            & (F.col("ts") < F.lit(day_hi).cast("timestamp"))
+        ).count()
+        assert day_df2.count() == n_full, "post-evolution pruned read lost rows"
 
         cols = _event_out_cols()
         out = (
@@ -2094,8 +2070,8 @@ def m13_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the actual DATA of a partition-pruned read so the driver hash-verifies
 # it against DuckDB reading the raw events parquet — converting P3 from
 # "rows-only evidence" to a hard correctness row. The pruning itself is
-# asserted internally on read_pruned's scan set (files_scanned must be
-# a strict subset of files_total).
+# asserted internally on read_pruned's scan set (only the probe day's
+# files are kept).
 #
 # Module-lifetime warehouse (like format_queries._TMP_ROOT): the
 # returned DataFrame is a lazy scan over the written files, so the
@@ -2148,19 +2124,13 @@ def p3_hidden_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     lo = "2024-01-15 00:00:00"
     hi = "2024-01-16 00:00:00"
-    day_read, kept_f, all_f = t.read_pruned("ts", lo, hi, with_files=True)
-    # partition-LEVEL contract (r14, layout-invariant — file-count
-    # ratios scale with the writer's input task count): 10 day
-    # partitions were written; the probe keeps exactly its two
-    # boundary days (day 15, plus day 16 via read_pruned's inclusive
-    # trunc(hi) — a sound over-read).
+    day_read, kept_f, all_f = t.read_pruned("ts", lo, hi)
+    # partition-LEVEL contract (layout-invariant — file-count ratios
+    # scale with the writer's input task count): 10 day partitions were
+    # written; the probe keeps exactly its own day's files.
     kept_days = _hidden_partition_values(kept_f, "p_days_ts")
     all_days = _hidden_partition_values(all_f, "p_days_ts")
-    if (
-        len(all_days) != 10
-        or "2024-01-15 00:00:00" not in kept_days  # over-pruning guard
-        or not kept_days <= _DAY_PROBE_PARTS
-    ):
+    if len(all_days) != 10 or kept_days != _DAY_PROBE_PARTS:
         raise AssertionError(
             f"hidden-partition rewrite did not prune: kept "
             f"{sorted(kept_days)} of {sorted(all_days)}"

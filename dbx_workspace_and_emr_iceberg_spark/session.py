@@ -51,6 +51,10 @@ def get_spark(
         # -- local driver doubles as executor: give it headroom --
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.sql.parquet.compression.codec", "zstd")
+        # -- timestamps as Iceberg stores them (int64 micros): INT96
+        # footers carry no min/max, so such a column never prunes; the
+        # DataFrameWriter option of the same name has no effect --
+        .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
@@ -59,12 +63,11 @@ def get_spark(
     # confs: master/local[n], driver memory, and static confs (e.g. the
     # iceberg catalog wiring in extra_conf) are silently ignored then.
     # Warn LOUDLY when the caller asked for those on a reused session —
-    # a "config swap" that did nothing is worse than a warning
-    # (review-pass r15).
+    # a "config swap" that did nothing is worse than a warning.
     # getActiveSession() is THREAD-LOCAL — a session created on another
     # thread is still reused by getOrCreate with no active session on
     # this one, so also check the process-wide default
-    # (_instantiatedSession; ADVICE r15, reproduced in tests).
+    # (_instantiatedSession).
     existing = SparkSession.getActiveSession() or getattr(
         SparkSession, "_instantiatedSession", None
     )

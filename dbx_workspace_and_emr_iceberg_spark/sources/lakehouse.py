@@ -379,18 +379,17 @@ _ISO_TEMPORAL_RE = re.compile(
 )
 
 
-def temporal_bound_iso(v, sep: str = " ") -> str | None:
-    """Canonical civil ISO string for a temporal range bound — THE one
-    bound normalizer, so every pruning path shares one separator
-    convention.  Accepts datetime/date objects and ISO strings in
-    either separator convention; date-only inputs gain midnight,
-    minute-precision inputs gain ':00' — every temporal return value is
-    the FULL 'YYYY-MM-DD HH:MM:SS[.fff]' form, because read_pruned's
-    trunc slices are positional and pruned_files' compare is
-    lexicographic (an un-padded '...T08:30' sorts before the stat
-    '...T08:30:00' and would over-prune).  Returns None
-    when the value is a string that does not look temporal — the caller
-    must pass those through VERBATIM (string-column bounds)."""
+def temporal_bound_iso(v) -> str | None:
+    """Canonical civil ISO string 'YYYY-MM-DDTHH:MM:SS[.ffffff]' for a
+    temporal range bound or stat — the one normalizer, so bounds and
+    stats compare lexicographically in one convention, and the same
+    string casts to date, timestamp and timestamp_ntz. Accepts
+    datetime/date objects and ISO strings with either separator;
+    date-only inputs gain midnight and minute-precision inputs gain
+    ':00' (an un-padded '...T08:30' sorts before the stat
+    '...T08:30:00' and would over-prune). Returns None when the value
+    is a string that does not look temporal — the caller must pass
+    those through VERBATIM (string-column bounds)."""
     import datetime
 
     if isinstance(v, datetime.datetime):
@@ -401,40 +400,38 @@ def temporal_bound_iso(v, sep: str = " ") -> str | None:
             # UTC civil order equals instant order, and the session
             # pins UTC so civil values are what the engine compares
             v = v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-        s = v.isoformat(sep=" ")
-    elif isinstance(v, datetime.date):
-        s = f"{v.isoformat()} 00:00:00"
-    else:
-        s = str(v)
-        if not _ISO_TEMPORAL_RE.match(s):
-            return None
-        s = s.replace("T", " ")
-        if len(s) == 10:
-            s += " 00:00:00"
-        elif len(s) == 16:
-            s += ":00"
-        if "." in s:
-            # canonicalize the FRACTION to the stats encoder's
-            # convention (datetime.isoformat: absent when zero, else
-            # exactly 6 digits), so a short-fraction bound '…15.5'
-            # compares correctly against the 6-digit stat '…15.500000'.
-            # Digits past microseconds TRUNCATE — the same thing
-            # Spark's cast does in the residual/filter, so pruning and
-            # filtering always agree; note a truncated lo bound is up
-            # to 1 µs more inclusive than the sub-µs literal asked for
-            # (a row at exactly …15.000000 passes lo '…15.0000001') —
-            # timestamp[us] engines cannot honor sub-µs bounds exactly.
-            head, frac = s.split(".", 1)
-            frac = (frac + "000000")[:6]
-            s = head if int(frac) == 0 else f"{head}.{frac}"
-    return s.replace(" ", sep, 1) if sep != " " else s
+        return v.isoformat()
+    if isinstance(v, datetime.date):
+        return f"{v.isoformat()}T00:00:00"
+    s = str(v)
+    if not _ISO_TEMPORAL_RE.match(s):
+        return None
+    s = s.replace(" ", "T", 1)
+    if len(s) == 10:
+        s += "T00:00:00"
+    elif len(s) == 16:
+        s += ":00"
+    if "." in s:
+        # canonicalize the FRACTION to isoformat's convention (absent
+        # when zero, else exactly 6 digits), so a short-fraction bound
+        # '…15.5' compares correctly against the stat '…15.500000'.
+        # Digits past microseconds TRUNCATE — the same thing Spark's
+        # cast does in the residual/filter, so pruning and filtering
+        # always agree; note a truncated lo bound is up to 1 µs more
+        # inclusive than the sub-µs literal asked for (a row at exactly
+        # …15.000000 passes lo '…15.0000001') — timestamp[us] engines
+        # cannot honor sub-µs bounds exactly.
+        head, frac = s.split(".", 1)
+        frac = (frac + "000000")[:6]
+        s = head if int(frac) == 0 else f"{head}.{frac}"
+    return s
 
 
 def is_temporal_dtype(dt) -> bool:
-    """THE one definition of 'temporal column' for bound normalization
-    — pruned_files, read_range and read_pruned's residual all gate on
-    this, so the temporal-type set can never diverge between the
-    pruning paths."""
+    """The one definition of 'temporal column' for bound normalization:
+    the planner's stats compare, the pushed-value encoder and every
+    range read's bounds all gate on it, so the temporal-type set
+    cannot differ between them."""
     from pyspark.sql.types import (
         DateType,
         TimestampNTZType,
@@ -447,10 +444,9 @@ def is_temporal_dtype(dt) -> bool:
 def partition_segments(path: str) -> list[tuple[str, str]]:
     """(key, unquoted value) pairs from a file path's hive-style
     partition directory segments — THE one decoder for the engine's
-    ``k=v`` encoding.  read_pruned, overwrite_partitions and the
-    queries-side pruning contracts all parse this convention; a single
-    shared decoder keeps them bit-identical if the escaping ever
-    changes."""
+    ``k=v`` encoding.  overwrite_partitions and the queries' partition
+    contracts both parse this convention; one shared decoder keeps them
+    identical if the escaping ever changes."""
     import urllib.parse
 
     out = []
@@ -544,26 +540,11 @@ def _file_column_stats(path: str) -> dict[str, list]:
                 maxs[name] = hi
 
     def enc(v):
-        # datetime first (it subclasses date): 'T'-separated with
-        # seconds, zoned instants stored UTC-NAIVE (a pyarrow stat from
-        # a Spark-written zoned column is tz-aware; its '+00:00' suffix
-        # would defeat every lexicographic compare).
-        # Bare dates gain an explicit midnight so DATE-column
-        # stats share the timestamp convention — pruned_files compares
-        # bounds lexicographically after normalizing them to the SAME
-        # 'YYYY-MM-DDTHH:MM:SS' shape, and a date-only stat would sort
-        # BEFORE its own day's midnight ('2024-01-02' <
-        # '2024-01-02T00:00:00'), wrongly pruning the file whose max is
-        # exactly the bound's day.
-        if isinstance(v, datetime.datetime):
-            if v.tzinfo is not None:
-                v = v.astimezone(datetime.timezone.utc).replace(
-                    tzinfo=None
-                )
-            return v.isoformat()
-        if isinstance(v, datetime.date):
-            return v.isoformat() + "T00:00:00"
-        return v
+        # temporal stats take the bounds' canonical form: zoned instants
+        # UTC-naive (a Spark-written timestamp column reads back
+        # tz-aware), dates at midnight (a bare '2024-01-02' sorts before
+        # its own day's bound '2024-01-02T00:00:00')
+        return temporal_bound_iso(v) if isinstance(v, datetime.date) else v
 
     return {
         "min": {k: enc(v) for k, v in mins.items() if k not in unknown},
@@ -627,7 +608,7 @@ def _stat_value(v, dt):
     # the zone the stats encoder stores
     cls = v.getClass().getName()
     text = v.toInstant().toString() if cls == "java.sql.Timestamp" else v.toString()
-    iso = temporal_bound_iso(text.removesuffix("Z"), sep="T")
+    iso = temporal_bound_iso(text.removesuffix("Z"))
     # Spark hands values before the Gregorian switch over rebased to the
     # hybrid calendar, the stats hold them proleptic
     return iso if iso is not None and iso >= "1583" else None
@@ -1380,8 +1361,8 @@ class LakehouseTable:
                     if is_temporal_dtype(types[col]):
                         # a stat written before dates gained their
                         # midnight normalizes like the bound did
-                        lo = temporal_bound_iso(lo, sep="T")
-                        hi = temporal_bound_iso(hi, sep="T")
+                        lo = temporal_bound_iso(lo)
+                        hi = temporal_bound_iso(hi)
                         if lo is None or hi is None:
                             return None
                     return lo, hi
@@ -1396,11 +1377,17 @@ class LakehouseTable:
         report["planned_files"] = len(files)
         return files, report
 
-    def _range_cond(self, m: dict, col: str, lo, hi):
-        """``lo <= col <= hi`` as a Column, its bounds from
-        :meth:`_range_bounds`."""
+    def _planned_scan(self, col: str, lo, hi, half_open: bool = False):
+        """The one planned range scan behind :meth:`read_range`,
+        :meth:`pruned_files` and :meth:`read_pruned`: main's head
+        manifest, the condition ``lo <= col <= hi`` (``< hi`` when
+        ``half_open``) with bounds from :meth:`_range_bounds`, and the
+        files :meth:`_plan_files` keeps for it."""
+        m = self._existing_base()[1]
         lo_l, hi_l = self._range_bounds(m, col, lo, hi)
-        return (F.col(col) >= lo_l) & (F.col(col) <= hi_l)
+        upper = F.col(col) < hi_l if half_open else F.col(col) <= hi_l
+        cond = (F.col(col) >= lo_l) & upper
+        return m, cond, self._plan_files(m, cond)[0]
 
     def _range_bounds(self, m: dict, col: str, lo, hi):
         """The range bounds on ``col`` as literal Columns — THE dtype
@@ -1410,7 +1397,7 @@ class LakehouseTable:
         converted through the driver's local timezone); a bound the
         normalizer cannot canonicalize raises ValueError. Other bounds —
         a date-shaped bound on a STRING column too — pass verbatim
-        (padding one to '... 00:00:00' would over-filter its boundary
+        (padding one to '...T00:00:00' would over-filter its boundary
         rows lexicographically)."""
         from pyspark.sql.types import StructType
 
@@ -2308,77 +2295,23 @@ class LakehouseTable:
             out = out.unionByName(p)
         return out
 
-    def read_pruned(self, col: str, lo, hi, with_files: bool = False):
-        """Hidden-partition predicate rewrite (SURVEY §2.2 P3) — the
-        engine-side half of hidden partitioning: a range predicate on
-        the SOURCE column ``col`` is mapped to predicates on the derived
-        time-transform partition values encoded in the manifest's file
-        paths, and only matching files reach the scan. This is the
-        manifest filtering Iceberg's SparkScanBuilder performs; the user
-        never names the partition column.
+    def read_pruned(self, col: str, lo, hi):
+        """Hidden-partition predicate rewrite (SURVEY §2.2 P3): a range
+        predicate ``lo <= col < hi`` on the SOURCE column is planned
+        against the per-file min/max, so only the files that may hold a
+        matching row reach the scan — Iceberg's manifest filtering; the
+        user never names the partition column. A ``days(ts)`` file's
+        stats lie inside its day, so a one-day probe keeps only that
+        day's files.
 
-        Returns ``(df, files_scanned, files_total)`` so callers can
-        assert the pruning effect (files_scanned < files_total), not
-        just result correctness.  ``with_files=True`` returns the file
-        LISTS instead of counts — ``(df, kept_files, all_files)`` — so
-        callers can state partition-LEVEL contracts (file-count ratios
-        are layout noise: per-partition file counts scale with the
-        writer's input task count). Files whose path carries no time
-        transform of ``col`` (bucket/truncate transforms, or spec eras
-        from before partition evolution) are KEPT — safe over-read,
-        exactly how Iceberg handles partition-spec evolution. The
-        residual predicate ``lo <= col < hi`` is still applied, its
-        bounds built by the dtype gate every range read shares
-        (:meth:`_range_bounds`), so correctness never depends on
-        pruning; bounds that are not ISO-temporal prune no file.
-
-        The pruning reads partition values from the file PATHS, not
-        from the stats manifests, on purpose: Spark writes ``timestamp``
-        columns as INT96, whose parquet footers carry no min/max, so for
-        such a column the path is the only thing that can prune
-        (``test_partition_spec_survives_reopen`` shows it)."""
-        # date_trunc's string form for each unit, derived from the ISO
-        # bound — lexicographic compare is then exact
-        kept_chars = {"years": 4, "months": 7, "days": 10, "hours": 13}
-
-        def trunc(name: str, s: str) -> str:
-            n = kept_chars[name]
-            return s[:n] + "0000-01-01 00:00:00"[n:]
-
-        # ONE snapshot-log walk serves file list, schema and the scan
-        m = self._existing_base()[1]
-        lo_l, hi_l = self._range_bounds(m, col, lo, hi)
-        # every bound is canonical 'YYYY-MM-DD HH:MM:SS...': the trunc()
-        # slices are positional, so a raw date-only or 'T'-separated
-        # string would truncate wrongly and prune files with matching rows
-        lo_iso, hi_iso = temporal_bound_iso(lo), temporal_bound_iso(hi)
-        prefixes = (
-            {f"p_{n}_{col}": n for n in kept_chars}
-            if lo_iso is not None and hi_iso is not None
-            else {}
-        )
-        files = m["files"]
-        # a partition value is the truncated period START; a period
-        # overlaps [lo, hi] iff its start is within [trunc(lo), trunc(hi)]
-        # (inclusive both ends). A path carrying several time transforms
-        # of col (e.g. days+hours) must satisfy every one — each alone is
-        # sound, so the conjunction is the tightest sound prune; a path
-        # with none is kept
-        keep = sorted(
-            f
-            for f in files
-            if all(
-                trunc(prefixes[k], lo_iso) <= v <= trunc(prefixes[k], hi_iso)
-                for k, v in partition_segments(f)
-                if k in prefixes
-            )
-        )
-        out = self._read_file_set(keep, m).filter(
-            (F.col(col) >= lo_l) & (F.col(col) < hi_l)
-        )
-        if with_files:
-            return out, keep, list(files)
-        return out, len(keep), len(files)
+        Returns ``(df, kept_files, all_files)`` so callers can state
+        partition-level contracts, not just result correctness. A file
+        without stats for ``col`` (an INT96-written timestamp, a column
+        the file predates) is kept — a safe over-read; the residual
+        filter applies to every kept file, so correctness never depends
+        on pruning."""
+        m, cond, files = self._planned_scan(col, lo, hi, half_open=True)
+        return self._read_file_set(files, m).filter(cond), files, list(m["files"])
 
     def overwrite_partitions(self, df: DataFrame) -> int:
         """Dynamic partition-level INSERT OVERWRITE (S6) — Iceberg's
@@ -2700,8 +2633,7 @@ class LakehouseTable:
         """Files whose [min,max] for col intersects [lo,hi] — the
         planner's scan set for the range predicate. Files without stats
         are kept (safe)."""
-        m = self._existing_base()[1]
-        return self._plan_files(m, self._range_cond(m, col, lo, hi))[0]
+        return self._planned_scan(col, lo, hi)[2]
 
     def rewrite_sorted(self, col: str, target_files: int = 8) -> int:
         """rewrite_data_files(strategy => 'sort', sort_order => col):
@@ -2796,11 +2728,9 @@ class LakehouseTable:
     def read_range(self, col: str, lo, hi) -> DataFrame:
         """Range scan: the planned files (min/max skipping) + the
         residual filter, both from one range condition (see
-        :meth:`_range_cond` for the bound conventions)."""
-        # one snapshot-log walk serves planning, schema and the scan
-        m = self._existing_base()[1]
-        cond = self._range_cond(m, col, lo, hi)
-        return self._read_file_set(self._plan_files(m, cond)[0], m).filter(cond)
+        :meth:`_range_bounds` for the bound conventions)."""
+        m, cond, files = self._planned_scan(col, lo, hi)
+        return self._read_file_set(files, m).filter(cond)
 
 
 def history(table: LakehouseTable) -> DataFrame:

@@ -51,10 +51,9 @@ def _row(i: int):
 
 def _range_batches(start: int, end: int):
     """The [start, end) id range as ONE Arrow RecordBatch (or nothing
-    when empty) — the vectorized executor-side path (r20, guide §4:
-    yielding per-row Python tuples made Spark pickle/convert 5000 rows
-    one at a time; a reader may yield pyarrow RecordBatches instead and
-    skip the row loop entirely).  Value-identical to :func:`_row`:
+    when empty) — the vectorized executor-side path (per-row Python
+    tuples make Spark convert every row one at a time; a reader that
+    yields pyarrow RecordBatches skips the row loop entirely).  Value-identical to :func:`_row`:
     int64 modulo and one IEEE float64 division produce the same bits
     as the Python ints/float path (exact two-decimal doubles)."""
     if end <= start:
@@ -213,7 +212,7 @@ class SyntheticEventsStreamReader(DataSourceStreamReader):
         return _split_range(start["offset"], end["offset"], self.parts)
 
     def read(self, partition: _RangePartition):
-        # same vectorized Arrow path as the batch reader (r20)
+        # same vectorized Arrow path as the batch reader
         yield from _range_batches(partition.start, partition.end)
 
     def commit(self, end):
@@ -279,8 +278,10 @@ class LakehouseStreamDataSource(DataSource):
 
 class LakehouseStreamReader(DataSourceStreamReader):
     def __init__(self, root: str, schema: StructType):
+        from pyspark.sql.pandas.types import to_arrow_schema
+
         self.root = root
-        self.fields = [f.name for f in schema.fields]
+        self.arrow_schema = to_arrow_schema(schema)
 
     def initialOffset(self):
         return {"version": 0}
@@ -316,10 +317,11 @@ class LakehouseStreamReader(DataSourceStreamReader):
             return
         import pyarrow.parquet as pq
 
-        tbl = pq.read_table(partition.path)
-        cols = [tbl.column(f).to_pylist() for f in self.fields]
-        for row in zip(*cols):
-            yield row
+        # Arrow batches in the reader's schema, as _range_batches yields
+        # them: the file's physical types vary (an INT96 timestamp reads
+        # back ns and naive, an int64 one us and UTC-adjusted)
+        tbl = pq.read_table(partition.path, columns=self.arrow_schema.names)
+        yield from tbl.cast(self.arrow_schema).to_batches()
 
     def commit(self, end):
         pass

@@ -9,6 +9,7 @@ compared with tolerance).
 
 from __future__ import annotations
 
+import contextlib
 import math
 import os
 import sys
@@ -28,6 +29,28 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 def spark():
     s = get_spark(app_name="spark-graft-tests", cpus=8)
     yield s
+
+
+@contextlib.contextmanager
+def int96_timestamps(spark):
+    """Write ``timestamp`` columns as legacy INT96 (no footer min/max)
+    inside the block, as a session not built by get_spark does; the
+    session's own setting comes back afterwards."""
+    key = "spark.sql.parquet.outputTimestampType"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "INT96")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, before)
+
+
+def ts_physical_type(path: str) -> str:
+    """The parquet physical type a data file stores its ``ts`` column as."""
+    import pyarrow.parquet as pq
+
+    schema = pq.ParquetFile(path).schema
+    return schema.column(schema.names.index("ts")).physical_type
 
 
 @pytest.fixture(scope="session")

@@ -456,17 +456,23 @@ def test_sim_cell_collision_channels_closed_r18():
 
 
 def test_bench_previous_floors_layout_gated(tmp_path, monkeypatch):
-    """Floors recorded on a different physical layout must not seed the
-    >25%-mover rule — cross-layout diffs would fire the re-pass
-    suite-wide. A sidecar without a layout field counts as single-file."""
+    """Floors recorded on a different physical layout or scale factor
+    must not seed the >25%-mover rule — cross-layout or cross-sf diffs
+    would fire the re-pass suite-wide. A sidecar without a layout field
+    counts as single-file; one without an sf field gives no floors."""
     import json as _json
 
     import bench
 
     p = tmp_path / "full.json"
-    p.write_text(_json.dumps({"floors": {"q1": 1.0}, "layout": "multi16"}))
+    p.write_text(
+        _json.dumps({"floors": {"q1": 1.0}, "layout": "multi16", "sf": 0.1})
+    )
     monkeypatch.setattr(bench, "FULL_RESULT_PATH", str(p))
-    assert bench.previous_floors("multi16") == {"q1": 1.0}
+    assert bench.previous_floors("multi16", 0.1) == {"q1": 1.0}
+    # a run at another scale factor gets no floors from it
+    assert bench.previous_floors("multi16", 0.01) == {}
+    assert bench.previous_floors("multi16", None) == {}
     # best_floors wins over the per-run floors when present
     p.write_text(
         _json.dumps(
@@ -474,16 +480,22 @@ def test_bench_previous_floors_layout_gated(tmp_path, monkeypatch):
                 "floors": {"q1": 1.0},
                 "best_floors": {"q1": 0.7},
                 "layout": "multi16",
+                "sf": 0.1,
             }
         )
     )
-    assert bench.previous_floors("multi16") == {"q1": 0.7}
-    p.write_text(_json.dumps({"floors": {"q1": 2.0}}))
-    assert bench.previous_floors("single") == {"q1": 2.0}
-    assert bench.previous_floors("multi16") == {}
+    assert bench.previous_floors("multi16", 0.1) == {"q1": 0.7}
+    p.write_text(_json.dumps({"floors": {"q1": 2.0}, "sf": 0.1}))
+    assert bench.previous_floors("single", 0.1) == {"q1": 2.0}
+    assert bench.previous_floors("multi16", 0.1) == {}
     # and a multi16 sidecar gives a single-file run no floors
-    p.write_text(_json.dumps({"floors": {"q1": 3.0}, "layout": "multi16"}))
-    assert bench.previous_floors("single") == {}
+    p.write_text(
+        _json.dumps({"floors": {"q1": 3.0}, "layout": "multi16", "sf": 0.1})
+    )
+    assert bench.previous_floors("single", 0.1) == {}
+    # a sidecar that recorded no sf gives no floors
+    p.write_text(_json.dumps({"floors": {"q1": 4.0}, "layout": "multi16"}))
+    assert bench.previous_floors("multi16", 0.1) == {}
 
 
 def test_snapshot_log_format_lives_in_one_module():

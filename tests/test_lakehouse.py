@@ -235,12 +235,19 @@ def test_rest_catalog_conf_shape():
     assert not any(k.endswith(".oauth2-server-uri") for k in minimal)
 
 
+def _files_with_rows(spark, files, col, lo, hi):
+    """The files holding a row with ``lo <= col < hi``, each read on
+    its own: the brute-force scan set a sound pruned read must cover."""
+    cond = (F.col(col) >= lo) & (F.col(col) < hi)
+    return {f for f in files if not spark.read.parquet(f).filter(cond).isEmpty()}
+
+
 def test_read_pruned_across_partition_evolution(spark, wh):
     """read_pruned must stay correct when the table holds files from
-    MULTIPLE partition-spec eras: each file is judged by the transform
-    its own path carries (days-era files by day, months-era files by
-    month), and files carrying no time transform of the filter column
-    are kept — the safe over-read Iceberg applies under spec evolution."""
+    MULTIPLE partition-spec eras: each file is judged by its own
+    min/max (days-era files hold one day, months-era files span the
+    month), so day-era files prune and month-era files that hold a
+    matching row are kept."""
     ev = (
         load_table(spark, SF_DIR, "events")
         .select("event_id", "ts", "user_id")
@@ -258,12 +265,13 @@ def test_read_pruned_across_partition_evolution(spark, wh):
     t.append(half_b)  # same time range, coarser layout
 
     lo, hi = "2024-01-11 00:00:00", "2024-01-12 00:00:00"
-    got, n_scan, n_total = t.read_pruned("ts", lo, hi)
+    got, kept, total = t.read_pruned("ts", lo, hi)
+    n_scan, n_total = len(kept), len(total)
     # non-canonical but valid bound spellings must canonicalize, not
-    # silently mis-truncate and prune matching files
-    got_date_only, n2, _ = t.read_pruned("ts", "2024-01-11", "2024-01-12")
-    got_t_sep, n3, _ = t.read_pruned("ts", "2024-01-11T00:00:00", "2024-01-12T00:00:00")
-    assert n2 == n_scan and n3 == n_scan
+    # silently mis-compare and prune matching files
+    _, kept2, _ = t.read_pruned("ts", "2024-01-11", "2024-01-12")
+    _, kept3, _ = t.read_pruned("ts", "2024-01-11T00:00:00", "2024-01-12T00:00:00")
+    assert kept2 == kept and kept3 == kept
     want = ev.filter(
         (F.col("ts") >= F.lit(lo).cast("timestamp"))
         & (F.col("ts") < F.lit(hi).cast("timestamp"))
@@ -274,20 +282,90 @@ def test_read_pruned_across_partition_evolution(spark, wh):
         r.event_id for r in want.collect()
     }
     # pruning still bites: the days-era contributes only day-11 files,
-    # while every months-era file (all January) must be kept
+    # while every months-era file holding a day-11 row must be kept
+    assert _files_with_rows(spark, total, "ts", lo, hi) <= set(kept)
     assert n_scan < n_total, f"no pruning across eras: {n_scan}/{n_total}"
+
+
+def test_get_spark_writes_timestamps_with_stats(spark, wh):
+    """get_spark writes ``timestamp`` as int64 micros, so each days(ts)
+    file's stats entry holds its ts min/max — an INT96 footer holds
+    none, and the column could not prune."""
+    import datetime
+
+    from tests.conftest import ts_physical_type
+
+    conf = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    assert conf == "TIMESTAMP_MICROS"
+    t = LakehouseTable(spark, wh, "ts_stats")
+    t.create(
+        spark.createDataFrame(
+            [(datetime.datetime(2024, 1, d, 6), d) for d in (1, 2, 3)],
+            "ts timestamp, i long",
+        ),
+        partition_by=["days(ts)"],
+    )
+    m = t._read_manifest(t.main_head())
+    assert {ts_physical_type(f) for f in m["files"]} == {"INT64"}
+    stats = [m["stats"][f] for f in m["files"]]
+    assert all(s["min"]["ts"] == s["max"]["ts"] for s in stats), stats
+    assert {s["min"]["ts"] for s in stats} == {
+        f"2024-01-0{d}T06:00:00" for d in (1, 2, 3)
+    }
+
+
+def test_pruned_reads_keep_int96_files_and_prune_int64_ones(spark, wh):
+    """A table whose first files were written with INT96 timestamps (no
+    ts stats) and later ones as int64: every range read keeps each
+    INT96 file, prunes the int64 files by their min/max, and returns
+    the brute-force rows."""
+    import datetime
+
+    from tests.conftest import int96_timestamps, ts_physical_type
+
+    def rows(days, base):
+        return spark.createDataFrame(
+            [(datetime.datetime(2024, 1, d, 6), base + d) for d in days],
+            "ts timestamp, i long",
+        )
+
+    t = LakehouseTable(spark, wh, "mixed_ts")
+    with int96_timestamps(spark):
+        t.create(rows((1, 2, 3, 5), 0), partition_by=["days(ts)"])
+    legacy = t._files()
+    t.append(rows((4, 5, 6), 10))
+    fresh = [f for f in t._files() if f not in legacy]
+    assert {ts_physical_type(f) for f in legacy} == {"INT96"}
+    assert {ts_physical_type(f) for f in fresh} == {"INT64"}
+    day5 = {f for f in fresh if "p_days_ts=2024-01-05" in f}
+    assert day5
+
+    lo, hi = "2024-01-05 00:00:00", "2024-01-06 00:00:00"
+    brute = t.read().filter(
+        (F.col("ts") >= F.lit(lo).cast("timestamp"))
+        & (F.col("ts") < F.lit(hi).cast("timestamp"))
+    )
+    want = sorted(r.i for r in brute.collect())
+    assert want == [5, 15]
+    got, kept, total = t.read_pruned("ts", lo, hi)
+    assert set(kept) == set(legacy) | day5 and len(total) == len(legacy) + len(fresh)
+    assert sorted(r.i for r in got.collect()) == want
+    last = "2024-01-05 23:59:59"
+    assert set(t.pruned_files("ts", lo, last)) == set(legacy) | day5
+    assert sorted(r.i for r in t.read_range("ts", lo, last).collect()) == want
 
 
 def test_read_pruned_keeps_untransformed_columns_safe(spark, wh):
     """A range filter on a column with NO time transform in the spec
-    (bucket-only layout) must degrade to a full scan + residual filter,
-    never a wrong prune."""
+    (bucket-only layout) prunes only on the files' min/max: every file
+    holding a matching row is kept, and the residual filter decides the
+    rows — never a wrong prune."""
     ev = load_table(spark, SF_DIR, "events").select("event_id", "ts", "user_id")
     t = LakehouseTable(spark, wh, "ev_bkt")
     t.create(ev, partition_by=["bucket(4, user_id)"])
     lo, hi = "2024-01-11 00:00:00", "2024-01-12 00:00:00"
-    got, n_scan, n_total = t.read_pruned("ts", lo, hi)
-    assert n_scan == n_total, "bucket layout cannot prune a ts range"
+    got, kept, total = t.read_pruned("ts", lo, hi)
+    assert _files_with_rows(spark, total, "ts", lo, hi) <= set(kept)
     want = ev.filter(
         (F.col("ts") >= F.lit(lo).cast("timestamp"))
         & (F.col("ts") < F.lit(hi).cast("timestamp"))
@@ -1081,39 +1159,38 @@ def test_merge_update_set_star_still_takes_source(spark, wh):
 
 
 def test_temporal_bound_iso_contract():
-    """THE one bound normalizer (r14): temporal inputs canonicalize in
-    either separator convention, date-only gains midnight, and
-    NON-temporal strings return None so callers pass them through
-    verbatim — a blanket separator replace corrupted string-column
-    bounds like 'NEW YORK' (review-pass r14)."""
+    """The one bound normalizer: temporal inputs in either separator
+    convention canonicalize to the 'T' form, date-only gains midnight,
+    and NON-temporal strings return None so callers pass them through
+    verbatim — a blanket separator replace would corrupt string-column
+    bounds like 'NEW YORK'."""
     import datetime
 
     from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
         temporal_bound_iso,
     )
 
-    assert temporal_bound_iso(datetime.datetime(1996, 6, 1)) == "1996-06-01 00:00:00"
-    assert temporal_bound_iso(datetime.date(1996, 6, 1)) == "1996-06-01 00:00:00"
-    assert temporal_bound_iso("1996-06-01T08:30:00") == "1996-06-01 08:30:00"
-    assert temporal_bound_iso("1996-06-01 08:30:00", sep="T") == "1996-06-01T08:30:00"
-    assert temporal_bound_iso("1996-06-01") == "1996-06-01 00:00:00"
+    assert temporal_bound_iso(datetime.datetime(1996, 6, 1)) == "1996-06-01T00:00:00"
+    assert temporal_bound_iso(datetime.date(1996, 6, 1)) == "1996-06-01T00:00:00"
+    assert temporal_bound_iso("1996-06-01T08:30:00") == "1996-06-01T08:30:00"
+    assert temporal_bound_iso("1996-06-01 08:30:00") == "1996-06-01T08:30:00"
+    assert temporal_bound_iso("1996-06-01") == "1996-06-01T00:00:00"
     # fractional seconds survive, canonicalized to the stats encoder's
-    # 6-digit convention (r15 — see
+    # 6-digit convention (see
     # test_temporal_bound_iso_fraction_canonicalization)
     assert (
-        temporal_bound_iso("1996-06-01 08:30:00.25", sep="T")
+        temporal_bound_iso("1996-06-01 08:30:00.25")
         == "1996-06-01T08:30:00.250000"
     )
     # non-temporal strings: caller must pass through verbatim
     assert temporal_bound_iso("NEW YORK") is None
     assert temporal_bound_iso("ATLAS") is None
     assert temporal_bound_iso("1996-06") is None
-    # minute-precision inputs gain ':00' (ADVICE r14: the positional
-    # trunc slices and lexicographic stat compares assume full
-    # 'HH:MM:SS'; '...T08:30' < '...T08:30:00' over-pruned the
-    # boundary minute)
-    assert temporal_bound_iso("1996-06-01 08:30") == "1996-06-01 08:30:00"
-    assert temporal_bound_iso("1996-06-01T08:30", sep="T") == "1996-06-01T08:30:00"
+    # minute-precision inputs gain ':00' (the lexicographic stat
+    # compare assumes full 'HH:MM:SS'; '...T08:30' < '...T08:30:00'
+    # would over-prune the boundary minute)
+    assert temporal_bound_iso("1996-06-01 08:30") == "1996-06-01T08:30:00"
+    assert temporal_bound_iso("1996-06-01T08:30") == "1996-06-01T08:30:00"
     # a fraction without seconds is not a temporal shape we canonicalize
     assert temporal_bound_iso("1996-06-01 08:30.5") is None
 
@@ -1166,12 +1243,10 @@ def test_pruned_files_date_shaped_string_column(spark, wh):
 
 
 def test_read_pruned_residual_string_column_boundary(spark, wh):
-    """Review-pass r15: read_pruned's residual predicate must compare a
-    date-SHAPED STRING column against the RAW bounds — padding them to
-    '... 00:00:00' would drop the boundary day lexicographically
-    ('2024-01-02' >= '2024-01-02 00:00:00' is FALSE).  The string
-    column carries no time transform, so every file is kept and the
-    residual alone decides correctness."""
+    """read_pruned's residual predicate and its planned scan must compare
+    a date-SHAPED STRING column against the RAW bounds — padding them to
+    '...T00:00:00' would drop the boundary day lexicographically
+    ('2024-01-02' >= '2024-01-02T00:00:00' is FALSE)."""
     import datetime
 
     rows = [
@@ -1184,7 +1259,7 @@ def test_read_pruned_residual_string_column_boundary(spark, wh):
         partition_by=["days(ts)"],
     )
     out, kept, total = t.read_pruned("d", "2024-01-02", "2024-01-06")
-    assert kept == total  # no transform of d: nothing prunable
+    assert _files_with_rows(spark, total, "d", "2024-01-02", "2024-01-06") <= set(kept)
     got = sorted(r.i for r in out.collect())
     assert got == [2, 5], f"boundary day dropped: {got}"
 
@@ -1192,8 +1267,9 @@ def test_read_pruned_residual_string_column_boundary(spark, wh):
 def test_read_pruned_bounds_pass_the_range_dtype_gate(spark, wh):
     """read_pruned builds its bounds with the dtype gate every range read
     shares: a bound that is not ISO-temporal is compared verbatim on a
-    string column (and prunes no file), and raises the contracted
-    ValueError on a temporal column, also under ``python -O``."""
+    string column (in the planner and the residual alike), and raises
+    the contracted ValueError on a temporal column, also under
+    ``python -O``."""
     import datetime
 
     rows = [
@@ -1206,7 +1282,7 @@ def test_read_pruned_bounds_pass_the_range_dtype_gate(spark, wh):
         partition_by=["days(ts)"],
     )
     out, kept, total = t.read_pruned("d", "2024-01-0", "2024-01-06")
-    assert kept == total
+    assert _files_with_rows(spark, total, "d", "2024-01-0", "2024-01-06") <= set(kept)
     assert sorted(r.i for r in out.collect()) == [2, 5]
     with pytest.raises(ValueError, match="unsupported temporal bound"):
         t.read_pruned("ts", "2024-01-02 08:30.5", "2024-01-06")
@@ -1240,8 +1316,7 @@ def test_pruned_files_self_heals_legacy_date_stats(spark, wh):
 
 
 def test_temporal_bound_iso_fraction_canonicalization():
-    """Review-pass r15: the stats encoder (datetime.isoformat) emits
-    NO fraction when microseconds are zero and EXACTLY six digits
+    """The stats encoder (datetime.isoformat) emits NO fraction when microseconds are zero and EXACTLY six digits
     otherwise — bounds must canonicalize to the same convention or the
     lexicographic compare over-prunes ('…15.5' < '…15.500000')."""
     from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
@@ -1249,18 +1324,18 @@ def test_temporal_bound_iso_fraction_canonicalization():
     )
 
     f = temporal_bound_iso
-    assert f("1996-06-01 08:30:15.5") == "1996-06-01 08:30:15.500000"
-    assert f("1996-06-01T08:30:15.5", sep="T") == "1996-06-01T08:30:15.500000"
+    assert f("1996-06-01 08:30:15.5") == "1996-06-01T08:30:15.500000"
+    assert f("1996-06-01T08:30:15.5") == "1996-06-01T08:30:15.500000"
     # zero fractions strip entirely (isoformat omits zero micros)
-    assert f("1996-06-01 08:30:15.0") == "1996-06-01 08:30:15"
-    assert f("1996-06-01 08:30:15.000000") == "1996-06-01 08:30:15"
+    assert f("1996-06-01 08:30:15.0") == "1996-06-01T08:30:15"
+    assert f("1996-06-01 08:30:15.000000") == "1996-06-01T08:30:15"
     # digits past microseconds truncate (timestamp[us] data)
-    assert f("1996-06-01 08:30:15.1234567") == "1996-06-01 08:30:15.123456"
+    assert f("1996-06-01 08:30:15.1234567") == "1996-06-01T08:30:15.123456"
     import datetime
 
     assert (
         f(datetime.datetime(1996, 6, 1, 8, 30, 15, 500000))
-        == "1996-06-01 08:30:15.500000"
+        == "1996-06-01T08:30:15.500000"
     )
 
 
@@ -2049,7 +2124,7 @@ def test_partition_spec_survives_reopen(spark, wh):
         added = [f for f in t._files() if f not in before]
         assert added and all("p_days_ts=2024-01-05" in f for f in added), added
         got, kept, total = t.read_pruned(
-            "ts", "2024-01-05 00:00:00", "2024-01-05 12:00:00", with_files=True
+            "ts", "2024-01-05 00:00:00", "2024-01-05 12:00:00"
         )
         assert set(added) <= set(kept) and len(kept) < len(total)
         assert sorted(r.i for r in got.collect()) == list(range(11, 11 + n))

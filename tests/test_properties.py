@@ -872,12 +872,12 @@ def test_windowspec_parser_fuzz(specs):
 
 
 def test_temporal_bound_iso_properties():
-    """Property-pin the bound normalizer (r15): IDEMPOTENT in both
-    separator conventions (the pruned_files self-heal path re-runs it
-    on already-canonical stats), and AGREED with the stats encoder —
-    for any datetime/date, normalizing the encoder's output equals
-    normalizing the object itself, so bound-vs-stat compares are
-    exact at every boundary."""
+    """Property-pin the bound normalizer: IDEMPOTENT, and blind to the
+    input's separator (the planner's self-heal path re-runs it on
+    already-canonical stats), and AGREED with the stats encoder — for
+    any datetime/date, normalizing the encoder's output equals
+    normalizing the object itself, so bound-vs-stat compares are exact
+    at every boundary."""
     import datetime
 
     from hypothesis import given
@@ -894,21 +894,20 @@ def test_temporal_bound_iso_properties():
 
     @given(dts, st.sampled_from([" ", "T"]))
     def check(dt, sep):
-        out = temporal_bound_iso(dt, sep=sep)
+        out = temporal_bound_iso(dt)
         # canonical: full seconds, fraction absent or exactly 6 digits
         assert len(out) == 19 or (len(out) == 26 and out[19] == ".")
-        assert out[10] == sep
-        # idempotent through EITHER separator convention
-        assert temporal_bound_iso(out, sep=sep) == out
-        other = "T" if sep == " " else " "
-        assert temporal_bound_iso(out, sep=other) == out.replace(sep, other, 1)
+        assert out[10] == "T"
+        # idempotent, whichever separator the input spells
+        assert temporal_bound_iso(out) == out
+        assert temporal_bound_iso(out.replace("T", sep, 1)) == out
         # encoder agreement: isoformat()-encoded stats normalize to the
         # same canonical string as the object (datetime stats path)
-        assert temporal_bound_iso(dt.isoformat(), sep=sep) == out
+        assert temporal_bound_iso(dt.isoformat(sep=sep)) == out
         # date stats path: midnight-canonical both ways
         d = dt.date()
-        assert temporal_bound_iso(d.isoformat() + "T00:00:00", sep=sep) == (
-            temporal_bound_iso(d, sep=sep)
+        assert temporal_bound_iso(d.isoformat() + "T00:00:00") == (
+            temporal_bound_iso(d)
         )
 
     check()
@@ -1146,12 +1145,14 @@ def pruned_scan_case(draw):
 @given(pruned_scan_case())
 @SLOW
 def test_read_pruned_matches_bruteforce(spark, case):
-    """read_pruned (hidden-partition predicate rewrite + residual) for
-    ANY transform era and random half-open bounds: the value pool
-    crosses a YEAR boundary in 9-hour steps, so years/months/days/hours
-    truncations all see period-boundary hits; bucket(i) layouts carry
-    no time transform of d and must degrade to full scan + residual."""
+    """read_pruned (planned scan + residual) for ANY transform era and
+    random half-open bounds: the value pool crosses a YEAR boundary in
+    9-hour steps, so years/months/days/hours partitions all see
+    period-boundary hits; whatever the layout, every file holding a
+    matching row is kept and the rows equal brute force."""
     import datetime
+
+    import pyarrow.parquet as pq
 
     spec, idx, lo_i, hi_i, form = case
     vals = [
@@ -1172,15 +1173,17 @@ def test_read_pruned_matches_bruteforce(spark, case):
         hi = vals[hi_i] if form == "obj" else vals[hi_i].isoformat(
             sep=" " if form == "iso" else "T"
         )
-        got_df, kept, allf = t.read_pruned("d", lo, hi, with_files=True)
+        got_df, kept, allf = t.read_pruned("d", lo, hi)
         got = sorted(r.i for r in got_df.collect())
         # half-open: lo <= v < hi (read_pruned's residual contract)
         want = sorted(i for i, j in enumerate(idx) if lo_i <= j < hi_i)
         assert got == want, (spec, form, lo, hi, got, want)
         assert set(kept) <= set(allf)
-        if spec.startswith("bucket"):
-            # no time transform of d on the path: safe full scan
-            assert sorted(kept) == sorted(allf)
+        # soundness: every file holding a matching row is kept
+        for f in allf:
+            held = pq.read_table(f, columns=["i"]).column("i").to_pylist()
+            if any(lo_i <= idx[i] < hi_i for i in held):
+                assert f in kept, (spec, form, lo, hi, f)
     finally:
         shutil.rmtree(wh, ignore_errors=True)
 
@@ -2009,7 +2012,8 @@ def test_plan_files_keeps_every_file_with_a_match(spark, case):
                         "s": r["s"],
                         "d": r["d"],
                         "tn": r["tn"],
-                        # parquet's INT96 timestamps read back naive UTC
+                        # int64 timestamps read back zoned UTC, legacy
+                        # INT96 ones naive UTC: pin both to UTC
                         "ts": r["ts"] and r["ts"].replace(tzinfo=_UTC),
                     }
                     for r in rows

@@ -130,3 +130,74 @@ def test_lakehouse_stream_resolves_main_head_not_raw_log(spark, tmp_path):
     assert [f.name for f in ds.schema().fields] == ["id", "v", "w"]
     reader = ds.streamReader(ds.schema())
     assert reader.latestOffset() == {"version": 2}
+
+
+def test_lakehouse_stream_batches_match_table_values(spark, tmp_path):
+    """The stream source yields Arrow batches in the reader's schema
+    whose values equal ``read()``'s, for ``timestamp`` files written as
+    INT96 and as int64, ``timestamp_ntz`` and ``date``."""
+    import datetime
+
+    import pyarrow as pa
+
+    from dbx_workspace_and_emr_iceberg_spark.sources.lakehouse import (
+        LakehouseTable,
+    )
+    from dbx_workspace_and_emr_iceberg_spark.sources.pyds import (
+        LakehouseStreamDataSource,
+        _FilePartition,
+        register_lakehouse_stream,
+    )
+    from tests.conftest import int96_timestamps, ts_physical_type
+
+    def rows(days):
+        return spark.createDataFrame(
+            [
+                (
+                    datetime.datetime(2024, 1, d, 6, 30, 15, 500000),
+                    datetime.datetime(2024, 1, d, 7),
+                    datetime.date(2024, 1, d),
+                    d,
+                )
+                for d in days
+            ],
+            "ts timestamp, tn timestamp_ntz, d date, i long",
+        ).coalesce(1)
+
+    t = LakehouseTable(spark, str(tmp_path), "tt")
+    with int96_timestamps(spark):
+        t.create(rows((1, 2, 3)))
+    t.append(rows((4, 5, 6)))
+    files = t._files()
+    assert [ts_physical_type(f) for f in files] == ["INT96", "INT64"]
+
+    ds = LakehouseStreamDataSource(options={"table_root": t.root})
+    reader = ds.streamReader(ds.schema())
+    for f in files:
+        batches = list(reader.read(_FilePartition(f)))
+        assert batches and all(
+            isinstance(b, pa.RecordBatch) and b.schema == reader.arrow_schema
+            for b in batches
+        )
+
+    register_lakehouse_stream(spark)
+    q = (
+        spark.readStream.format("lakehouse_stream")
+        .option("table_root", t.root)
+        .load()
+        .writeStream.format("memory")
+        .queryName("pyds_time_types_sink")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination(120)
+        assert q.exception() is None
+    finally:
+        if q.isActive:
+            q.stop()
+    cols = "ts, tn, d, i"
+    got = sorted(spark.sql(f"SELECT {cols} FROM pyds_time_types_sink").collect())
+    want = sorted(t.read().selectExpr(*cols.split(", ")).collect())
+    assert len(got) == 6 and got == want

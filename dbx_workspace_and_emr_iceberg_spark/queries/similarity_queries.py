@@ -78,7 +78,7 @@ def x3b_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     wider buckets, more tables: per-table collision for a neighbor at
     angle θ is (1-θ/π)^planes, so fewer planes per table + a union over
     more tables is what lifts recall for mid-cosine neighbors).
-    Contract-ORACLED (r11, the x3e pattern): recall@5 ≥ 0.5 vs the
+    Contract-ORACLED (the x3e pattern): recall@5 ≥ 0.5 vs the
     exact result and the per-query k bound as hash-checked 0/1
     flags (approximate by design; the threshold IS the contract)."""
     e = load_table(spark, sf_dir, "embeddings")
@@ -100,9 +100,9 @@ def x3b_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (approx.neighbor_id == exact.exact_neighbor),
     ).count()
     total = exact.count()
-    # NO raise before the flag (review-pass r18, the x3d/ADVICE-r11
-    # rule): an in-query AssertionError duplicating the hashed
-    # recall_ge_threshold condition made the flag structurally
+    # NO raise before the flag (the x3d rule): an in-query
+    # AssertionError duplicating the hashed recall_ge_threshold
+    # condition would make the flag structurally
     # constant — a recall regression must reach the driver as a hash
     # mismatch, not abort the sweep.  (per_query_le_k is weaker: the
     # rank<=k filter inside ann_topk_lsh enforces it by construction,
@@ -190,7 +190,7 @@ FROM embeddings WHERE vec_id % 50 = 0
 def x3d_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """numpy-matmul top-k via mapInPandas (see cosine_topk_vectorized).
 
-    CONTRACT-ORACLED r13 (x3e/o5 precedent, VERDICT r12 #5): the raw
+    CONTRACT-ORACLED (x3e/o5 precedent): the raw
     VALUES are float-ulp tie-sensitive — numpy's fused dot products
     can order two near-equal cosines differently from the interpreted
     JVM fold, swapping tail ranks, which is why this entry was
@@ -198,7 +198,7 @@ def x3d_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
     is not: the fast path must (a) cover every query vector, (b)
     return at most k rows per query, and (c) agree with the
     hash-green interpreted x3 on >= 95% of (query, neighbor) pairs.
-    Flags are computed WITHOUT preceding asserts (ADVICE r11), so a
+    Flags are computed WITHOUT preceding asserts, so a
     violation reaches the driver as a hash mismatch rather than dying
     in-query where the oracle can't see it."""
     from collections import Counter
@@ -286,8 +286,7 @@ def x3g_topk_vectorized_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The numpy-matmul top-k ALONE, as a single-execution plan — the
     head-to-head bench twin of x3_topk_cosine (same inputs, same k).
 
-    VALUE-ORACLED r17 (VERDICT-r16 #6 — formerly the registry's one
-    rows-only query): the matmul now runs over quantized unit vectors
+    VALUE-ORACLED: the matmul runs over quantized unit vectors
     (cosine_topk_int_vectorized), where every float64 partial product
     and partial sum is an exact integer « 2⁵³, so the ranking is x3h's
     sign(dd)·((dd²·scale) div n2) key — deterministic, ulp-free, and
@@ -313,8 +312,8 @@ def x3g_topk_vectorized_bench(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- X3e: IVF-partitioned ANN (contract-oracled) ----------------------------
 # ANN output is seed/partition-order sensitive in general, so the
-# VALUES aren't SQL-replayable — but the CONTRACT is (o5 precedent,
-# r10 verdict #5): with deterministic centroid seeding the whole
+# VALUES aren't SQL-replayable — but the CONTRACT is (o5 precedent):
+# with deterministic centroid seeding the whole
 # pipeline must reproduce bit-identically, every query must return at
 # most k ranked neighbors none of which is itself, and recall@5 vs the
 # oracle-checked exact scorer must clear the floor. Each clause is a
@@ -560,25 +559,26 @@ def x3f_lang_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 # no model artifact to ship and DuckDB re-derives the identical matrix
 # entry-by-entry: the whole projection is value-oracled.
 #
-# INTEGER-EXACT (review-pass r18, the x3g/x1c rule): the old spelling
-# np.round(x @ mat / 4, 4) had TWO cross-engine split channels — (a)
-# np.round is binary half-TO-EVEN while DuckDB rounds half-away
-# (np.round(0.03125,4)=0.0312 vs DuckDB 0.0313), and (b) BLAS dgemm
-# blocks its float sums by Arrow batch size while the oracle folds in
-# scan order, so the doubles themselves differ in ulps (fixture margin
-# was 6.2e-5 at vec_id=230 dim 6 — one regen from a hash split).  Now
-# each element quantizes q = floor(x·1e6 + 0.5) (single
-# correctly-rounded IEEE ops, the quantized_unit_vectors convention),
-# the ±1 matmul runs in pure int64 (|yi| ≤ 64·|q|max « 2⁵³ — exact and
-# ORDER-FREE), and the 4-dp display is the d4 integer half-up formula
-# over yi/(4·1e6) (√16 = 4 exactly), one identical IEEE divide at the
-# end.  DuckDB replays every integer.
+# INTEGER-EXACT (the x3g/x1c rule): no float rounding or float sum
+# may decide a printed digit. np.round is half-TO-EVEN where DuckDB
+# rounds half-away (0.03125 -> 0.0312 vs 0.0313), and BLAS dgemm
+# blocks its float sums by Arrow batch size where the oracle folds in
+# scan order, so a float matmul differs in ulps. So each element
+# quantizes q = floor(x·1e6 + 0.5) (single correctly-rounded IEEE ops,
+# the quantized_unit_vectors convention), the ±1 matmul runs in pure
+# int64 (|yi| ≤ 64·|q|max « 2⁵³ — exact and ORDER-FREE), and the 4-dp
+# display is the d4 integer half-up formula over yi/(4·1e6) (√16 = 4
+# exactly), one identical IEEE divide at the end.  DuckDB replays
+# every integer.
 #
 # 100 TB shape: one mapInPandas integer matmul per Arrow batch (the
-# blessed embedding-math path, same as x3g) — no explode
-# amplification, no shuffle, no driver collect; the 64x16 sign matrix
-# is rebuilt in-closure from the hash (cheaper than broadcasting it).
-# Self-assert: mean norm ratio within the JL band.
+# embedding-math path, same as x3g) — no explode amplification, no
+# shuffle, no driver collect; the 64x16 sign matrix is rebuilt
+# in-closure from the hash (cheaper than broadcasting it).
+# Self-assert: the mean JL norm ratio ‖y‖/‖xq‖ lies in (0.8, 1.2). The
+# projection pass emits both norms beside every row it already holds,
+# so the check is one global avg over the cached projection: the
+# build scans `embeddings` once and shuffles nothing.
 
 _X29_D_OUT = 16
 _X29_SCALE = 1_000_000
@@ -656,17 +656,25 @@ def x29_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
             num = 2 * _np.abs(yi) * 10_000 + den
             d4 = _np.where(yi >= 0, num // (2 * den), -(num // (2 * den)))
             y = d4.astype(_np.float64) / 10_000.0
+            # the JL norms in the units of x and y, on every row of
+            # the vector: the check's avg weighs each vector d_out
+            # times, so its mean is the per-vector mean
+            xf = xq.astype(_np.float64)
+            yf = yi.astype(_np.float64)
+            xn = _np.sqrt((xf * xf).sum(axis=1)) / _X29_SCALE
+            yn = _np.sqrt((yf * yf).sum(axis=1)) / den
             n = len(pdf)
             yield _pd.DataFrame(
                 {
                     "vec_id": _np.repeat(pdf["vec_id"].to_numpy(), d_out),
                     "dim": _np.tile(_np.arange(d_out, dtype=_np.int32), n),
                     "y": y.reshape(-1),
+                    "yn": _np.repeat(yn, d_out),
+                    "xn": _np.repeat(xn, d_out),
                 }
             )
 
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    embq = emb.select(
+    embq = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
         F.transform(
             "embedding",
@@ -675,37 +683,19 @@ def x29_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         ).alias("vq"),
     )
-    # cache (r20, VERDICT r19 #8 / the x15 convention): the projection
-    # output has TWO consumers — the JL norm-ratio assert collect below
-    # and the returned frame — so uncached, the mapInPandas matmul (and
-    # the quantization scan under it) ran twice per invocation.  The
-    # assert's collect materializes the cache; the sink then reads it.
-    # Pin cleared by the harness clearCache.
-    out = embq.mapInPandas(project, "vec_id bigint, dim int, y double").cache()
-    # JL sanity: projected norms track original norms (ratio ~ 1)
-    stats = (
-        out.groupBy("vec_id")
-        .agg(F.sqrt(F.sum(F.col("y") * F.col("y"))).alias("pn"))
-        .join(
-            emb.select(
-                "vec_id",
-                F.sqrt(
-                    F.aggregate(
-                        "embedding",
-                        F.lit(0.0),
-                        lambda a, x: a + x.cast("double") * x.cast("double"),
-                    )
-                ).alias("on"),
-            ),
-            "vec_id",
-        )
-        .agg(F.avg(F.col("pn") / F.col("on")).alias("r"))
-        .collect()  # 1 row — a sketch
-    )
-    r = stats[0].r
+    # cached: the projection has two consumers, the JL check's collect
+    # (which materializes the cache) and the returned frame, so the
+    # matmul and the scan under it run once per invocation.  The
+    # harness's clearCache drops the pin.
+    out = embq.mapInPandas(
+        project, "vec_id bigint, dim int, y double, yn double, xn double"
+    ).cache()
+    # the ratio divides in Spark, so a zero-norm vector raises ANSI
+    # DIVIDE_BY_ZERO (NULL, skipped by avg, with ANSI off)
+    r = out.agg(F.avg(F.col("yn") / F.col("xn")).alias("r")).collect()[0].r
     if not (0.8 < r < 1.2):
         raise AssertionError(f"JL norm ratio off: {r}")
-    return out.orderBy("vec_id", "dim")
+    return out.select("vec_id", "dim", "y").orderBy("vec_id", "dim")
 
 
 # --- X3h: integer-exact vectorized top-k (fully value-oracled ANN member) ---

@@ -171,6 +171,9 @@ _CHANGED_THIS_ROUND: list[str] = [
     # Oracles unchanged; scoped sims hash-green.
     "q1_pricing_summary",
     "x5b_decode_pipeline",
+    # x29's JL check reads the norms its projection pass emits: values
+    # identical (driver_sim MATCH), plan changed
+    "x29_random_projection",
     # (r19 source-layer fixes, NO slots by the r15/r18 precedent:
     # the _commit stalled-writer flock + writer-UUID verification and
     # the unique swing-tmp name are protocol-internal — all 26

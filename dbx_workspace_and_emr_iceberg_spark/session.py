@@ -55,6 +55,12 @@ def get_spark(
         # footers carry no min/max, so such a column never prunes; the
         # DataFrameWriter option of the same name has no effect --
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # -- keep every generated class: the JVM-wide cache is keyed on
+        # the Java source, and at Spark's 100 entries (4 LRU segments
+        # of 25) a session recompiles, and HotSpot re-JITs, classes it
+        # already built.  The whole registry generates ~4,240 distinct
+        # classes; 8192 leaves each segment room for its share --
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

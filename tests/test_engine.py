@@ -78,3 +78,48 @@ def test_get_spark_reuse_warns_only_on_dropped_settings(spark):
     # a static (non-modifiable) key is dropped -> must warn, naming it
     with pytest.warns(RuntimeWarning, match="spark.sql.warehouse.dir"):
         get_spark(extra_conf={"spark.sql.warehouse.dir": "/tmp/nope"})
+
+
+def test_get_spark_keeps_every_generated_class(spark):
+    """Spark's generated-class cache is JVM-wide and keyed on the Java
+    source; at its default of 100 entries a session that has run a few
+    queries compiles the same source again."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "8192"
+
+
+# the perfbench analytic mix plus four class-heavy queries: ~170
+# generated classes at sf0.001, more than Spark's default cache holds
+_SECOND_PASS_MIX = (
+    "q1_pricing_summary",
+    "q10_returned_items",
+    "w3_frames",
+    "x29_random_projection",
+    "j9_star_multiway",
+    "x2_minhash_lsh",
+    "x3_topk_cosine",
+    "x8_sessionization",
+)
+
+
+def test_second_pass_compiles_nothing(spark):
+    """A session that runs the same queries again reuses every class it
+    generated the first time: Janino's compile count stays put."""
+    from dbx_workspace_and_emr_iceberg_spark.registry import all_queries
+
+    queries = all_queries()
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+
+    def one_pass():
+        before = compiles.getCount()
+        for name in _SECOND_PASS_MIX:
+            spark.catalog.clearCache()
+            queries[name].fn(spark, SF_DIR).write.format("noop").mode(
+                "overwrite"
+            ).save()
+        return compiles.getCount() - before
+
+    one_pass()
+    assert one_pass() == 0

@@ -72,7 +72,7 @@ def test_empty_table_read_has_schema(spark, wh):
     assert df.columns == ["r_regionkey", "r_name"]
 
 
-def test_partition_transform_parsing():
+def test_partition_transform_parsing(spark):
     name, _ = partition_transform("days(ts)")
     assert name == "p_days_ts"
     name, _ = partition_transform("bucket(16, user_id)")

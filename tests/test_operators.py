@@ -1750,3 +1750,32 @@ def test_pyds_range_batches_match_row_formula():
 
     assert b.schema.types == [pa.int64(), pa.int32(), pa.float64()]
     assert list(_range_batches(7, 7)) == []
+
+
+def test_x29_zero_norm_vector_raises(spark, tmp_path):
+    """x29's JL check divides each vector's projected norm by its own
+    norm in Spark, so a zero vector is an ANSI division by zero."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import ArithmeticException
+
+    from dbx_workspace_and_emr_iceberg_spark.queries.similarity_queries import (
+        x29_random_projection,
+    )
+
+    from tests.conftest import SF_DIR
+
+    emb = pq.read_table(f"{SF_DIR}/embeddings.parquet")
+    vecs = emb.column("embedding").to_pylist()
+    vecs[0] = [0.0] * len(vecs[0])
+    emb = emb.set_column(
+        emb.schema.get_field_index("embedding"),
+        emb.schema.field("embedding"),
+        pa.array(vecs, emb.schema.field("embedding").type),
+    )
+    pq.write_table(emb, tmp_path / "embeddings.parquet")
+    try:
+        with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+            x29_random_projection(spark, str(tmp_path))
+    finally:
+        spark.catalog.clearCache()

@@ -1017,3 +1017,37 @@ def test_python_eval_count_sees_window_and_agg_pandas(spark):
         .applyInPandas(lambda a, b: pd.DataFrame({"g": [0]}), "g long")
     )
     assert X.python_eval_count(cog) == 1
+
+
+def _job_group_input_records(spark, group: str) -> int:
+    """Input records of the stages of ``group``'s jobs: rows read from
+    files, plus one per cached batch read back."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    tracker = sc.statusTracker()
+    return sum(
+        store.lastStageAttempt(s).inputRecords()
+        for j in tracker.getJobIdsForGroup(group)
+        for s in tracker.getJobInfo(j).stageIds
+    )
+
+
+def test_x29_build_scans_embeddings_once(spark):
+    """x29's JL check reads the norms its projection pass emitted, so
+    building the frame reads ``embeddings`` once, not a second time
+    for the original norms."""
+    from dbx_workspace_and_emr_iceberg_spark.queries.similarity_queries import (
+        x29_random_projection,
+    )
+
+    rows = load_table(spark, SF_DIR, "embeddings").count()
+    group = "x29-build-scans"
+    spark.catalog.clearCache()
+    spark.sparkContext.setJobGroup(group, "x29 build")
+    try:
+        x29_random_projection(spark, SF_DIR)
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+        spark.catalog.clearCache()
+    assert rows <= _job_group_input_records(spark, group) < 2 * rows

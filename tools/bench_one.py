@@ -6,7 +6,10 @@ A/B runs. Usage:
 
     python tools/bench_one.py <name> [<name> ...] [--passes N]
 
-Prints per-query wall/exec per pass plus the floor.
+Prints per-query wall/exec per pass, each pass's Janino compile count
+and the floor. A pass after the first that compiles anything built a
+class again: the session's generated-class cache lost it, or the plan
+inlines a literal that changed between passes.
 """
 
 from __future__ import annotations
@@ -73,19 +76,25 @@ def main() -> None:
     ).mode("overwrite").save()
     clock = ExecClock(spark)
     clock.delta_s()
+    compile_count = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME().getCount
+    )
     for name in args:
-        walls, execs = [], []
+        walls, execs, compiles = [], [], []
         for _ in range(passes):
             spark.catalog.clearCache()
             clock.delta_s()
+            c0 = compile_count()
             t0 = time.perf_counter()
             queries[name].fn(spark, run_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
             walls.append(round(time.perf_counter() - t0, 3))
+            compiles.append(compile_count() - c0)
             execs.append(clock.delta_s())
         print(
-            f"{name}: walls={walls} execs={execs} "
+            f"{name}: walls={walls} execs={execs} compiles={compiles} "
             f"floor={min(walls)} exec_at_floor={execs[walls.index(min(walls))]}",
             flush=True,
         )

@@ -31,7 +31,7 @@ class Engine:
         self.warehouse = warehouse
         self._tables: dict[str, LakehouseTable] = {}
         # time-travel temp views registered by the current statement's
-        # rewrite; dropped after execution (sql_dml.rewrite_time_travel)
+        # rewrite; dropped after execution (sql_dml._run_query)
         self._tt_views: set[str] = set()
 
     @classmethod
@@ -42,26 +42,13 @@ class Engine:
 
     # ---- door 1: SQL (SELECT via Spark SQL; DML via the lakehouse layer) ----
     def sql(self, query: str) -> DataFrame:
-        """Run a SQL string. MERGE INTO / UPDATE / DELETE — the
-        reference's signature spark-sql UX (README.md:35-45, enabled
-        there by IcebergSparkSessionExtensions, main.tf:803) — are
-        parsed by sources/sql_dml.py and dispatched to the managed
-        snapshot layer; everything else goes straight to Spark SQL."""
-        if sql_dml.classify(query) is not None:
-            return sql_dml.execute(self, query)
-        # SELECT-side time travel (VERSION/TIMESTAMP AS OF) resolves
-        # through the snapshot layer before Spark sees the query
-        query = sql_dml.rewrite_time_travel(self, query)
-        try:
-            # spark.sql analyzes eagerly (Dataset.ofRows asserts
-            # analysis), so the __tt_* views resolve into df's plan at
-            # this call — safe to drop right after, and on error too
-            return self.spark.sql(query)
-        finally:
-            # drop even when the statement fails; views would otherwise
-            # accumulate in the session and pin expired warehouse files
-            while self._tt_views:
-                self.spark.catalog.dropTempView(self._tt_views.pop())
+        """Run a SQL string. The session's parser reads it once; MERGE
+        INTO / UPDATE / DELETE, INSERT, CREATE TABLE AS, ALTER TABLE and
+        CALL on managed tables — the reference's signature spark-sql UX
+        (README.md:35-45) — run on the snapshot layer
+        (sources/sql_dml.py); everything else runs in Spark SQL, with
+        VERSION/TIMESTAMP AS OF resolved through the snapshot layer."""
+        return sql_dml.execute(self, query)
 
     # ---- door 2: DataFrame over fixtures / views ----
     def register_fixtures(self, sf_dir: str) -> None:

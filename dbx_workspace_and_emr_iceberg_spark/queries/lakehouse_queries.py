@@ -2468,8 +2468,8 @@ def m17_column_defaults(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- M18: CALL system.* procedures through the SQL door ---------------------
 # The reference's users run maintenance as Iceberg stored procedures
 # (`CALL cat.system.rollback_to_snapshot(...)`, SURVEY §2.11 M4/M5);
-# sources/sql_dml.py parses the CALL grammar (positional and
-# name => value args) and dispatches to the snapshot layer. Self-
+# sources/sql_dml.py binds the parsed CALL's positional and
+# name => value args and dispatches to the snapshot layer. Self-
 # verified: rollback restores v1 counts, rewrite_data_files compacts to
 # one file preserving the multiset, expire trims history while the
 # current read survives. Value-ORACLED (r11): the counts and the

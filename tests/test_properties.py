@@ -349,7 +349,7 @@ def test_semdedup_kept_set_is_threshold_separated(spark, vecs, thr):
     assert min(r.vec_id for r in rows if r.keep) == min(r.vec_id for r in rows)
 
 
-# --- r7 SQL-door grammar round-trips (pure Python, no Spark) ---------------
+# --- SQL-door grammar round-trips through the session's parser -------------
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -368,7 +368,7 @@ _TYPE7 = st.sampled_from(["int", "bigint", "string", "double", "date"])
 
 @given(table=_IDENT7, col=_IDENT7, typ=_TYPE7, dflt=st.integers(0, 10**6))
 @settings(max_examples=50, deadline=None)
-def test_alter_add_roundtrip_property(table, col, typ, dflt):
+def test_alter_add_roundtrip_property(spark, table, col, typ, dflt):
     action, t, args = _sd.parse_alter(
         f"ALTER TABLE {table} ADD COLUMN {col} {typ.upper()} DEFAULT {dflt}"
     )
@@ -383,7 +383,7 @@ def test_alter_add_roundtrip_property(table, col, typ, dflt):
 
 @given(table=_IDENT7, old=_IDENT7, new=_IDENT7)
 @settings(max_examples=50, deadline=None)
-def test_alter_rename_drop_roundtrip_property(table, old, new):
+def test_alter_rename_drop_roundtrip_property(spark, table, old, new):
     assert _sd.parse_alter(
         f"ALTER TABLE {table} RENAME COLUMN {old} TO {new}"
     ) == ("rename", table, (old, new))
@@ -402,7 +402,7 @@ _REF_KIND = st.sampled_from(["BRANCH", "TAG"])
     version=st.one_of(st.none(), st.integers(1, 10**6)),
 )
 @settings(max_examples=50, deadline=None)
-def test_alter_ref_ddl_roundtrip_property(table, name, kind, version):
+def test_alter_ref_ddl_roundtrip_property(spark, table, name, kind, version):
     """Branch/tag DDL grammar (m8b): CREATE with optional AS OF
     VERSION, DROP, REPLACE BRANCH; REPLACE TAG must refuse (tags are
     immutable)."""
@@ -433,7 +433,7 @@ def test_alter_ref_ddl_roundtrip_property(table, name, kind, version):
     with_kw_table=st.booleans(),
 )
 @settings(max_examples=50, deadline=None)
-def test_insert_select_roundtrip_property(table, src, overwrite, with_kw_table):
+def test_insert_select_roundtrip_property(spark, table, src, overwrite, with_kw_table):
     mode = "OVERWRITE" if overwrite else "INTO"
     kw = "TABLE " if with_kw_table else ""
     got_mode, got_table, body = _sd.parse_insert(
@@ -445,7 +445,7 @@ def test_insert_select_roundtrip_property(table, src, overwrite, with_kw_table):
 
 @given(table=_IDENT7, vals=st.lists(st.integers(0, 999), min_size=1, max_size=5))
 @settings(max_examples=50, deadline=None)
-def test_insert_values_wraps_as_select_property(table, vals):
+def test_insert_values_wraps_as_select_property(spark, table, vals):
     tuples = ", ".join(f"({v}, 'r{v}')" for v in vals)
     mode, t, body = _sd.parse_insert(f"INSERT INTO {table} VALUES {tuples}")
     assert (mode, t) == ("INTO", table)
@@ -454,7 +454,7 @@ def test_insert_values_wraps_as_select_property(table, vals):
 
 @given(table=_IDENT7, src=_IDENT7)
 @settings(max_examples=50, deadline=None)
-def test_ctas_roundtrip_property(table, src):
+def test_ctas_roundtrip_property(spark, table, src):
     t, sel = _sd.parse_ctas(
         f"CREATE TABLE {table} AS SELECT a, b FROM {src} WHERE a > 0"
     )
@@ -1316,14 +1316,12 @@ def test_hash_sample_by_matches_python_md5(spark, rows):
 
 
 # ---------------------------------------------------------------------------
-# SQL-door generative fuzz (VERDICT r15 #4): the r15 hand-audit found
-# SEVEN silent mis-execution classes in sources/sql_dml.py — a hand
-# audit finds what it thinks of.  This net generates statements from a
-# random AST (so the expected semantics are known by construction),
-# renders them with hostile spellings (string literals containing '--',
-# quotes in both escape forms, mixed-case keywords/aliases, random
-# whitespace, shuffled clause orders), and checks:
-#   * parse level (~250 statements, no Spark): parse_merge/parse_call
+# SQL-door generative fuzz: a hand audit finds what it thinks of.  This
+# net generates statements from a random AST (so the expected semantics
+# are known by construction), renders them with hostile spellings
+# (string literals containing '--', quotes in both escape forms,
+# mixed-case keywords/aliases, random whitespace, comments), and checks:
+#   * parse level (~250 statements): parse_merge/parse_call
 #     recover exactly the generated AST; illegal mutations RAISE
 #     instead of silently reordering/dropping clauses;
 #   * execution level: statement chains through Engine.sql versus a
@@ -1445,7 +1443,9 @@ def _render_merge(ast: dict, rng: "_random.Random") -> str:
         )
     if ast["insert"]:
         ins = r("WHEN") + r("NOT") + r("MATCHED") + r("THEN") + r("INSERT") + "*"
-        whens.insert(rng.randrange(len(whens) + 1), ins)
+        # SQL's MERGE grammar puts NOT MATCHED clauses after the MATCHED
+        # ones; the other order is the "insert_first" mutation below
+        whens.append(ins)
     comment = "-- trailing comment\n" if rng.random() < 0.3 else ""
     return (
         r("MERGE").lstrip()
@@ -1464,7 +1464,7 @@ def _render_merge(ast: dict, rng: "_random.Random") -> str:
     )
 
 
-def test_sql_dml_fuzz_merge_parser():
+def test_sql_dml_fuzz_merge_parser(spark):
     """250 generated-then-rendered MERGE statements: parse_merge must
     recover the AST exactly; mutated-illegal variants must RAISE."""
     rng = _random.Random(20260816)
@@ -1504,7 +1504,7 @@ def test_sql_dml_fuzz_merge_parser():
         # never silently drop/reorder a clause
         mut = rng.choice(
             ["dup_insert", "cond_update", "cond_insert", "upd_then_matched",
-             "insert_cols"]
+             "insert_cols", "insert_first"]
         )
         if mut == "dup_insert":
             bad = (
@@ -1528,10 +1528,16 @@ def test_sql_dml_fuzz_merge_parser():
                 "WHEN MATCHED THEN UPDATE SET v = 1 "
                 "WHEN MATCHED AND t.v < 0 THEN DELETE"
             )
-        else:  # insert_cols
+        elif mut == "insert_cols":
             bad = (
                 "MERGE INTO t USING src ON k "
                 "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (src.k, src.v)"
+            )
+        else:  # insert_first
+            bad = (
+                "MERGE INTO t USING src ON k "
+                "WHEN NOT MATCHED THEN INSERT * "
+                "WHEN MATCHED THEN DELETE"
             )
         import pytest as _pt
 
@@ -1541,7 +1547,7 @@ def test_sql_dml_fuzz_merge_parser():
     assert n_valid == 250 and n_invalid == 250
 
 
-def test_sql_dml_fuzz_call_parser():
+def test_sql_dml_fuzz_call_parser(spark):
     """CALL statements with random positional/named arg mixes against
     the real procedure registry; illegal mixes raise."""
     import pytest as _pt

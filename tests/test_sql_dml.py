@@ -1,6 +1,6 @@
-"""Unit tests for the SQL DML front-door parser (sources/sql_dml.py) —
-pure-Python parse coverage (no Spark needed for the parse layer) plus
-one end-to-end engine round trip per statement kind.
+"""Unit tests for the SQL DML front door (sources/sql_dml.py): what the
+session's parser reads each statement into, plus end-to-end engine
+round trips per statement kind.
 
 Execution semantics are covered by the m12_sql_dml_door registered
 query and the LakehouseTable unit tests; these tests pin the grammar:
@@ -33,28 +33,28 @@ from dbx_workspace_and_emr_iceberg_spark.sources import sql_dml
         ("", None),
     ],
 )
-def test_classify(sql, kind):
+def test_classify(spark, sql, kind):
     assert sql_dml.classify(sql) == kind
 
 
 # --- DELETE ----------------------------------------------------------------
 
 
-def test_parse_delete_with_where():
+def test_parse_delete_with_where(spark):
     assert sql_dml.parse_delete("DELETE FROM tbl WHERE a < 5 AND b IS NULL") == (
         "tbl",
         "a < 5 AND b IS NULL",
     )
 
 
-def test_parse_delete_without_where():
+def test_parse_delete_without_where(spark):
     assert sql_dml.parse_delete("DELETE FROM tbl;") == ("tbl", None)
 
 
 # --- UPDATE ----------------------------------------------------------------
 
 
-def test_parse_update_multi_assignments():
+def test_parse_update_multi_assignments(spark):
     tbl, assigns, where = sql_dml.parse_update(
         "UPDATE t SET a = upper(concat(a, ',x')), b = b + 1 WHERE c IN (1, 2)"
     )
@@ -64,7 +64,7 @@ def test_parse_update_multi_assignments():
     assert where == "c IN (1, 2)"
 
 
-def test_parse_update_no_where():
+def test_parse_update_no_where(spark):
     tbl, assigns, where = sql_dml.parse_update("UPDATE t SET a = 1")
     assert (tbl, where) == ("t", None)
     assert assigns == {"a": "1"}
@@ -73,7 +73,7 @@ def test_parse_update_no_where():
 # --- MERGE -----------------------------------------------------------------
 
 
-def test_parse_merge_full_form():
+def test_parse_merge_full_form(spark):
     spec = sql_dml.parse_merge(
         """
         MERGE INTO tgt AS t USING src AS s
@@ -91,7 +91,7 @@ def test_parse_merge_full_form():
     assert spec["update_set"] == {"v": "s.v", "n": "t.n + 1"}
 
 
-def test_parse_merge_no_aliases():
+def test_parse_merge_no_aliases(spark):
     spec = sql_dml.parse_merge(
         "MERGE INTO tgt USING src ON k WHEN NOT MATCHED THEN INSERT *"
     )
@@ -100,14 +100,14 @@ def test_parse_merge_no_aliases():
     assert spec["on"] == "k" and spec["insert"] is True
 
 
-def test_parse_merge_rejects_mismatched_keys():
+def test_parse_merge_rejects_mismatched_keys(spark):
     with pytest.raises(ValueError, match="same-named"):
         sql_dml.parse_merge(
             "MERGE INTO a USING b ON a.x = b.y WHEN MATCHED THEN DELETE"
         )
 
 
-def test_parse_merge_rejects_insert_columns():
+def test_parse_merge_rejects_insert_columns(spark):
     with pytest.raises(ValueError, match="INSERT \\*"):
         sql_dml.parse_merge(
             "MERGE INTO a USING b ON k "
@@ -115,11 +115,34 @@ def test_parse_merge_rejects_insert_columns():
         )
 
 
-def test_rewrite_aliases():
-    assert (
-        sql_dml._rewrite("s.v + t.n - s.other", "t", "s")
-        == "__src.v + n - __src.other"
-    )
+def _merge_rows(spark, tmp_path, target, source, whens):
+    """The target's rows after ``MERGE INTO <target> t USING <source> s
+    ON t.k = s.k <whens>`` through Engine.sql; ``target`` and ``source``
+    are (rows, schema) pairs, the source holding every target column."""
+    import uuid
+
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+
+    eng = Engine(spark, warehouse=str(tmp_path))
+    name = f"mg_{uuid.uuid4().hex[:8]}"
+    eng.create_table(name, spark.createDataFrame(*target).coalesce(1))
+    spark.createDataFrame(*source).createOrReplaceTempView(f"{name}_src")
+    try:
+        eng.sql(f"MERGE INTO {name} t USING {name}_src s ON t.k = s.k {whens}")
+        return sorted(tuple(r) for r in eng.table(name).collect())
+    finally:
+        spark.catalog.dropTempView(f"{name}_src")
+        spark.catalog.dropTempView(name)
+
+
+def test_rewrite_aliases(spark, tmp_path):
+    """s.* reads the source row and t.* the target row."""
+    assert _merge_rows(
+        spark, tmp_path,
+        ([(1, 10, 5)], "k int, v int, n int"),
+        ([(1, 100, 50, 7)], "k int, v int, n int, other int"),
+        "WHEN MATCHED THEN UPDATE SET v = s.v + t.n - s.other",
+    ) == [(1, 100 + 5 - 7, 5)]
 
 
 # --- end-to-end through the engine ----------------------------------------
@@ -164,7 +187,7 @@ def test_engine_sql_dml_round_trip(spark):
         shutil.rmtree(wh, ignore_errors=True)
 
 
-# --- property-based grammar round-trip (pure Python, no Spark) -------------
+# --- property-based grammar round-trip --------------------------------------
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -179,14 +202,14 @@ _NUM = st.integers(min_value=0, max_value=10_000)
 
 @given(table=_IDENT, col=_IDENT, n=_NUM)
 @settings(max_examples=50, deadline=None)
-def test_delete_roundtrip_property(table, col, n):
+def test_delete_roundtrip_property(spark, table, col, n):
     tbl, where = sql_dml.parse_delete(f"DELETE FROM {table} WHERE {col} > {n}")
     assert tbl == table and where == f"{col} > {n}"
 
 
 @given(table=_IDENT, cols=st.lists(_IDENT, min_size=1, max_size=4, unique=True), n=_NUM)
 @settings(max_examples=50, deadline=None)
-def test_update_roundtrip_property(table, cols, n):
+def test_update_roundtrip_property(spark, table, cols, n):
     sets = ", ".join(f"{c} = {c} + {n}" for c in cols)
     tbl, assigns, where = sql_dml.parse_update(
         f"UPDATE {table} SET {sets} WHERE {cols[0]} < {n}"
@@ -208,7 +231,7 @@ def test_update_roundtrip_property(table, cols, n):
 )
 @settings(max_examples=80, deadline=None)
 def test_merge_roundtrip_property(
-    tgt, src, key, val, aliased, with_update, with_insert, with_delete
+    spark, tgt, src, key, val, aliased, with_update, with_insert, with_delete
 ):
     if not (with_update or with_insert or with_delete):
         with_insert = True
@@ -377,8 +400,8 @@ def test_call_expire_iceberg_positional_order(spark, tmp_path):
     spark.catalog.dropTempView("proc_pos")
 
 
-def test_parse_call_grammar_pure():
-    """Grammar-only checks for the r7 procedure surface — no Spark."""
+def test_parse_call_grammar_pure(spark):
+    """Grammar-only checks for the procedure surface."""
     import pytest as _pytest
 
     from dbx_workspace_and_emr_iceberg_spark.sources import sql_dml
@@ -848,46 +871,36 @@ def test_main_head_raises_past_expired_history(spark, tmp_path):
         t.main_head()
 
 
-def test_empty_set_clause_raises():
-    """An UPDATE SET clause with zero parseable assignments is
-    malformed SQL and must raise — a falsy {} would silently no-op the
-    UPDATE (review-pass r10)."""
-    import pytest
+def test_empty_set_clause_raises(spark):
+    """An UPDATE SET clause with zero assignments is malformed SQL and
+    must raise — a falsy {} would silently no-op the UPDATE."""
+    for set_clause in ("", " , "):
+        with pytest.raises(ValueError, match="unsupported UPDATE"):
+            sql_dml.parse_update(f"UPDATE t SET {set_clause}")
 
-    from dbx_workspace_and_emr_iceberg_spark.sources.sql_dml import (
-        _parse_assignments,
+
+# --- SQL-door silent-failure classes -----------------------------------------
+
+
+def test_strip_is_quote_aware(spark):
+    """'--' inside a string literal is data, not a comment: the
+    condition keeps it, and a comment outside quotes is no part of it."""
+    assert sql_dml.parse_delete("DELETE FROM t WHERE a = '--' OR b = '--'") == (
+        "t", "a = '--' OR b = '--'",
     )
-
-    with pytest.raises(ValueError, match="empty SET"):
-        _parse_assignments("")
-    with pytest.raises(ValueError, match="empty SET"):
-        _parse_assignments(" , ")
-
-
-# --- review-pass r15 batch 3: SQL-door silent-failure classes ---------------
-
-
-def test_strip_is_quote_aware():
-    """'--' inside a string literal is DATA, not a comment — the old
-    blanket regex truncated the statement (single-line: unbalanced
-    quote; multi-line: silently rebalanced into a DIFFERENT predicate)
-    (review-pass r15, reproduced)."""
-    s = sql_dml._strip("DELETE FROM t WHERE a = '--' OR b = '--'")
-    assert s == "DELETE FROM t WHERE a = '--' OR b = '--'"
     tbl, cond = sql_dml.parse_delete("DELETE FROM t WHERE a = '--x'")
     assert (tbl, cond) == ("t", "a = '--x'")
-    # real comments still stripped (outside quotes)
-    assert sql_dml._strip("DELETE FROM t -- drop all\n WHERE x = 1") == (
-        "DELETE FROM t \n WHERE x = 1"
+    assert sql_dml.parse_delete("DELETE FROM t -- drop all\n WHERE x = 1") == (
+        "t", "x = 1",
     )
 
 
-def test_parse_merge_rejects_unsupported_or_unreachable_clauses():
-    """Silently mis-executing is the failure mode (review-pass r15,
-    reproduced): a conditional NOT MATCHED insert dropped its
-    condition and inserted EVERYTHING; an UPDATE textually before a
-    conditional DELETE deleted rows SQL would update; duplicate
-    clauses silently kept only the last."""
+def test_parse_merge_rejects_unsupported_or_unreachable_clauses(spark):
+    """Silently mis-executing is the failure mode: a conditional NOT
+    MATCHED insert must not drop its condition and insert everything;
+    an UPDATE textually before a conditional DELETE must not delete
+    rows SQL would update; a duplicate clause must not replace the
+    first."""
     head = "MERGE INTO t USING s ON t.id = s.id "
     with pytest.raises(ValueError, match="NOT MATCHED AND"):
         sql_dml.parse_merge(head + "WHEN NOT MATCHED AND s.f = 1 THEN INSERT *")
@@ -921,11 +934,15 @@ def test_parse_merge_rejects_unsupported_or_unreachable_clauses():
     assert spec["delete_cond"] == "s.d = 1" and spec["insert"] is True
 
 
-def test_rewrite_aliases_case_insensitive():
-    """SQL identifiers are case-insensitive: 'SET T.v = S.v' with
-    aliases declared t/s is legal spark-sql and must map into the
-    merge namespace (review-pass r15, reproduced)."""
-    assert sql_dml._rewrite("S.v + T.w", "t", "s") == "__src.v + w"
+def test_rewrite_aliases_case_insensitive(spark, tmp_path):
+    """SQL identifiers are case-insensitive: 'S.v + T.w' with aliases
+    declared s/t is legal spark-sql and reads the source and target."""
+    assert _merge_rows(
+        spark, tmp_path,
+        ([(1, 10, 3)], "k int, v int, w int"),
+        ([(1, 100, 30)], "k int, v int, w int"),
+        "WHEN MATCHED THEN UPDATE SET v = S.v + T.w",
+    ) == [(1, 103, 3)]
 
 
 def test_insert_overwrite_binds_positionally(spark, tmp_path):
@@ -968,63 +985,61 @@ def test_time_travel_inside_insert_and_ctas(spark, tmp_path):
     assert sorted(r.id for r in eng.table("tt_snap").collect()) == [1, 1]
 
 
-# --- ADVICE r15: escape handling inside string literals ----------------------
+# --- escape handling inside string literals ----------------------------------
 
 
-def test_strip_handles_backslash_escaped_quote():
-    r"""A Spark-legal literal like 'it\'s -- x' used to close the quote
-    at \' and the stripper truncated the statement at the '--' inside
-    the literal; paired escaped quotes could rebalance into a DIFFERENT
-    valid predicate (ADVICE r15, reproduced)."""
-    s = "DELETE FROM t WHERE a = 'it\\'s -- x'"
-    assert sql_dml._strip(s) == s
+def test_strip_handles_backslash_escaped_quote(spark):
+    r"""A literal like 'it\'s -- x' holds its '--': the quote it escapes
+    does not close it; and two literals that each escape a quote do not
+    merge into one that swallows the predicate between them."""
+    assert sql_dml.parse_delete("DELETE FROM t WHERE a = 'it\\'s -- x'") == (
+        "t", "a = 'it\\'s -- x'",
+    )
     # doubled-quote escape form too
-    s2 = "DELETE FROM t WHERE a = 'it''s -- x'"
-    assert sql_dml._strip(s2) == s2
-    # two literals each with an escaped quote must NOT rebalance into
-    # one literal that swallows the predicate between them
+    assert sql_dml.parse_delete("DELETE FROM t WHERE a = 'it''s -- x'") == (
+        "t", "a = 'it''s -- x'",
+    )
     s3 = "UPDATE t SET a = 'x\\'' WHERE b = '\\'y' AND c = 1 -- tail"
-    assert sql_dml._strip(s3) == (
-        "UPDATE t SET a = 'x\\'' WHERE b = '\\'y' AND c = 1"
+    assert sql_dml.parse_update(s3) == (
+        "t", {"a": "'x\\''"}, "b = '\\'y' AND c = 1",
     )
 
 
-def test_split_top_level_handles_escaped_quotes():
-    """SET-list splitting must not break inside a literal containing an
-    escaped quote followed by a comma (ADVICE r15)."""
-    parts = sql_dml._split_top_level("a = 'x\\', y', b = 2")
-    assert parts == ["a = 'x\\', y'", "b = 2"]
-    parts2 = sql_dml._split_top_level("a = 'x'', y', b = 2")
-    assert parts2 == ["a = 'x'', y'", "b = 2"]
+def test_split_top_level_handles_escaped_quotes(spark):
+    """A SET list does not break inside a literal holding an escaped
+    quote followed by a comma."""
+    assert sql_dml.parse_update("UPDATE t SET a = 'x\\', y', b = 2")[1] == {
+        "a": "'x\\', y'", "b": "2",
+    }
+    assert sql_dml.parse_update("UPDATE t SET a = 'x'', y', b = 2")[1] == {
+        "a": "'x'', y'", "b": "2",
+    }
 
 
-# --- review-pass r18: clause coverage, literal-safe rewrite, CASE WHEN ------
+# --- clause coverage, literal-safe rewrite, CASE WHEN ------------------------
 
 
-def test_parse_merge_rejects_unparseable_clause_instead_of_dropping():
-    """re.findall skipped text it could not match, so a Spark/Iceberg-
-    legal 'WHEN NOT MATCHED BY SOURCE THEN DELETE' silently vanished
-    while the rest of the MERGE executed — missing semantics with a
-    green gate (review-pass r18, reproduced). Every character of the
-    WHEN section must now belong to a parsed clause."""
+def test_parse_merge_rejects_unparseable_clause_instead_of_dropping(spark):
+    """WHEN NOT MATCHED BY SOURCE raises instead of vanishing while the
+    rest of the MERGE runs. BY TARGET is the default reading of WHEN
+    NOT MATCHED: both spellings give the same spec."""
     with pytest.raises(ValueError, match="BY SOURCE"):
         sql_dml.parse_merge(
             "MERGE INTO t USING s ON t.k = s.k "
             "WHEN MATCHED THEN UPDATE SET t.v = s.v "
             "WHEN NOT MATCHED BY SOURCE THEN DELETE"
         )
-    with pytest.raises(ValueError, match="BY TARGET"):
-        sql_dml.parse_merge(
-            "MERGE INTO t USING s ON t.k = s.k "
-            "WHEN NOT MATCHED BY TARGET THEN INSERT *"
-        )
+    assert sql_dml.parse_merge(
+        "MERGE INTO t USING s ON t.k = s.k "
+        "WHEN NOT MATCHED BY TARGET THEN INSERT *"
+    ) == sql_dml.parse_merge(
+        "MERGE INTO t USING s ON t.k = s.k WHEN NOT MATCHED THEN INSERT *"
+    )
 
 
-def test_parse_merge_case_when_in_update_set():
-    """The clause boundary is 'WHEN [NOT] MATCHED', not any bare
-    'WHEN': a CASE WHEN inside UPDATE SET used to truncate the
-    assignment to {'v': 'CASE'} and re-scan the remainder as clause
-    soup (review-pass r18, reproduced)."""
+def test_parse_merge_case_when_in_update_set(spark):
+    """A CASE WHEN inside UPDATE SET is part of the assignment, not the
+    start of another WHEN clause."""
     spec = sql_dml.parse_merge(
         "MERGE INTO t USING s ON t.k = s.k "
         "WHEN MATCHED THEN UPDATE SET t.v = "
@@ -1035,39 +1050,52 @@ def test_parse_merge_case_when_in_update_set():
     assert spec["insert"] is True
 
 
-def test_rewrite_leaves_string_literals_alone():
-    """A quote-blind alias sub corrupted literals: with source alias s,
-    re.I made \\bs\\. match the 'S.' inside 'U.S.' and the merge
-    compared against 'U.__src.' — a value in no row (review-pass r18,
-    reproduced)."""
-    assert sql_dml._rewrite("s.n_name = 's.fake'", "t", "s") == (
-        "__src.n_name = 's.fake'"
-    )
-    assert sql_dml._rewrite("s.country = 'U.S.'", "t", "s") == (
-        "__src.country = 'U.S.'"
-    )
-    # doubled-quote escapes stay inside one literal
-    assert sql_dml._rewrite("t.a = 's.''s.'", "t", "s") == "a = 's.''s.'"
-    # double-quoted segments are protected too
-    assert sql_dml._rewrite('s.a = "s.b"', "t", "s") == '__src.a = "s.b"'
+def test_rewrite_leaves_string_literals_alone(spark, tmp_path):
+    """The alias rewrite touches column references only: with source
+    alias s, the 'S.' inside 'U.S.' stays, so each condition compares
+    against the value written. Rows 1-4 each match one condition and
+    are deleted; row 5 matches none."""
+    conds = [
+        "s.n_name = 's.fake'",
+        "s.country = 'U.S.'",
+        # doubled-quote escapes stay inside one literal
+        "t.a = 's.''s.'",
+        # double-quoted literals too
+        's.a = "s.b"',
+    ]
+    hit = " OR ".join(f"(s.k = {i} AND {c})" for i, c in enumerate(conds, 1))
+    assert _merge_rows(
+        spark, tmp_path,
+        ([(1, "x"), (2, "x"), (3, "s.'s."), (4, "x"), (5, "x")], "k int, a string"),
+        (
+            [
+                (1, "s.fake", "-", "-"), (2, "-", "U.S.", "-"), (3, "-", "-", "-"),
+                (4, "-", "-", "s.b"), (5, "s.fake", "U.S.", "s.b"),
+            ],
+            "k int, n_name string, country string, a string",
+        ),
+        f"WHEN MATCHED AND ({hit}) THEN DELETE",
+    ) == [(5, "x")]
 
 
-def test_rewrite_leaves_backslash_escaped_literals_alone():
-    """ADVICE r18 (reproduced): _LITERAL_RE only knew doubled-quote
-    escapes, so a backslash-escaped quote 'closed' the literal early
-    and the rewriter corrupted the literal's interior — the exact
-    corruption class the quote-aware split was added to fix.  The
-    other tokenizers (_strip, _split_top_level) already honored
-    backslash escapes; the regex now agrees with them."""
-    assert sql_dml._rewrite(r"s.flag = 'it\'s s.x'", "t", "s") == (
-        r"__src.flag = 'it\'s s.x'"
-    )
-    # literal ending in an escaped backslash does NOT swallow the quote
-    assert sql_dml._rewrite(r"s.flag = 'a\\' AND s.y = 1", "t", "s") == (
-        r"__src.flag = 'a\\' AND __src.y = 1"
-    )
-    # time-travel rewrite shares the regex: a VERSION AS OF inside a
-    # backslash-escaped literal must not be rewritten
+def test_rewrite_leaves_backslash_escaped_literals_alone(spark, tmp_path):
+    """A backslash-escaped quote does not close a literal, so the alias
+    rewrite leaves its interior alone, and a literal ending in an
+    escaped backslash still ends at its quote. Rows 1 and 2 each match
+    one condition and are deleted; row 3 matches none."""
+    conds = [r"s.flag = 'it\'s s.x'", r"s.flag = 'a\\' AND s.y = 1"]
+    hit = " OR ".join(f"(s.k = {i} AND {c})" for i, c in enumerate(conds, 1))
+    assert _merge_rows(
+        spark, tmp_path,
+        ([(1, 0), (2, 0), (3, 0)], "k int, v int"),
+        (
+            [(1, "it's s.x", 0, 0), (2, "a\\", 1, 0), (3, "a\\", 0, 0)],
+            "k int, flag string, y int, v int",
+        ),
+        f"WHEN MATCHED AND ({hit}) THEN DELETE",
+    ) == [(3, 0)]
+    # a VERSION AS OF inside a backslash-escaped literal is not a
+    # time-travel reference
     sql = r"SELECT 'x\' VERSION AS OF 3 ' AS lit FROM t"
     assert sql_dml.rewrite_time_travel(object(), sql) == sql
 
@@ -1353,3 +1381,101 @@ def test_table_operations_open_their_base_manifest_at_most_twice(
                      ("record_count", t.record_count)):
         counted(op)
         assert opens[head] == 1, (name, opens[head])
+
+
+# --- statements read by Spark's parser ---------------------------------------
+
+
+def _kv_table(spark, tmp_path, name):
+    """A managed table ``name`` (k, v) holding k = 1..4, v = 10 * k."""
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+
+    eng = Engine(spark, warehouse=str(tmp_path))
+    eng.create_table(
+        name,
+        spark.createDataFrame([(k, 10 * k) for k in range(1, 5)], "k int, v int"),
+    )
+    return eng
+
+
+def test_delete_condition_runs_past_a_block_comment(spark, tmp_path):
+    """A '--' inside a block comment starts no line comment: the
+    condition is both disjuncts."""
+    eng = _kv_table(spark, tmp_path, "bc_t")
+    eng.sql("DELETE FROM bc_t WHERE k = 1 /* -- */ OR k = 2")
+    assert sorted(r.k for r in eng.table("bc_t").collect()) == [3, 4]
+    spark.catalog.dropTempView("bc_t")
+
+
+def test_update_where_inside_a_comment_is_no_where(spark, tmp_path):
+    """A WHERE inside a block comment is commented out: the UPDATE sets
+    every row."""
+    eng = _kv_table(spark, tmp_path, "cw_t")
+    eng.sql("UPDATE cw_t SET v = 1 /* WHERE k = 2 */")
+    assert sorted(r.v for r in eng.table("cw_t").collect()) == [1, 1, 1, 1]
+    spark.catalog.dropTempView("cw_t")
+
+
+def test_update_set_backquoted_column(spark, tmp_path):
+    """A quoted column name is a SET target like any other."""
+    eng = _kv_table(spark, tmp_path, "bq_t")
+    eng.sql("UPDATE bq_t SET `v` = 1 WHERE k > 2")
+    assert sorted((r.k, r.v) for r in eng.table("bq_t").collect()) == [
+        (1, 10), (2, 20), (3, 1), (4, 1),
+    ]
+    spark.catalog.dropTempView("bq_t")
+
+
+def test_merge_target_struct_field_is_not_the_source(spark, tmp_path):
+    """t.s.v names field v of the target's struct column s, even with
+    the source aliased s: only a reference's first name part is its
+    qualifier."""
+    assert _merge_rows(
+        spark, tmp_path,
+        ([(1, 10, (7,))], "k int, v int, s struct<v:int>"),
+        ([(1, 100, (555,))], "k int, v int, s struct<v:int>"),
+        "WHEN MATCHED THEN UPDATE SET t.v = t.s.v",
+    ) == [(1, 7, (7,))]
+
+
+@pytest.mark.parametrize(
+    "cond",
+    [
+        "(a + b) BETWEEN 1 AND 2",
+        "(a) IN (1, 2)",
+        "((a)) IS NULL",
+        "a NOT IN (1)",
+        "a IS NOT NULL",
+        "a NOT ILIKE 'x%'",
+        "a IS UNKNOWN",
+        "a IS NOT DISTINCT FROM b",
+        "a LIKE ANY ('x', 'y')",
+        "a IN (SELECT b FROM u)",
+        "a = true",
+        "false",
+    ],
+)
+def test_parse_delete_keeps_predicate_operands(spark, cond):
+    """A predicate's text starts at its operand, parentheses included."""
+    assert sql_dml.parse_delete(f"DELETE FROM t WHERE {cond}") == ("t", cond)
+
+
+@pytest.mark.parametrize(
+    "body",
+    [
+        "SELECT a FROM s ORDER BY a LIMIT 3",
+        "(SELECT a FROM s) ORDER BY a",
+        "SELECT a FROM s UNION ALL SELECT b FROM u",
+        "WITH x AS (SELECT 1) SELECT * FROM x",
+    ],
+)
+def test_parse_insert_and_ctas_keep_the_whole_query(spark, body):
+    assert sql_dml.parse_insert(f"INSERT INTO t {body}") == ("INTO", "t", body)
+    assert sql_dml.parse_ctas(f"CREATE TABLE t AS {body}") == ("t", body)
+
+
+def test_delete_parenthesized_operand_runs(spark, tmp_path):
+    eng = _kv_table(spark, tmp_path, "po_t")
+    eng.sql("DELETE FROM po_t WHERE (k + 1) BETWEEN 2 AND 3")
+    assert sorted(r.k for r in eng.table("po_t").collect()) == [3, 4]
+    spark.catalog.dropTempView("po_t")

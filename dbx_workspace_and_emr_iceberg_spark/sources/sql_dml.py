@@ -15,7 +15,9 @@ query body is that node's span in the original statement, so
 ``F.expr`` and ``spark.sql`` receive the statement's own text. Only
 when Spark's parser rejects a statement does the door try the grammar
 only Iceberg's extension has: branch/tag DDL, and INSERT into a
-``t.branch_<name>`` whose name holds ``-`` or ``.``.
+``t.branch_<name>`` whose name holds ``-`` or ``.``; and a MERGE with a
+NOT MATCHED clause before a MATCHED one is parsed again with its clause
+groups in grammar order.
 
 The statements run on the snapshot layer (:class:`LakehouseTable`).
 The DML subset — anything else raises ``ValueError`` rather than
@@ -29,7 +31,7 @@ mis-executing:
     ON <t>.<key> = <s>.<key>
     [WHEN MATCHED AND <cond> THEN DELETE]
     [WHEN MATCHED THEN UPDATE SET <t>.<col> = <expr> [, ...]]
-    [WHEN NOT MATCHED THEN INSERT *]
+    [WHEN NOT MATCHED THEN INSERT *]      (at any position)
 
 Conditions and expressions run through ``F.expr``, so the full Spark SQL
 expression language works inside them.
@@ -39,6 +41,7 @@ from __future__ import annotations
 
 import hashlib
 import re
+import threading
 from collections import namedtuple
 from datetime import datetime, timezone
 
@@ -95,14 +98,22 @@ _ICEBERG_ONLY = (
 )
 
 
+#: set in a thread while it parses: a statement the parser rejects is
+#: either grammar the door runs or re-raised to the caller, so PySpark's
+#: query-context log of that rejection is dropped, in that thread only
+_PARSING = threading.local()
+PySparkLogger.getLogger("SQLQueryContextLogger").addFilter(
+    lambda record: not getattr(_PARSING, "on", False)
+)
+
+
 def _parse(spark: SparkSession, sql: str) -> tuple:
-    """(kind, node) for one statement: the session parser's plan and its
-    door kind (None for a statement Spark SQL runs), or, for Iceberg-only
-    grammar that Spark's parser rejects, the matching regex's match."""
-    # a rejected statement is either Iceberg grammar the door runs or
-    # re-raised to the caller, so PySpark's error log stays quiet
-    log = PySparkLogger.getLogger("SQLQueryContextLogger")
-    was, log.disabled = log.disabled, True
+    """(kind, node, sql) for one statement: the session parser's plan
+    and its door kind (None for a statement Spark SQL runs), or, for
+    Iceberg-only grammar that Spark's parser rejects, the matching
+    regex's match. ``sql`` is the text the node's spans index: the
+    statement itself, or a MERGE with its clauses in grammar order."""
+    was, _PARSING.on = getattr(_PARSING, "on", False), True
     try:
         plan = spark._jsparkSession.sessionState().sqlParser().parsePlan(sql)
     except ParseException as e:
@@ -112,11 +123,53 @@ def _parse(spark: SparkSession, sql: str) -> tuple:
         for kind, rx in _ICEBERG_ONLY:
             m = rx.match(stmt)
             if m:
-                return kind, m
-        raise
+                return kind, m, sql
+        ordered = _grammar_order(spark, sql)
+        if ordered == sql:
+            raise
+        try:
+            return _parse(spark, ordered)
+        except ParseException:
+            raise e from None
     finally:
-        log.disabled = was
-    return _KINDS.get(plan.nodeName()), plan
+        _PARSING.on = was
+    return _KINDS.get(plan.nodeName()), plan, sql
+
+
+def _grammar_order(spark: SparkSession, sql: str) -> str:
+    """A MERGE with its WHEN clauses in the order Spark's grammar reads
+    them: MATCHED, then NOT MATCHED, then NOT MATCHED BY SOURCE, each
+    group in its written order. The groups act on disjoint rows, so the
+    order between groups does not change what the MERGE does. Clause
+    boundaries come from Spark's own lexer. Any other statement, and a
+    MERGE already in grammar order, comes back unchanged."""
+    parser = spark._jvm.org.apache.spark.sql.catalyst.parser
+    chars = spark._jvm.org.antlr.v4.runtime.CharStreams.fromString(sql)
+    lexer = parser.SqlBaseLexer(parser.UpperCaseCharStream(chars))
+    toks = [
+        (t.getText().upper(), t.getStartIndex())
+        for t in lexer.getAllTokens() if t.getChannel() == 0
+    ]
+    # (start, group) of each clause, a WHEN outside parentheses and
+    # CASE; a trailing ';' and what follows it stay last
+    depth, cuts = 0, []
+    merge = toks and toks[0][0] == "MERGE"
+    for i, (word, start) in enumerate(toks if merge else ()):
+        depth += (word in ("(", "CASE")) - (word in (")", "END"))
+        after = " ".join(w for w, _ in toks[i + 1 : i + 5])
+        if depth == 0 and word in ("WHEN", ";"):
+            group = 3 if word == ";" else 0 if after.startswith("MATCHED") else (
+                2 if after == "NOT MATCHED BY SOURCE" else 1
+            )
+            cuts.append((start, group))
+    groups = [g for _, g in cuts]
+    if groups == sorted(groups):
+        return sql
+    bounds = [s for s, _ in cuts] + [len(sql)]
+    texts = [sql[a:b].rstrip() for a, b in zip(bounds, bounds[1:])]
+    ordered = sorted(zip(groups, texts), key=lambda gt: gt[0])
+    # a newline ends a trailing -- comment before the next clause
+    return sql[: bounds[0]] + "\n".join(t for _, t in ordered)
 
 
 def classify(sql: str) -> str | None:
@@ -129,15 +182,16 @@ def classify(sql: str) -> str | None:
         return None
 
 
-def _statement(sql: str, kind: str):
-    """The active session's parse of ``sql``, which must be ``kind``."""
+def _statement(sql: str, kind: str) -> tuple:
+    """(sql, node): the active session's parse of ``sql``, which must be
+    ``kind``, and the text its spans index."""
     try:
-        got, node = _parse(SparkSession.active(), sql)
+        got, node, text = _parse(SparkSession.active(), sql)
     except ParseException as e:
         raise ValueError(f"unsupported {kind} syntax: {sql!r}") from e
     if got != kind:
         raise ValueError(f"unsupported {kind} syntax: {sql!r}")
-    return node
+    return text, node
 
 
 # --- reading the parsed plan -------------------------------------------------
@@ -174,15 +228,9 @@ def _value(e) -> str:
     raise ValueError(f"unsupported value {e.toString()!r}")
 
 
-#: expression classes the parser builds for ``<operand> <predicate>``
-#: (BETWEEN, IN, LIKE, IS NULL, IS DISTINCT FROM, ...): their recorded
-#: span starts at the predicate and leaves the operand out. IS [NOT]
-#: UNKNOWN builds an anonymous class, hence the empty name.
-_PREDICATES = frozenset({
-    "UnresolvedFunction", "In", "InSubquery", "Not", "Like", "ILike", "RLike", "",
-    "LikeAll", "NotLikeAll", "LikeAny", "NotLikeAny", "IsNull", "IsNotNull",
-    "EqualNullSafe",
-})
+def _shared(e) -> bool:
+    """TRUE and FALSE are shared objects: their recorded span is stale."""
+    return e.nodeName() == "Literal" and e.dataType().typeName() == "boolean"
 
 
 def _span(sql: str, node) -> tuple[int, int]:
@@ -194,6 +242,8 @@ def _span(sql: str, node) -> tuple[int, int]:
     n = node
     while n.children().size():
         n = n.children().apply(0)
+        if _shared(n):
+            break
         s = _origin(n)[0]
         if s > a:
             break
@@ -214,10 +264,12 @@ def _text(sql: str, e, aliases: dict[str, str] | None = None) -> str:
     """Expression e's text in sql. With ``aliases`` (lower-cased alias ->
     replacement prefix), each column reference whose first name part
     is one of the aliases has that part replaced."""
-    kind = e.nodeName()
-    if kind == "Literal" and e.dataType().typeName() == "boolean":
-        # TRUE and FALSE are shared objects: their recorded span is stale
+    if _shared(e):
         return e.toString()
+    if e.nodeName() == "Exists":
+        # EXISTS records the span of the clause around it, not its own
+        start, stop = _span(sql, e.plan())
+        return f"EXISTS ({sql[start : stop + 1]})"
     refs = []
     for leaf in _seq(e.collectLeaves()) if aliases else ():
         ref = leaf.nodeName() == "UnresolvedAttribute"
@@ -226,7 +278,7 @@ def _text(sql: str, e, aliases: dict[str, str] | None = None) -> str:
         if prefix is not None:
             new = prefix + ".".join(map(_ident, parts[1:]))
             refs.append((*_origin(leaf), new))
-    return _splice(sql, *(_span(sql, e) if kind in _PREDICATES else _origin(e)), refs)
+    return _splice(sql, *_span(sql, e), refs)
 
 
 def _splice(sql: str, start: int, stop: int, subs) -> str:
@@ -279,7 +331,7 @@ def _delete(sql: str, node) -> tuple[str, str | None]:
 
 
 def parse_delete(sql: str) -> tuple[str, str | None]:
-    return _delete(sql, _statement(sql, "DELETE"))
+    return _delete(*_statement(sql, "DELETE"))
 
 
 def _update(sql: str, node) -> tuple[str, dict[str, str], str | None]:
@@ -293,7 +345,7 @@ def _update(sql: str, node) -> tuple[str, dict[str, str], str | None]:
 
 
 def parse_update(sql: str) -> tuple[str, dict[str, str], str | None]:
-    return _update(sql, _statement(sql, "UPDATE"))
+    return _update(*_statement(sql, "UPDATE"))
 
 
 def _relation(rel) -> tuple[str, str | None]:
@@ -330,6 +382,9 @@ def _merge(sql: str, node, rewrite: bool = False) -> dict:
     source, s_alias = _relation(node.sourceTable())
     if node.notMatchedBySourceActions().nonEmpty():
         raise ValueError("WHEN NOT MATCHED BY SOURCE is not supported")
+    if node.withSchemaEvolution():
+        # the snapshot layer's merge keeps the target's schema
+        raise ValueError("MERGE WITH SCHEMA EVOLUTION is not supported")
     ta = (t_alias or target).lower()
     # the source wins when both sides use one qualifier
     aliases = {ta: "", (s_alias or source).lower(): "__src."} if rewrite else None
@@ -377,7 +432,7 @@ def _merge(sql: str, node, rewrite: bool = False) -> dict:
 
 
 def parse_merge(sql: str) -> dict:
-    return _merge(sql, _statement(sql, "MERGE"))
+    return _merge(*_statement(sql, "MERGE"))
 
 
 # --- CREATE TABLE AS / INSERT (spark-sql S4/S5 write path) ------------------
@@ -401,7 +456,7 @@ def _ctas(sql: str, node) -> tuple[str, _Query]:
 
 
 def parse_ctas(sql: str) -> tuple[str, str]:
-    table, body = _ctas(sql, _statement(sql, "CREATE"))
+    table, body = _ctas(*_statement(sql, "CREATE"))
     return table, _body(body)
 
 
@@ -410,7 +465,8 @@ def _insert(spark: SparkSession, sql: str, node) -> tuple[str, str, _Query]:
     ``t`` or the Iceberg branch write ``t.branch_<name>``."""
     if isinstance(node, re.Match):
         mode, table, ref, body = node.groups()
-        body = _query(body, _parse(spark, body)[1])
+        _, plan, body = _parse(spark, body)
+        body = _query(body, plan)
         return mode.upper(), f"{table}.branch_{ref}", body
     parts = _seq(node.table().multipartIdentifier())
     if len(parts) > 2 or node.userSpecifiedCols().nonEmpty() or (
@@ -423,7 +479,7 @@ def _insert(spark: SparkSession, sql: str, node) -> tuple[str, str, _Query]:
 
 def parse_insert(sql: str) -> tuple[str, str, str]:
     """(mode 'INTO'|'OVERWRITE', table, select-or-values body)."""
-    mode, table, body = _insert(SparkSession.active(), sql, _statement(sql, "INSERT"))
+    mode, table, body = _insert(SparkSession.active(), *_statement(sql, "INSERT"))
     return mode, table, _body(body)
 
 
@@ -448,14 +504,31 @@ def _one_row(engine, ddl: str, *values) -> DataFrame:
     )
 
 
+def _run_plan(engine, sql: str, node) -> DataFrame:
+    """The frame of sql's parsed plan, as spark.sql builds it from the
+    plan it parses (a command runs here, eagerly). A statement only
+    Iceberg's grammar reads goes to spark.sql, which reports Spark's own
+    parse error for it."""
+    spark = engine.spark
+    if isinstance(node, re.Match):
+        return spark.sql(sql)
+    dataset = spark._jvm.org.apache.spark.sql.classic.Dataset
+    return DataFrame(dataset.ofRows(spark._jsparkSession, node), spark)
+
+
 def _run_query(engine, q: _Query) -> DataFrame:
-    """spark.sql over the query with its VERSION/TIMESTAMP AS OF
-    references resolved through the snapshot layer. spark.sql analyzes
-    eagerly, so the __tt_* views resolve into the returned frame's plan:
-    they are dropped right after, and on error too, so they never
-    accumulate in the session or pin expired warehouse files."""
+    """The query's frame, with its VERSION/TIMESTAMP AS OF references
+    resolved through the snapshot layer: a query without them runs the
+    parsed plan, one with them runs its rewritten text in spark.sql.
+    Both analyze eagerly, so the __tt_* views resolve into the returned
+    frame's plan: they are dropped right after, and on error too, so
+    they never accumulate in the session or pin expired warehouse
+    files."""
     try:
-        return engine.spark.sql(q.prefix + _time_travel(engine, q))
+        subs = _time_travel(engine, q)
+        if not subs:
+            return _run_plan(engine, q.sql, q.plan)
+        return engine.spark.sql(q.prefix + _splice(q.sql, q.start, q.stop, subs))
     finally:
         while engine._tt_views:
             engine.spark.catalog.dropTempView(engine._tt_views.pop())
@@ -468,7 +541,7 @@ def execute_create(engine, sql: str, node) -> DataFrame:
         table, body = _ctas(sql, node)
         engine._require_warehouse()
     except ValueError:
-        return engine.spark.sql(sql)
+        return _run_plan(engine, sql, node)
     t = engine.create_table(table, _run_query(engine, body))
     version, n = t.current_version(), t.record_count()
     return _one_row(engine, _COMMIT_RESULT, table, "ctas", version, n)
@@ -488,7 +561,7 @@ def execute_insert(engine, sql: str, node) -> DataFrame:
         branch = ref[len("branch_"):] if ref else None
         t = engine.managed(table)
     except (KeyError, ValueError):
-        return engine.spark.sql(sql)
+        return _run_plan(engine, sql, node)
     df = _run_query(engine, body)
     if branch is not None:
         if mode != "INTO":
@@ -579,7 +652,7 @@ def parse_alter(sql: str) -> tuple[str, str, tuple]:
     branch/tag ref DDL (M8): CREATE/REPLACE BRANCH, CREATE TAG,
     DROP BRANCH/TAG, each with optional AS OF VERSION. Anything else
     (type changes, reorders) raises rather than mis-executing."""
-    return _alter(sql, _statement(sql, "ALTER"))
+    return _alter(*_statement(sql, "ALTER"))
 
 
 #: schema-change action -> (table method, result detail); a branch/tag
@@ -600,7 +673,7 @@ def execute_alter(engine, sql: str, node) -> DataFrame:
         action, table, args = _alter(sql, node)
         t = engine.managed(table)
     except (ValueError, KeyError):
-        return engine.spark.sql(sql)
+        return _run_plan(engine, sql, node)
     if action == "replace_branch":
         # default = main_head(), not the raw log head: after any branch
         # write the log head is a STAGED snapshot, and re-pointing
@@ -627,7 +700,7 @@ def execute(engine, sql: str) -> DataFrame:
     view pointed at the new snapshot. Every other statement runs in
     Spark SQL with its time-travel references resolved.
     """
-    kind, node = _parse(engine.spark, sql)
+    kind, node, sql = _parse(engine.spark, sql)
     if kind is None:
         return _run_query(engine, _Query(sql, node, 0, len(sql) - 1, ""))
     run = {"CALL": execute_call, "ALTER": execute_alter, "CREATE": execute_create,
@@ -717,19 +790,20 @@ def _snapshot_view(engine, node) -> tuple[int, int, str] | None:
     return _origin(rel)[0], _origin(node)[1], view
 
 
-def _time_travel(engine, q: _Query) -> str:
-    """The query's text with each managed-table time-travel reference
-    replaced by a view over its snapshot."""
+def _time_travel(engine, q: _Query) -> list:
+    """(start, stop, view) for each managed-table time-travel reference
+    in the query: the span to replace by a view over its snapshot."""
     subs = []
-    # the tree string shows every node, CTE bodies and subqueries too
-    stack = [q.plan] if "RelationTimeTravel" in q.plan.toString() else []
+    # every time-travel clause holds the keyword OF; the walk reads
+    # every node, CTE bodies and subqueries too
+    stack = [q.plan] if "OF" in q.sql[q.start : q.stop + 1].upper() else []
     while stack:
         n = stack.pop()
         if n.nodeName() == "RelationTimeTravel":
             subs.append(_snapshot_view(engine, n))
         else:
             stack += _seq(n.children()) + _seq(n.innerChildren())
-    return _splice(q.sql, q.start, q.stop, [sub for sub in subs if sub])
+    return [sub for sub in subs if sub]
 
 
 def rewrite_time_travel(engine, sql: str) -> str:
@@ -739,12 +813,13 @@ def rewrite_time_travel(engine, sql: str) -> str:
     served by the snapshot layer. Non-managed tables, and statements
     the parser rejects, are left for Spark to diagnose."""
     try:
-        node = _parse(SparkSession.active(), sql)[1]
+        _, node, sql = _parse(SparkSession.active(), sql)
     except ParseException:
         return sql
     if isinstance(node, re.Match):
         return sql
-    return _time_travel(engine, _Query(sql, node, 0, len(sql) - 1, ""))
+    subs = _time_travel(engine, _Query(sql, node, 0, len(sql) - 1, ""))
+    return _splice(sql, 0, len(sql) - 1, subs)
 
 
 # ---- CALL system.* procedures (Iceberg stored-procedure surface) -----------
@@ -829,7 +904,7 @@ def _call(sql: str, node) -> tuple[str, str, dict]:
 
 def parse_call(sql: str) -> tuple[str, str, dict]:
     """(procedure, table, kwargs) for CALL [cat.]system.proc('t', ...)."""
-    return _call(sql, _statement(sql, "CALL"))
+    return _call(*_statement(sql, "CALL"))
 
 
 def execute_call(engine, sql: str, node) -> DataFrame:

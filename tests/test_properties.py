@@ -1320,7 +1320,8 @@ def test_hash_sample_by_matches_python_md5(spark, rows):
 # net generates statements from a random AST (so the expected semantics
 # are known by construction), renders them with hostile spellings
 # (string literals containing '--', quotes in both escape forms,
-# mixed-case keywords/aliases, random whitespace, comments), and checks:
+# mixed-case keywords/aliases, random whitespace, comments, shuffled
+# clause orders), and checks:
 #   * parse level (~250 statements): parse_merge/parse_call
 #     recover exactly the generated AST; illegal mutations RAISE
 #     instead of silently reordering/dropping clauses;
@@ -1443,9 +1444,7 @@ def _render_merge(ast: dict, rng: "_random.Random") -> str:
         )
     if ast["insert"]:
         ins = r("WHEN") + r("NOT") + r("MATCHED") + r("THEN") + r("INSERT") + "*"
-        # SQL's MERGE grammar puts NOT MATCHED clauses after the MATCHED
-        # ones; the other order is the "insert_first" mutation below
-        whens.append(ins)
+        whens.insert(rng.randrange(len(whens) + 1), ins)
     comment = "-- trailing comment\n" if rng.random() < 0.3 else ""
     return (
         r("MERGE").lstrip()
@@ -1504,7 +1503,7 @@ def test_sql_dml_fuzz_merge_parser(spark):
         # never silently drop/reorder a clause
         mut = rng.choice(
             ["dup_insert", "cond_update", "cond_insert", "upd_then_matched",
-             "insert_cols", "insert_first"]
+             "insert_cols"]
         )
         if mut == "dup_insert":
             bad = (
@@ -1528,16 +1527,10 @@ def test_sql_dml_fuzz_merge_parser(spark):
                 "WHEN MATCHED THEN UPDATE SET v = 1 "
                 "WHEN MATCHED AND t.v < 0 THEN DELETE"
             )
-        elif mut == "insert_cols":
+        else:  # insert_cols
             bad = (
                 "MERGE INTO t USING src ON k "
                 "WHEN NOT MATCHED THEN INSERT (k, v) VALUES (src.k, src.v)"
-            )
-        else:  # insert_first
-            bad = (
-                "MERGE INTO t USING src ON k "
-                "WHEN NOT MATCHED THEN INSERT * "
-                "WHEN MATCHED THEN DELETE"
             )
         import pytest as _pt
 

@@ -1451,6 +1451,8 @@ def test_merge_target_struct_field_is_not_the_source(spark, tmp_path):
         "a IS NOT DISTINCT FROM b",
         "a LIKE ANY ('x', 'y')",
         "a IN (SELECT b FROM u)",
+        "EXISTS (SELECT b FROM u)",
+        "EXISTS (SELECT b FROM u) AND a = 1",
         "a = true",
         "false",
     ],
@@ -1479,3 +1481,86 @@ def test_delete_parenthesized_operand_runs(spark, tmp_path):
     eng.sql("DELETE FROM po_t WHERE (k + 1) BETWEEN 2 AND 3")
     assert sorted(r.k for r in eng.table("po_t").collect()) == [3, 4]
     spark.catalog.dropTempView("po_t")
+
+
+def test_merge_not_matched_first_reads_in_grammar_order(spark, tmp_path):
+    """WHEN NOT MATCHED may come before or between the MATCHED clauses:
+    the groups act on disjoint rows, so the statement means what its
+    grammar-ordered form means."""
+    head = "MERGE INTO t USING s ON t.k = s.k "
+    delete = "WHEN MATCHED AND s.v > 150 THEN DELETE "
+    update = "WHEN MATCHED THEN UPDATE SET v = s.v -- set\n"
+    insert = "WHEN NOT MATCHED THEN INSERT * "
+    want = sql_dml.parse_merge(head + delete + update + insert)
+    for whens in (insert + delete + update, delete + insert + update + ";"):
+        assert sql_dml.parse_merge(head + whens) == want
+    assert _merge_rows(
+        spark, tmp_path,
+        ([(1, 10), (2, 20)], "k int, v int"),
+        ([(1, 100), (2, 200), (3, 300)], "k int, v int"),
+        insert + delete + update,
+    ) == [(1, 100), (3, 300)]
+    # the clauses within a group keep their order
+    with pytest.raises(ValueError, match="unreachable"):
+        sql_dml.parse_merge(
+            head + "WHEN MATCHED THEN UPDATE SET v = 1 " + insert
+            + "WHEN MATCHED AND s.d = 1 THEN DELETE"
+        )
+
+
+def test_merge_with_schema_evolution_raises(spark):
+    """The snapshot layer's merge keeps the target's schema, so a MERGE
+    asking to evolve it is refused rather than run without evolution."""
+    with pytest.raises(ValueError, match="SCHEMA EVOLUTION"):
+        sql_dml.parse_merge(
+            "MERGE WITH SCHEMA EVOLUTION INTO t USING s ON t.k = s.k "
+            "WHEN MATCHED THEN DELETE"
+        )
+
+
+def test_door_runs_the_plan_it_parsed(spark, tmp_path, monkeypatch):
+    """A statement Spark runs is parsed once: the door runs the parsed
+    plan rather than handing its text back to spark.sql."""
+    eng = _kv_table(spark, tmp_path, "once_t")
+
+    def reparse(*args, **kwargs):
+        raise AssertionError("statement parsed a second time")
+
+    with monkeypatch.context() as m:
+        m.setattr(spark, "sql", reparse)
+        rows = eng.sql("SELECT k FROM once_t WHERE k > 2").collect()
+        eng.sql("CREATE OR REPLACE TEMPORARY VIEW once_v AS SELECT 7 AS x")
+    assert sorted(r.k for r in rows) == [3, 4]
+    assert spark.table("once_v").collect()[0].x == 7
+    spark.catalog.dropTempView("once_v")
+    spark.catalog.dropTempView("once_t")
+
+
+def test_parse_rejections_leave_the_error_log_on(spark):
+    """The log of a parse rejection the door handles is dropped only in
+    the thread that parses: after concurrent statements, PySpark's
+    query-context log still passes records."""
+    import logging
+    import sys
+    import threading
+
+    from pyspark.logger import PySparkLogger
+
+    stmts = ["ALTER TABLE t CREATE BRANCH b-1", "SELECT 1", "SELEC 1"]
+    threads = [
+        threading.Thread(target=sql_dml.classify, args=(stmts[i % 3],))
+        for i in range((os.cpu_count() or 4) + 1)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    log = PySparkLogger.getLogger("SQLQueryContextLogger")
+    record = logging.LogRecord("q", logging.ERROR, __file__, 1, "m", None, None)
+    assert not log.disabled and log.filter(record)

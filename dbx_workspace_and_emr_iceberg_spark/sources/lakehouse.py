@@ -26,6 +26,11 @@ Semantics mirrored from Iceberg v2 (copy-on-write flavor):
     against the files (renames, initial defaults) from one snapshot, the
     one its content comes from, and its partition spec from the snapshot
     whose layout its new files follow (:func:`_carried`);
+  * those mappings are one column map per file (:func:`_stored_names`),
+    the stand-in for Iceberg's field ids: a scan groups its files by the
+    names they store the columns under and projects each group back to
+    the schema, where a column a file holds no value for reads its
+    initial default; the planner reads each file's stats by the same map;
   * a snapshot reuses its parent's stats manifests by path and writes
     one only for the files it adds, so its metadata grows with the
     change, not with the table (Iceberg's manifest reuse); a tiered
@@ -65,6 +70,7 @@ from __future__ import annotations
 
 import contextlib
 import fcntl
+import functools
 import json
 import os
 import re
@@ -492,10 +498,44 @@ def _input_path() -> F.Column:
     ``...%2000%253A00%253A00`` in the URI. ``url_decode`` undoes that
     one level, but it also reads ``+`` as a space, so a literal ``+``
     (which the partition-dir escaping leaves as is) is protected first.
-    Every scan that maps rows back to manifest files goes through this
-    one expression."""
+    Copy-on-write discovery (:meth:`LakehouseTable._affected_files`)
+    is the one scan that maps rows back to manifest files; reads never
+    need the file a row came from."""
     uri = F.replace(F.input_file_name(), F.lit("file://"), F.lit(""))
     return F.url_decode(F.replace(uri, F.lit("+"), F.lit("%2B")))
+
+
+def _stored_names(m: dict):
+    """The column map of manifest ``m``: ``stored(f, col)`` is the name
+    file ``f`` stores logical column ``col`` under, or None when ``f``
+    holds no value for it — ``f`` predates the column (an
+    ``absent_files`` entry of ``defaults``), or stores another column
+    under that name. The name is ``col`` itself unless a ``renames``
+    entry maps ``f`` to an older one. This map stands in for Iceberg's
+    field ids; scans and the planner both resolve files through it.
+    A column's lookups are built when it is first asked about, from the
+    mapping entries only, so a manifest without mappings costs nothing
+    per file."""
+    renames, defaults = m.get("renames", {}), m.get("defaults", {})
+
+    @functools.cache
+    def index(col: str) -> tuple[dict, set]:
+        physical = {f: e["physical"] for e in renames.get(col, ()) for f in e["files"]}
+        shadowed = {
+            f
+            for entries in renames.values()
+            for e in entries
+            if e["physical"] == col
+            for f in e["files"]
+        }
+        empty = set(defaults.get(col, {}).get("absent_files", ()))
+        return physical, empty | (shadowed - physical.keys())
+
+    def stored(f: str, col: str) -> str | None:
+        physical, empty = index(col)
+        return None if f in empty else physical.get(f, col)
+
+    return stored
 
 
 def _file_column_stats(path: str) -> dict[str, list]:
@@ -696,7 +736,10 @@ class LakehouseTable:
         ):
             raise ValueError(f"invalid table name {name!r}")
         self.spark = spark
-        self.root = os.path.join(warehouse, name)
+        # absolute: manifests list absolute file paths, so discovery can
+        # match them against the paths the scan reports, whatever the
+        # working directory was when a warehouse was named relative
+        self.root = os.path.abspath(os.path.join(warehouse, name))
         self.data_dir = os.path.join(self.root, "data")
         self.snap_dir = os.path.dirname(manifest_path(self.root, 0))
         self.refs_path = os.path.join(self.root, "_refs.json")
@@ -1175,95 +1218,60 @@ class LakehouseTable:
             # contracted error, matching schema_json: a missing table
             # has no schema to build even an empty frame from
             raise ValueError(f"table {self.name} does not exist")
-        return self._read_file_set(m["files"], m)
+        return self._scan_files(m["files"], m)
 
     def _scan_files(self, files: list[str], manifest: dict) -> DataFrame:
-        """Manifest-schema scan of ``files`` with Iceberg-v3 initial
-        defaults applied: rows from files that PREDATE an added column
-        read its default. Membership is decided by input_file_name
-        against the manifest's absent set — at real scale this is
-        per-file metadata (field-id presence), not a literal list; the
-        semantics are identical. EVERY consumer of manifest-listed
-        files (read, CoW delete/update rewrites, predicate pruning)
-        must come through here, or rewritten rows silently lose their
-        defaults.
+        """Manifest-schema scan of ``files`` (an empty frame of that
+        schema when there are none) — EVERY read of manifest-listed
+        files (full and time-travel reads, CoW rewrites, incremental
+        and CDC reads) comes through here.
 
-        Rename mappings (M6 rename_column) resolve here too: files are
-        grouped by which logical→physical name substitutions apply
-        (Iceberg resolves by field id; name-mapped files are this
-        layer's equivalent), each group scans with its PHYSICAL schema
-        and immediately aliases back to logical names, then the groups
-        union. Pre-rename files thus keep their values — an explicit
-        logical-schema read would have nulled them. A column re-added
-        under a name that a group's files store another (renamed)
-        column under is not in those files: it reads NULL there, and
-        its initial default over that."""
+        Columns resolve per file through the manifest's column map
+        (:func:`_stored_names`), Iceberg's field-id resolution for
+        this layer's name-mapped files: files are grouped by the names
+        they store the schema's columns under, each group scans those
+        names and projects them back to the logical schema, and the
+        groups union. A pre-rename file thus keeps its values, and a
+        column a group holds no value for reads its initial default
+        (NULL when none was given) as a literal — no row-level test of
+        the file it came from. A manifest without renames or defaults
+        is one bare scan."""
         from pyspark.sql.types import StructField, StructType
 
         schema = StructType.fromJson(manifest["schema"])
-        renames = manifest.get("renames", {})
-        if not renames:
-            df = self.spark.read.schema(schema).parquet(*files)
-            return self._apply_defaults(df, manifest, set(files))
-
-        # per (logical, physical) membership sets
-        memb = {
-            (logical, e["physical"]): set(e["files"])
-            for logical, entries in renames.items()
-            for e in entries
-        }
-
-        def sig(f: str) -> tuple:
-            return tuple(
-                sorted(lp for lp, fs in memb.items() if f in fs)
-            )
-
+        if not files:
+            return self.spark.createDataFrame([], schema)
+        if not manifest.get("renames") and not manifest.get("defaults"):
+            return self.spark.read.schema(schema).parquet(*files)
+        stored = _stored_names(manifest)
+        logical = tuple(schema.fieldNames())
         groups: dict[tuple, list[str]] = {}
         for f in files:
-            groups.setdefault(sig(f), []).append(f)
+            groups.setdefault(tuple(stored(f, c) for c in logical), []).append(f)
+        defaults = manifest.get("defaults", {})
         parts = []
-        for s, fs in groups.items():
-            mapping = dict(s)  # logical -> physical for this group
-            shadowed = set(mapping.values()) - set(mapping)
-            stored = [f for f in schema.fields if f.name not in shadowed]
+        for names, fs in groups.items():
             phys = StructType(
                 [
-                    StructField(
-                        mapping.get(fld.name, fld.name), fld.dataType, True
-                    )
-                    for fld in stored
+                    StructField(n, fld.dataType, fld.nullable, fld.metadata)
+                    for n, fld in zip(names, schema.fields)
+                    if n is not None
                 ]
             )
-            pdf = self.spark.read.schema(phys).parquet(*fs).select(
-                *[
-                    F.lit(None).cast(fld.dataType).alias(fld.name)
-                    if fld.name in shadowed
-                    else F.col(mapping.get(fld.name, fld.name)).alias(fld.name)
-                    for fld in schema.fields
-                ]
-            )
-            parts.append(pdf)
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        return self._apply_defaults(df, manifest, set(files))
-
-    def _apply_defaults(
-        self, df: DataFrame, manifest: dict, fileset: set[str]
-    ) -> DataFrame:
-        for col, spec in manifest.get("defaults", {}).items():
-            absent = [f for f in spec["absent_files"] if f in fileset]
-            if not absent or col not in df.columns:
-                continue
-            in_absent = _input_path().isin(absent)
-            df = df.withColumn(
-                col,
-                F.when(
-                    in_absent,
-                    F.lit(spec["value"]).cast(df.schema[col].dataType),
-                ).otherwise(F.col(col)),
-            )
-        return df
+            part = self.spark.read.schema(phys).parquet(*fs)
+            if names != logical:
+                part = part.select(
+                    *[
+                        F.col(n).alias(fld.name)
+                        if n is not None
+                        else F.lit(defaults.get(fld.name, {}).get("value"))
+                        .cast(fld.dataType)
+                        .alias(fld.name)
+                        for n, fld in zip(names, schema.fields)
+                    ]
+                )
+            parts.append(part)
+        return functools.reduce(DataFrame.unionByName, parts)
 
     def read_as_of_timestamp(self, ts_ms: int) -> DataFrame:
         """TIMESTAMP AS OF (M4's second spelling): scan the latest
@@ -1315,12 +1323,11 @@ class LakehouseTable:
         min/max, so a file is dropped only when its stats prove no row
         can match; a filter class or value the evaluator cannot compare,
         a file without stats and a column the file does not physically
-        hold all keep the file. Logical names map through ``renames``
-        to the physical name a file stores the column under; a column
-        a file predates (an ``absent_files`` entry of ``defaults``) or
-        stores another column under reads its default there, never its
-        physical stats. ``m`` may be raw: the stats are assembled only
-        when Spark pushed a filter to evaluate."""
+        hold all keep the file. A filtered column's stats are those of
+        the name the file stores it under (:func:`_stored_names`); a
+        file that holds no value for it reads its default there, never
+        any physical stats. ``m`` may be raw: the stats are assembled
+        only when Spark pushed a filter to evaluate."""
         from pyspark.sql.types import StructType
 
         files = m.get("files", [])
@@ -1335,27 +1342,17 @@ class LakehouseTable:
             report["filters"] = [jf.toString() for jf in pushed]
             types = {f.name: f.dataType for f in schema.fields}
             trees = [t for t in (_filter_tree(jf, types) for jf in pushed) if t]
-            physical = {
-                (logical, f): e["physical"]
-                for logical, entries in m.get("renames", {}).items()
-                for e in entries
-                for f in e["files"]
-            }
-            held = {(f, p) for (_, f), p in physical.items()}
-            absent = {
-                c: set(d["absent_files"])
-                for c, d in m.get("defaults", {}).items()
-            }
+            stored = _stored_names(m)
             stats = _with_stats(self.root, m).get("stats", {})
 
             def bounds_in(f: str):
                 def bounds(col: str):
-                    p = physical.get((col, f))
-                    if f in absent.get(col, ()) or (p is None and (f, col) in held):
+                    p = stored(f, col)
+                    if p is None:
                         return None
                     s = stats.get(f) or {}
-                    lo = s.get("min", {}).get(p or col)
-                    hi = s.get("max", {}).get(p or col)
+                    lo = s.get("min", {}).get(p)
+                    hi = s.get("max", {}).get(p)
                     if lo is None or hi is None:
                         return None
                     if is_temporal_dtype(types[col]):
@@ -1658,7 +1655,7 @@ class LakehouseTable:
             )
         # an evolved column reads NULL in pre-existing rows, exactly
         # the manifest-only ADD semantics, but uncommitted
-        target = self._read_file_set(
+        target = self._scan_files(
             affected, {**m, "schema": schema, "defaults": defaults}
         )
         tcols = target.columns
@@ -1703,12 +1700,11 @@ class LakehouseTable:
                 updated = update_cols[c]
             else:
                 updated = F.col(c)
-            return (
-                F.when(F.col("__act") == "U", updated)
-                .when(F.col("__act") == "I", F.col("__src").getField(c))
-                .otherwise(F.col(c))
-                .alias(c)
-            )
+            out = F.when(F.col("__act") == "U", updated)
+            if insert:
+                # only an inserted row reads every column from the source
+                out = out.when(F.col("__act") == "I", F.col("__src").getField(c))
+            return out.otherwise(F.col(c)).alias(c)
 
         merged = (
             joined.withColumn("__act", act)
@@ -1797,7 +1793,7 @@ class LakehouseTable:
         main's files, scanned under its schema, written back as
         ``transform(scan)`` with its partition spec, replace them all."""
         parent, m = self._existing_base()
-        df = transform(self._read_file_set(m["files"], m))
+        df = transform(self._scan_files(m["files"], m))
         return self._commit(
             {
                 "files": self._write_files(df, m.get("partition_spec", [])),
@@ -2021,8 +2017,9 @@ class LakehouseTable:
         self, name: str, spark_type: str, default=None
     ) -> int:
         """ALTER TABLE ADD COLUMN (M6): manifest-only change; existing
-        files are untouched and the new column reads as NULL (mergeSchema
-        handles it on scan) — exactly Iceberg's no-rewrite evolution.
+        files are untouched and read the new column as NULL (the manifest
+        records them as predating it) — exactly Iceberg's no-rewrite
+        evolution.
 
         ``default`` adds Iceberg-v3 INITIAL-DEFAULT semantics: rows in
         files written BEFORE the evolution read the default; files
@@ -2050,8 +2047,8 @@ class LakehouseTable:
         # column, so re-adding a previously DROPPED column reads NULL
         # (Iceberg's field-id semantics) instead of the old physical
         # values the name-based scan would find. value=None is a NULL
-        # initial default (_apply_defaults casts F.lit(None) to the
-        # column type).
+        # initial default (_scan_files projects F.lit(value) cast to the
+        # column type for those files).
         defaults = {
             **m.get("defaults", {}),
             name: {"value": default, "absent_files": m["files"]},
@@ -2146,17 +2143,6 @@ class LakehouseTable:
 
     # ---------- S8+: incremental scan / CDC changelog ----------
 
-    def _read_file_set(self, files: list[str], manifest: dict) -> DataFrame:
-        """Empty-tolerant wrapper over _scan_files — initial defaults
-        apply to incremental/CDC reads exactly as to full scans."""
-        from pyspark.sql.types import StructType
-
-        if not files:
-            return self.spark.createDataFrame(
-                [], StructType.fromJson(manifest["schema"])
-            )
-        return self._scan_files(files, manifest)
-
     def read_incremental(self, from_version: int, to_version: int | None = None) -> DataFrame:
         """Incremental append scan: rows committed AFTER from_version up
         to and including to_version — Iceberg's
@@ -2177,7 +2163,7 @@ class LakehouseTable:
             added = _appended(base, later)
         except ValueError as e:
             raise ValueError(f"{e}; use changelog() instead") from None
-        return self._read_file_set(
+        return self._scan_files(
             added, later.get(to_v) or self._read_manifest(to_v, stats=False)
         )
 
@@ -2273,9 +2259,9 @@ class LakehouseTable:
             # otherwise feed exceptAll two different-arity frames. The
             # rem side's rename base is the previous MAIN version, so a
             # rename committed AT v still re-keys the pre-image columns.
-            add_df = _align(self._read_file_set(added, m), v)
+            add_df = _align(self._scan_files(added, m), v)
             rem_df = _align(
-                self._read_file_set(removed, pair_prev_m),
+                self._scan_files(removed, pair_prev_m),
                 pair_prev_v if pair_prev_v else v,
             )
             inserts = add_df if not removed else add_df.exceptAll(rem_df)
@@ -2290,10 +2276,7 @@ class LakehouseTable:
             return empty.withColumn("_change_type", F.lit("")).withColumn(
                 "_change_version", F.lit(0)
             ).limit(0)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return functools.reduce(DataFrame.unionByName, parts)
 
     def read_pruned(self, col: str, lo, hi):
         """Hidden-partition predicate rewrite (SURVEY §2.2 P3): a range
@@ -2311,7 +2294,7 @@ class LakehouseTable:
         filter applies to every kept file, so correctness never depends
         on pruning."""
         m, cond, files = self._planned_scan(col, lo, hi, half_open=True)
-        return self._read_file_set(files, m).filter(cond), files, list(m["files"])
+        return self._scan_files(files, m).filter(cond), files, list(m["files"])
 
     def overwrite_partitions(self, df: DataFrame) -> int:
         """Dynamic partition-level INSERT OVERWRITE (S6) — Iceberg's
@@ -2730,7 +2713,7 @@ class LakehouseTable:
         residual filter, both from one range condition (see
         :meth:`_range_bounds` for the bound conventions)."""
         m, cond, files = self._planned_scan(col, lo, hi)
-        return self._read_file_set(files, m).filter(cond)
+        return self._scan_files(files, m).filter(cond)
 
 
 def history(table: LakehouseTable) -> DataFrame:

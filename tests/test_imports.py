@@ -560,3 +560,13 @@ def test_commit_curve_smoke(spark, tmp_path):
     assert 0 < small["stats_bytes"] < small["commit_bytes"]
     assert abs(large["stats_bytes"] - small["stats_bytes"]) <= 8
     assert small["planned"] == large["planned"] == 1
+
+
+def test_code_lines_counts_only_code():
+    """tools/code_lines.py counts neither docstring, comment nor blank
+    lines."""
+    sys.path.insert(0, os.path.join(REPO, "tools"))
+    from code_lines import code_lines
+
+    snippet = '"""A docstring\nover two lines."""\n\n# a comment\nx = 1\ny = x  # why\n'
+    assert code_lines(snippet) == 2

@@ -2387,8 +2387,8 @@ def test_merge_unstable_source_cannot_duplicate_a_kept_key(spark, wh, tmp_path):
 
 def test_input_path_matches_manifest_paths_with_plus(spark, wh):
     """Partition values keep a literal '+' on disk; the one scan-to-
-    manifest path mapping must not read it as a space, or initial
-    defaults and CoW discovery miss those files."""
+    manifest path mapping must not read it as a space, or CoW discovery
+    misses those files."""
     df = spark.createDataFrame(
         [(1, "a+b c:d"), (2, "plain")], "id long, s string"
     )
@@ -2399,6 +2399,49 @@ def test_input_path_matches_manifest_paths_with_plus(spark, wh):
     assert {r.id: r.d for r in t.read().collect()} == {1: 7, 2: 7}
     t.delete_where(F.col("s") == "a+b c:d")
     assert [r.id for r in t.read().collect()] == [2]
+
+
+def test_relative_warehouse_dml_and_defaults(spark, tmp_path, monkeypatch):
+    """A warehouse named by a relative path: DELETE, UPDATE and MERGE
+    discover their files and an added column's default reads back."""
+    monkeypatch.chdir(tmp_path)
+    t = LakehouseTable(spark, "relwh", "t")
+    t.create(spark.range(10).selectExpr("id AS k", "id * 10 AS v").coalesce(1))
+    for lo in (10, 20, 30):
+        t.append(spark.range(lo, lo + 10).selectExpr("id AS k", "id * 10 AS v").coalesce(1))
+    t.add_column("d", "bigint", default=7)
+    assert {r.d for r in t.read().collect()} == {7}
+    t.delete_where(F.col("k") < 15)  # rewrites two of the four files
+    assert t.read().count() == 25
+    t.update_set(F.col("k") == 25, {"v": F.lit(-1)})
+    src = spark.createDataFrame([(20, 1, 1), (35, 2, 2), (100, 3, 3)], "k long, v long, d long")
+    t.merge_into(src, on="k")
+    rows = [(r.k, r.v, r.d) for r in t.read().collect()]
+    assert len(rows) == 26 and len({k for k, _, _ in rows}) == 26
+    got = {k: (v, d) for k, v, d in rows}
+    assert got[25] == (-1, 7) and got[20] == (1, 1) and got[35] == (2, 2)
+    assert got[100] == (3, 3) and got[15] == (150, 7)
+
+
+def test_column_map_reads_project_without_file_names(spark, wh):
+    """Renames and initial defaults resolve in each file group's
+    projection, never by testing the file a row came from; a table
+    without mappings reads as one bare file scan."""
+    t = LakehouseTable(spark, wh, "bare")
+    t.create(spark.range(10).selectExpr("id AS k", "id AS v").repartition(2))
+    plan = t.read()._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1 and "Project" not in plan, plan
+    t = LakehouseTable(spark, wh, "mapped")
+    t.create(spark.range(10).selectExpr("id AS k", "id AS v").repartition(2))
+    t.add_column("d", "bigint", default=7)
+    t.rename_column("v", "w")
+    t.append(spark.range(10, 12).selectExpr("id AS k", "id AS w", "id AS d"))
+    df = t.read()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "input_file_name" not in plan.lower(), plan
+    assert sorted(tuple(r) for r in df.collect()) == [
+        (k, k, 7 if k < 10 else k) for k in range(12)
+    ]
 
 
 # --- per-file record counts ---------------------------------------------------

@@ -14,7 +14,7 @@ import shutil
 import tempfile
 from collections import Counter
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -2019,5 +2019,163 @@ def test_plan_files_keeps_every_file_with_a_match(spark, case):
                 ]
                 if any(_plan_eval(c, r) is True for r in rows):
                     assert f in planned, (_plan_sql(c), rows, m["stats"][f])
+    finally:
+        shutil.rmtree(wh, ignore_errors=True)
+
+
+#: the names the column-map sequences draw from: few enough that a
+#: rename or an add often reuses a name an earlier step dropped or
+#: renamed away
+_MAP_NAMES = ["a", "b", "c"]
+_MAP_VALUES = st.integers(0, 20)
+_MAP_OPS = st.lists(
+    st.tuples(
+        st.one_of(
+            st.tuples(
+                st.just("add"),
+                st.sampled_from(_MAP_NAMES),
+                st.one_of(st.none(), _MAP_VALUES),
+            ),
+            st.tuples(
+                st.just("rename"),
+                st.sampled_from(_MAP_NAMES),
+                st.sampled_from(_MAP_NAMES),
+            ),
+            st.tuples(st.just("drop"), st.sampled_from(_MAP_NAMES)),
+            st.tuples(st.just("append"), st.integers(1, 3)),
+            st.tuples(st.just("delete"), st.integers(0, 6)),
+            st.tuples(
+                st.just("update"),
+                st.sampled_from(_MAP_NAMES),
+                st.integers(0, 6),
+                _MAP_VALUES,
+            ),
+            st.just(("compact",)),
+        ),
+        # which column and value the planner check after the op asks
+        # for (see _map_probe)
+        st.integers(0, 3),
+        st.integers(0, 20),
+    ),
+    min_size=1,
+    max_size=5,
+)
+
+
+def _map_value(k: int, col: str) -> int:
+    """What an appended row stores in ``col``: close to its key, so each
+    file spans a narrow range and a stale stat would prune wrongly."""
+    return k + _MAP_NAMES.index(col)
+
+
+def _map_probe(cols, rows, ci: int, vi: int):
+    """The planner check's ``(col, v)``: the ``ci``-th column from the
+    schema's end (0 = the newest) and one of the values it holds."""
+    col = cols[-1 - ci % len(cols)]
+    held = sorted({r[col] for r in rows if r[col] is not None}) or [0]
+    return col, held[vi % len(held)]
+
+
+def _map_step(spark, t, cols, rows, op, next_k):
+    """Apply ``op`` to the table and to the row model (``cols`` is the
+    schema order, ``rows`` one dict per row); an op whose precondition
+    fails is skipped on both. Returns the next unused key."""
+    kind = op[0]
+    if kind == "add" and op[1] not in cols:
+        t.add_column(op[1], "bigint", default=op[2])
+        cols.append(op[1])
+        for r in rows:
+            r[op[1]] = op[2]
+    elif kind == "rename" and op[1] in cols and op[2] not in cols:
+        t.rename_column(op[1], op[2])
+        cols[cols.index(op[1])] = op[2]
+        for r in rows:
+            r[op[2]] = r.pop(op[1])
+    elif kind == "drop" and op[1] in cols:
+        t.drop_column(op[1])
+        cols.remove(op[1])
+        for r in rows:
+            del r[op[1]]
+    elif kind == "append":
+        new = [
+            {c: k if c == "k" else _map_value(k, c) for c in cols}
+            for k in range(next_k, next_k + op[1])
+        ]
+        schema = ", ".join(f"{c} bigint" for c in cols)
+        t.append(
+            spark.createDataFrame([tuple(r[c] for c in cols) for r in new], schema)
+            .coalesce(1)
+        )
+        rows.extend(new)
+        next_k += op[1]
+    elif kind == "delete":
+        t.delete_where(F.col("k") % 7 == op[1])
+        rows[:] = [r for r in rows if r["k"] % 7 != op[1]]
+    elif kind == "update" and op[1] in cols:
+        t.update_set(F.col("k") % 7 == op[2], {op[1]: F.lit(op[3])})
+        for r in rows:
+            if r["k"] % 7 == op[2]:
+                r[op[1]] = op[3]
+    elif kind == "compact":
+        t.compact(2)
+    return next_k
+
+
+@given(ops=_MAP_OPS)
+# the files still store a dropped column's values under its name
+@example(ops=[(("drop", "a"), 0, 0), (("add", "a", 20), 0, 0)])
+# the files store b under the name a
+@example(ops=[(("rename", "a", "b"), 0, 0), (("add", "a", 20), 0, 0)])
+# renamed back to the old name, over files of both names
+@example(
+    ops=[
+        (("rename", "a", "b"), 0, 0),
+        (("append", 2), 0, 0),
+        (("rename", "b", "a"), 0, 9),
+        (("delete", 3), 0, 2),
+    ]
+)
+@settings(
+    # with the three explicit examples, 15 sequences in all
+    max_examples=12,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_column_map_reads_and_plans_like_row_model(spark, ops):
+    """Any sequence of column evolution and DML on a multi-file table:
+    every read equals a pure-Python row model, and the planner keeps
+    every file whose own scan holds a row with ``col == v`` — a file's
+    stats never stand in for a column it holds no value for."""
+    from functools import reduce
+
+    wh = tempfile.mkdtemp(prefix="lh_map_")
+    try:
+        t = LakehouseTable(spark, wh, "t")
+        cols = ["k", "a"]
+        rows = [{"k": k, "a": _map_value(k, "a")} for k in range(8)]
+        t.create(
+            spark.createDataFrame([(r["k"], r["a"]) for r in rows], "k bigint, a bigint")
+            .repartition(2, "k")
+        )
+        next_k = 8
+        for op, ci, vi in ops:
+            next_k = _map_step(spark, t, cols, rows, op, next_k)
+            df = t.read()
+            assert df.columns == cols, op
+            got = sorted(tuple(r) for r in df.collect())
+            assert got == sorted(tuple(r[c] for c in cols) for r in rows), op
+            m = t._read_manifest(t.main_head())
+            col, v = _map_probe(cols, rows, ci, vi)
+            cond = F.col(col) == v
+            planned, _ = t._plan_files(m, cond)
+            hits = reduce(
+                lambda a, b: a.union(b),
+                [
+                    t._scan_files([f], m).filter(cond).select(F.lit(i).alias("i"))
+                    for i, f in enumerate(m["files"])
+                ],
+            ).distinct().collect()
+            for r in hits:
+                assert m["files"][r.i] in planned, (op, col, v, m)
     finally:
         shutil.rmtree(wh, ignore_errors=True)

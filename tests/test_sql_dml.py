@@ -118,7 +118,7 @@ def test_parse_merge_rejects_insert_columns(spark):
 def _merge_rows(spark, tmp_path, target, source, whens):
     """The target's rows after ``MERGE INTO <target> t USING <source> s
     ON t.k = s.k <whens>`` through Engine.sql; ``target`` and ``source``
-    are (rows, schema) pairs, the source holding every target column."""
+    are (rows, schema) pairs."""
     import uuid
 
     from dbx_workspace_and_emr_iceberg_spark.engine import Engine
@@ -143,6 +143,31 @@ def test_rewrite_aliases(spark, tmp_path):
         ([(1, 100, 50, 7)], "k int, v int, n int, other int"),
         "WHEN MATCHED THEN UPDATE SET v = s.v + t.n - s.other",
     ) == [(1, 100 + 5 - 7, 5)]
+
+
+def test_update_only_merge_source_lacks_target_columns(spark, tmp_path):
+    """An update-only MERGE reads from the source only what its SET
+    names: the source need not hold the target's other columns."""
+    assert _merge_rows(
+        spark, tmp_path,
+        ([(1, 10, 5), (2, 20, 6)], "k int, v int, n int"),
+        ([(1, 100, 1)], "k int, v int, other int"),
+        "WHEN MATCHED THEN UPDATE SET v = s.v + t.n - s.other",
+    ) == [(1, 104, 5), (2, 20, 6)]
+
+
+def test_insert_star_merge_needs_every_target_column(spark, tmp_path):
+    """INSERT * still reads every target column from the source, so a
+    source without one of them is refused."""
+    from pyspark.errors import AnalysisException
+
+    with pytest.raises(AnalysisException, match="FIELD_NOT_FOUND"):
+        _merge_rows(
+            spark, tmp_path,
+            ([(1, 10, 5)], "k int, v int, n int"),
+            ([(2, 100, 1)], "k int, v int, other int"),
+            "WHEN NOT MATCHED THEN INSERT *",
+        )
 
 
 # --- end-to-end through the engine ----------------------------------------

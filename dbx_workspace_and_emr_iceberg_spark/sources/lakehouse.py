@@ -736,9 +736,11 @@ class LakehouseTable:
         ):
             raise ValueError(f"invalid table name {name!r}")
         self.spark = spark
-        # absolute: manifests list absolute file paths, so discovery can
-        # match them against the paths the scan reports, whatever the
-        # working directory was when a warehouse was named relative
+        # absolute: new manifests list absolute file paths, so discovery
+        # can match them against the paths the scan reports, whatever
+        # the working directory was when a warehouse was named relative.
+        # Older tables written under a relative warehouse list relative
+        # paths; discovery and the orphan sweep compare absolute forms.
         self.root = os.path.abspath(os.path.join(warehouse, name))
         self.data_dir = os.path.join(self.root, "data")
         self.snap_dir = os.path.dirname(manifest_path(self.root, 0))
@@ -1430,7 +1432,7 @@ class LakehouseTable:
         scan = self._scan_files(files, m).withColumn("__file", _input_path())
         # subscript access: attribute access would name-mangle __file
         hits = {r["__file"] for r in rows(scan).select("__file").distinct().collect()}
-        return [f for f in files if f in hits]
+        return [f for f in files if os.path.abspath(f) in hits]
 
     def _filtered_files(self, m: dict, cond) -> list[str]:
         """The files of ``m`` holding a row where ``cond`` is TRUE:
@@ -1968,7 +1970,9 @@ class LakehouseTable:
         by its directory).
         """
         ms = [m for _, m in manifests(self.root)]
-        live = {f for m in ms for f in m["files"]}
+        # absolute, as the walk below lists them: a table written under
+        # a relative warehouse may list relative paths
+        live = {os.path.abspath(f) for m in ms for f in m["files"]}
 
         def aged(path: str) -> bool:
             return (
@@ -2276,7 +2280,10 @@ class LakehouseTable:
             return empty.withColumn("_change_type", F.lit("")).withColumn(
                 "_change_version", F.lit(0)
             ).limit(0)
-        return functools.reduce(DataFrame.unionByName, parts)
+        out = parts[0]
+        for p in parts[1:]:
+            out = out.unionByName(p)
+        return out
 
     def read_pruned(self, col: str, lo, hi):
         """Hidden-partition predicate rewrite (SURVEY §2.2 P3): a range

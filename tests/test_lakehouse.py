@@ -2423,6 +2423,37 @@ def test_relative_warehouse_dml_and_defaults(spark, tmp_path, monkeypatch):
     assert got[100] == (3, 3) and got[15] == (150, 7)
 
 
+def test_relative_manifest_paths_stay_live(spark, tmp_path):
+    """A table written under a relative warehouse by an older writer
+    lists relative file paths in its manifests: the orphan sweep keeps
+    every listed file, and DELETE discovers the files it rewrites."""
+    # relative to the working directory Spark started in, so Spark
+    # resolves the relative manifest paths to the same files
+    rel = os.path.relpath(tmp_path)
+    t = LakehouseTable(spark, rel, "t")
+    t.create(spark.range(10).selectExpr("id AS k").coalesce(1))
+    for lo in (10, 20):
+        t.append(spark.range(lo, lo + 10).selectExpr("id AS k").coalesce(1))
+    # rewrite the snapshot and stats manifests as that writer left them
+    for d in ("_snapshots", "_stats"):
+        for fn in os.listdir(os.path.join(t.root, d)):
+            p = os.path.join(t.root, d, fn)
+            with open(p) as f:
+                text = f.read()
+            with open(p, "w") as f:
+                f.write(text.replace(str(tmp_path) + os.sep, rel + os.sep))
+    m = t._read_manifest(t.main_head())
+    assert len(m["files"]) == 3 and not any(os.path.isabs(f) for f in m["files"])
+    assert t.remove_orphan_files() == []
+    assert sorted(r.k for r in t.read().collect()) == list(range(30))
+    t.delete_where(F.col("k") % 10 == 0)  # every file holds a match
+    assert sorted(r.k for r in t.read().collect()) == [
+        k for k in range(30) if k % 10
+    ]
+    assert t.remove_orphan_files() == []
+    assert t.read().count() == 27
+
+
 def test_column_map_reads_project_without_file_names(spark, wh):
     """Renames and initial defaults resolve in each file group's
     projection, never by testing the file a row came from; a table

@@ -31,7 +31,7 @@ class Engine:
         self.warehouse = warehouse
         self._tables: dict[str, LakehouseTable] = {}
         # time-travel temp views registered by the current statement's
-        # rewrite; dropped after execution (sql_dml._run_query)
+        # rewrite; dropped after execution (sql_dml.execute)
         self._tt_views: set[str] = set()
 
     @classmethod
@@ -56,12 +56,14 @@ class Engine:
 
     def table(self, name: str, sf_dir: str | None = None) -> DataFrame:
         """A fixture table (when sf_dir given), a managed lakehouse
-        table (when created through this engine), else a session view."""
+        table of the warehouse at main's head, else a session view."""
         if sf_dir is not None and name in TABLES:
             return load_table(self.spark, sf_dir, name)
-        if name in self._tables:
-            return self._tables[name].read()
-        return self.spark.table(name)
+        try:
+            t = self.managed(name)
+        except (KeyError, ValueError):
+            return self.spark.table(name)
+        return t.read()
 
     # ---- door 3: managed snapshot tables ----
     def _require_warehouse(self) -> str:
@@ -70,10 +72,11 @@ class Engine:
         return self.warehouse
 
     def create_table(self, name: str, df: DataFrame) -> LakehouseTable:
+        """Create the managed table ``name`` from ``df``. It registers no
+        view: a SQL-door statement binds the table when it reads it."""
         t = LakehouseTable(self.spark, self._require_warehouse(), name)
         t.create(df)
         self._tables[name] = t
-        t.read().createOrReplaceTempView(name)  # SQL door sees it too
         return t
 
     def managed(self, name: str) -> LakehouseTable:
@@ -85,10 +88,13 @@ class Engine:
         return self._tables[name]
 
     def refresh_view(self, name: str) -> None:
-        """Re-point the SQL-door temp view at the current snapshot.
-        Temp views capture the file list at registration time, so call
-        this after DML on a managed table (or use .managed(name).read()
-        which always resolves the manifest)."""
+        """Bind the session temp view ``name`` to the managed table's
+        main head. The SQL door calls this for each managed table a
+        statement reads, just before the statement is analyzed
+        (``sql_dml._bind``), so door reads always see the current
+        snapshot. A temp view holds the file list it was bound with:
+        Spark SQL run outside the door reads that list until the next
+        door statement that names the table."""
         self.managed(name).read().createOrReplaceTempView(name)
 
     def table_snapshot(self, name: str, version: int) -> DataFrame:

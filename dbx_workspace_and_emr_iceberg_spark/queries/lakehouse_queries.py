@@ -521,10 +521,10 @@ def m12b_sql_dml_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return out.localCheckpoint()  # temp warehouse removed in finally
     finally:
-        # drop the views BEFORE the warehouse files go (review-pass
-        # r16): Engine.create_table registers temp views over the
-        # warehouse parquet, and a dangling catalog entry over deleted
-        # files haunts the rest of the session (the m6b/m16 idiom)
+        # drop the views BEFORE the warehouse files go: a door read
+        # binds a temp view over the warehouse parquet, and a dangling
+        # catalog entry over deleted files haunts the rest of the
+        # session (the m6b/m16 idiom)
         for v in ("nation_m12b", "m12b_updates"):
             spark.catalog.dropTempView(v)
         shutil.rmtree(wh, ignore_errors=True)
@@ -769,9 +769,7 @@ def m6b_rename_drop_column(spark: SparkSession, sf_dir: str) -> DataFrame:
         steps.append(("drop", t.current_version(), after.count()))
         return _log(spark, steps)
     finally:
-        for v in spark.catalog.listTables():
-            if v.tableType == "TEMPORARY" and v.name == "nation_m6b":
-                spark.catalog.dropTempView(v.name)
+        spark.catalog.dropTempView("nation_m6b")
         shutil.rmtree(wh, ignore_errors=True)
 
 
@@ -2358,7 +2356,6 @@ def m16_sql_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_regionkey",
             ).limit(4)
         )
-        eng.refresh_view("nation_tt")
 
         n_v1 = eng.sql(
             "SELECT count(*) AS n FROM nation_tt VERSION AS OF 1"
@@ -2395,13 +2392,10 @@ def m16_sql_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_v1 long, n_now long, n_asof long, n_delta long",
         )
     finally:
-        # the warehouse dies with this query — drop every view this run
-        # registered so no dangling reference to deleted parquet remains
-        for v in spark.catalog.listTables():
-            if v.tableType == "TEMPORARY" and (
-                v.name == "nation_tt" or v.name.startswith("__tt_nation_tt_")
-            ):
-                spark.catalog.dropTempView(v.name)
+        # the warehouse dies with this query — drop the view the door
+        # bound so no dangling reference to deleted parquet remains
+        # (the door drops its __tt_* views after each statement)
+        spark.catalog.dropTempView("nation_tt")
         shutil.rmtree(wh, ignore_errors=True)
 
 
@@ -2503,7 +2497,6 @@ def m18_call_procedures(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n_regionkey",
             )
         )
-        eng.refresh_view("nation_proc")
 
         eng.sql("CALL system.rollback_to_snapshot('nation_proc', 1)")
         n_after_rb = eng.sql(
@@ -2585,9 +2578,7 @@ def m18_call_procedures(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_after_cherrypick long, expire_trimmed long",
         )
     finally:
-        for v in spark.catalog.listTables():
-            if v.tableType == "TEMPORARY" and v.name == "nation_proc":
-                spark.catalog.dropTempView(v.name)
+        spark.catalog.dropTempView("nation_proc")
         shutil.rmtree(wh, ignore_errors=True)
 
 
@@ -2694,10 +2685,7 @@ def m20_pure_sql_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         return _log(spark, steps)
     finally:
         for v in ("reg_m20", "region_m20_src", "m20_updates"):
-            try:
-                spark.catalog.dropTempView(v)
-            except Exception:
-                pass
+            spark.catalog.dropTempView(v)
         shutil.rmtree(wh, ignore_errors=True)
 
 
@@ -2780,10 +2768,6 @@ def m20b_sql_lifecycle_values(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = pre.unionAll(fin).orderBy("phase", "r_regionkey")
         return out.localCheckpoint()  # temp warehouse removed in finally
     finally:
-        for v in spark.catalog.listTables():
-            if v.tableType == "TEMPORARY" and (
-                v.name in ("reg_m20b", "region_m20b_src", "m20b_updates")
-                or v.name.startswith("__tt_reg_m20b_")
-            ):
-                spark.catalog.dropTempView(v.name)
+        for v in ("reg_m20b", "region_m20b_src", "m20b_updates"):
+            spark.catalog.dropTempView(v)
         shutil.rmtree(wh, ignore_errors=True)

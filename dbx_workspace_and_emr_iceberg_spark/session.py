@@ -61,6 +61,12 @@ def get_spark(
         # already built.  The whole registry generates ~4,240 distinct
         # classes; 8192 leaves each segment room for its share --
         .config("spark.sql.codegen.cache.maxEntries", "8192")
+        # -- list a read's paths on the driver: above the threshold
+        # (32 paths by default) Spark lists them in a job with one task
+        # per path, and a lakehouse read names every file its manifest
+        # lists.  The manifests already name each file, and the commit
+        # layer is local-FS scoped (sources/lakehouse.py `_commit`) --
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1000000")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -2567,9 +2567,9 @@ class LakehouseTable:
         ``staged_ref`` so main_head() skips it; only the branch
         pointer moves — the W of WAP. The shared snapshot log's
         `_current` does advance (exactly as Iceberg's snapshot list
-        grows on a branch commit); door-level main reads stay pinned
-        via the unrefreshed view, and pinned reads / main_head() are
-        the API-level spelling. ``positional`` binds columns by
+        grows on a branch commit); main reads (``read()``, the SQL
+        door, main_head()) skip the staged snapshot. ``positional``
+        binds columns by
         position (the SQL-door INSERT contract — a VALUES frame
         arrives named col1/col2)."""
         refs = self._refs()

@@ -94,8 +94,8 @@ def _split_range(lo: int, hi: int, parts: int) -> list["_RangePartition"]:
     for a generated feed. Ceil-div so the tail partition is never lost;
     an empty range still yields ONE (empty) partition because Spark
     requires >= 1 per planned batch. ONE implementation shared by the
-    batch reader and the stream reader's per-batch planner (review-pass
-    r15: the two inline copies could drift)."""
+    batch reader and the stream reader's per-batch planner, so their
+    splits cannot drift apart."""
     hi = max(lo, hi)
     span = hi - lo
     if span <= 0:
@@ -117,8 +117,8 @@ class SyntheticEventsReader(DataSourceReader):
         return _split_range(self.lo, self.hi, self.parts)
 
     def read(self, partition: _RangePartition):
-        # Executor-side: one Arrow batch for exactly this split (r20;
-        # see _range_batches — same values as the old per-row tuples).
+        # Executor-side: one Arrow batch for exactly this split (see
+        # _range_batches: the same values a per-row reader yields).
         yield from _range_batches(partition.start, partition.end)
 
 

@@ -3,10 +3,9 @@
 The reference resolves ``catalog.schema.table`` through Unity Catalog's
 Iceberg REST endpoint with OAuth2 client credentials
 (/root/reference/main.tf:794-806: ``type=rest``, ``uri``, ``credential``,
-``oauth2-server-uri``, ``token-refresh-enabled``).  Until round 15 that
-shape existed here as config parity only
-(:func:`~.lakehouse.iceberg_rest_catalog_conf`) — no HTTP was ever
-spoken (VERDICT r15 #3).  This module closes that gap without egress:
+``oauth2-server-uri``, ``token-refresh-enabled``).  Beyond the config
+parity of :func:`~.lakehouse.iceberg_rest_catalog_conf`, this module
+speaks that protocol over real HTTP, without egress:
 
 * :class:`RestCatalogServer` — an in-process HTTP server implementing
   the handful of routes from the public Iceberg REST OpenAPI spec that
@@ -84,7 +83,7 @@ class RestCatalogServer:
         self.catalog = catalog
         self.credential = credential
         self.token_ttl_s = token_ttl_s
-        #: prefix-less posture (ADVICE r16): /v1/config returns no
+        #: prefix-less posture: /v1/config returns no
         #: 'overrides' and routes omit the catalog segment — the spec
         #: marks both optional, and real single-tenant servers do this
         self.prefixless = prefixless
@@ -314,7 +313,6 @@ class RestCatalogClient:
         self._token_exp: float = 0.0
         # the spec marks both 'overrides' and 'prefix' optional — a
         # prefix-less server must yield '' here, not a KeyError
-        # (ADVICE r16)
         self.prefix = self._config().get("overrides", {}).get("prefix", "")
 
     @classmethod
@@ -394,7 +392,7 @@ class RestCatalogClient:
 
     def _get(self, route: str) -> dict:
         # empty prefix must NOT leave a double slash ('/v1//namespaces'
-        # is a different resource to strict routers — ADVICE r16)
+        # is a different resource to strict routers)
         seg = f"/{self.prefix}" if self.prefix else ""
         return self._request(
             f"{self.uri}/v1{seg}{route}", bearer=self._bearer()
@@ -433,7 +431,7 @@ class RestLakehouseCatalog:
         # the name this catalog is bound under in the SESSION (the
         # <cat> of spark.sql.catalog.<cat>.*) — 3-part ids are written
         # against it.  The server's routing prefix is a transport
-        # detail that need not equal it (ADVICE r17), so it is only a
+        # detail that need not equal it, so it is only a
         # fallback for clients built without session context.
         self.catalog_name = catalog_name
 
@@ -448,11 +446,11 @@ class RestLakehouseCatalog:
         if len(parts) == 3:
             # 3-part ids must name the catalog this client is bound to
             # — silently resolving 'othercat.db.t' in the bound catalog
-            # would read the wrong table (ADVICE r16).  Validate
-            # against the SESSION binding name when known, else the
-            # server's routing prefix (ADVICE r17: against a prefixless
-            # server prefix is '' and must not reject every 3-part id;
-            # the prefix also need not equal the catalog name).  With
+            # would read the wrong table.  Validate against the
+            # SESSION binding name when known, else the server's
+            # routing prefix (against a prefixless server prefix is ''
+            # and must not reject every 3-part id; the prefix also
+            # need not equal the catalog name).  With
             # neither known the head is unverifiable: accept it —
             # documented caveat, matching a single-catalog client.
             bound = self.catalog_name or self.client.prefix

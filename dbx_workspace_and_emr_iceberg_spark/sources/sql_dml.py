@@ -517,21 +517,14 @@ def _run_plan(engine, sql: str, node) -> DataFrame:
 
 
 def _run_query(engine, q: _Query) -> DataFrame:
-    """The query's frame, with its VERSION/TIMESTAMP AS OF references
-    resolved through the snapshot layer: a query without them runs the
-    parsed plan, one with them runs its rewritten text in spark.sql.
-    Both analyze eagerly, so the __tt_* views resolve into the returned
-    frame's plan: they are dropped right after, and on error too, so
-    they never accumulate in the session or pin expired warehouse
-    files."""
-    try:
-        subs = _time_travel(engine, q)
-        if not subs:
-            return _run_plan(engine, q.sql, q.plan)
-        return engine.spark.sql(q.prefix + _splice(q.sql, q.start, q.stop, subs))
-    finally:
-        while engine._tt_views:
-            engine.spark.catalog.dropTempView(engine._tt_views.pop())
+    """The query's frame, with the managed tables it reads bound
+    (:func:`_bind`): a query without time travel runs the parsed plan,
+    one with it runs its rewritten text in spark.sql. Both analyze
+    eagerly, so each view resolves into the returned frame's plan."""
+    subs = _bind(engine, q.plan)
+    if not subs:
+        return _run_plan(engine, q.sql, q.plan)
+    return engine.spark.sql(q.prefix + _splice(q.sql, q.start, q.stop, subs))
 
 
 def execute_create(engine, sql: str, node) -> DataFrame:
@@ -571,10 +564,10 @@ def execute_insert(engine, sql: str, node) -> DataFrame:
         version = commit_with_retries(
             lambda: t.write_to_branch(branch, df, positional=True)
         )
-        # main's view is NOT refreshed: the branch pointer moved, main
-        # didn't — that is the W of WAP. n_rows reports the INSERTED
-        # batch, unlike the insert/insert_overwrite arms below, which
-        # report the post-statement TABLE total — a branch INSERT's
+        # the branch pointer moved, main didn't — that is the W of
+        # WAP. n_rows reports the INSERTED batch, unlike the
+        # insert/insert_overwrite arms below, which report the
+        # post-statement TABLE total — a branch INSERT's
         # table total is ambiguous (which ref?), the batch is not.
         # Counted from the manifests' per-file record counts (a branch
         # append lists its base's files plus the new ones), never by
@@ -596,7 +589,6 @@ def execute_insert(engine, sql: str, node) -> DataFrame:
         # table's columns to col1/col2
         version = commit_with_retries(lambda: t.overwrite_positional(df))
         op = "insert_overwrite"
-    engine.refresh_view(table)
     return _one_row(engine, _COMMIT_RESULT, table, op, version, t.record_count())
 
 
@@ -681,8 +673,6 @@ def execute_alter(engine, sql: str, node) -> DataFrame:
         args = (args[0], args[1] if args[1] is not None else t.main_head())
     method, detail = _ALTER_METHODS.get(action, (action, action + " {0}"))
     version = getattr(t, method)(*args)
-    if action in _ALTER_METHODS:  # a ref DDL moves a pointer, not main
-        engine.refresh_view(table)
     detail = detail.format(*args)
     return _one_row(engine, _ALTER_RESULT, table, "alter", version, detail)
 
@@ -696,65 +686,76 @@ def execute(engine, sql: str) -> DataFrame:
     DML, INSERT, CTAS, ALTER and CALL on engine-managed tables return a
     one-row summary frame — (table, operation, version, n_rows) for
     writes, (table, procedure, result) for CALL — the shape
-    ``spark-sql`` users see from Iceberg, and keep the SQL-door temp
-    view pointed at the new snapshot. Every other statement runs in
-    Spark SQL with its time-travel references resolved.
+    ``spark-sql`` users see from Iceberg. Every other statement runs in
+    Spark SQL. Each managed table a statement reads is bound when the
+    statement runs (:func:`_bind`), so it reads main's head, whichever
+    door wrote last. The __tt_* views are dropped after the statement,
+    on error too, so they never accumulate in the session or pin
+    expired warehouse files.
     """
     kind, node, sql = _parse(engine.spark, sql)
-    if kind is None:
-        return _run_query(engine, _Query(sql, node, 0, len(sql) - 1, ""))
-    run = {"CALL": execute_call, "ALTER": execute_alter, "CREATE": execute_create,
-           "INSERT": execute_insert}.get(kind)
-    if run is not None:
-        return run(engine, sql, node)
-    # Every DML statement runs under Iceberg's commit.retry semantics
-    # (commit_with_retries, sources/lakehouse.py): the table methods
-    # re-read current state on entry, so re-running the whole closure
-    # on ConflictError is the contracted restartable pattern — a racing
-    # writer costs a retry, not a user-visible crash; the FINAL
-    # conflict still propagates so lost updates are never silent.
-    if kind == "DELETE":
-        table, where = _delete(sql, node)
-        t = engine.managed(table)
-        cond = F.expr(where) if where else F.lit(True)
-        version = commit_with_retries(lambda: t.delete_where(cond))
-    elif kind == "UPDATE":
-        table, assignments, where = _update(sql, node)
-        t = engine.managed(table)
-        cond = F.expr(where) if where else F.lit(True)
-        cols = {c: F.expr(e) for c, e in assignments.items()}
-        version = commit_with_retries(lambda: t.update_set(cond, cols))
-    else:  # MERGE
-        spec = _merge(sql, node, rewrite=True)
-        table = spec["target"]
-        t = engine.managed(table)
-        source = engine.spark.table(spec["source"])
-        # no UPDATE clause -> {} (matched rows survive unchanged),
-        # NEVER None: None means UPDATE SET * to merge_into, which
-        # would rewrite matched rows from source in a delete-only MERGE
-        cols = {c: F.expr(e) for c, e in (spec["update_set"] or {}).items()}
-        cond = F.expr(spec["delete_cond"]) if spec["delete_cond"] else None
-        version = commit_with_retries(
-            lambda: t.merge_into(
-                source, on=spec["on"], update_cols=cols, insert=spec["insert"],
-                delete_cond=cond,
+    try:
+        if kind is None:
+            return _run_query(engine, _Query(sql, node, 0, len(sql) - 1, ""))
+        run = {"CALL": execute_call, "ALTER": execute_alter, "CREATE": execute_create,
+               "INSERT": execute_insert}.get(kind)
+        if run is not None:
+            return run(engine, sql, node)
+        # Every DML statement runs under Iceberg's commit.retry semantics
+        # (commit_with_retries, sources/lakehouse.py): the table methods
+        # re-read current state on entry, so re-running the whole closure
+        # on ConflictError is the contracted restartable pattern — a racing
+        # writer costs a retry, not a user-visible crash; the FINAL
+        # conflict still propagates so lost updates are never silent.
+        # A DML statement reads its MERGE source and the subqueries of its
+        # conditions and assignments, never the target it writes.
+        _bind(engine, *_seq(node.children())[1:], *_seq(node.innerChildren()))
+        if kind == "DELETE":
+            table, where = _delete(sql, node)
+            t = engine.managed(table)
+            cond = F.expr(where) if where else F.lit(True)
+            version = commit_with_retries(lambda: t.delete_where(cond))
+        elif kind == "UPDATE":
+            table, assignments, where = _update(sql, node)
+            t = engine.managed(table)
+            cond = F.expr(where) if where else F.lit(True)
+            cols = {c: F.expr(e) for c, e in assignments.items()}
+            version = commit_with_retries(lambda: t.update_set(cond, cols))
+        else:  # MERGE
+            spec = _merge(sql, node, rewrite=True)
+            table = spec["target"]
+            t = engine.managed(table)
+            source = engine.spark.table(spec["source"])
+            # no UPDATE clause -> {} (matched rows survive unchanged),
+            # NEVER None: None means UPDATE SET * to merge_into, which
+            # would rewrite matched rows from source in a delete-only MERGE
+            cols = {c: F.expr(e) for c, e in (spec["update_set"] or {}).items()}
+            cond = F.expr(spec["delete_cond"]) if spec["delete_cond"] else None
+            version = commit_with_retries(
+                lambda: t.merge_into(
+                    source, on=spec["on"], update_cols=cols, insert=spec["insert"],
+                    delete_cond=cond,
+                )
             )
-        )
-    engine.refresh_view(table)
-    n = t.record_count()
-    return _one_row(engine, _COMMIT_RESULT, table, kind.lower(), version, n)
+        n = t.record_count()
+        return _one_row(engine, _COMMIT_RESULT, table, kind.lower(), version, n)
+    finally:
+        while engine._tt_views:
+            engine.spark.catalog.dropTempView(engine._tt_views.pop())
 
 
-# ---- SELECT-side time travel (Iceberg SQL: VERSION/TIMESTAMP AS OF) --------
+# ---- reads: managed tables, and time travel (VERSION/TIMESTAMP AS OF) -------
 
 
-def _snapshot_view(engine, node) -> tuple[int, int, str] | None:
-    """(start, stop, view): a temp view over the snapshot one parsed
+def _snapshot_view(engine, node, aliased: bool) -> tuple[int, int, str] | None:
+    """(start, stop, text): a temp view over the snapshot one parsed
     ``<table> VERSION|TIMESTAMP AS OF <v>`` reads, and the span it
-    replaces; None leaves the reference for Spark to resolve or
-    diagnose (a qualified name, which resolves through the catalog
-    layer, a non-managed table, an unparseable value, a missing
-    snapshot or an unknown ref)."""
+    replaces. Unless the reference has an alias of its own
+    (``aliased``), the text aliases the view by the table's name, so a
+    column the query qualifies by that name still resolves. None leaves
+    the reference for Spark to resolve or diagnose (a qualified name,
+    which resolves through the catalog layer, a non-managed table, an
+    unparseable value, a missing snapshot or an unknown ref)."""
     rel = node.relation()
     try:
         name = _name(rel)
@@ -786,40 +787,75 @@ def _snapshot_view(engine, node) -> tuple[int, int, str] | None:
     view = f"__tt_{name}_{kind.lower()}_{digest}"
     df.createOrReplaceTempView(view)
     # the engine drops these after the statement executes
-    getattr(engine, "_tt_views", set()).add(view)
-    return _origin(rel)[0], _origin(node)[1], view
+    engine._tt_views.add(view)
+    text = view if aliased else f"{view} AS {_ident(name)}"
+    return _origin(rel)[0], _origin(node)[1], text
 
 
-def _time_travel(engine, q: _Query) -> list:
-    """(start, stop, view) for each managed-table time-travel reference
-    in the query: the span to replace by a view over its snapshot."""
-    subs = []
-    # every time-travel clause holds the keyword OF; the walk reads
-    # every node, CTE bodies and subqueries too
-    stack = [q.plan] if "OF" in q.sql[q.start : q.stop + 1].upper() else []
+#: the parsed nodes that name a table a statement reads: a query's
+#: relations, and the table of DESCRIBE, SHOW COLUMNS and the like
+_READS = ("UnresolvedRelation", "UnresolvedTableOrView")
+
+
+def _bind(engine, *plans) -> list:
+    """Bind every managed table the parsed plans read, before they are
+    analyzed; (start, stop, text) for each time-travel span to replace.
+
+    A one-part table name is bound by :func:`_bind_name`. A
+    VERSION/TIMESTAMP AS OF reference reads a view over its snapshot
+    (:func:`_snapshot_view`). The walk reads every node, CTE bodies
+    and subqueries too, and the body of each SQL temp view it names."""
+    subs, names, stack = [], set(), [(p, None) for p in plans]
     while stack:
-        n = stack.pop()
-        if n.nodeName() == "RelationTimeTravel":
-            subs.append(_snapshot_view(engine, n))
+        n, parent = stack.pop()
+        kind = n.nodeName()
+        if kind == "RelationTimeTravel":
+            subs.append(_snapshot_view(engine, n, parent == "SubqueryAlias"))
+        elif kind in _READS and n.multipartIdentifier().size() == 1:
+            name = n.multipartIdentifier().apply(0)
+            if name.lower() not in names:
+                names.add(name.lower())
+                stack += [(body, None) for body in _bind_name(engine, name)]
         else:
-            stack += _seq(n.children()) + _seq(n.innerChildren())
+            stack += [(c, kind) for c in _seq(n.children()) + _seq(n.innerChildren())]
     return [sub for sub in subs if sub]
+
+
+def _bind_name(engine, name: str) -> list:
+    """Bind the session view of a managed table ``name`` to its main
+    head (:meth:`Engine.refresh_view`), so the read sees the current
+    snapshot, whoever wrote it. Any other name is left for Spark to
+    resolve; for a temp view created by SQL, which Spark resolves from
+    its text each time it is read, the parsed body is returned, so the
+    managed tables it names are bound too."""
+    # view names match case-insensitively, table directories do not
+    name = next((k for k in engine._tables if k.lower() == name.lower()), name)
+    try:
+        engine.managed(name)
+    except (KeyError, ValueError):
+        view = engine.spark._jsparkSession.sessionState().catalog().getRawTempView(name)
+        text = view.get().tableMeta().viewText() if view.isDefined() else None
+        body = text.get() if text and text.isDefined() else None
+        return [_parse(engine.spark, body)[1]] if body else []
+    engine.refresh_view(name)
+    return []
 
 
 def rewrite_time_travel(engine, sql: str) -> str:
     """Rewrite each ``<managed_table> VERSION|TIMESTAMP AS OF <v>`` into
     a temp view over the resolved snapshot — the spark-sql time-travel
     syntax IcebergSparkSessionExtensions provides (SURVEY §2.1 S8),
-    served by the snapshot layer. Non-managed tables, and statements
-    the parser rejects, are left for Spark to diagnose."""
+    served by the snapshot layer, aliased by the table's name. Bare
+    names of managed tables are bound too (:func:`_bind`). Non-managed
+    tables, and statements the parser rejects, are left for Spark to
+    diagnose."""
     try:
         _, node, sql = _parse(SparkSession.active(), sql)
     except ParseException:
         return sql
     if isinstance(node, re.Match):
         return sql
-    subs = _time_travel(engine, _Query(sql, node, 0, len(sql) - 1, ""))
-    return _splice(sql, 0, len(sql) - 1, subs)
+    return _splice(sql, 0, len(sql) - 1, _bind(engine, node))
 
 
 # ---- CALL system.* procedures (Iceberg stored-procedure surface) -----------
@@ -915,6 +951,5 @@ def execute_call(engine, sql: str, node) -> DataFrame:
     # get the same commit.retry treatment as DML; expire/orphan sweeps
     # never raise ConflictError and pass through unaffected
     result = commit_with_retries(lambda: getattr(t, method)(**kwargs))
-    engine.refresh_view(table)
     summary = ",".join(map(str, result)) if isinstance(result, list) else str(result)
     return _one_row(engine, _CALL_RESULT, table, proc, summary)

@@ -45,9 +45,31 @@ def test_managed_table_door(eng):
     t.delete_where(F.col("n_regionkey") == 0)
     assert eng.managed("nation_gold").read().count() < 25
     assert eng.table_snapshot("nation_gold", 1).count() == 25  # time travel
-    # SQL door sees DML only after refresh (views pin their snapshot)
+    assert eng.sql("SELECT count(*) AS n FROM nation_gold").collect()[0].n < 25
     eng.refresh_view("nation_gold")
     assert eng.sql("SELECT count(*) AS n FROM nation_gold").collect()[0].n < 25
+
+
+def test_create_table_registers_no_view(eng, spark):
+    """A managed table is bound by the SQL door statement that reads
+    it, not when it is created."""
+    eng.create_table("nation_noview", eng.table("nation", SF_DIR))
+    assert "nation_noview" not in [v.name for v in spark.catalog.listTables()]
+    cols = [r.col_name for r in eng.sql("DESCRIBE nation_noview").collect()]
+    assert cols[:2] == ["n_nationkey", "n_name"]
+    assert eng.sql("SELECT count(*) AS n FROM nation_noview").collect()[0].n == 25
+    spark.catalog.dropTempView("nation_noview")
+
+
+def test_table_reads_a_managed_table_of_the_warehouse_at_its_head(eng, spark):
+    """The DataFrame door of a second engine over the same warehouse
+    reads a managed table at main's head, not a session view of it."""
+    eng.create_table("nation_other", eng.table("nation", SF_DIR))
+    eng.sql("SELECT count(*) FROM nation_other").collect()
+    eng.sql("DELETE FROM nation_other WHERE n_regionkey = 0").collect()
+    other = Engine(spark, warehouse=eng.warehouse)
+    assert other.table("nation_other").count() == 20
+    spark.catalog.dropTempView("nation_other")
 
 
 # --- ADVICE r15: get_spark reuse-warning keying ------------------------------

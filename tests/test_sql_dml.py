@@ -295,7 +295,6 @@ def test_time_travel_rewriter_edges(spark, tmp_path):
     nat = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
     t = eng.create_table("tt_edge", nat.coalesce(1))
     t.append(nat.limit(2).selectExpr("n_nationkey + 700 AS n_nationkey", "n_name", "n_regionkey"))
-    eng.refresh_view("tt_edge")
     n0 = nat.count()
 
     # trailing semicolon / paren must not ride into the parsed value
@@ -340,7 +339,6 @@ def test_time_travel_views_deterministic_and_dropped(spark, tmp_path):
     t = eng.create_table("tt_clean", nat.coalesce(1))
     t.append(nat.limit(2).selectExpr(
         "n_nationkey + 750 AS n_nationkey", "n_name", "n_regionkey"))
-    eng.refresh_view("tt_clean")
     n0 = nat.count()
 
     # two DIFFERENT versions in one statement must resolve to two
@@ -359,6 +357,177 @@ def test_time_travel_views_deterministic_and_dropped(spark, tmp_path):
     spark.catalog.dropTempView("tt_clean")
 
 
+def test_time_travel_keeps_the_table_name_as_qualifier(spark, tmp_path):
+    """A VERSION AS OF reference without an alias of its own is still
+    named by its table, so columns qualified by that name resolve; an
+    alias of its own wins; a self-join of the current table and a
+    snapshot reads each side at its own version."""
+    from pyspark.sql import functions as F
+
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+
+    eng = Engine(spark, warehouse=str(tmp_path))
+    t = eng.create_table("tq", spark.range(10).selectExpr("id AS k").coalesce(1))
+    t.delete_where(F.col("k") > 7)  # v2 holds 0..7
+
+    def rows(sql):
+        return sorted(tuple(r) for r in eng.sql(sql).collect())
+
+    try:
+        assert rows("SELECT tq.k FROM tq VERSION AS OF 1 WHERE tq.k > 7") == [(8,), (9,)]
+        assert rows("SELECT x.k FROM tq VERSION AS OF 1 AS x WHERE x.k > 7") == [
+            (8,), (9,),
+        ]
+        assert rows("SELECT count(*) FROM tq VERSION AS OF 1 JOIN tq ON true") == [(80,)]
+        assert rows(
+            "SELECT a.k, b.k FROM tq VERSION AS OF 1 a JOIN tq b ON a.k = b.k"
+        ) == [(k, k) for k in range(8)]
+    finally:
+        spark.catalog.dropTempView("tq")
+
+
+# --- read-time binding: every door read sees main's head ---------------------
+
+
+def _ten_rows(spark, eng, name, scale=1):
+    """A one-file managed table ``name`` (k, v): k = 0..9, v = k * scale."""
+    return eng.create_table(
+        name, spark.range(10).selectExpr("id AS k", f"id * {scale} AS v").coalesce(1)
+    )
+
+
+def test_door_select_sees_a_dataframe_door_delete(spark, tmp_path):
+    from pyspark.sql import functions as F
+
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+
+    eng = Engine(spark, warehouse=str(tmp_path))
+    t = _ten_rows(spark, eng, "bind_df")
+    assert eng.sql("SELECT count(*) AS n FROM bind_df").collect()[0].n == 10
+    t.delete_where(F.col("k") < 5)
+    try:
+        assert eng.sql("SELECT count(*) AS n FROM bind_df").collect()[0].n == 5
+        # a view name matches in any case, so this name binds too
+        t.delete_where(F.col("k") < 6)
+        assert eng.sql("SELECT count(*) AS n FROM BIND_DF").collect()[0].n == 4
+    finally:
+        spark.catalog.dropTempView("bind_df")
+
+
+def test_door_select_after_rollback_and_cleanup(spark, tmp_path):
+    """A door SELECT after a rollback whose expiry and orphan sweep
+    deleted the files of the snapshot it last read."""
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+
+    eng = Engine(spark, warehouse=str(tmp_path))
+    t = _ten_rows(spark, eng, "bind_rb")
+    eng.sql("DELETE FROM bind_rb WHERE k < 5").collect()
+    assert eng.sql("SELECT count(*) AS n FROM bind_rb").collect()[0].n == 5
+    t.rollback_to(1)
+    t.expire_snapshots(keep_last=1)
+    t.remove_orphan_files()
+    try:
+        assert eng.sql("SELECT count(*) AS n FROM bind_rb").collect()[0].n == 10
+    finally:
+        spark.catalog.dropTempView("bind_rb")
+
+
+def test_merge_reads_a_managed_source_at_its_head(spark, tmp_path):
+    """A MERGE whose source is a managed table changed through the
+    DataFrame door reads the source's current snapshot."""
+    from pyspark.sql import functions as F
+
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+
+    eng = Engine(spark, warehouse=str(tmp_path))
+    s = _ten_rows(spark, eng, "bind_src", scale=100)
+    _ten_rows(spark, eng, "bind_tgt")
+    s.delete_where(F.col("k") == 7)
+    try:
+        eng.sql(
+            "MERGE INTO bind_tgt t USING bind_src s ON t.k = s.k "
+            "WHEN MATCHED THEN UPDATE SET v = s.v"
+        ).collect()
+        got = dict(eng.managed("bind_tgt").read().collect())
+        assert got == {k: (k if k == 7 else k * 100) for k in range(10)}
+    finally:
+        spark.catalog.dropTempView("bind_src")
+
+
+def test_dml_subquery_reads_a_managed_table_at_its_head(spark, tmp_path):
+    """A DELETE whose condition reads another managed table reads that
+    table's current snapshot, with no view of it in the session."""
+    from pyspark.sql import functions as F
+
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+
+    eng = Engine(spark, warehouse=str(tmp_path))
+    s = _ten_rows(spark, eng, "bind_keys")
+    _ten_rows(spark, eng, "bind_del")
+    s.delete_where(F.col("k") == 7)
+    spark.catalog.dropTempView("bind_keys")
+    try:
+        eng.sql("DELETE FROM bind_del WHERE k IN (SELECT k FROM bind_keys)").collect()
+        assert eng.managed("bind_del").read().collect() == [(7, 7)]
+    finally:
+        spark.catalog.dropTempView("bind_keys")
+
+
+def test_sql_temp_view_reads_a_managed_table_at_its_head(spark, tmp_path):
+    """A temp view created by SQL is resolved from its text each time it
+    is read, so a door read through it sees the managed table's head."""
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+
+    eng = Engine(spark, warehouse=str(tmp_path))
+    _ten_rows(spark, eng, "bind_base")
+    eng.sql("CREATE TEMP VIEW bind_v AS SELECT * FROM bind_base WHERE k < 8").collect()
+    eng.sql("DELETE FROM bind_base WHERE k < 3").collect()
+    try:
+        assert eng.sql("SELECT count(*) AS n FROM bind_v").collect()[0].n == 5
+    finally:
+        spark.catalog.dropTempView("bind_v")
+        spark.catalog.dropTempView("bind_base")
+
+
+def test_reads_run_no_listing_job(spark, tmp_path):
+    """A read of a 64-file table lists its files on the driver: its
+    build, a door SELECT and a door DELETE each run no job with a task
+    per file."""
+    import uuid
+
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+
+    eng = Engine(spark, warehouse=str(tmp_path))
+    t = eng.create_table(
+        "bind_64", spark.range(0, 256, 1, 64).selectExpr("id AS k", "id AS v")
+    )
+    assert len(t._files()) == 64
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def most_tasks(run):
+        """The most tasks any stage of a job ``run`` starts holds."""
+        group = f"listing-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "listing")
+        try:
+            run()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = [tracker.getJobInfo(j) for j in tracker.getJobIdsForGroup(group)]
+        stages = [tracker.getStageInfo(s) for j in jobs if j for s in j.stageIds]
+        return max((s.numTasks for s in stages if s), default=0)
+
+    try:
+        assert most_tasks(t.read) < 64
+        assert most_tasks(
+            lambda: eng.sql("SELECT count(*) FROM bind_64 WHERE k < 8").collect()
+        ) < 64
+        assert most_tasks(lambda: eng.sql("DELETE FROM bind_64 WHERE k = 5").collect()) < 64
+        assert t.record_count() == 255
+    finally:
+        spark.catalog.dropTempView("bind_64")
+
+
 # --- CALL system.* procedures ----------------------------------------------
 
 
@@ -371,7 +540,6 @@ def test_call_procedures_dispatch(spark, tmp_path):
     nat = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
     t = eng.create_table("proc_t", nat.coalesce(1))
     t.append(nat.limit(3).selectExpr("n_nationkey + 600 AS n_nationkey", "n_name", "n_regionkey"))
-    eng.refresh_view("proc_t")
     n0 = nat.count()
 
     # rollback via CALL — positional arg
@@ -1122,7 +1290,9 @@ def test_rewrite_leaves_backslash_escaped_literals_alone(spark, tmp_path):
     # a VERSION AS OF inside a backslash-escaped literal is not a
     # time-travel reference
     sql = r"SELECT 'x\' VERSION AS OF 3 ' AS lit FROM t"
-    assert sql_dml.rewrite_time_travel(object(), sql) == sql
+    from dbx_workspace_and_emr_iceberg_spark.engine import Engine
+
+    assert sql_dml.rewrite_time_travel(Engine(spark), sql) == sql
 
 
 def test_n_rows_matches_table_count_after_every_statement(spark, tmp_path):
